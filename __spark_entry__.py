@@ -154,10 +154,13 @@ def q_fts_phrase(spark, sf_dir):
 def q_fts_phrase_postings(spark, sf_dir):
     """Phrase match via postings positions (the phraseto_tsquery/GIN access
     pattern) — must agree with q_fts_phrase's direct adjacency scan."""
-    from ocr_search_spark.search.engine import build_postings, phrase_match_postings
+    from ocr_search_spark.search.engine import build_postings, match_postings
+    from ocr_search_spark.search.websearch import parse_websearch
 
-    p = build_postings(_docs(spark, sf_dir), id_col="doc_id", text_col="text")
-    return phrase_match_postings(p, ["spark", "join"])
+    docs = _docs(spark, sf_dir)
+    p = build_postings(docs, id_col="doc_id", text_col="text")
+    ids = match_postings(p, parse_websearch(PHRASE_QUERY)).ids
+    return docs.filter(F.col("doc_id").isin(ids)).select("doc_id")
 
 
 def q_fts_or_not(spark, sf_dir):

@@ -732,6 +732,8 @@ def connected_components_labels(
     the shallow clusters that dominate near-dup graphs (round-1
     checkpoint, round-2 checkpoint, one count), down from 5.
     """
+    if max_iters < 1:
+        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     # no .distinct() on edges: callers hand over already-distinct pairs
     # (verified_near_dup_pairs ends in a distinct candidate set), and the
     # groupBy-min below absorbs any stragglers — one less shuffle/job in a
@@ -763,8 +765,11 @@ def connected_components_labels(
         .select("id", F.col("__l2").alias("label"))
         .localCheckpoint()
     )
-    converged = False
+    # the unrolled round 1 converges only when there are no edges (any edge
+    # a < b moves b's label), so a one-round budget is exactly that check;
+    # larger budgets detect convergence with the next round's count
     try:
+        converged = max_iters == 1 and edges.isEmpty()
         for _ in range(1, max_iters):
             # each node offers its label to every neighbour; keep the min of
             # (own label, offered labels). The own label rides through the

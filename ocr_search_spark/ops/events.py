@@ -86,9 +86,9 @@ def funnel(
     counts = tagged.groupBy("step").agg(F.count("*").alias("__c"))
     # explicit (step, name) VALUES pairs — a JVM-local relation with the
     # step index as data (never derived from row order/partitioning)
-    def _lit(s: str) -> str:
-        return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    from ocr_search_spark.localrel import _check_parser, _lit
 
+    _check_parser(spark)
     rows = ", ".join(f"({i + 1}, {_lit(s)})" for i, s in enumerate(steps))
     steps_rel = spark.sql(f"SELECT * FROM VALUES {rows} AS t(step, event_type)")
     w = Window.orderBy("step").rowsBetween(

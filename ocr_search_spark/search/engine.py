@@ -9,14 +9,19 @@ Plan shape (scale notes):
 
 * predicates (date range / ILIKE / FTS) are plain Catalyst filters —
   pushed down and partition-pruned on a real table scan;
-* for interactive workloads at 10^12 docs the per-query tokenize is the
-  wrong plan — :func:`build_postings` materializes the inverted postings
-  table once at extraction time (the Spark analogue of the tsvector trigger,
-  alembic 0001_init.py:36-53) and :func:`search_documents` accepts it to
-  run the FTS predicate as a broadcast semi-join on query terms instead of
-  re-tokenizing the corpus;
+* for interactive workloads the per-query tokenize is the wrong plan —
+  :func:`build_postings` materializes the inverted postings table once at
+  ingest (the Spark analogue of the tsvector trigger, alembic
+  0001_init.py:36-53), and :func:`search_documents` given it resolves the
+  match with :func:`match_postings` in one action. ``total`` is the size of
+  the resolved id set, only ``doc_id IN ids`` rows are scored, and BM25's
+  corpus statistics come from postings, not from re-tokenizing the corpus;
 * ranking/ordering are scalar expressions + ``orderBy().limit(k)`` → Spark
-  executes TakeOrderedAndProject, never a full sort.
+  executes TakeOrderedAndProject, never a full sort; snippet and link are
+  projected after it, so only the returned rows pay for them.
+
+Without postings (``postings=None``) the match is a tokenize-and-filter
+over the corpus text: the independent oracle for the postings path.
 
 Reference bugs fixed (documented in SURVEY.md appendix): limit/offset are
 actually applied (search.py:71-87 declared but ignored them) and the empty
@@ -25,8 +30,14 @@ query returns the intended "latest 10" (search.py:29-31 placeholder).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
+from collections import Counter
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
+
 from .analysis import (
     rank_expr,
     snippet_expr,
@@ -35,7 +46,6 @@ from .analysis import (
     with_search_columns,
 )
 from .websearch import (
-    is_plain_and,
     parse_websearch,
     positive_terms,
     token_string_expr,
@@ -66,65 +76,81 @@ def build_postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "con
     )
 
 
-def phrase_match_postings(postings: DataFrame, words: list[str]) -> DataFrame:
-    """doc_ids where ``words`` appear as adjacent tokens, resolved purely
-    from the postings positions lists — the ``<->`` (phraseto_tsquery)
-    access pattern over the GIN-index analogue: per-term postings are
-    filtered (term lookup prunes to one bucket on a term-bucketed table),
-    hash-joined on doc_id, and the candidate start positions narrow at
-    each step. No document text is touched."""
-    if not words:
-        raise ValueError("empty phrase")
-    cur = postings.filter(F.col("term") == words[0]).select(
-        "doc_id", F.col("positions").alias("pos")
+class PostingsMatch(NamedTuple):
+    """What :func:`match_postings` resolves: the matching doc ids (sorted),
+    each query word's document frequency among the docs in scope, and the
+    number of docs in scope when a scope was given."""
+
+    ids: list[str]
+    df: dict[str, int]
+    n_scope: int | None
+
+
+def _item_hits(positions: dict[str, list[int] | None], words: tuple[str, ...]) -> bool:
+    """A term is present, or a phrase's words sit at adjacent positions."""
+    if any(w not in positions for w in words):
+        return False
+    if len(words) == 1:
+        return True
+    first, *rest = (positions[w] for w in words)
+    rest = [set(p) for p in rest]
+    return any(all(p + i in s for i, s in enumerate(rest, start=1)) for p in first)
+
+
+def match_postings(
+    postings: DataFrame, parsed, scope: DataFrame | None = None
+) -> PostingsMatch:
+    """Resolve a parsed websearch query from the postings table in ONE
+    action: a ``term IN (...)`` scan of the query words' postings rows,
+    collected to the driver, where AND, OR, ``-`` and phrase adjacency are
+    evaluated over each document's term positions. The corpus text is never
+    re-tokenized, and no query word reaches SQL text.
+
+    ``scope`` (a documents DataFrame with ``doc_id``) is required when the
+    candidate documents are narrower than the postings' corpus (filters) or
+    when a group has only negated items — such a group matches every scope
+    document without a hit, including zero-token documents, which have no
+    postings rows. Its ids ride in the same action as a union branch.
+    """
+    words = sorted({w for g in parsed for it in g for w in it.words})
+    # positions are needed only for phrase words; a common term's position
+    # lists would otherwise dominate what the action ships to the driver
+    in_phrase = sorted({w for g in parsed for it in g if len(it.words) > 1 for w in it.words})
+    rows = postings.filter(F.col("term").isin(words)).select(
+        "doc_id",
+        "term",
+        F.when(F.col("term").isin(in_phrase), F.col("positions")).alias("positions"),
     )
-
-    def shifted_in_next(step: int):
-        # closure factory: a `lambda p, step=i` would be 2-arg and pyspark
-        # binds the SECOND HOF argument to the array index, not the default
-        return lambda p: F.array_contains(F.col("pos_next"), p + step)
-
-    for i, w in enumerate(words[1:], start=1):
-        nxt = postings.filter(F.col("term") == w).select(
-            "doc_id", F.col("positions").alias("pos_next")
+    if scope is not None:
+        rows = rows.unionByName(
+            scope.select(
+                "doc_id",
+                F.lit(None).cast("string").alias("term"),
+                F.lit(None).cast(postings.schema["positions"].dataType).alias(
+                    "positions"
+                ),
+            )
         )
-        cur = (
-            cur.join(nxt, "doc_id")
-            .select("doc_id", F.filter("pos", shifted_in_next(i)).alias("pos"))
-            .filter(F.size("pos") > 0)
+    hits: dict[str, dict[str, list[int] | None]] = {}
+    in_scope: set[str] = set()
+    for r in rows.collect():
+        if r.term is None:
+            in_scope.add(r.doc_id)
+        else:
+            hits.setdefault(r.doc_id, {})[r.term] = r.positions
+    if scope is not None:
+        hits = {d: h for d, h in hits.items() if d in in_scope}
+    candidates = in_scope if scope is not None else hits
+    ids = sorted(
+        d
+        for d in candidates
+        if any(
+            all(_item_hits(hits.get(d, {}), it.words) != it.negated for it in g)
+            for g in parsed
         )
-    return cur.select("doc_id")
-
-
-def websearch_match_postings(
-    docs: DataFrame, postings: DataFrame, parsed
-) -> DataFrame:
-    """Filter ``docs`` under full websearch grammar using only the postings
-    table: per-item doc-id sets (term lookup or positional phrase match),
-    AND within a group via successive semi-joins, ``-item`` via anti-join,
-    OR across groups via doc-id union. Every join is on doc_id; the corpus
-    text column is never re-tokenized (the 10^12-doc interactive plan)."""
-
-    def item_ids(item) -> DataFrame:
-        if len(item.words) == 1:
-            return postings.filter(F.col("term") == item.words[0]).select(
-                "doc_id"
-            ).distinct()
-        return phrase_match_postings(postings, list(item.words))
-
-    group_results = []
-    for g in parsed:
-        cur = docs
-        for item in g:
-            how = "left_anti" if item.negated else "left_semi"
-            cur = cur.join(item_ids(item), "doc_id", how)
-        group_results.append(cur)
-    if not group_results:
-        return docs
-    out = group_results[0]
-    for other in group_results[1:]:
-        out = out.unionByName(other)
-    return out.dropDuplicates(["doc_id"]) if len(group_results) > 1 else out
+    )
+    df = Counter(t for h in hits.values() for t in h)
+    return PostingsMatch(ids, dict(df), len(in_scope) if scope is not None else None)
 
 
 def _parse_filter_ts(value: str, name: str):
@@ -142,8 +168,12 @@ def _parse_filter_ts(value: str, name: str):
         ) from None
 
 
-def _apply_common_filters(df: DataFrame, ocr_user, ocr_from, ocr_to) -> DataFrame:
-    """Date-range + ILIKE predicates (Q2/Q3 — search.py:53-55)."""
+def _apply_common_filters(
+    df: DataFrame, ocr_user, ocr_from, ocr_to
+) -> tuple[DataFrame, bool]:
+    """Date-range + ILIKE predicates (Q2/Q3 — search.py:53-55), and whether
+    they can drop any row."""
+    narrowed = "created_at" in df.columns or bool(ocr_user and "email" in df.columns)
     if "created_at" in df.columns:
         lo = _parse_filter_ts(ocr_from or DEFAULT_FROM, "ocr_from")
         hi = _parse_filter_ts(ocr_to or DEFAULT_TO, "ocr_to")
@@ -154,15 +184,24 @@ def _apply_common_filters(df: DataFrame, ocr_user, ocr_from, ocr_to) -> DataFram
         )
     if ocr_user and "email" in df.columns:
         df = df.filter(F.col("email").ilike(f"%{ocr_user}%"))
-    return df
+    return df, narrowed
 
 
-def _items_projection(df: DataFrame, snippet_col, rank_col, sim_col, httpfs: str):
+def _id_in(df: DataFrame, ids: list) -> Column:
+    """``doc_id IN ids`` built from ONE literal: a JSON array that Catalyst
+    folds to an array constant. ``Column.isin`` makes one JVM call per id,
+    which cost more driver CPU than the rest of a broad query."""
+    ids_type = ArrayType(df.schema["doc_id"].dataType)
+    return F.array_contains(F.from_json(F.lit(json.dumps(ids)), ids_type), F.col("doc_id"))
+
+
+def _items_projection(df: DataFrame, snippet_col, httpfs: str, ranked: bool):
     """Reference item contract (app/search.py:92-98): id/filename/link/
     snippet/snippet_is_html — ``doc_id`` is the id (our PK), ``link`` is the
     httpfs URL composed from path_origin with backslashes normalized, and
-    ``snippet_is_html`` is constant True (the <b> marks). rank/sim ride
-    along for the API consumers that sort client-side."""
+    ``snippet_is_html`` is constant True (the <b> marks). ``rank``/``sim``
+    ride along when ``ranked``, for the API consumers that sort
+    client-side."""
     cols = df.columns
     filename = F.col("filename") if "filename" in cols else F.col("doc_id")
     if "path_origin" in cols:
@@ -179,11 +218,32 @@ def _items_projection(df: DataFrame, snippet_col, rank_col, sim_col, httpfs: str
         snippet_col.alias("snippet"),
         F.lit(True).alias("snippet_is_html"),
     ]
-    if rank_col is not None:
-        out.append(F.round(rank_col, 6).alias("rank"))
-    if sim_col is not None:
-        out.append(F.round(sim_col, 6).alias("sim"))
+    if ranked:
+        out += [F.col("rank"), F.col("sim")]
     return df.select(*out)
+
+
+def _bm25_stats(
+    match: PostingsMatch,
+    terms: list[str],
+    postings: DataFrame,
+    scope: DataFrame,
+    narrowed: bool,
+    corpus_stats: tuple[int, int] | None,
+) -> tuple[int, int, list[int]]:
+    """BM25's (N, Σ document length, df per term) over the search scope,
+    from postings: Σ document length is Σ tf. Costs no job when the scope
+    is the whole corpus and ``corpus_stats`` is known."""
+    if narrowed:
+        n = match.n_scope
+        sum_tf = postings.join(scope.select("doc_id"), "doc_id", "left_semi").agg(
+            F.sum("tf")
+        ).first()[0]
+    elif corpus_stats is not None:
+        n, sum_tf = corpus_stats
+    else:
+        n, sum_tf = scope.count(), postings.agg(F.sum("tf")).first()[0]
+    return n, sum_tf or 0, [match.df.get(t, 0) for t in terms]
 
 
 def search_documents(
@@ -197,6 +257,7 @@ def search_documents(
     postings: DataFrame | None = None,
     rank_mode: str = "simple",
     httpfs: str = DEFAULT_HTTPFS,
+    corpus_stats: tuple[int, int] | None = None,
 ) -> dict:
     """Full search flow; returns ``{"total": int, "items": DataFrame}``.
 
@@ -205,7 +266,8 @@ def search_documents(
     grammar (quoted phrases, OR groups, -exclusion — search.py:51-52), rank
     by ``GREATEST(rank, sim)`` desc (search.py:81), project the reference
     item contract (doc_id/filename/link/snippet/snippet_is_html + rank,
-    sim — search.py:92-98), paginate.
+    sim — search.py:92-98), paginate. ``items`` is lazy: collecting it runs
+    the scoring and top-k.
 
     ``rank_mode`` selects the FTS rank term: ``"simple"`` (matched/total,
     the engine-portable default), ``"cd"`` (cover-density proximity — the
@@ -213,54 +275,46 @@ def search_documents(
     ``"bm25"`` (Okapi BM25; unbounded scale, so it dominates the trigram
     ``sim`` term in the GREATEST combination — use when term relevance
     should outrank fuzzy similarity).
+
+    ``postings`` (the :func:`build_postings` table of ``docs``) switches
+    the match to :func:`match_postings`. ``corpus_stats`` is ``(row count
+    of docs, Σ tf of postings)`` when the caller already knows them (a
+    store keeps them per snapshot); the empty query and BM25 then run no
+    statistics job.
     """
     q = (q or "").strip()
 
     if not (q or ocr_user or ocr_from or ocr_to):
-        total = docs.count()
+        total = corpus_stats[0] if corpus_stats else docs.count()
         order = [F.col("created_at").desc()] if "created_at" in docs.columns else []
         items = _items_projection(
             docs.orderBy(*order, F.col("doc_id")).limit(10),
             F.substring("content", 1, 800),
-            None,
-            None,
             httpfs,
+            ranked=False,
         )
         return {"total": total, "items": items}
 
     parsed = parse_websearch(q)
     terms = positive_terms(parsed)
-    filtered = _apply_common_filters(docs, ocr_user, ocr_from, ocr_to)
+    filtered, narrowed = _apply_common_filters(docs, ocr_user, ocr_from, ocr_to)
     corpus_scope = filtered  # pre-FTS-match scope (bm25 IDF base)
+    match = None
 
-    if q and not parsed:
-        # token-free query ('???', bare 'or'): websearch_to_tsquery yields
-        # an EMPTY tsquery, and `@@ empty` matches no rows — matching the
-        # whole corpus here would invert the reference semantics
-        filtered = filtered.filter(F.lit(False))
-    elif parsed:
-        if postings is not None and is_plain_and(parsed):
-            # scale path (plain AND of terms): semi-join matching doc ids
-            terms_set = {it.words[0] for it in parsed[0]}
-            from ocr_search_spark.localrel import strings_df
-
-            # JVM-local VALUES relation — no Python-RDD scan per query (r6)
-            term_df = strings_df(
-                postings.sparkSession, sorted(terms_set), "term"
-            )
-            matched = (
-                postings.join(F.broadcast(term_df), "term", "inner")
-                .groupBy("doc_id")
-                .agg(F.count_distinct("term").alias("nt"))
-                .filter(F.col("nt") == len(terms_set))
-                .select("doc_id")
-            )
-            filtered = filtered.join(matched, "doc_id", "left_semi")
-        elif postings is not None:
-            # scale path, full grammar: positional phrase match + per-item
-            # semi/anti-joins — never re-tokenizes the corpus
-            filtered = websearch_match_postings(filtered, postings, parsed)
-        else:
+    if parsed and postings is not None:
+        negation_only = any(all(it.negated for it in g) for g in parsed)
+        match = match_postings(
+            postings, parsed, filtered if narrowed or negation_only else None
+        )
+        total = len(match.ids)
+        filtered = filtered.filter(_id_in(filtered, match.ids))
+    else:
+        if q and not parsed:
+            # token-free query ('???', bare 'or'): websearch_to_tsquery
+            # yields an EMPTY tsquery, and `@@ empty` matches no rows —
+            # matching the whole corpus here would invert the reference
+            filtered = filtered.filter(F.lit(False))
+        elif parsed:
             # full websearch grammar: materialize toks + the adjacency
             # string in successive projections (plan-shape invariant), then
             # one Catalyst boolean filter
@@ -270,8 +324,7 @@ def search_documents(
                 .filter(websearch_predicate("__toks", "__tokstr", parsed))
                 .drop("__toks", "__tokstr")
             )
-
-    total = filtered.count()
+        total = filtered.count()
 
     if rank_mode != "simple" and terms:
         from .ranking import bm25_scores, cover_density_rank
@@ -306,9 +359,12 @@ def search_documents(
             best = rcols[0] if len(rcols) == 1 else F.greatest(*rcols)
             ranks = ranks.select("doc_id", best.alias("__rank"))
         elif rank_mode == "bm25":
+            stats = match and _bm25_stats(
+                match, terms, postings, corpus_scope, narrowed, corpus_stats
+            )
             ranks = bm25_scores(
                 filtered, terms, id_col="doc_id", text_col="content",
-                stats_over=corpus_scope,
+                stats_over=corpus_scope, stats=stats,
             ).select("doc_id", F.col("bm25").alias("__rank"))
         else:
             raise ValueError(f"unknown rank_mode: {rank_mode!r}")
@@ -325,36 +381,34 @@ def search_documents(
     base = with_search_columns(base, "content")
     if rank_col is None:
         rank_col = rank_expr(F.col("toks"), terms)
-    if terms:
-        # highlight the first query term the document actually contains
-        # (an OR match via a later branch must not get an empty snippet);
-        # bounded chain — at most 4 locate/substr probes per row
-        snip = F.coalesce(
-            *[
-                F.nullif(snippet_expr("content", t), F.lit(""))
-                for t in terms[:4]
-            ],
-            F.lit(""),
-        )
-    else:
-        # filter-only search: a leading fragment, no highlight — an empty
-        # highlight term would <b></b>-garble every character boundary
-        snip = F.substring("content", 1, 800)
-    scored = _items_projection(
-        base,
-        snip,
-        rank_col,
-        trigram_sim_udf(q)(F.col("content")),
-        httpfs,
-    ).withColumn("score", F.greatest("rank", "sim"))
+    carry = [c for c in ("doc_id", "content", "filename", "path_origin") if c in base.columns]
+    scored = base.select(
+        *carry,
+        F.round(rank_col, 6).alias("rank"),
+        F.round(trigram_sim_udf(q)(F.col("content")), 6).alias("sim"),
+    )
 
     # Pagination via native LIMIT/OFFSET: Catalyst plans orderBy + offset +
     # limit as a single TakeOrderedAndProject(offset+limit) — top-(o+k)
     # partial per partition, never a global single-partition sort (the
     # round-1 Window.orderBy formulation moved every matched row through
     # one task; asserted gone in tests/test_plans.py).
-    ordered = scored.orderBy(F.col("score").desc(), F.col("doc_id"))
+    ordered = scored.orderBy(F.greatest("rank", "sim").desc(), F.col("doc_id"))
     if offset:
         ordered = ordered.offset(offset)
-    items = ordered.limit(limit).drop("score")
+
+    # snippet and link are built after the top-k: only returned rows pay
+    if terms:
+        # highlight the first query term the document actually contains
+        # (an OR match via a later branch must not get an empty snippet);
+        # bounded chain — at most 4 locate/substr probes per row
+        # (when, not nullif: nullif's shared-subexpression rewrite adds a
+        # projection that stops Catalyst from planning TakeOrderedAndProject)
+        frags = [snippet_expr("content", t) for t in terms[:4]]
+        snip = F.coalesce(*[F.when(f != "", f) for f in frags], F.lit(""))
+    else:
+        # filter-only search: a leading fragment, no highlight — an empty
+        # highlight term would <b></b>-garble every character boundary
+        snip = F.substring("content", 1, 800)
+    items = _items_projection(ordered.limit(limit), snip, httpfs, ranked=True)
     return {"total": total, "items": items}

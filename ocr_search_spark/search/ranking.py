@@ -53,6 +53,7 @@ def bm25_scores(
     b: float = 0.75,
     round_to: int | None = 6,
     stats_over: DataFrame | None = None,
+    stats: tuple[int, int, list[int]] | None = None,
 ) -> DataFrame:
     """Okapi BM25 scores for ``terms`` over ``docs`` (matching docs only).
 
@@ -69,6 +70,11 @@ def bm25_scores(
     FTS-matched subset: for an AND query every matched doc contains every
     term, so subset-df equals subset-N and the IDF collapses to ~0 —
     corpus-level stats keep term weighting meaningful.
+
+    ``stats``: the same corpus statistics already known, as ``(N, Σ
+    document length, [df per term])`` — e.g. read off a postings table.
+    They enter the plan as literals (``stats_over`` is then ignored), so no
+    statistics aggregate runs; the scores are bit-identical.
     """
     if not terms:
         raise ValueError("bm25_scores needs at least one term")
@@ -82,51 +88,59 @@ def bm25_scores(
         _term_count(F.col("__toks"), t).alias(f"__tf{i}") for i, t in enumerate(terms)
     ]
     tfd = toked.select(id_col, F.size("__toks").alias("__dl"), *tf_cols)
-    if stats_over is not None:
-        stoked = stats_over.select(tokens_expr(text_col).alias("__toks"))
-        stats_src = stoked.select(
-            F.size("__toks").alias("__dl"),
-            *[
-                _term_count(F.col("__toks"), t).alias(f"__tf{i}")
-                for i, t in enumerate(terms)
-            ],
-        )
+    if stats is not None:
+        n, sumdl, dfs = stats
+        joined = tfd
+        n_col = F.lit(n).cast("long")
+        avgdl = F.lit(sumdl).cast("long").cast("double") / F.nullif(n_col, F.lit(0))
+        df_cols = [F.lit(d).cast("long") for d in dfs]
     else:
-        stats_src = tfd
-    # corpus stats: one row (N, avgdl, df per term) — broadcast via crossJoin
-    # exact integer sums (not avg): double partial-sum order varies across
-    # engines/partitionings; int sum ÷ int count is one deterministic IEEE op
-    stats = stats_src.agg(
-        F.count("*").alias("__n"),
-        F.sum("__dl").alias("__sumdl"),
-        *[
-            F.sum((F.col(f"__tf{i}") > 0).cast("long")).alias(f"__df{i}")
-            for i in range(len(terms))
-        ],
-    ).select(
-        # nullif: an EMPTY stats corpus yields the agg row (n=0) and this
-        # projection still evaluates — under ANSI the bare 0/0 throws even
-        # though no scored row survives downstream
-        "*",
-        (F.col("__sumdl").cast("double") / F.nullif(F.col("__n"), F.lit(0))).alias(
-            "__avgdl"
-        ),
-    )
-    joined = tfd.crossJoin(F.broadcast(stats))
+        if stats_over is not None:
+            stoked = stats_over.select(tokens_expr(text_col).alias("__toks"))
+            stats_src = stoked.select(
+                F.size("__toks").alias("__dl"),
+                *[
+                    _term_count(F.col("__toks"), t).alias(f"__tf{i}")
+                    for i, t in enumerate(terms)
+                ],
+            )
+        else:
+            stats_src = tfd
+        # corpus stats: one row (N, avgdl, df per term) — broadcast via
+        # crossJoin. Exact integer sums (not avg): double partial-sum order
+        # varies across engines/partitionings; int sum ÷ int count is one
+        # deterministic IEEE op
+        agg = stats_src.agg(
+            F.count("*").alias("__n"),
+            F.sum("__dl").alias("__sumdl"),
+            *[
+                F.sum((F.col(f"__tf{i}") > 0).cast("long")).alias(f"__df{i}")
+                for i in range(len(terms))
+            ],
+        ).select(
+            # nullif: an EMPTY stats corpus yields the agg row (n=0) and
+            # this projection still evaluates — under ANSI the bare 0/0
+            # throws even though no scored row survives downstream
+            "*",
+            (
+                F.col("__sumdl").cast("double") / F.nullif(F.col("__n"), F.lit(0))
+            ).alias("__avgdl"),
+        )
+        joined = tfd.crossJoin(F.broadcast(agg))
+        n_col, avgdl = F.col("__n"), F.col("__avgdl")
+        df_cols = [F.col(f"__df{i}") for i in range(len(terms))]
     parts = []
     for i in range(len(terms)):
         tf = F.col(f"__tf{i}").cast("double")
-        df_t = F.col(f"__df{i}").cast("double")
+        df_t = df_cols[i].cast("double")
         idf = F.log(
-            1.0 + (F.col("__n") - df_t + 0.5) / (df_t + 0.5)
+            1.0 + (n_col - df_t + 0.5) / (df_t + 0.5)
         )
         # avgdl == 0 means every stats doc tokenized empty — any candidate
         # row then has dl = 0 too, where BM25's length norm degenerates to
         # the b-free form (ratio 0); guarding keeps ANSI from throwing on
         # 0/0 and is unreachable for any corpus with one token
-        dl_ratio = F.when(
-            F.col("__avgdl") > 0, F.col("__dl") / F.col("__avgdl")
-        ).otherwise(F.lit(0.0))
+        dl_ratio = F.when(avgdl > 0, F.col("__dl") / avgdl).otherwise(F.lit(0.0))
         denom = tf + k1 * (1.0 - b + b * dl_ratio)
         parts.append(idf * tf * (k1 + 1.0) / denom)
     score = parts[0]

@@ -25,9 +25,9 @@ Known plan property (measured, accepted): predicate pushdown substitutes the
 ``toks`` alias into each item's ``array_contains``, so the tokenize tree
 appears once per query item in the pushed filter. Boolean short-circuiting
 keeps the *evaluated* count near one per row (the first failed conjunct
-stops the row), and the interactive-scale form is the postings path
-(`engine.websearch_match_postings`), which never tokenizes the corpus at
-query time — this direct form is the one-shot/batch-filter path.
+stops the row). This direct form is the one-shot/batch-filter path and the
+oracle of the interactive form, which resolves the same grammar from the
+postings table without tokenizing the corpus at query time.
 """
 
 from __future__ import annotations
@@ -112,15 +112,6 @@ def positive_terms(parsed: list[Group]) -> list[str]:
                 for w in item.words:
                     seen.setdefault(w)
     return list(seen)
-
-
-def is_plain_and(parsed: list[Group]) -> bool:
-    """True when the query is a bare AND of positive single terms — the
-    shape the postings semi-join path handles."""
-    return (
-        len(parsed) == 1
-        and all(not it.negated and len(it.words) == 1 for it in parsed[0])
-    )
 
 
 def token_string_expr(toks: Column | str) -> Column:

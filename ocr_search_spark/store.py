@@ -12,15 +12,49 @@ Spark shape:
   ``content`` table (span texts joined — the ``documents.content`` analogue)
   and the inverted ``postings`` table (the tsvector analogue);
 * ``search`` mirrors ``search_documents`` semantics over the content table,
-  using the postings semi-join scale path.
+  resolving the match from the postings table.
 
-Table layout notes for 100 TB: all three tables are plain parquet here
-(Iceberg runtime jars are not in this sandbox); directory layout and
-append/overwrite discipline map 1:1 onto Iceberg tables — swap
-``write.parquet`` for ``writeTo(...).append()`` with a catalog configured.
+Snapshot layout and publish protocol. The two derived tables live together
+in one immutable snapshot directory::
+
+    <root>/spans, _ledger, _audit          ledgered span store (checkpoint)
+    <root>/snapshots/<id>/content          flat parquet, one row per doc
+    <root>/snapshots/<id>/postings         flat parquet, (term, doc_id, ...)
+    <root>/CURRENT                         {"snapshot": <id>}
+
+An ingest writes both tables into a fresh ``<id>`` that no reader knows,
+then publishes it with one atomic pointer swap: ``CURRENT`` is written to a
+temporary file and ``os.replace``-d into place. A reader resolves
+``CURRENT`` once and reads both tables of that one snapshot, so it sees the
+old or the new store, never content from one and postings from another. A
+crash before the swap leaves the previous snapshot live; the next ingest
+rebuilds from the ledgered spans and publishes a complete one. After the
+swap the previous snapshot is kept (a search that resolved it just before
+the swap can finish) and every older or unpublished snapshot is deleted.
+
+``search`` keeps the published snapshot resident: both tables cached, plus
+its document count and total token count (Σ tf), taken in one action when
+the snapshot is loaded, so BM25 and the empty query need no statistics job.
+It reloads only when ``CURRENT`` names another snapshot.
+
+One writer per store at a time; any number of readers. ``content_path`` and
+``postings_path`` resolve to the published snapshot, so callers keep
+reading flat parquet directories.
+
+Table layout notes for 100 TB: all tables are plain parquet here (Iceberg
+runtime jars are not in this sandbox); an Iceberg catalog gives the same
+one-commit publish natively — swap ``write.parquet`` for
+``writeTo(...).append()`` with a catalog configured.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import shutil
+import threading
+import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,24 +66,93 @@ from .pipeline.extract import ordered_text_agg
 from .search.engine import build_postings, search_documents
 from .tables import read_table, write_table
 
+POINTER = "CURRENT"
+
+
+def snapshot_dir(root: str, snapshot: str) -> str:
+    return f"{root}/snapshots/{snapshot}"
+
+
+def read_pointer(root: str) -> dict | None:
+    """The published snapshot record, or None before the first publish.
+    A plain file read: no Spark job."""
+    try:
+        with open(os.path.join(root, POINTER)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def publish_snapshot(root: str, snapshot: str) -> None:
+    """Atomically make ``snapshot`` the published one, then delete every
+    snapshot except it and the one it replaces."""
+    previous = read_pointer(root)
+    tmp = os.path.join(root, f".{POINTER}.{snapshot}")
+    with open(tmp, "w") as f:
+        json.dump({"snapshot": snapshot}, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(root, POINTER))
+    keep = {snapshot, previous and previous["snapshot"]}
+    base = os.path.join(root, "snapshots")
+    for name in os.listdir(base):
+        if name not in keep:
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+
+
+@dataclass
+class _Resident:
+    """One published snapshot's cached tables and (N docs, Σ tf)."""
+
+    snapshot: str | None
+    docs: DataFrame
+    postings: DataFrame
+    stats: tuple[int, int]
+
+    @classmethod
+    def load(cls, spark: SparkSession, snapshot: str | None, content: str, postings: str):
+        docs = read_table(spark, content).cache()
+        post = read_table(spark, postings).cache()
+        # one action fills both caches and counts documents and tokens
+        n, sum_tf = (
+            docs.select(F.lit(1).alias("n"), F.lit(0).cast("long").alias("tf"))
+            .unionByName(post.select(F.lit(0).alias("n"), F.col("tf")))
+            .agg(F.sum("n"), F.sum("tf"))
+            .first()
+        )
+        return cls(snapshot, docs, post, (n or 0, sum_tf or 0))
+
+    def unpersist(self) -> None:
+        self.docs.unpersist()
+        self.postings.unpersist()
+
 
 class DocumentStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._resident: _Resident | None = None
+        self._lock = threading.Lock()
 
     # ---- paths -----------------------------------------------------------
     @property
     def spans_path(self) -> str:
         return output_path(self.root)
 
+    def _table_path(self, name: str, pointer: dict | None) -> str:
+        # no pointer: nothing published yet, or a store written before
+        # snapshots existed, whose tables sit directly under the root
+        if pointer is None:
+            return f"{self.root}/{name}"
+        return f"{snapshot_dir(self.root, pointer['snapshot'])}/{name}"
+
     @property
     def content_path(self) -> str:
-        return f"{self.root}/content"
+        return self._table_path("content", read_pointer(self.root))
 
     @property
     def postings_path(self) -> str:
-        return f"{self.root}/postings"
+        return self._table_path("postings", read_pointer(self.root))
 
     # ---- lifecycle -------------------------------------------------------
     def ingest(
@@ -59,7 +162,8 @@ class DocumentStore:
         num_partitions: int | None = None,
         num_groups: int = 4,
     ) -> dict:
-        """Extract (resumably) and materialize content + postings tables."""
+        """Extract (resumably), write content + postings into a fresh
+        snapshot and publish it (see the module docstring)."""
         stats = run_extraction(
             self.spark,
             documents,
@@ -104,28 +208,47 @@ class DocumentStore:
                 ext=F.regexp_extract("filename", r"\.([a-z]+)$", 1),
             ),
         )
-        # KNOWN LIMIT (parquet mode): the two derived-table overwrites are
-        # not one atomic publish — a crash between them (or a concurrent
-        # reader mid-overwrite) can observe content/postings from
-        # different rebuilds until the next ingest. The durable span data
-        # itself is protected by the ledgered stage-then-publish protocol
-        # and a re-run of ingest rebuilds both views; in Iceberg mode each
-        # overwrite is a snapshot commit and readers never see partial
-        # tables. A serving deployment should rebuild into fresh paths and
-        # swap a pointer, or run on Iceberg.
-        write_table(content, self.content_path, mode="overwrite")
-        docs = read_table(self.spark, self.content_path)
+        snapshot = uuid.uuid4().hex
+        base = snapshot_dir(self.root, snapshot)
+        write_table(content, f"{base}/content", mode="overwrite")
+        docs = read_table(self.spark, f"{base}/content")
         write_table(
             build_postings(docs, "doc_id", "content"),
-            self.postings_path,
+            f"{base}/postings",
             mode="overwrite",
         )
+        publish_snapshot(self.root, snapshot)
+        stats["snapshot"] = snapshot
         return stats
 
+    def _resolve(self) -> _Resident:
+        """The published snapshot's tables, kept resident across searches.
+        They are reloaded, and the previous ones unpersisted, only when the
+        pointer has changed since the last search."""
+        with self._lock:
+            pointer = read_pointer(self.root)
+            snapshot = pointer and pointer["snapshot"]
+            old = self._resident
+            if old is None or old.snapshot != snapshot:
+                self._resident = _Resident.load(
+                    self.spark,
+                    snapshot,
+                    self._table_path("content", pointer),
+                    self._table_path("postings", pointer),
+                )
+                if old is not None:
+                    old.unpersist()
+            return self._resident
+
     def search(self, q: str | None, limit: int = 25, offset: int = 0, **filters) -> dict:
-        """Reference search semantics over the stored corpus."""
-        docs = read_table(self.spark, self.content_path)
-        postings = read_table(self.spark, self.postings_path)
+        """Reference search semantics over the published snapshot."""
+        snap = self._resolve()
         return search_documents(
-            docs, q, limit=limit, offset=offset, postings=postings, **filters
+            snap.docs,
+            q,
+            limit=limit,
+            offset=offset,
+            postings=snap.postings,
+            corpus_stats=snap.stats,
+            **filters,
         )

@@ -215,6 +215,22 @@ class TestConnectedComponents:
         labels = {r.id: r.label for r in connected_components_labels(df).collect()}
         assert set(labels.values()) == {"c000"}  # default budget converges
 
+    def test_one_round_budget(self, spark):
+        """max_iters=1 is the unrolled first round alone: an edgeless graph
+        converges in it, any edge needs a second round, and a budget below
+        one round is rejected."""
+        import pytest as _pytest
+
+        from ocr_search_spark.ops.dedup import connected_components_labels
+
+        empty = spark.createDataFrame([], "a_id string, b_id string")
+        assert connected_components_labels(empty, max_iters=1).collect() == []
+        one = spark.createDataFrame([("a", "b")], "a_id string, b_id string")
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            connected_components_labels(one, max_iters=1)
+        with _pytest.raises(ValueError, match="max_iters"):
+            connected_components_labels(one, max_iters=0)
+
     def test_deep_chain_converges_in_log_rounds(self, spark):
         """Pointer halving: a 100-node path (diameter 99) must converge
         well within O(log d) rounds — 12 iterations, where plain min-label

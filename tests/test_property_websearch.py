@@ -3,7 +3,9 @@
 query over arbitrary token sequences and arbitrary query strings (quotes,
 OR, dashes, punctuation noise). No SparkSession needed — the Spark predicate
 is separately equivalence-tested in test_search.py; this pins the parse and
-the SQL twin, the two halves every oracle depends on."""
+the SQL twin, the two halves every oracle depends on. The last test drives
+the same random queries through Spark: the postings matcher must agree
+with the tokenize-and-filter path."""
 
 from __future__ import annotations
 
@@ -79,3 +81,18 @@ def test_sql_twin_matches_python_semantics(q, docs, con):
         ).fetchall()
     }
     assert got_ids == {i for i, w in enumerate(want) if w}
+
+
+@settings(max_examples=25, deadline=None)
+@given(q=_queries, docs=_docs)
+def test_postings_path_matches_tokenize_path(q, docs, spark):
+    from ocr_search_spark.search.engine import build_postings, search_documents
+
+    rows = [(f"d{i}", " ".join(toks)) for i, toks in enumerate(docs)]
+    df = spark.createDataFrame(rows, "doc_id string, content string")
+    want = search_documents(df, q, limit=len(rows))
+    got = search_documents(df, q, postings=build_postings(df), limit=len(rows))
+    assert got["total"] == want["total"]
+    assert sorted(r.doc_id for r in got["items"].collect()) == sorted(
+        r.doc_id for r in want["items"].collect()
+    )

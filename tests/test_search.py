@@ -155,6 +155,57 @@ class TestSearchFlow:
         assert p1 + p2 + p3 == full
 
 
+class TestPostingsMatcher:
+    """The postings path (one-action matcher, scoring of the matched ids
+    only, BM25 statistics from postings) returns exactly what the
+    tokenize-and-filter oracle (``postings=None``) returns: ``total`` and
+    every returned row, field for field."""
+
+    CASES = [
+        ("-uppercase", {}),  # negation-only: whole scope, zero-token d5 too
+        ('-"spark join"', {}),
+        ("nothing or -spark", {}),
+        ("-nothing", {"ocr_user": "corp.ru"}),  # a filter narrows the scope
+        ("spark", {"ocr_from": "2024-01-01 00:00:00", "ocr_to": "2024-12-31 00:00:00"}),
+        ("spark join", {"ocr_user": "corp.ru", "rank_mode": "bm25"}),
+        ("spark join", {"rank_mode": "bm25"}),
+        ("spark tables -uppercase", {"rank_mode": "cd"}),
+        ("???", {}),  # token-free: matches nothing
+        ("or", {}),
+        ('"spark join spark"', {}),  # a phrase may repeat a word
+        ("spark", {"limit": 1, "offset": 1}),
+        ("spark", {"limit": 2, "offset": 2}),
+    ]
+
+    @pytest.fixture(scope="class")
+    def postings(self, docs):
+        return build_postings(docs, "doc_id", "content")
+
+    @pytest.mark.parametrize("scope", ["filterable", "plain"])
+    @pytest.mark.parametrize("q,kw", CASES)
+    def test_equals_oracle(self, docs, postings, q, kw, scope):
+        """``filterable`` docs carry created_at/email, so every search is
+        scoped by a filter; ``plain`` docs are the whole corpus, with the
+        corpus statistics passed in as a store does."""
+        stats = None
+        if scope == "plain":
+            docs = docs.select("doc_id", "content")
+            stats = (docs.count(), postings.agg(F.sum("tf")).first()[0])
+        want = search_documents(docs, q, **kw)
+        got = search_documents(docs, q, postings=postings, corpus_stats=stats, **kw)
+        assert got["total"] == want["total"]
+        assert got["items"].collect() == want["items"].collect()
+
+    def test_query_with_quote_backslash_paren_equals_oracle(self, docs, postings):
+        q = "'spark' tables\\ -(nothing)"
+        want = search_documents(docs, q)
+        got = search_documents(docs, q, postings=postings)
+        assert got["total"] == want["total"] == 1
+        assert [r.doc_id for r in got["items"].collect()] == [
+            r.doc_id for r in want["items"].collect()
+        ]
+
+
 class TestWebsearchGrammar:
     """websearch_to_tsquery semantics (search.py:51-52)."""
 
@@ -221,21 +272,14 @@ class TestWebsearchGrammar:
             ), q
 
     def test_phrase_match_postings_positions(self, docs):
-        from ocr_search_spark.search.engine import phrase_match_postings
+        from ocr_search_spark.search.engine import match_postings
+        from ocr_search_spark.search.websearch import parse_websearch
 
         postings = build_postings(docs, "doc_id", "content")
-        got = sorted(
-            r.doc_id
-            for r in phrase_match_postings(postings, ["spark", "join"]).collect()
-        )
+        got = match_postings(postings, parse_websearch('"spark join"')).ids
         assert got == ["d2", "d4"]
-        # three-word phrase crossing the narrowing chain
-        got3 = sorted(
-            r.doc_id
-            for r in phrase_match_postings(
-                postings, ["spark", "join", "spark"]
-            ).collect()
-        )
+        # three-word phrase that repeats a word
+        got3 = match_postings(postings, parse_websearch('"spark join spark"')).ids
         assert got3 == ["d2"]
 
     def test_predicate_sql_twin_matches(self, spark, docs):

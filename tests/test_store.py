@@ -118,3 +118,187 @@ class TestLifecycle:
         for r in items:
             assert r.link == "http://files.local/store/" + r.filename
             assert r.snippet_is_html is True
+
+
+def _spans_df(spark, docs):
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {"doc_id": [d["doc_id"] for d in docs], "spans": [d["spans"] for d in docs]}
+        ),
+        schema=SPANS_IN_SCHEMA,
+    )
+
+
+def _top_term(spark, s):
+    """The store's most frequent term (ties broken by name)."""
+    from pyspark.sql import functions as F
+
+    return (
+        spark.read.parquet(s.postings_path)
+        .groupBy("term")
+        .agg(F.count("*").alias("df"))
+        .orderBy(F.col("df").desc(), "term")
+        .first()
+        .term
+    )
+
+
+class TestSnapshotPublish:
+    """ingest writes content + postings into a fresh snapshot and publishes
+    it with one pointer swap; readers see one whole snapshot."""
+
+    @pytest.fixture(scope="class")
+    def batches(self, base_texts):
+        docs = build_local(base_texts, 40)
+        return docs[:25], docs[25:]
+
+    def test_crash_before_publish_keeps_previous_snapshot(
+        self, spark, batches, tmp_path_factory, monkeypatch
+    ):
+        import os
+
+        import ocr_search_spark.store as store_mod
+
+        first, second = batches
+        s = DocumentStore(spark, str(tmp_path_factory.mktemp("crash")))
+        s.ingest(_spans_df(spark, first), run_group="b1", num_partitions=4, num_groups=2)
+        published = s.content_path
+        term = _top_term(spark, s)
+        before = s.search(term, limit=100)["total"]
+
+        def crash(root, snapshot):
+            raise RuntimeError("crash between snapshot write and publish")
+
+        monkeypatch.setattr(store_mod, "publish_snapshot", crash)
+        with pytest.raises(RuntimeError, match="crash between"):
+            s.ingest(_spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2)
+        # the previous snapshot stays live and searchable
+        assert s.content_path == published
+        assert spark.read.parquet(s.content_path).count() == len(first)
+        assert s.search(term, limit=100)["total"] == before
+        assert DocumentStore(spark, s.root).search(term, limit=100)["total"] == before
+
+        # the next ingest publishes a complete snapshot and drops the orphan
+        monkeypatch.undo()
+        s.ingest(_spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2)
+        assert s.content_path != published
+        assert spark.read.parquet(s.content_path).count() == len(first) + len(second)
+        snaps = os.listdir(os.path.join(s.root, "snapshots"))
+        assert len(snaps) == 2  # the new one and the one it replaced
+        assert os.path.dirname(published).rsplit("/", 1)[-1] in snaps
+
+    def test_other_instance_sees_published_snapshot(
+        self, spark, batches, tmp_path_factory
+    ):
+        from ocr_search_spark.search.engine import search_documents
+
+        first, second = batches
+        root = str(tmp_path_factory.mktemp("two"))
+        a, b = DocumentStore(spark, root), DocumentStore(spark, root)
+        b.ingest(_spans_df(spark, first), run_group="b1", num_partitions=4, num_groups=2)
+        assert a.search("")["total"] == len(first)
+        term = _top_term(spark, a)
+        a.search(term)["items"].collect()  # A's snapshot is now resident
+        b.ingest(_spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2)
+        got = a.search(term, limit=100)
+        want = search_documents(spark.read.parquet(b.content_path), term, limit=100)
+        assert a.search("")["total"] == len(first) + len(second)
+        assert got["total"] == want["total"]
+        assert [r.doc_id for r in got["items"].collect()] == [
+            r.doc_id for r in want["items"].collect()
+        ]
+
+    def test_search_during_publish_sees_one_snapshot(
+        self, spark, batches, tmp_path_factory
+    ):
+        """Reader threads sharing one store instance search while an ingest
+        publishes; each search observes the old or the new store, never a
+        mix. A mix would pair one snapshot's postings with the other's
+        content, so ``total`` (from postings) would disagree with the rows
+        found in content."""
+        import sys
+        import threading
+
+        first, second = batches
+        root = str(tmp_path_factory.mktemp("race"))
+        writer = DocumentStore(spark, root)
+        writer.ingest(_spans_df(spark, first), run_group="b1", num_partitions=4, num_groups=2)
+        term = _top_term(spark, writer)
+        reader = DocumentStore(spark, root)
+        seen, errors = [], []
+        done = threading.Event()
+
+        def search_loop():
+            try:
+                while not done.is_set():
+                    res = reader.search(term, limit=100)
+                    seen.append((res["total"], len(res["items"].collect())))
+            except Exception as e:  # surfaced below
+                errors.append(e)
+
+        threads = [threading.Thread(target=search_loop) for _ in range(6)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for t in threads:
+                t.start()
+            writer.ingest(
+                _spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2
+            )
+            n = len(seen)
+            while len(seen) < n + 12 and not errors:
+                done.wait(0.05)  # searches that started after the publish
+        finally:
+            done.set()
+            for t in threads:
+                t.join(timeout=120)
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        new_total = DocumentStore(spark, root).search(term, limit=100)["total"]
+        assert seen and all(total == n_items for total, n_items in seen)
+        totals = {total for total, _ in seen}
+        assert new_total in totals and totals <= {seen[0][0], new_total}
+
+
+class TestSearchJobs:
+    """Regression guard on Spark jobs per query against a resident
+    snapshot: the match is one action and the scoring plus top-k another;
+    bm25 adds a join and cd its proximity windows."""
+
+    def test_jobs_per_query_class(self, spark, store):
+        from pyspark.sql import functions as F
+
+        s, _ = store
+        post = spark.read.parquet(s.postings_path)
+        by_df = sorted(
+            (-r.df, r.term)
+            for r in post.groupBy("term").agg(F.count("*").alias("df")).collect()
+        )
+        terms = [t for _, t in by_df]
+        dfs = {t: -d for d, t in by_df}
+        common, rare = terms[:3], [t for t in terms if dfs[t] == 1][:2]
+        mid = [t for t in terms if 5 <= dfs[t] <= 15][:2] or terms[3:5]
+        cases = {
+            "rare": (" ".join(rare), {}),
+            "common": (" ".join(common[:2]), {}),
+            "phrase": ('"' + " ".join(common[:2]) + '"', {}),
+            "or_not": (f"{mid[0]} or {mid[1]} -{common[2]}", {}),
+            "bm25": (f"{mid[0]} {common[0]}", {"rank_mode": "bm25"}),
+            "cd": (f"{mid[0]} {common[0]}", {"rank_mode": "cd"}),
+            "empty": ("", {}),
+        }
+        sc = spark.sparkContext
+        s.search(common[0])["items"].collect()  # load the resident snapshot
+        try:
+            for cls, (q, kw) in cases.items():
+                group = f"test-search-jobs-{cls}"
+                sc.setLocalProperty("spark.jobGroup.id", group)
+                res = s.search(q, **kw)
+                res["items"].collect()
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                assert 1 <= jobs <= (6 if cls == "cd" else 4), (cls, q, jobs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
