@@ -13,7 +13,7 @@ interleaved text + media documents:
 * search semantics — FTS term match, date-range / ILIKE predicates, rank +
   trigram similarity, snippet, combined ordering (app/search.py:10-99);
 * skew-salted partitioning, per-partition lineage/audit metrics, and
-  checkpoint-ledger resumability (north_rule);
+  checkpointed resumability published by one atomic pointer (north_rule);
 * training-data-pipeline operators: dedup (exact / MinHash-LSH / n-gram
   Jaccard / SimHash), ANN similarity search over embeddings, text analysis
   (language id, quality score, token counting, fingerprinting), multimodal

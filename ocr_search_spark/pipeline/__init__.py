@@ -13,7 +13,7 @@ from .checkpoint import (
     compact_group_outputs,
     run_extraction,
     read_audit,
-    read_ledger,
+    read_pointer,
 )
 
 __all__ = [
@@ -27,5 +27,5 @@ __all__ = [
     "ordered_text_agg",
     "run_extraction",
     "read_audit",
-    "read_ledger",
+    "read_pointer",
 ]

@@ -1,4 +1,5 @@
-"""Resumable extraction runs: checkpoint ledger + per-partition audit.
+"""Resumable extraction runs: staged span attempts, one publication record
+and a per-partition audit.
 
 Replaces the reference's Redis job-state blob (reference:
 app/broker/config.py:37-53 — ``{status, total, done, progress, ...}`` with a
@@ -8,23 +9,27 @@ lineage:
 * the input is split into ``num_groups`` deterministic *commit groups*:
   ``group_id = pmod(xxhash64(doc_id), num_groups)`` — a pure function of
   (doc_id, num_groups) ONLY, so membership is identical across runs
-  regardless of cluster parallelism; ``num_groups`` is persisted in the
-  ledger and a resume with a different value fails fast instead of
+  regardless of cluster parallelism; ``num_groups`` is recorded per
+  run_group and a resume with a different value fails fast instead of
   silently re-partitioning the commit space;
 * each group's output is **staged** under a group-keyed attempt directory
-  ``spans/g=<group>/r=<run_id>`` and *published* only by its ledger row
-  (run_group, group_id, run_id). Readers (:func:`committed_spans`) resolve
-  the ledger and read exactly the published attempt directories — a crash
-  after the spans write but before the ledger append leaves an orphan
-  directory that is never read and is re-extracted (to a new attempt dir)
-  on resume, so the committed view never loses or double-counts a row even
-  though the three appends are not one transaction. (On Iceberg the same
-  publish step is a single atomic snapshot commit; the staging directory is
-  the parquet-filesystem equivalent.)
+  ``spans/g=<group>/r=<run_id>`` that no reader looks at until it is
+  published;
+* the store's one publication record is the file ``<root>/CURRENT``
+  (:func:`read_pointer`). It names the live attempt of every
+  (run_group, group_id) with its publication order, the ``num_groups`` of
+  every run_group, and the published snapshot of the derived tables (see
+  ``store.py``). :func:`publish` is its only writer: it changes a copy of
+  the record, writes it to a temporary file, fsyncs it and ``os.replace``-s
+  it over ``CURRENT`` — one atomic swap, so a reader sees the record before
+  or after a publish, never a mix. A crash before the swap leaves the
+  staged attempts as orphans that no reader sees, and a resume re-extracts
+  them into a new attempt directory, so the published view never loses or
+  double-counts a row;
 * an **audit** row per salt partition (run_id, partition_id, docs, spans,
   failures, wall_ms, committed_at — FIXTURES.md §5) records attempt-level
-  lineage: every attempt is logged, the ledger says which one is live;
-* a restarted run with the same ``run_group`` skips ledgered groups and
+  lineage: every attempt is logged, the pointer says which one is live;
+* a restarted run with the same ``run_group`` skips published groups and
   processes only the remainder — a killed job never reprocesses committed
   groups.
 
@@ -35,22 +40,23 @@ each group still fans out across all executors.
 
 from __future__ import annotations
 
+import copy
+import json
 import os
 import re
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
 from .extract import SPANS_OUT_SCHEMA, extract_documents
-from ..tables import read_table, write_table
+from ..localrel import string_int_df
+from ..tables import write_table
 
-LEDGER_SCHEMA = (
-    "run_group string, group_id int, run_id string, num_groups int, "
-    "committed_at timestamp"
-)
+POINTER = "CURRENT"
 
 
 class SimulatedFailure(RuntimeError):
@@ -58,7 +64,7 @@ class SimulatedFailure(RuntimeError):
 
 
 class IncompatibleCheckpointError(RuntimeError):
-    """The out_dir holds a ledger written by an older layout version."""
+    """The out_dir holds a checkpoint written by an older layout version."""
 
 
 #: run_group charset: the id becomes a Hive partition VALUE (r=<run_id>)
@@ -79,10 +85,6 @@ def _validate_run_group(run_group: str) -> None:
         )
 
 
-def _ledger_path(out_dir: str) -> str:
-    return f"{out_dir}/_ledger"
-
-
 def _audit_path(out_dir: str) -> str:
     return f"{out_dir}/_audit"
 
@@ -95,92 +97,100 @@ def group_attempt_path(out_dir: str, group_id: int, run_id: str) -> str:
     return f"{output_path(out_dir)}/g={group_id}/r={run_id}"
 
 
-def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    try:
-        ledger = read_table(spark, _ledger_path(out_dir))
-    except AnalysisException:
-        # missing-path == "no checkpoint yet"; anything else (permission,
-        # corruption, transient IO) must surface — mapping it to None
-        # would silently re-extract everything or publish empty views
-        return None
-    if "num_groups" not in ledger.columns:
-        # pre-attempt-dir ledger format (flat spans/ appends, parallelism-
-        # derived groups): silently resuming would mis-assign group
-        # membership and miss the old flat output files entirely
+def read_pointer(root: str) -> dict:
+    """The store's publication record, read as a plain file (no Spark job).
+
+    ``{"order": n, "snapshot": id | None, "spans": {run_group:
+    {"num_groups": k, "live": {"<group_id>": {"run_id": r, "order": o}}}}}``
+    where ``order`` counts publishes and each live attempt keeps the order
+    it was published at. Before the first publish no snapshot and no
+    attempt is live."""
+    if os.path.isdir(os.path.join(root, "_ledger")):
+        # spans used to be published by rows of a parquet ledger table;
+        # resuming over one would re-extract everything next to the old
+        # attempts and leave them unreachable
         raise IncompatibleCheckpointError(
-            f"{_ledger_path(out_dir)} was written by an older checkpoint "
-            "format (no num_groups column; spans were flat appends). "
-            "Re-extract into a fresh out_dir, or migrate by adding a "
-            "num_groups column and moving each group's files under "
-            "spans/g=<group_id>/r=<run_id>/ to match its ledger row."
+            f"{root}/_ledger was written by an older checkpoint format "
+            f"(a parquet publication ledger); this version publishes through "
+            f"{root}/{POINTER} only. Re-extract into a fresh out_dir."
         )
-    return ledger
+    pointer = {"order": 0, "snapshot": None, "spans": {}}
+    try:
+        with open(os.path.join(root, POINTER)) as f:
+            pointer.update(json.load(f))
+    except FileNotFoundError:
+        pass
+    return pointer
+
+
+def publish(root: str, change: Callable[[dict], None]) -> dict:
+    """The one atomic publish of a store: read-modify-write of ``CURRENT``.
+
+    ``change(pointer)`` edits a copy of the current record in place; its
+    ``order`` has already been advanced, so whatever it makes live takes
+    that order. The copy is written to a temporary file, fsynced and
+    ``os.replace``-d over ``CURRENT``. One writer per store at a time.
+    Returns the record it replaced."""
+    old = read_pointer(root)
+    new = copy.deepcopy(old)
+    new["order"] += 1
+    change(new)
+    tmp = os.path.join(root, f".{POINTER}.{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        json.dump(new, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(root, POINTER))
+    return old
+
+
+def _make_live(pointer: dict, run_group: str, num_groups: int, groups, run_id: str) -> None:
+    spec = pointer["spans"].setdefault(run_group, {"num_groups": num_groups, "live": {}})
+    for g in groups:
+        spec["live"][str(g)] = {"run_id": run_id, "order": pointer["order"]}
+
+
+def _live_attempts(pointer: dict, run_group: str | None = None) -> list[tuple]:
+    """(group_id, run_id, order) of every live attempt, of one run_group or
+    of all. num_groups-sized per run_group — driver-small by construction."""
+    return [
+        (int(g), a["run_id"], a["order"])
+        for rg, spec in pointer["spans"].items()
+        if run_group in (None, rg)
+        for g, a in spec["live"].items()
+    ]
 
 
 def read_audit(spark: SparkSession, out_dir: str) -> DataFrame | None:
     try:
-        return read_table(spark, _audit_path(out_dir))
-    except AnalysisException:  # missing path only — see read_ledger
+        return spark.read.parquet(_audit_path(out_dir))
+    except AnalysisException:
+        # missing-path == "no run yet"; anything else (permission,
+        # corruption, transient IO) must surface
         return None
-
-
-def _ledger_rows(spark: SparkSession, out_dir: str, run_group: str) -> list:
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
-        return []
-    return (
-        ledger.filter(F.col("run_group") == run_group)
-        .select("group_id", "run_id", "num_groups")
-        .collect()
-    )
 
 
 def committed_spans(
     spark: SparkSession, out_dir: str, run_group: str | None = None
 ) -> DataFrame:
-    """The published output view: exactly the ledgered attempt directories.
+    """The published output view: exactly the live attempt directories.
 
-    Orphan attempts from crashed runs (staged but never published) are
-    invisible here. When a group has several ledger rows (e.g. after
-    :func:`compact_group_outputs` republished it), the LATEST publication
-    wins — older attempts become invisible history. The ledger is
-    num_groups-sized — driver-small by construction.
+    Orphan attempts from crashed runs (staged but never published) and
+    attempts a later publish superseded (e.g. by
+    :func:`compact_group_outputs`) are invisible here.
 
     SCOPING: with ``run_group=None`` the view CONCATENATES every
     run_group's published attempts — two run_groups that both extracted an
     overlapping document each contribute their rows. Use
     :func:`committed_spans_latest` when one row per document (latest
     publication wins) is the contract, e.g. for rebuilding derived tables."""
-    latest = _latest_publications(spark, out_dir, run_group)
-    if not latest:
+    live = _live_attempts(read_pointer(out_dir), run_group)
+    if not live:
         return spark.createDataFrame([], SPANS_OUT_SCHEMA)
-    paths = [group_attempt_path(out_dir, r.group_id, r.run_id) for r in latest.values()]
+    paths = [group_attempt_path(out_dir, g, r) for g, r, _ in live]
     # explicit schema: skips footer inference and keeps an all-empty-group
     # read (zero staged files) well-defined
     return spark.read.schema(SPANS_OUT_SCHEMA).parquet(*paths)
-
-
-def _latest_publications(
-    spark: SparkSession, out_dir: str, run_group: str | None = None
-) -> dict:
-    """Latest ledger row per (run_group, group_id) — the live attempts."""
-    ledger = read_ledger(spark, out_dir)
-    if ledger is not None and run_group is not None:
-        ledger = ledger.filter(F.col("run_group") == run_group)
-    rows = (
-        ledger.select("run_group", "group_id", "run_id", "committed_at").collect()
-        if ledger is not None
-        else []
-    )
-    latest: dict[tuple, object] = {}
-    for r in rows:
-        key = (r.run_group, r.group_id)
-        if key not in latest or (r.committed_at, r.run_id) > (
-            latest[key].committed_at,
-            latest[key].run_id,
-        ):
-            latest[key] = r
-    return latest
 
 
 def committed_spans_latest(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -188,38 +198,28 @@ def committed_spans_latest(spark: SparkSession, out_dir: str) -> DataFrame:
 
     :func:`committed_spans` with ``run_group=None`` concatenates all
     run_groups, so a document two run_groups both extracted appears twice.
-    Here the publication with the greatest (committed_at, run_id) wins per
-    document — the view derived-table rebuilds want (see
-    ``DocumentStore.ingest``). Cost: one extra shuffle (partial-aggregated
-    ``max_by`` per doc_id) over the published rows — a rebuild-time path,
-    not a per-query path."""
-    latest = _latest_publications(spark, out_dir, None)
-    if not latest:
+    Here the attempt published last wins per document — the view
+    derived-table rebuilds want (see ``DocumentStore.ingest``). Cost: one
+    extra shuffle (partial-aggregated ``max_by`` per doc_id) over the
+    published rows — a rebuild-time path, not a per-query path."""
+    live = _live_attempts(read_pointer(out_dir))
+    if not live:
         return spark.createDataFrame([], SPANS_OUT_SCHEMA)
     # ONE scan node regardless of attempt count: read every live attempt
     # path in a single multi-path parquet read with basePath so the g/r
-    # partition columns surface, then attach the publication key by
-    # broadcast-joining the (num-live-attempts)-sized ledger resolution.
-    # (The round-3 formulation built one DataFrame per attempt and reduced
-    # with unionByName — an O(attempts)-leg plan that is driver-slow to
-    # analyze at the documented production shape of thousands of groups.)
-    paths = [group_attempt_path(out_dir, r.group_id, r.run_id) for r in latest.values()]
-    pub_rows = [
-        # fixed-width timestamp + run_id → lexicographic == publication order
-        (
-            int(r.group_id),
-            r.run_id,
-            r.committed_at.strftime("%Y-%m-%d %H:%M:%S.%f") + "|" + r.run_id,
-        )
-        for r in latest.values()
-    ]
+    # partition columns surface, then attach the publication order by
+    # broadcast-joining the (run_id, order) table. A run_id is published
+    # in one swap, so it has one order. (One DataFrame per attempt reduced
+    # with unionByName would be an O(attempts)-leg plan, driver-slow to
+    # analyze at thousands of groups.)
+    paths = [group_attempt_path(out_dir, g, r) for g, r, _ in live]
     allp = (
         spark.read.schema(SPANS_OUT_SCHEMA + ", g int, r string")
         .option("basePath", output_path(out_dir))
         .parquet(*paths)
     )
-    pub = spark.createDataFrame(pub_rows, "g int, r string, __pub string")
-    allp = allp.join(F.broadcast(pub), ["g", "r"]).drop("g", "r")
+    pub = string_int_df(spark, sorted({(r, o) for _, r, o in live}), "r, __pub")
+    allp = allp.join(F.broadcast(pub), "r").drop("g", "r")
     payload = [c for c in allp.columns if c not in ("doc_id", "__pub")]
     return (
         allp.groupBy("doc_id")
@@ -235,32 +235,27 @@ def compact_group_outputs(
     target_partitions: int = 1,
 ) -> dict:
     """Small-files hygiene: rewrite each published group into a compacted
-    attempt directory and republish it (latest ledger row wins).
+    attempt directory and republish it.
 
     Every group append fans out over all executors, so a long-running table
     accumulates P files per group per run — the classic small-files problem
     at 10^12 rows. Compaction reuses the same stage-then-publish protocol as
     extraction: readers never see a half-written rewrite, and a crash
-    mid-compaction leaves the previous publication live. (On Iceberg this is
-    `rewrite_data_files` — same idea, catalog-native.)"""
-    latest = {
-        key[1]: r
-        for key, r in _latest_publications(spark, out_dir, run_group).items()
-    }
-    if not latest:
+    mid-compaction leaves the previous publication live."""
+    pointer = read_pointer(out_dir)
+    live = _live_attempts(pointer, run_group)
+    if not live:
         return {"run_group": run_group, "groups_compacted": 0, "run_id": None}
     _validate_run_group(run_group)
     compact_id = f"{run_group}-compact-{uuid.uuid4().hex[:8]}"
-    num_groups = _ledger_rows(spark, out_dir, run_group)[0].num_groups
+    groups = [g for g, _, _ in live]
 
     # Stage: ONE job rewrites every live group. Multi-path read with
     # basePath surfaces the g partition column; repartitioning on (g [,
     # salt]) gives each group target_partitions output files; the same
     # partitionBy(g, r) append used by run_extraction lands each group
-    # under spans/g=<g>/r=<compact_id>. (The round-3 formulation ran one
-    # Spark job + one 1-row ledger append per group — a driver-bound
-    # afternoon at 10k groups.)
-    paths = [group_attempt_path(out_dir, g, r.run_id) for g, r in latest.items()]
+    # under spans/g=<g>/r=<compact_id>.
+    paths = [group_attempt_path(out_dir, g, r) for g, r, _ in live]
     src = (
         spark.read.schema(SPANS_OUT_SCHEMA + ", g int, r string")
         .option("basePath", output_path(out_dir))
@@ -269,29 +264,26 @@ def compact_group_outputs(
     )
     if target_partitions > 1:
         salt = F.pmod(F.xxhash64("doc_id"), F.lit(target_partitions))
-        src = src.repartition(len(latest) * target_partitions, "g", salt)
+        src = src.repartition(len(live) * target_partitions, "g", salt)
     else:
-        src = src.repartition(len(latest), "g")
+        src = src.repartition(len(live), "g")
     write_table(
         src.withColumn("r", F.lit(compact_id)),
         output_path(out_dir),
         mode="append",
         partition_by=("g", "r"),
     )
-    for g in latest:
+    for g in groups:
         _ensure_local_dir(group_attempt_path(out_dir, g, compact_id))
 
-    # Publish: ONE ledger append carrying every group's row. A crash before
-    # this append leaves the previous publications live (staged rewrite is
-    # an invisible orphan — same stage-then-publish contract as extraction).
-    ledger_rows = spark.createDataFrame(
-        [(run_group, int(g), compact_id, int(num_groups)) for g in sorted(latest)],
-        "run_group string, group_id int, run_id string, num_groups int",
-    ).withColumn("committed_at", F.current_timestamp())
-    write_table(ledger_rows.coalesce(1), _ledger_path(out_dir), mode="append")
+    # Publish: one pointer swap makes every rewritten group live. A crash
+    # before it leaves the previous publications live (the staged rewrite
+    # is an invisible orphan — same contract as extraction).
+    num_groups = pointer["spans"][run_group]["num_groups"]
+    publish(out_dir, lambda p: _make_live(p, run_group, num_groups, groups, compact_id))
     return {
         "run_group": run_group,
-        "groups_compacted": len(latest),
+        "groups_compacted": len(live),
         "run_id": compact_id,
     }
 
@@ -299,25 +291,22 @@ def compact_group_outputs(
 def vacuum_uncommitted(
     spark: SparkSession, out_dir: str, min_age_s: float = 3600.0
 ) -> list[str]:
-    """Delete staged attempt directories that no ledger row ever published
-    (crash leftovers) or that a later republication superseded. Driver-side
-    filesystem walk — parquet mode only (Iceberg expires snapshots instead).
-    Returns the removed paths.
+    """Delete staged attempt directories that no publish ever made live
+    (crash leftovers) or that a later publish superseded. Driver-side
+    filesystem walk; returns the removed paths.
 
     ``min_age_s`` (default 1 h) protects attempts staged by a STILL-RUNNING
-    extraction: staging completes before the ledger row is appended, so a
+    extraction: staging completes before the pointer swap, so a
     concurrently-running vacuum would otherwise see the not-yet-published
     attempt as an orphan and delete data the run is about to commit. Only
     attempts whose directory mtime is older than the guard are touched;
     pass ``min_age_s=0`` only when no extraction can be in flight."""
-    import os
     import shutil
 
     root = output_path(out_dir)
     if not os.path.isdir(root):
         return []
-    latest = _latest_publications(spark, out_dir)
-    live = {(r.group_id, r.run_id) for r in latest.values()}
+    live = {(g, r) for g, r, _ in _live_attempts(read_pointer(out_dir))}
     now = time.time()
     removed = []
     for gdir in sorted(os.listdir(root)):
@@ -352,34 +341,36 @@ def run_extraction(
 ) -> dict:
     """Run (or resume) an extraction over ``input_df`` into ``out_dir``.
 
-    Returns summary stats. Idempotent per (run_group, out_dir): ledgered
+    Returns summary stats. Idempotent per (run_group, out_dir): published
     commit-groups are skipped on resume; read results back with
     :func:`committed_spans`, never by globbing the staging directory.
 
     SINGLE-PASS STAGING: one source scan extracts every pending group and a
     ``partitionBy(g, r)`` write lands each group under its own attempt
-    directory ``spans/g=<g>/r=<run_id>`` in the same job. (The round-2
-    formulation filtered the input once per group in a loop — a
-    num_groups× read amplification on a non-group-bucketed source at
-    100 TB.) Publication stays per-group: after staging, ledger rows are
-    appended one group at a time, so a crash mid-publish leaves earlier
-    groups committed and the rest as invisible orphans — the same atomic
-    stage-then-publish contract, with a resume re-extracting only the
-    unpublished groups.
+    directory ``spans/g=<g>/r=<run_id>`` in the same job, so the source is
+    read once however many groups are pending. ONE PUBLISH: after staging
+    and the audit append, a single :func:`publish` swap makes every pending
+    group live; a crash before it leaves them all as invisible orphans for
+    a resume to re-extract.
+
+    Test hooks: ``fail_before_publish=k`` publishes only the pending groups
+    below ``k``; ``fail_after_group=k`` publishes the pending groups up to
+    the first one at or above ``k``. Either publishes that prefix in the
+    same single swap, then raises :class:`SimulatedFailure`; when no
+    pending group reaches ``k`` the run completes normally.
     """
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism * 2
     _validate_run_group(run_group)
     run_id = f"{run_group}-{uuid.uuid4().hex[:8]}"
-    prior = _ledger_rows(spark, out_dir, run_group)
-    for r in prior:
-        if r.num_groups != num_groups:
-            raise ValueError(
-                f"resume with num_groups={num_groups} but ledger for "
-                f"{run_group!r} was committed with num_groups={r.num_groups}; "
-                "group membership would change — refusing to resume"
-            )
-    committed = {r.group_id for r in prior}
+    prior = read_pointer(out_dir)["spans"].get(run_group)
+    if prior is not None and prior["num_groups"] != num_groups:
+        raise ValueError(
+            f"resume with num_groups={num_groups} but {run_group!r} was "
+            f"committed with num_groups={prior['num_groups']}; "
+            "group membership would change — refusing to resume"
+        )
+    committed = {int(g) for g in prior["live"]} if prior else set()
     pending = [g for g in range(num_groups) if g not in committed]
 
     # group assignment is a pure function of (doc_id, num_groups) — identical
@@ -407,8 +398,7 @@ def run_extraction(
         attempt_paths = [group_attempt_path(out_dir, g, run_id) for g in pending]
         for p in attempt_paths:
             # a pending group with zero input rows stages no files, but its
-            # published path must exist for readers (local-fs parquet only;
-            # an Iceberg snapshot has no such notion)
+            # published path must exist for readers
             _ensure_local_dir(p)
 
         # attempt-level lineage from the staged files themselves (verifies
@@ -434,44 +424,26 @@ def run_extraction(
         )
         write_table(audit.coalesce(1), _audit_path(out_dir), mode="append")
 
-    done_groups = 0
-    if fail_before_publish is None and fail_after_group is None:
-        # publish: ONE ledger append makes every pending group's staged
-        # attempt live. (The round-3 formulation appended one 1-row file
-        # per group — O(groups) sequential driver jobs, with each append
-        # re-listing the growing ledger dir: quadratic at 10k groups. A
-        # single coalesce(1) append is also a smaller crash window — the
-        # publish is all-or-nothing, and a crash before it leaves every
-        # staged group as an invisible orphan for resume, same contract.)
-        if pending:
-            ledger_rows = spark.createDataFrame(
-                [(run_group, int(g), run_id, int(num_groups)) for g in pending],
-                "run_group string, group_id int, run_id string, num_groups int",
-            ).withColumn("committed_at", F.current_timestamp())
-            write_table(ledger_rows.coalesce(1), _ledger_path(out_dir), mode="append")
-        done_groups = len(pending)
-    else:
-        # test-only crash simulation: publish per group so the hooks can
-        # model a crash mid-publish (on a real cluster this corresponds to
-        # a partially-durable ledger append)
-        for g in pending:
-            if fail_before_publish is not None and g >= fail_before_publish:
-                raise SimulatedFailure(f"simulated kill before publishing group {g}")
-            ledger_row = spark.createDataFrame(
-                [(run_group, g, run_id, num_groups)],
-                "run_group string, group_id int, run_id string, num_groups int",
-            ).withColumn("committed_at", F.current_timestamp())
-            write_table(ledger_row.coalesce(1), _ledger_path(out_dir), mode="append")
-            done_groups += 1
-            if fail_after_group is not None and g >= fail_after_group:
-                raise SimulatedFailure(f"simulated kill after group {g}")
+    published, crash = [], None
+    for g in pending:
+        if fail_before_publish is not None and g >= fail_before_publish:
+            crash = f"simulated kill before publishing group {g}"
+            break
+        published.append(g)
+        if fail_after_group is not None and g >= fail_after_group:
+            crash = f"simulated kill after group {g}"
+            break
+    if published:
+        publish(out_dir, lambda p: _make_live(p, run_group, num_groups, published, run_id))
+    if crash:
+        raise SimulatedFailure(crash)
 
     return {
         "run_id": run_id,
         "run_group": run_group,
         "groups_total": num_groups,
         "groups_skipped": len(committed),
-        "groups_processed": done_groups,
+        "groups_processed": len(published),
         "output": output_path(out_dir),
     }
 

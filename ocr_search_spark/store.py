@@ -6,31 +6,36 @@ with its trigger-maintained tsvector, then app/search.py:10-99 querying it).
 
 Spark shape:
 
-* ``ingest`` runs the resumable extraction (checkpoint ledger + audit) and
-  materializes two derived tables compute-once-on-write, exactly like the
-  reference's trigger (alembic 0001_init.py:36-53): a flat per-document
-  ``content`` table (span texts joined — the ``documents.content`` analogue)
-  and the inverted ``postings`` table (the tsvector analogue);
+* ``ingest`` runs the resumable extraction (staged span attempts + audit,
+  see ``pipeline/checkpoint.py``) and materializes two derived tables
+  compute-once-on-write, exactly like the reference's trigger (alembic
+  0001_init.py:36-53): a flat per-document ``content`` table (span texts
+  joined — the ``documents.content`` analogue) and the inverted
+  ``postings`` table (the tsvector analogue);
 * ``search`` mirrors ``search_documents`` semantics over the content table,
   resolving the match from the postings table.
 
-Snapshot layout and publish protocol. The two derived tables live together
-in one immutable snapshot directory::
+Store layout and publish protocol::
 
-    <root>/spans, _ledger, _audit          ledgered span store (checkpoint)
+    <root>/spans/g=<g>/r=<run_id>          staged span attempts
+    <root>/_audit                          one lineage row per attempt partition
     <root>/snapshots/<id>/content          flat parquet, one row per doc
     <root>/snapshots/<id>/postings         flat parquet, (term, doc_id, ...)
-    <root>/CURRENT                         {"snapshot": <id>}
+    <root>/CURRENT                         the publication record: the live
+                                           span attempts and the snapshot
 
-An ingest writes both tables into a fresh ``<id>`` that no reader knows,
-then publishes it with one atomic pointer swap: ``CURRENT`` is written to a
-temporary file and ``os.replace``-d into place. A reader resolves
-``CURRENT`` once and reads both tables of that one snapshot, so it sees the
-old or the new store, never content from one and postings from another. A
-crash before the swap leaves the previous snapshot live; the next ingest
-rebuilds from the ledgered spans and publishes a complete one. After the
-swap the previous snapshot is kept (a search that resolved it just before
-the swap can finish) and every older or unpublished snapshot is deleted.
+``CURRENT`` is the only way anything becomes visible, and
+``checkpoint.publish`` is its only writer: one atomic read-modify-write
+swap (temporary file, fsync, ``os.replace``). An ingest publishes twice:
+the extraction makes its span attempts live, then the derived tables,
+written into a fresh ``<id>`` that no reader knows, are published as the
+snapshot. A reader resolves ``CURRENT`` once and reads both tables of that
+one snapshot, so it sees the old or the new store, never content from one
+and postings from another. A crash before the snapshot swap leaves the
+previous snapshot live; the next ingest skips the already-published spans,
+rebuilds from them and publishes a complete snapshot. After the swap the
+previous snapshot is kept (a search that resolved it just before the swap
+can finish) and every older or unpublished snapshot is deleted.
 
 ``search`` keeps the published snapshot resident: both tables cached, plus
 its document count and total token count (Σ tf), taken in one action when
@@ -40,16 +45,10 @@ It reloads only when ``CURRENT`` names another snapshot.
 One writer per store at a time; any number of readers. ``content_path`` and
 ``postings_path`` resolve to the published snapshot, so callers keep
 reading flat parquet directories.
-
-Table layout notes for 100 TB: all tables are plain parquet here (Iceberg
-runtime jars are not in this sandbox); an Iceberg catalog gives the same
-one-commit publish natively — swap ``write.parquet`` for
-``writeTo(...).append()`` with a catalog configured.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import threading
@@ -61,39 +60,26 @@ from pyspark.sql import functions as F
 
 from .ops.metadata import metadata_map_expr
 from .pipeline import run_extraction
-from .pipeline.checkpoint import committed_spans_latest, output_path
+from .pipeline.checkpoint import (
+    committed_spans_latest,
+    output_path,
+    publish,
+    read_pointer,
+)
 from .pipeline.extract import ordered_text_agg
 from .search.engine import build_postings, search_documents
-from .tables import read_table, write_table
-
-POINTER = "CURRENT"
+from .tables import write_table
 
 
 def snapshot_dir(root: str, snapshot: str) -> str:
     return f"{root}/snapshots/{snapshot}"
 
 
-def read_pointer(root: str) -> dict | None:
-    """The published snapshot record, or None before the first publish.
-    A plain file read: no Spark job."""
-    try:
-        with open(os.path.join(root, POINTER)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
 def publish_snapshot(root: str, snapshot: str) -> None:
     """Atomically make ``snapshot`` the published one, then delete every
     snapshot except it and the one it replaces."""
-    previous = read_pointer(root)
-    tmp = os.path.join(root, f".{POINTER}.{snapshot}")
-    with open(tmp, "w") as f:
-        json.dump({"snapshot": snapshot}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(root, POINTER))
-    keep = {snapshot, previous and previous["snapshot"]}
+    previous = publish(root, lambda p: p.update(snapshot=snapshot))
+    keep = {snapshot, previous["snapshot"]}
     base = os.path.join(root, "snapshots")
     for name in os.listdir(base):
         if name not in keep:
@@ -104,15 +90,15 @@ def publish_snapshot(root: str, snapshot: str) -> None:
 class _Resident:
     """One published snapshot's cached tables and (N docs, Σ tf)."""
 
-    snapshot: str | None
+    snapshot: str
     docs: DataFrame
     postings: DataFrame
     stats: tuple[int, int]
 
     @classmethod
-    def load(cls, spark: SparkSession, snapshot: str | None, content: str, postings: str):
-        docs = read_table(spark, content).cache()
-        post = read_table(spark, postings).cache()
+    def load(cls, spark: SparkSession, snapshot: str, content: str, postings: str):
+        docs = spark.read.parquet(content).cache()
+        post = spark.read.parquet(postings).cache()
         # one action fills both caches and counts documents and tokens
         n, sum_tf = (
             docs.select(F.lit(1).alias("n"), F.lit(0).cast("long").alias("tf"))
@@ -139,11 +125,9 @@ class DocumentStore:
     def spans_path(self) -> str:
         return output_path(self.root)
 
-    def _table_path(self, name: str, pointer: dict | None) -> str:
-        # no pointer: nothing published yet, or a store written before
-        # snapshots existed, whose tables sit directly under the root
-        if pointer is None:
-            return f"{self.root}/{name}"
+    def _table_path(self, name: str, pointer: dict) -> str:
+        if pointer["snapshot"] is None:
+            raise FileNotFoundError(f"{self.root} has no published snapshot yet")
         return f"{snapshot_dir(self.root, pointer['snapshot'])}/{name}"
 
     @property
@@ -172,7 +156,7 @@ class DocumentStore:
             num_partitions=num_partitions,
             num_groups=num_groups,
         )
-        # read the *published* view (ledgered attempts only) across ALL
+        # read the *published* view (live attempts only) across ALL
         # run_groups — a store ingested in several batches under different
         # run_groups keeps every batch searchable, with the latest
         # publication winning per document (a second ingest of a changed doc
@@ -211,7 +195,7 @@ class DocumentStore:
         snapshot = uuid.uuid4().hex
         base = snapshot_dir(self.root, snapshot)
         write_table(content, f"{base}/content", mode="overwrite")
-        docs = read_table(self.spark, f"{base}/content")
+        docs = self.spark.read.parquet(f"{base}/content")
         write_table(
             build_postings(docs, "doc_id", "content"),
             f"{base}/postings",
@@ -227,7 +211,7 @@ class DocumentStore:
         pointer has changed since the last search."""
         with self._lock:
             pointer = read_pointer(self.root)
-            snapshot = pointer and pointer["snapshot"]
+            snapshot = pointer["snapshot"]
             old = self._resident
             if old is None or old.snapshot != snapshot:
                 self._resident = _Resident.load(

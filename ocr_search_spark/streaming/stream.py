@@ -7,7 +7,7 @@ equivalent of "documents keep arriving, extract them as they land" is a
 file-source ``readStream`` over the interleaved documents table feeding the
 same vectorized extraction kernel via ``foreachBatch`` — one code path for
 batch and streaming, with exactly-once sink semantics from the streaming
-checkpoint (which subsumes the batch ledger's role for this mode).
+checkpoint (which subsumes the batch pointer's role for this mode).
 
 ``windowed_event_counts`` is the standard late-data-tolerant windowed
 aggregation (watermark + tumbling window) over an event stream — the shape
@@ -67,7 +67,7 @@ def write_batch_idempotent(
     streaming-checkpoint commit replays the same (batch_id, data) on
     restart. A plain append would duplicate every replayed span; keying the
     write by batch_id makes the replay overwrite its own previous attempt —
-    the streaming twin of the batch ledger's stage-then-publish idempotence
+    the streaming twin of the batch stage-then-publish idempotence
     (attempt dirs ``spans/g=<g>/r=<run_id>``, pipeline/checkpoint.py).
     Readers scan ``output_path`` and see ``b`` as a partition column.
 

@@ -6,7 +6,7 @@ on the Spark engine — runnable as a plain script or via spark-submit:
         scripts/demo.py [sf_dir] [workdir]
 
 Flow: build the interleaved corpus → resumable salted extraction (audit +
-ledger) → content/postings tables → searches (FTS + filters, three rank
+pointer) → content/postings tables → searches (FTS + filters, three rank
 modes) → training-data ops (dedup report, near-dup pairs, train/val/test
 split) — printing a few rows of each.
 """
@@ -391,7 +391,7 @@ def main() -> None:
         pool, k=5, lambda_bp=7000, id_col="doc_id", rel_col="rel_e6"
     ).show()
 
-    print("== re-ingest: checkpoint ledger skips committed groups")
+    print("== re-ingest: checkpoint pointer skips committed groups")
     print(store.ingest(docs, run_group="demo"))
 
     print("== compaction: republish each group as one file, vacuum orphans")

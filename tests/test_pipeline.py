@@ -315,7 +315,7 @@ class TestResume:
         AnalysisException deep in a resume."""
         from ocr_search_spark.pipeline.checkpoint import (
             IncompatibleCheckpointError,
-            read_ledger,
+            read_pointer,
         )
 
         out = str(tmp_path / "oldfmt")
@@ -325,7 +325,7 @@ class TestResume:
         ).withColumn("committed_at", F.current_timestamp())
         old.write.parquet(f"{out}/_ledger")
         with pytest.raises(IncompatibleCheckpointError, match="older checkpoint"):
-            read_ledger(spark, out)
+            read_pointer(out)
         with pytest.raises(IncompatibleCheckpointError):
             run_extraction(spark, input_df, out, "rgZ", num_partitions=4)
 

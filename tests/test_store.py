@@ -187,6 +187,58 @@ class TestSnapshotPublish:
         assert len(snaps) == 2  # the new one and the one it replaced
         assert os.path.dirname(published).rsplit("/", 1)[-1] in snaps
 
+    def test_crash_after_span_publish_keeps_previous_snapshot(
+        self, spark, batches, tmp_path_factory, monkeypatch
+    ):
+        """A crash after the extraction published its spans but before the
+        snapshot swap: the span view already holds the batch, search still
+        answers from the previous snapshot, and re-running the same
+        run_group extracts nothing and publishes the whole store."""
+        import ocr_search_spark.store as store_mod
+        from ocr_search_spark.pipeline import checkpoint
+
+        first, second = batches
+        s = DocumentStore(spark, str(tmp_path_factory.mktemp("spans-live")))
+        s.ingest(_spans_df(spark, first), run_group="b1", num_partitions=4, num_groups=2)
+        published = s.content_path
+        term = _top_term(spark, s)
+        before = s.search(term, limit=100)["total"]
+
+        def crash(root, snapshot):
+            raise RuntimeError("crash between span publish and snapshot publish")
+
+        monkeypatch.setattr(store_mod, "publish_snapshot", crash)
+        with pytest.raises(RuntimeError, match="crash between"):
+            s.ingest(_spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2)
+        monkeypatch.undo()
+        latest = checkpoint.committed_spans_latest(spark, s.root).select("doc_id")
+        assert {r.doc_id for r in latest.collect()} == {
+            d["doc_id"] for d in first + second
+        }
+        assert s.content_path == published
+        assert s.search("")["total"] == len(first)
+        assert s.search(term, limit=100)["total"] == before
+        assert DocumentStore(spark, s.root).search("")["total"] == len(first)
+
+        calls = []
+        real = checkpoint.extract_documents
+        monkeypatch.setattr(
+            checkpoint, "extract_documents", lambda df, n: calls.append(1) or real(df, n)
+        )
+        stats = s.ingest(
+            _spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2
+        )
+        assert stats["groups_skipped"] == stats["groups_total"]
+        assert calls == []
+        assert s.content_path != published
+        content = {
+            r.doc_id: r.content for r in spark.read.parquet(s.content_path).collect()
+        }
+        assert content == {
+            d["doc_id"]: "\n".join(sp["text"] for sp in extract_document_spans(d["spans"]))
+            for d in first + second
+        }
+
     def test_other_instance_sees_published_snapshot(
         self, spark, batches, tmp_path_factory
     ):
@@ -302,3 +354,34 @@ class TestSearchJobs:
                 assert 1 <= jobs <= (6 if cls == "cd" else 4), (cls, q, jobs)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+class TestIngestJobs:
+    """Regression guard on Spark jobs per ingest. The span attempts and the
+    snapshot are both published by swapping ``CURRENT``, a plain file, so
+    neither publishing nor resolving the live spans runs a job."""
+
+    def test_jobs_per_bulk_and_update_ingest(self, spark, base_texts, tmp_path):
+        import glob
+
+        docs = build_local(base_texts, 60)
+        s = DocumentStore(spark, str(tmp_path / "jobs"))
+        sc = spark.sparkContext
+        jobs = {}
+        try:
+            for phase, batch in (("bulk", docs[:48]), ("update", docs[36:])):
+                group = f"test-ingest-jobs-{phase}"
+                sc.setLocalProperty("spark.jobGroup.id", group)
+                s.ingest(
+                    _spans_df(spark, batch), run_group=phase, num_partitions=4, num_groups=2
+                )
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                jobs[phase] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # a publish through a parquet ledger table ran 13 and 15
+        assert 1 <= jobs["bulk"] <= 10, jobs
+        assert 1 <= jobs["update"] <= 10, jobs
+        assert s.search("")["total"] == len(docs)
+        assert glob.glob(f"{s.root}/**/_ledger*", recursive=True) == []
