@@ -1,36 +1,26 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""DuckDB twin of ``ocr_search_spark.ops.dedup.near_dedup_cc``, plus the
+three driver-facing queries whose plan shapes ``tests/test_plans.py`` pins.
 
-``entry(spark)`` — flagship extraction pipeline at sf0.001.
-``queries()`` — one entry per implemented operator (SURVEY.md §2 + the
-training-data ops); each callable takes (spark, sf_dir) → DataFrame.
-``oracle_sql()`` — DuckDB-equivalent SQL for every SQL-expressible query
-(tables region nation customer supplier part orders lineitem events
-documents embeddings are pre-registered views).
+``_near_dedup_cc_oracle_sql(threshold)`` returns DuckDB SQL that computes the
+near-duplicate survivors of a ``documents(doc_id, text)`` view with the same
+md5 hashes, shingles, LSH bands and Jaccard check as the Spark operator, so
+the two engines return the same survivor set. ``perfbench`` checks its dedup
+tour against it and ``tests/test_dedup_parity.py`` runs the same comparison
+in the test suite.
 
-Column names are aliased identically on both sides; floats are either
-avoided (integer numerator/denominator pairs) or rounded so the two engines
-produce bit-identical doubles.
+``q_token_quality``, ``q_winnow_fingerprints`` and ``q_revenue_by_nation``
+each take ``(spark, sf_dir)`` and return a DataFrame over the parquet tables
+in ``sf_dir``.
+
+The file keeps its historical name because ``perfbench/workloads.py`` imports
+the twin as ``__spark_entry__``; renaming it means changing the benchmark in
+the same change.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-# ---------------------------------------------------------------------------
-# shared constants (must match the SQL text below)
-# ---------------------------------------------------------------------------
-
-FTS_TERMS = ["spark", "join"]  # Q1 websearch-style AND terms
-PHRASE_QUERY = '"spark join"'  # websearch quoted phrase (adjacency)
-OR_NOT_QUERY = "spark, OR join -table"  # OR-groups + exclusion + punctuation
-TRIGRAM_QUERY = "spark table join"
-SNIPPET_TERM = "spark"
-DATE_FROM, DATE_TO = "2024-01-08 00:00:00", "2024-01-21 00:00:00"
-ILIKE_PAT = "%rc1%"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,1175 +32,8 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _tokens(c):
-    from ocr_search_spark.search.analysis import tokens_expr
-
-    return tokens_expr(c)
-
-
-# ---------------------------------------------------------------------------
-# flagship
-# ---------------------------------------------------------------------------
-
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: interleaved corpus (sf0.001) → salted vectorized extraction
-    → flat extracted spans. The driver checks rows > 0 and a stable schema."""
-    from ocr_search_spark.corpus import corpus_df
-    from ocr_search_spark.pipeline import explode_spans, extract_documents
-
-    docs = corpus_df(spark, "/root/testdata/sf0.001", n_docs=1000)
-    return explode_spans(extract_documents(docs, num_partitions=16))
-
-
-# ---------------------------------------------------------------------------
-# oracle-checked queries (Spark side)
-# ---------------------------------------------------------------------------
-
-
-def q_fts_count(spark, sf_dir):
-    """Q1+Q4: AND-match all terms, count (search.py:51-52,59-68)."""
-    from ocr_search_spark.search.analysis import fts_match
-
-    d = _docs(spark, sf_dir)
-    return d.filter(fts_match(_tokens("text"), FTS_TERMS)).agg(
-        F.count("*").alias("cnt")
-    )
-
-
-def q_fts_count_postings(spark, sf_dir):
-    """Q1+Q4 via the scale path: inverted postings table + broadcast
-    semi-join on query terms (the GIN-index access pattern, SCALE.md) —
-    must agree with q_fts_count's direct array match."""
-    from ocr_search_spark.search.engine import build_postings
-
-    p = build_postings(_docs(spark, sf_dir), id_col="doc_id", text_col="text")
-    from ocr_search_spark.localrel import strings_df
-
-    # JVM-local VALUES relation: a createDataFrame terms table is
-    # Python-RDD-backed and adds a Python-worker scan stage per pass (r6)
-    terms = strings_df(spark, sorted(set(FTS_TERMS)), "term")
-    matched = (
-        p.join(F.broadcast(terms), "term")
-        .groupBy("doc_id")
-        .agg(F.count_distinct("term").alias("nt"))
-        .filter(F.col("nt") == len(set(FTS_TERMS)))
-    )
-    return matched.agg(F.count("*").alias("cnt"))
-
-
-def q_fts_search_topk(spark, sf_dir):
-    """Q1+Q6+Q7+Q8+Q9: match, rank, trigram sim, combined order, top-k
-    (search.py:71-87). Integer (inter, union) keeps floats engine-exact."""
-    from ocr_search_spark.search.analysis import fts_match, with_search_columns
-
-    d = with_search_columns(_docs(spark, sf_dir), "text", grams=True)
-    q = TRIGRAM_QUERY.lower()
-    q_grams = sorted({q[i : i + 3] for i in range(len(q) - 2)})
-    terms_arr = F.array(*[F.lit(t) for t in FTS_TERMS])
-    matched = d.filter(fts_match(F.col("toks"), FTS_TERMS))
-    q_lit = F.array(*[F.lit(g) for g in q_grams])
-    scored = matched.select(
-        "doc_id",
-        F.size(F.array_intersect(F.array_distinct("toks"), terms_arr)).alias("rank_hits"),
-        F.size(F.array_intersect("grams", q_lit)).alias("inter"),
-        F.size(F.array_union("grams", q_lit)).alias("union_sz"),
-    )
-    score = F.greatest(
-        F.col("rank_hits") / F.lit(float(len(FTS_TERMS))),
-        F.col("inter") / F.col("union_sz"),
-    )
-    return scored.orderBy(score.desc(), F.col("doc_id")).limit(25)
-
-
-def _q_websearch(spark, sf_dir, q: str):
-    """Q1 full websearch_to_tsquery grammar (search.py:51-52): quoted
-    phrases (token adjacency), OR groups, -exclusion — compiled to one
-    Catalyst boolean filter over materialized toks + adjacency string."""
-    from ocr_search_spark.search.websearch import (
-        parse_websearch,
-        token_string_expr,
-        websearch_predicate,
-    )
-
-    d = (
-        _docs(spark, sf_dir)
-        .withColumn("toks", _tokens("text"))
-        .withColumn("tokstr", token_string_expr("toks"))
-    )
-    return d.filter(
-        websearch_predicate("toks", "tokstr", parse_websearch(q))
-    ).select("doc_id")
-
-
-def q_fts_phrase(spark, sf_dir):
-    return _q_websearch(spark, sf_dir, PHRASE_QUERY)
-
-
-def q_fts_phrase_postings(spark, sf_dir):
-    """Phrase match via postings positions (the phraseto_tsquery/GIN access
-    pattern) — must agree with q_fts_phrase's direct adjacency scan."""
-    from ocr_search_spark.search.engine import build_postings, match_postings
-    from ocr_search_spark.search.websearch import parse_websearch
-
-    docs = _docs(spark, sf_dir)
-    p = build_postings(docs, id_col="doc_id", text_col="text")
-    ids = match_postings(p, parse_websearch(PHRASE_QUERY)).ids
-    return docs.filter(F.col("doc_id").isin(ids)).select("doc_id")
-
-
-def q_fts_or_not(spark, sf_dir):
-    return _q_websearch(spark, sf_dir, OR_NOT_QUERY)
-
-
-def q_ilike_source(spark, sf_dir):
-    """Q3: substring ILIKE predicate (search.py:55)."""
-    d = _docs(spark, sf_dir)
-    return d.filter(F.col("source").ilike(ILIKE_PAT)).select("doc_id", "source")
-
-
-def q_date_range_count(spark, sf_dir):
-    """Q2+Q4: date-range predicate + grouped count (search.py:53-54)."""
-    e = _events(spark, sf_dir)
-    return (
-        e.filter(F.col("ts").between(F.lit(DATE_FROM).cast("timestamp"),
-                                     F.lit(DATE_TO).cast("timestamp")))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def q_latest_k(spark, sf_dir):
-    """Q10: intended empty-query semantics — latest 10 (search.py:29-31)."""
-    e = _events(spark, sf_dir)
-    return (
-        e.orderBy(F.col("ts").desc(), F.col("event_id").desc())
-        .limit(10)
-        .select("event_id", "ts", "event_type")
-    )
-
-
-def q_snippet(spark, sf_dir):
-    """Q5: ts_headline-style fragment around the first term hit."""
-    d = _docs(spark, sf_dir)
-    pos = F.locate(SNIPPET_TERM, F.lower(F.col("text")))
-    start = F.greatest(pos - 30, F.lit(1))
-    frag = F.substring(F.col("text"), start, F.lit(60 + len(SNIPPET_TERM)))
-    marked = F.replace(frag, F.lit(SNIPPET_TERM), F.lit(f"<b>{SNIPPET_TERM}</b>"))
-    return d.filter(pos > 0).select("doc_id", marked.alias("snippet"))
-
-
-def q_snippet_multi(spark, sf_dir):
-    """Q5 full shape: ts_headline MaxFragments=3 — up to three <b>-marked
-    fragments around consecutive hits, ' ... '-joined (search.py:76)."""
-    from ocr_search_spark.search.analysis import with_snippet_fragments
-
-    d = with_snippet_fragments(_docs(spark, sf_dir), "text", SNIPPET_TERM)
-    return d.filter(F.col("__sp1") > 0).select("doc_id", "snippet")
-
-
-def q_trigram_topk(spark, sf_dir):
-    """Q7: pg_trgm similarity top-20 as integer set sizes (search.py:78)."""
-    from ocr_search_spark.search.analysis import with_search_columns
-
-    d = with_search_columns(_docs(spark, sf_dir), "text", grams=True)
-    q = TRIGRAM_QUERY.lower()
-    q_grams = sorted({q[i : i + 3] for i in range(len(q) - 2)})
-    q_lit = F.array(*[F.lit(g) for g in q_grams])
-    scored = d.select(
-        "doc_id",
-        F.size(F.array_intersect("grams", q_lit)).alias("inter"),
-        F.size(F.array_union("grams", q_lit)).alias("union_sz"),
-    )
-    return scored.orderBy(
-        (F.col("inter") / F.col("union_sz")).desc(), F.col("doc_id")
-    ).limit(20)
-
-
-def q_normalize_chain(spark, sf_dir):
-    """E18: the normalization regex chain (bytes_xtractor.py:23-39) applied
-    to deterministically noised text, in Spark SQL built-ins.
-
-    Noise injection: ' table '->CRLF, ' value '->'-\\n' (hyphen break),
-    ' data '->4xLF, ' row '->tabs, ' big '->BEL control char. The single-
-    newline lookaround rule (RE2-incompatible) is emulated portably with
-    sentinels: runs >=3 newlines -> \\x03, pairs -> \\x02, then singles ->
-    space, then sentinels restored — provably equivalent (runs of length 1
-    -> ' ', 2 -> '\\n\\n', >=3 -> '\\n', as in the reference chain).
-    """
-    d = _docs(spark, sf_dir)
-    t = F.col("text")
-    # noise
-    t = F.replace(t, F.lit(" table "), F.lit("\r\n"))
-    t = F.replace(t, F.lit(" value "), F.lit("-\n"))
-    t = F.replace(t, F.lit(" data "), F.lit("\n\n\n\n"))
-    t = F.replace(t, F.lit(" row "), F.lit("\t\t "))
-    t = F.replace(t, F.lit(" big "), F.lit("\x07 "))
-    # --- E18 chain ---
-    t = F.replace(t, F.lit("\r\n"), F.lit("\n"))
-    t = F.replace(t, F.lit("\r"), F.lit("\n"))
-    t = F.regexp_replace(t, "([A-Za-z0-9_])-[ \t\n]*\n([A-Za-z0-9_])", "$1$2")
-    t = F.regexp_replace(t, "\n{3,}", "\x03")
-    t = F.replace(t, F.lit("\n\n"), F.lit("\x02"))
-    t = F.replace(t, F.lit("\n"), F.lit(" "))
-    t = F.regexp_replace(t, "[ \t]+", " ")
-    t = F.replace(t, F.lit("\x03"), F.lit("\n"))
-    t = F.replace(t, F.lit("\x02"), F.lit("\n\n"))
-    t = F.regexp_replace(t, "[\x01-\x08\x0b\x0c\x0e-\x1f]", "")
-    norm = F.btrim(t, F.lit(" \n\t"))  # Python str.strip() analogue
-    return d.select("doc_id", norm.alias("norm_text"))
-
-
-def q_charset_score(spark, sf_dir):
-    """E9 shape: fraction of chars in a fixed charset vs 0.40 threshold
-    (looks_like_russian, pdf.py:25-29) — charset adapted to the corpus."""
-    d = _docs(spark, sf_dir)
-    t = F.col("text")
-    hits = F.length(t) - F.length(F.regexp_replace(t, "[a-z0-9 .,;:!?()=+-]", ""))
-    return d.select(
-        "doc_id",
-        hits.alias("hits"),
-        F.length(t).alias("n_chars"),
-        (hits * 10 >= F.length(t) * 4).alias("is_match"),
-    )
-
-
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup via md5 fingerprint groupBy."""
-    from ocr_search_spark.ops.dedup import exact_dedup_groups
-
-    return exact_dedup_groups(_docs(spark, sf_dir), "doc_id", "text")
-
-
-def q_minhash(spark, sf_dir):
-    """MinHash signatures (4 md5 hash families over 3-token shingles)."""
-    from ocr_search_spark.ops.dedup import minhash_signatures
-
-    sig = minhash_signatures(_docs(spark, sf_dir), "doc_id", "text", n_hashes=4)
-    return sig.withColumnRenamed("id", "doc_id")
-
-
-def q_ngram_jaccard_pairs(spark, sf_dir):
-    """Near-dup pairs by exact 3-token-shingle Jaccard ≥ 0.3 — computed
-    via the inverted shingle index (ops/dedup.py jaccard_pairs_index):
-    only pairs sharing ≥1 shingle materialise, linear in postings, never
-    the n² grid (row-identical to the quadratic reference form)."""
-    from ocr_search_spark.ops.dedup import jaccard_pairs_index
-
-    return jaccard_pairs_index(
-        _docs(spark, sf_dir), "doc_id", "text", threshold=0.3
-    ).withColumnRenamed("union", "union_sz")
-
-
-def q_containment_pairs(spark, sf_dir):
-    """Directional shingle-containment pairs ≥ 0.8 (ops/dedup.py
-    containment_pairs): the subset/quotation duplication Jaccard misses
-    — same single-shuffle inverted-posting machinery, all-integer
-    basis-point filter."""
-    from ocr_search_spark.ops.dedup import containment_pairs
-
-    return containment_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", threshold_bp=8000
-    )
-
-
-def q_neardup_recall(spark, sf_dir):
-    """Measured recall of MinHash-LSH near-dedup vs exact inverted-index
-    Jaccard ground truth at the same threshold (ops/dedup.py
-    neardup_recall) — the text-side sibling of ann_recall; precision is
-    1 by construction (exact verify), so one semi-join count yields
-    recall in basis points."""
-    from ocr_search_spark.ops.dedup import neardup_recall
-
-    return neardup_recall(
-        _docs(spark, sf_dir), "doc_id", "text",
-        threshold=0.3, n_hashes=8, band_size=2,
-    )
-
-
-def q_near_dedup_survivors(spark, sf_dir):
-    """End-to-end near-dedup composition: LSH candidates → exact-Jaccard
-    verify → min-id keeper → surviving corpus (ops/dedup.py near_dedup)."""
-    from ocr_search_spark.ops.dedup import near_dedup
-
-    return near_dedup(
-        _docs(spark, sf_dir), "doc_id", "text",
-        threshold=0.3, n_hashes=8, band_size=2,
-    ).select("doc_id")
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: documents sharing any 5-token shingle
-    with a deterministic 10-doc 'benchmark' set (smallest md5(doc_id) —
-    the IVF-centroid sampling trick, SQL-reproducible) are dropped."""
-    from ocr_search_spark.ops.dedup import decontaminate
-
-    docs = _docs(spark, sf_dir)
-    bench = (
-        docs.orderBy(F.md5(F.encode(F.col("doc_id").cast("string"), "utf-8")), "doc_id")
-        .limit(10)
-        .select("text")
-    )
-    return decontaminate(
-        docs, bench, "doc_id", "text", shingle_k=5, min_shared=1
-    ).select("doc_id")
-
-
-def q_vocab_drift(spark, sf_dir):
-    """Vocabulary distribution drift, non-English → English subcorpus:
-    per-word add-one-smoothed half-bit log-probability ratio (positive
-    = characteristically English — the crawl-drift / seed-corpus
-    feature-selection statistic), top 50 by |lr_hb|
-    (ops/text_analysis.py vocab_drift)."""
-    from ocr_search_spark.ops.text_analysis import vocab_drift
-
-    docs = _docs(spark, sf_dir)
-    out = vocab_drift(
-        docs.filter(F.col("lang") != "en"),
-        docs.filter(F.col("lang") == "en"),
-    )
-    order = [
-        F.abs(F.col("lr_hb")).desc(),
-        F.col("lr_hb").desc(),
-        F.col("w").asc(),
-    ]
-    return (
-        out.orderBy(*order)
-        .limit(50)
-        # row-bound: post-limit slice (<= 50 rows)
-        .withColumn("rnk", F.row_number().over(Window.orderBy(*order)))
-    )
-
-
-def q_collocations(spark, sf_dir):
-    """word2vec phrase mining (Mikolov 2013 §4): adjacent word pairs
-    scored by (c_ab − δ)/(c_a·c_b) on the exact 2^40 lattice, δ=5,
-    min pair count 5 — top 50 candidate phrases (score desc, pair asc)
-    (ops/text_analysis.py collocations)."""
-    from ocr_search_spark.ops.text_analysis import collocations
-
-    out = collocations(_docs(spark, sf_dir), "text", delta=5, min_count=5)
-    order = [F.col("score_q40").desc(), F.col("l").asc(), F.col("r").asc()]
-    return (
-        out.orderBy(*order)
-        .limit(50)
-        # row-bound: post-limit slice (<= 50 rows)
-        .withColumn("rnk", F.row_number().over(Window.orderBy(*order)))
-    )
-
-
-def q_badwords_filter(spark, sf_dir):
-    """C4-style banned-token document gate: docs surviving a demo
-    blocklist (one in-vocab word + one absent — case-insensitive) — token-level on the shared tokenizer, one hit
-    drops the page, blocklist as broadcast DATA (ops/scrub.py
-    badwords_filter)."""
-    from ocr_search_spark.ops.scrub import badwords_filter
-
-    return badwords_filter(
-        _docs(spark, sf_dir), "doc_id", "text", ["dup", "Verboten"]
-    ).select("doc_id")
-
-
-def q_bloom_probe(spark, sf_dir):
-    """Bloom-filter membership probe of the corpus against the 10-doc
-    benchmark set's 5-token shingles (AI2-BFF shape): k=3 md5 bit
-    positions in a 16384-bit space, a shingle hits iff all three are
-    set — (id, n_ngrams, n_hit, contaminated) per doc, false positives
-    deterministic and part of the contract (ops/dedup.py bloom_probe;
-    the filter broadcasts 8-byte positions, the probe is three
-    broadcast semi-joins, the corpus never shuffles on shingle keys)."""
-    from ocr_search_spark.ops.dedup import bloom_probe
-
-    docs = _docs(spark, sf_dir)
-    bench = (
-        docs.orderBy(F.md5(F.encode(F.col("doc_id").cast("string"), "utf-8")), "doc_id")
-        .limit(10)
-        .select("text")
-    )
-    return bloom_probe(
-        docs, bench, "doc_id", "text", shingle_k=5, m_bits=16384, k_hashes=3
-    )
-
-
-def q_bloom_decontaminate(spark, sf_dir):
-    """BFF-style constant-memory decontamination: the corpus rows
-    surviving the Bloom probe (exact shingle matches always dropped,
-    plus the deterministic false positives the 16384/3 sizing admits) —
-    the arm you run when the benchmark shingle TEXT no longer
-    broadcasts (ops/dedup.py bloom_decontaminate; exact-set twin is
-    `decontaminate`)."""
-    from ocr_search_spark.ops.dedup import bloom_decontaminate
-
-    docs = _docs(spark, sf_dir)
-    bench = (
-        docs.orderBy(F.md5(F.encode(F.col("doc_id").cast("string"), "utf-8")), "doc_id")
-        .limit(10)
-        .select("text")
-    )
-    return bloom_decontaminate(
-        docs, bench, "doc_id", "text", shingle_k=5, m_bits=16384, k_hashes=3
-    ).select("doc_id")
-
-
-def _planted_pii(docs):
-    """Plant deterministic PII into every third document — computed
-    identically in the DuckDB twin so redaction/counting oracles are
-    hash-exact over non-trivial inputs (the corpus itself is clean)."""
-    pii = F.concat(
-        F.col("text"),
-        F.lit(" contact u"),
-        F.col("doc_id").cast("string"),
-        F.lit("@ex.com or 10.0."),
-        (F.col("doc_id") % 256).cast("string"),
-        F.lit("."),
-        (F.col("doc_id") % 100).cast("string"),
-        F.lit(" tel +7 912 345 67"),
-        (F.col("doc_id") % 89 + 10).cast("string"),
-    )
-    return docs.withColumn(
-        "text", F.when(F.col("doc_id") % 3 == 0, pii).otherwise(F.col("text"))
-    )
-
-
-def q_pii_redact(spark, sf_dir):
-    """PII scrubbing: emails / IPv4 / phones redacted, per-type counts
-    (ops/scrub.py — pure codegen'd regexp chain, no UDF)."""
-    from ocr_search_spark.ops.scrub import redact_pii
-
-    out = redact_pii(_planted_pii(_docs(spark, sf_dir)), "text")
-    return out.select(
-        "doc_id",
-        "n_email",
-        "n_ipv4",
-        "n_phone",
-        F.md5(F.encode(F.col("text_redacted"), "utf-8")).alias("red_md5"),
-    )
-
-
-def _planted_urls(docs, with_mirror: bool = True):
-    """Plant site{doc_id%20}.example.org URLs into every fifth doc
-    (+ a shared mirror URL when ``with_mirror``) — computed identically
-    in the DuckDB twins of domain_counts and domain_filter."""
-    parts = [
-        F.col("text"),
-        F.lit(" see https://site"),
-        (F.col("doc_id") % 20).cast("string"),
-        F.lit(".example.org/p/"),
-        F.col("doc_id").cast("string"),
-    ]
-    if with_mirror:
-        parts.append(F.lit(" and https://mirror.example.net/x"))
-    return docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") % 5 == 0, F.concat(*parts)).otherwise(
-            F.col("text")
-        ),
-    )
-
-
-def q_domain_counts(spark, sf_dir):
-    """Per-domain URL/document counts over planted URLs (source-mixing
-    statistic; ops/scrub.py url explode + map-side-combinable agg)."""
-    from ocr_search_spark.ops.scrub import domain_counts
-
-    planted = _planted_urls(_docs(spark, sf_dir), with_mirror=True)
-    return domain_counts(planted, "doc_id", "text")
-
-
-def _planted_url_variants(docs):
-    """Append ONE URL to every doc, in one of four raw forms by
-    ``doc_id % 4`` — www+trailing-slash, utm+unsorted params, fragment,
-    fbclid+unsorted — all of which canonicalize to
-    ``https://site{d%10}.example.org/p/{d%25}`` plus ``?a=1&b=2`` iff
-    doc_id is odd.  The DuckDB twin derives that canonical form
-    ARITHMETICALLY from doc_id (it never runs the regex chain), so the
-    oracle is an independent derivation, not a reimplementation."""
-    g = (F.col("doc_id") % 10).cast("string")
-    k = (F.col("doc_id") % 25).cast("string")
-    v = F.col("doc_id") % 4
-    url = F.concat(
-        F.lit("https://"),
-        F.when(v == 0, F.lit("www.")).otherwise(F.lit("")),
-        F.lit("site"),
-        g,
-        F.lit(".example.org/p/"),
-        k,
-        F.when(v == 0, F.lit("/"))
-        .when(v == 1, F.lit("?utm_source=news&b=2&a=1"))
-        .when(v == 2, F.lit("#frag"))
-        .otherwise(F.lit("?b=2&a=1&fbclid=xyz")),
-    )
-    return docs.withColumn("text", F.concat(F.col("text"), F.lit(" see "), url))
-
-
-def q_url_dedup(spark, sf_dir):
-    """URL-level dedup over canonical page identity (ops/scrub.py
-    canonical_url_expr — lowercase scheme/host, strip www/fragment/
-    default-port/trailing-slash, drop tracking params, sort survivors;
-    pure codegen'd regexp chain, no UDF): one row per canonical URL with
-    raw-URL count, distinct-doc count, and min-id first document."""
-    from ocr_search_spark.ops.scrub import url_dedup
-
-    planted = _planted_url_variants(_docs(spark, sf_dir))
-    out = url_dedup(planted, "doc_id", "text")
-    return out.select(
-        "canon_url",
-        "n_urls",
-        "n_docs",
-        F.col("first_id").alias("first_doc"),
-    )
-
-
-def _epoch_events(spark, sf_dir, event_type):
-    """Events of one type with ts as floored epoch seconds — the integer
-    form both engines agree on exactly (DuckDB twin:
-    floor(epoch(ts))::BIGINT; epoch(ts)::BIGINT alone ROUNDS sub-second
-    timestamps and drifts by 1 s)."""
-    e = _events(spark, sf_dir).filter(F.col("event_type") == event_type)
-    ets = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")) / F.lit(1_000_000)
-    ).cast("long")
-    return e.select("event_id", "user_id", ets.alias("ets"))
-
-
-def q_asof_join(spark, sf_dir):
-    """As-of join (operator Spark lacks natively): for every purchase,
-    the latest click by the same user at or before the purchase
-    (ops/relational.py union+running-window rewrite — one shuffle, no
-    nested-loop theta join; ties broken by max event_id)."""
-    from ocr_search_spark.ops.relational import asof_join
-
-    l = _epoch_events(spark, sf_dir, "purchase")
-    r = _epoch_events(spark, sf_dir, "click")
-    out = asof_join(
-        l, r, on="user_id", left_ts="ets", right_ts="ets", tiebreak="event_id"
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ets",
-        F.col("event_id_r").alias("click_id"),
-        (F.col("ets") - F.col("ets_r")).alias("gap_s"),
-    )
-
-
-def q_range_join(spark, sf_dir):
-    """Backward time-range join: every (purchase, error) pair by the same
-    user within 24 h before the purchase (ops/relational.py
-    interval-bucketing rewrite — equi join on (key, bucket) with 2×
-    fan-out instead of a BroadcastNestedLoopJoin)."""
-    from ocr_search_spark.ops.relational import range_join
-
-    l = _epoch_events(spark, sf_dir, "purchase")
-    r = _epoch_events(spark, sf_dir, "error")
-    out = range_join(
-        l, r, on="user_id", left_ts="ets", right_ts="ets", lookback_s=86400
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("event_id_r").alias("err_id"),
-        (F.col("ets") - F.col("ets_r")).alias("gap_s"),
-    )
-
-
-def q_interval_join(spark, sf_dir):
-    """Interval OVERLAP join (the third sibling after asof and range —
-    Spark has no native form): per user, every (error-window, click-
-    window) pair whose closed intervals intersect — error windows
-    [ts, ts+2h], click windows [ts, ts+1h] — via bin decomposition
-    (equi join on (user, 1h bin), exact residual, overlap-once
-    first-shared-bin rule, no dedup shuffle), with the exact integer
-    microseconds of intersection (ops/relational.py interval_join)."""
-    from ocr_search_spark.ops.relational import interval_join
-
-    ev = _events(spark, sf_dir)
-    l = ev.filter(F.col("event_type") == "error").select(
-        "event_id",
-        "user_id",
-        F.col("ts").alias("w_start"),
-        F.expr("ts + INTERVAL 7200 SECONDS").alias("w_end"),
-    )
-    r = ev.filter(F.col("event_type") == "click").select(
-        "event_id",
-        "user_id",
-        F.col("ts").alias("w_start"),
-        F.expr("ts + INTERVAL 3600 SECONDS").alias("w_end"),
-    )
-    out = interval_join(
-        l, r, on="user_id",
-        left_start="w_start", left_end="w_end",
-        right_start="w_start", right_end="w_end",
-        bin_s=3600,
-    )
-    return out.select(
-        "user_id",
-        "event_id",
-        F.col("event_id_r").alias("click_id"),
-        "overlap_us",
-    )
-
-
-def _planted_lines(docs):
-    """Give the (newline-free) corpus a line structure with shared
-    boilerplate — computed identically in the DuckDB twin."""
-    return docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(
-                F.lit("subscribe to our newsletter\n"),
-                F.col("text"),
-                F.lit("\nall rights reserved"),
-            ),
-        ).otherwise(F.concat(F.col("text"), F.lit("\nall rights reserved"))),
-    )
-
-
-def q_line_dedup_within(spark, sf_dir):
-    """WITHIN-doc repeated-line removal (the intra-doc half of the
-    boilerplate pass, run before any corpus-level dedup): keep each
-    document's FIRST occurrence of a line, drop later repeats —
-    zero-shuffle, one projection per row (ops/lines.py
-    remove_repeated_lines_within_doc). Every third doc is planted with
-    a repeated footer and a repeated body copy; others stay intact."""
-    from ocr_search_spark.ops.lines import remove_repeated_lines_within_doc
-
-    docs = _docs(spark, sf_dir)
-    planted = docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit("\nfooter line\nfooter line\n"),
-                F.col("text"),
-            ),
-        ).otherwise(F.concat(F.col("text"), F.lit("\nfooter line"))),
-    )
-    out = remove_repeated_lines_within_doc(planted, "doc_id", "text")
-    return out.select(
-        "doc_id",
-        F.md5(F.encode(F.col("text_clean"), "utf-8")).alias("clean_md5"),
-        "n_lines",
-        "n_removed",
-    )
-
-
-def q_line_dedup(spark, sf_dir):
-    """C4-style corpus-wide duplicate-line removal: lines occurring in ≥2
-    distinct docs are dropped, survivors re-assembled in order
-    (ops/lines.py — explode → countDistinct per line hash → anti-join →
-    array_sort re-assembly; the dup-line table stays distributed)."""
-    from ocr_search_spark.ops.lines import remove_duplicate_lines
-
-    out = remove_duplicate_lines(
-        _planted_lines(_docs(spark, sf_dir)), "doc_id", "text",
-        delim="\n", min_docs=2,
-    )
-    return out.select(
-        "doc_id",
-        F.md5(F.encode(F.col("text_clean"), "utf-8")).alias("clean_md5"),
-        "n_lines",
-        "n_removed",
-    )
-
-
-def _planted_paragraphs(docs):
-    """Plant a shared boilerplate PARAGRAPH (cookie banner) at the head
-    of every even doc and a shared footer paragraph on all docs, blocks
-    joined by the literal blank-line delimiter — computed identically in
-    the DuckDB twin of para_dedup."""
-    banner = F.lit("we use cookies to improve your browsing experience\n\n")
-    footer = F.lit("\n\nall rights reserved worldwide by the publisher")
-    return docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(banner, F.col("text"), footer),
-        ).otherwise(F.concat(F.col("text"), footer)),
-    )
-
-
-def q_para_dedup(spark, sf_dir):
-    """Paragraph-level corpus dedup (Dolma-style variant of the C4 line
-    pass; ops/lines.py — same explode/countDistinct/anti-join/reassembly
-    machinery with blank-line-delimited blocks and a 10-char triviality
-    floor)."""
-    from ocr_search_spark.ops.lines import remove_duplicate_paragraphs
-
-    out = remove_duplicate_paragraphs(
-        _planted_paragraphs(_docs(spark, sf_dir)), "doc_id", "text"
-    )
-    return out.select(
-        "doc_id",
-        F.md5(F.encode(F.col("text_clean"), "utf-8")).alias("clean_md5"),
-        F.col("n_lines").alias("n_paras"),
-        "n_removed",
-    )
-
-
-def q_compression_signals(spark, sf_dir):
-    """zlib compression-ratio quality signal (ccnet trick): UTF-8 byte
-    length JVM-side + deflate size via an Arrow-batched pandas UDF
-    (ops/compress.py). Oracle: golden parquet from the scalar zlib twin."""
-    from ocr_search_spark.ops.compress import compression_signals
-
-    out = compression_signals(_docs(spark, sf_dir), "text")
-    return out.select("doc_id", "n_bytes", "n_zlib")
-
-
-def q_topk_per_lang(spark, sf_dir):
-    """Distributed group-wise top-k: the 5 longest docs per language
-    (corpus-mixing selection; ops/sampling.py window rank — one shuffle
-    on the group key, no global sort)."""
-    from ocr_search_spark.ops.sampling import topk_per_group
-
-    return topk_per_group(
-        _docs(spark, sf_dir), "lang", "n_chars", 5, tiebreak_col="doc_id"
-    ).select("doc_id", "lang", "n_chars")
-
-
-def q_domain_filter(spark, sf_dir):
-    """Domain-blocklist source-hygiene gate: docs containing a URL on a
-    blocked domain are dropped (ops/scrub.py — domain explode →
-    offender anti-join; suffix semantics pytest-covered)."""
-    from ocr_search_spark.ops.scrub import domain_blocklist_filter
-
-    planted = _planted_urls(_docs(spark, sf_dir), with_mirror=False)
-    return domain_blocklist_filter(
-        planted, "doc_id", "text", ["site5.example.org", "site15.example.org"]
-    ).select("doc_id")
-
-
-def q_length_stats(spark, sf_dir):
-    """Per-language exact length percentiles (corpus profile;
-    ops/text_analysis.py grouped_percentiles — Spark `percentile` and
-    DuckDB `quantile_cont` share the (n-1)p linear-interpolation
-    definition, so the floats match bit-for-bit)."""
-    from ocr_search_spark.ops.text_analysis import grouped_percentiles
-
-    return grouped_percentiles(_docs(spark, sf_dir), "lang", "n_chars")
-
-
-def q_adaptive_quality(spark, sf_dir):
-    """Adaptive quality gate: drop each language's bottom length
-    quartile, with the threshold computed FROM the corpus (per-lang p25
-    via exact percentile) instead of a fixed constant — the
-    distribution-aware form of a quality filter. Broadcast the O(langs)
-    threshold table onto the corpus; `percentile` ≡ `quantile_cont`
-    bit-for-bit, so the float comparison is engine-exact."""
-    docs = _docs(spark, sf_dir)
-    th = docs.groupBy("lang").agg(
-        F.expr("percentile(n_chars, 0.25)").alias("__p25")
-    )
-    return (
-        docs.join(F.broadcast(th), "lang")
-        .filter(F.col("n_chars") >= F.col("__p25"))
-        .select("doc_id", "lang", "n_chars")
-    )
-
-
-def q_pack_shards(spark, sf_dir):
-    """Token-budget shard packing (corpus assembly): docs packed into
-    ~2000-char shards within 16 deterministic hash groups
-    (ops/sampling.py pack_shards — group window cumsum, one shuffle)."""
-    from ocr_search_spark.ops.sampling import pack_shards
-
-    return pack_shards(
-        _docs(spark, sf_dir), "doc_id", "n_chars",
-        target_tokens=2000, n_groups=16,
-    )
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Fixed-length training-sequence packing: concat docs in id order
-    within 16 hash groups and split the token stream at exact 512-token
-    boundaries — one row per (doc, sequence) piece with its doc-local
-    token sub-range (ops/sampling.py pack_sequences)."""
-    from ocr_search_spark.ops.sampling import pack_sequences
-
-    return pack_sequences(
-        _docs(spark, sf_dir), "doc_id", "n_chars",
-        seq_len=512, n_groups=16,
-    )
-
-
-def q_mojibake(spark, sf_dir):
-    """Encoding-damage signals over planted double-encoding artifacts
-    (ops/scrub.py mojibake_signals — ftfy-style heuristic, codegen'd
-    regexp; the \\x{...} pattern parses identically in Java and RE2)."""
-    from ocr_search_spark.ops.scrub import mojibake_signals
-
-    docs = _docs(spark, sf_dir)
-    # U+00C3 U+00A9 built from codepoints so no source-encoding ambiguity
-    artifact = chr(0xC3) + chr(0xA9)
-    planted = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.repeat(F.lit(artifact), (F.col("doc_id") % 5).cast("int")),
-        ),
-    )
-    return mojibake_signals(planted, "text").select(
-        "doc_id", "n_mojibake", "mojibake_per_10k"
-    )
-
-
-def q_mixing_corpus(spark, sf_dir):
-    """End-to-end corpus-assembly composition, fully oracled: plant
-    encoding damage + boilerplate → mojibake gate drops damaged docs →
-    corpus-wide duplicate-line removal strips the boilerplate →
-    stratified per-language rebalance → token-budget shard packing.
-    Every stage is an already-oracled operator; this pins that the
-    composition (filters → anti-join → window chain) stays exact."""
-    from ocr_search_spark.ops.lines import remove_duplicate_lines
-    from ocr_search_spark.ops.sampling import pack_shards, stratified_sample
-    from ocr_search_spark.ops.scrub import mojibake_filter
-
-    artifact = chr(0xC3) + chr(0xA9)
-    docs = _docs(spark, sf_dir)
-    planted = docs.withColumn(
-        "text",
-        F.concat(
-            F.when(
-                F.col("doc_id") % 2 == 0,
-                F.lit("subscribe to our newsletter\n"),
-            ).otherwise(F.lit("")),
-            F.col("text"),
-            F.lit("\nall rights reserved"),
-            F.when(
-                F.col("doc_id") % 7 == 0, F.lit(artifact * 200)
-            ).otherwise(F.lit("")),
-        ),
-    )
-    gated = mojibake_filter(planted, "text", max_per_10k=10)
-    cleaned = remove_duplicate_lines(gated, "doc_id", "text", min_docs=2)
-    with_lang = cleaned.join(docs.select("doc_id", "lang"), "doc_id")
-    mixed = stratified_sample(
-        with_lang, "lang", {"en": 0.3, "es": 0.6}, salt="mix"
-    )
-    packed = pack_shards(
-        mixed.withColumn("n_clean", F.length("text_clean")),
-        "doc_id", "n_clean", target_tokens=2000, n_groups=16,
-    )
-    return packed.select("doc_id", "tokens", "shard_group", "shard_idx")
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Per-language deterministic downsampling (mixing-recipe rebalance:
-    en to 30%, es to 60%, others whole; ops/sampling.py md5-bucket filter
-    with a per-group CASE threshold — pushdown-safe, no RNG)."""
-    from ocr_search_spark.ops.sampling import stratified_sample
-
-    return stratified_sample(
-        _docs(spark, sf_dir), "lang", {"en": 0.3, "es": 0.6}, salt="mix"
-    ).select("doc_id", "lang")
-
-
-def q_chunk_documents(spark, sf_dir):
-    """Context-window chunking (ops/sampling.py — LM training-sequence
-    prep: 64-token windows, 16-token overlap, stride 48; tokenize →
-    sequence-of-starts explode → slice, pure codegen, no shuffle).
-    Chunk text is md5'd so the row stays compact; the hash pins the
-    exact window content."""
-    from ocr_search_spark.ops.sampling import chunk_documents
-
-    out = chunk_documents(
-        _docs(spark, sf_dir), "doc_id", "text", chunk_tokens=64, overlap=16
-    )
-    return out.select(
-        "id",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        "n_tokens",
-        F.md5(F.encode(F.col("chunk_text"), "utf-8")).alias("chunk_md5"),
-    )
-
-
-def q_classifier_scores(spark, sf_dir):
-    """fastText-shaped linear classifier serving (ops/classify.py —
-    hashed unigram+bigram buckets, model-as-data broadcast weights,
-    fixed-point integer logit so the distributed sum is order-
-    independent and engine-exact). Weights are the deterministic
-    bucket%2001-1000 ramp, which the DuckDB twin computes inline
-    without materializing the table."""
-    from ocr_search_spark.ops.classify import linear_scores
-
-    docs = _docs(spark, sf_dir)
-    weights = spark.range(1 << 18).select(
-        F.col("id").alias("bucket"),
-        (F.col("id") % 2001 - 1000).alias("weight_fp"),
-    )
-    out = linear_scores(docs, "doc_id", "text", weights, n_buckets=1 << 18)
-    return out.select(
-        "id", "logit_fp", (F.col("logit_fp") >= 0).alias("keep")
-    )
-
-
-def q_corpus_diff(spark, sf_dir):
-    """Snapshot diff between two corpus versions (ops/dedup.py — full
-    outer hash join on fingerprints computed map-side). New snapshot:
-    doc_id%7==0 texts changed, doc_id%11==0 removed, and a shifted-id
-    copy of every doc_id%13==0 row added."""
-    from ocr_search_spark.ops.dedup import corpus_diff
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    d = F.col("doc_id")
-    changed = docs.select(
-        "doc_id",
-        F.when(d % 7 == 0, F.concat(F.col("text"), F.lit(" [edited]")))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    new = changed.filter(d % 11 != 0).unionByName(
-        docs.filter(d % 13 == 0).select(
-            (d + 1_000_000).alias("doc_id"), "text"
-        )
-    )
-    return corpus_diff(docs, new, "doc_id", "text")
-
-
-def q_warc_roundtrip(spark, sf_dir):
-    """WARC container round-trip (kernels/warc_build → kernels/warc —
-    the web-crawl source format, pure-stdlib writer AND reader): every
-    doc's text becomes the HTTP body of a response record in a WARC
-    container (gzip members for odd doc_ids, plain for even), which is
-    parsed back and fingerprinted. The oracle knows the expected fields
-    arithmetically, so builder and parser must BOTH be byte-correct for
-    the md5s to match — the xlsx/cfb round-trip discipline."""
-    import hashlib as _hl
-
-    import pandas as pd
-
-    from ocr_search_spark.kernels.warc import parse_warc
-    from ocr_search_spark.kernels.warc_build import (
-        build_http_response,
-        build_warc,
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                body = str(text).encode("utf-8")
-                data = build_warc(
-                    [
-                        (
-                            "response",
-                            build_http_response(body),
-                            f"https://w.example/doc/{int(doc_id)}",
-                        )
-                    ],
-                    gzip=(int(doc_id) % 2 == 1),
-                )
-                for rec in parse_warc(data):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            rec["warc_type"],
-                            rec["target_uri"],
-                            rec["http_status"],
-                            rec["http_content_type"],
-                            _hl.md5(rec["body"]).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "warc_type",
-                    "target_uri",
-                    "http_status",
-                    "mime",
-                    "body_md5",
-                ],
-            )
-
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id", "text")
-        .mapInPandas(
-            kernel,
-            "doc_id long, warc_type string, target_uri string, "
-            "http_status int, mime string, body_md5 string",
-        )
-    )
-
-
-def q_domain_pagerank(spark, sf_dir):
-    """Fixed-point damped PageRank over a planted domain link graph
-    (ops/graph.py — per-round rank join + contribution aggregation, all
-    integer arithmetic so ranks are partitioning-independent; the DuckDB
-    twin unrolls the identical 3 iterations as chained CTEs). Edge per
-    doc: d{doc_id%17} -> d{(doc_id*7+3)%17}, self-loops dropped."""
-    from ocr_search_spark.ops.graph import pagerank
-
-    d = F.col("doc_id")
-    edges = (
-        _docs(spark, sf_dir)
-        .select(
-            F.concat(F.lit("d"), (d % 17).cast("string")).alias("src"),
-            F.concat(F.lit("d"), ((d * 7 + 3) % 17).cast("string")).alias(
-                "dst"
-            ),
-        )
-        .filter(F.col("src") != F.col("dst"))
-    )
-    return pagerank(edges, n_iter=3)
-
-
-def _planted_multisite_urls(docs):
-    """Append ONE URL per doc whose hostname exercises each public-
-    suffix rule by ``doc_id % 4``: 2-label suffix (co.uk), default rule
-    (.org, .com with deep subdomains), and 3-label suffix (act.gov.au).
-    All variants of a given (v, doc_id%7) collapse to one registered
-    domain the DuckDB twin derives arithmetically from doc_id."""
-    d = F.col("doc_id")
-    k = (d % 7).cast("string")
-    v = d % 4
-    host = (
-        F.when(
-            v == 0,
-            F.concat(
-                F.lit("sub"), (d % 5).cast("string"), F.lit(".site"), k,
-                F.lit(".co.uk"),
-            ),
-        )
-        .when(v == 1, F.concat(F.lit("www.site"), k, F.lit(".org")))
-        .when(
-            v == 2,
-            F.concat(
-                F.lit("dept"), (d % 3).cast("string"), F.lit(".site"), k,
-                F.lit(".act.gov.au"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("cdn"), (d % 3).cast("string"), F.lit(".media.site"),
-                k, F.lit(".com"),
-            )
-        )
-    )
-    url = F.concat(F.lit("https://"), host, F.lit("/p/"), d.cast("string"))
-    return docs.withColumn("text", F.concat(F.col("text"), F.lit(" see "), url))
-
-
-def q_reg_domain_counts(spark, sf_dir):
-    """Per-SITE (eTLD+1) URL/doc counts over planted multi-suffix
-    hostnames (ops/scrub.py registered_domain_expr — public-suffix
-    longest-match as codegen'd split + literal IN-sets + slice, no UDF;
-    subdomains of one owner collapse onto the registrable domain)."""
-    from ocr_search_spark.ops.scrub import registered_domain_counts
-
-    planted = _planted_multisite_urls(_docs(spark, sf_dir))
-    return registered_domain_counts(planted, "doc_id", "text")
-
-
-def q_unimax_rebalance(spark, sf_dir):
-    """UniMax-style budgeted rebalancing (ops/sampling.py — water-fill a
-    300-row budget over languages: small groups whole, large groups
-    capped at the integer water level; window functions over the
-    O(groups) counts table, pure integer arithmetic, md5-bucket keep
-    filter — no RNG, no collect)."""
-    from ocr_search_spark.ops.sampling import unimax_rebalance
-
-    return unimax_rebalance(
-        _docs(spark, sf_dir), "lang", budget_rows=300, salt="unimax"
-    ).select("doc_id", "lang")
-
-
-def q_incremental_dedup(spark, sf_dir):
-    """Incremental near-dedup of a NEW batch against the accepted
-    corpus's MinHash signature store (ops/dedup.py — the continuous-
-    crawl ingestion step: LSH band join new-vs-store, signature-
-    agreement estimate for cross-generation dups, exact-verified
-    near_dedup within the batch). Base = doc_id%5!=0; new batch =
-    doc_id%5==0, with every %10==0 doc replaced by base doc_id+1's text
-    so cross-generation dups exist deterministically."""
-    from ocr_search_spark.ops.dedup import (
-        incremental_near_dedup,
-        minhash_signatures,
-    )
-
-    docs = _docs(spark, sf_dir)
-    base = docs.filter(F.col("doc_id") % 5 != 0)
-    donor = base.select(
-        (F.col("doc_id") - 1).alias("doc_id"), F.col("text").alias("__dtext")
-    )
-    newb = (
-        docs.filter(F.col("doc_id") % 5 == 0)
-        .join(donor, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(
-                (F.col("doc_id") % 10 == 0) & F.col("__dtext").isNotNull(),
-                F.col("__dtext"),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-    )
-    base_sigs = minhash_signatures(base, "doc_id", "text")
-    survivors, _sigs = incremental_near_dedup(
-        newb, "doc_id", "text", base_sigs
-    )
-    return survivors.select("doc_id")
-
-
-def q_temperature_rebalance(spark, sf_dir):
-    """Temperature-0.5 language rebalancing (T5/UniMax mixing rule:
-    surviving group sizes ∝ count^0.5, smallest group kept whole;
-    ops/sampling.py — O(groups) rates table broadcast-joined onto the
-    corpus, md5-bucket keep filter, no RNG. sqrt is IEEE correctly
-    rounded, so the DuckDB twin is bit-exact on the thresholds)."""
-    from ocr_search_spark.ops.sampling import temperature_rebalance
-
-    return temperature_rebalance(
-        _docs(spark, sf_dir), "lang", alpha=0.5, salt="temp"
-    ).select("doc_id", "lang")
-
-
-def q_near_dedup_cc(spark, sf_dir):
-    """Near-dedup with a CONNECTED-COMPONENTS keeper: the same LSH
-    candidates → exact-Jaccard verify as near_dedup_survivors, then
-    min-label propagation so each duplicate cluster keeps exactly its
-    min-id canonical doc (ops/dedup.py near_dedup_cc)."""
-    from ocr_search_spark.ops.dedup import near_dedup_cc
-
-    return near_dedup_cc(
-        _docs(spark, sf_dir), "doc_id", "text",
-        threshold=0.3, n_hashes=8, band_size=2,
-    ).select("doc_id")
-
-
-#: the stopword signature shared by every quality gate below — ONE
-#: definition, mirrored verbatim by the three oracle SQL twins
+#: the English stopword signature the quality signals count
 _EN_STOP_WORDS = ("the", "a", "of", "and", "to", "in", "is")
-
-
-def _quality_signals():
-    """The (n_tokens, n_stop, n_punct) column triple every quality gate
-    uses, defined once so the standalone filter, the signal query, and
-    the composed training pipelines can never drift apart (they share
-    oracle SQL twins that assume identical expressions)."""
-    en_stop = F.array(*[F.lit(w) for w in _EN_STOP_WORDS])
-    n_tokens = F.size("toks")
-    n_stop = F.size(F.filter("toks", lambda t: F.array_contains(en_stop, t)))
-    n_punct = F.length(F.regexp_replace("text", "[^.,;:!?]", ""))
-    return n_tokens, n_stop, n_punct
-
-
-def _quality_keep(n_tokens, n_stop, n_punct):
-    """min length + stopword-ratio + punctuation-ratio, integer-scaled."""
-    return (
-        (n_tokens >= 30)
-        & (n_stop * 20 >= n_tokens)
-        & (n_punct * 10 <= n_tokens * 3)
-    )
 
 
 def q_token_quality(spark, sf_dir):
@@ -1218,42 +41,13 @@ def q_token_quality(spark, sf_dir):
     from ocr_search_spark.search.analysis import with_search_columns
 
     d = with_search_columns(_docs(spark, sf_dir), "text")
-    n_tokens, n_stop, n_punct = _quality_signals()
+    en_stop = F.array(*[F.lit(w) for w in _EN_STOP_WORDS])
     return d.select(
         "doc_id",
-        n_tokens.alias("n_tokens"),
-        n_punct.alias("n_punct"),
-        n_stop.alias("n_stopwords"),
+        F.size("toks").alias("n_tokens"),
+        F.length(F.regexp_replace("text", "[^.,;:!?]", "")).alias("n_punct"),
+        F.size(F.filter("toks", lambda t: F.array_contains(en_stop, t))).alias("n_stopwords"),
         F.aggregate("toks", F.lit(0), lambda acc, t: acc + F.length(t)).alias("token_chars"),
-    )
-
-
-def q_quality_filter(spark, sf_dir):
-    """Composed training-data quality gate: min length + stopword-ratio +
-    punctuation-ratio thresholds (integer-scaled predicates, no floats).
-    Keeps ~half the synthetic corpus — a realistic pretraining filter."""
-    from ocr_search_spark.search.analysis import with_search_columns
-
-    d = with_search_columns(_docs(spark, sf_dir), "text")
-    n_tokens, n_stop, n_punct = _quality_signals()
-    keep = _quality_keep(n_tokens, n_stop, n_punct)
-    return d.filter(keep).select("doc_id", n_tokens.alias("n_tokens"))
-
-
-def q_token_counts(spark, sf_dir):
-    """Token counting three ways: word-regex tokens, whitespace tokens, and
-    the BPE-ish pre-tokenizer runs (tokenizer-budget estimate)."""
-    from ocr_search_spark.ops.text_analysis import (
-        bpe_ish_count_expr,
-        whitespace_count_expr,
-    )
-
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        F.size(_tokens("text")).alias("n_word"),
-        whitespace_count_expr("text").alias("n_ws"),
-        bpe_ish_count_expr("text").alias("n_bpe"),
     )
 
 
@@ -1274,633 +68,6 @@ def q_winnow_fingerprints(spark, sf_dir):
         F.col("id").alias("doc_id"),
         F.array_join(F.array_sort("fingerprints"), ",").alias("fps_csv"),
     )
-
-
-def q_winnow_partial_dups(spark, sf_dir):
-    """Partial-duplication candidates: pairs sharing ≥2 winnowing
-    fingerprints (the fingerprint posting join)."""
-    from ocr_search_spark.ops.text_analysis import winnow_partial_dup_pairs
-
-    return winnow_partial_dup_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", min_shared=2
-    )
-
-
-
-def q_gopher_filter(spark, sf_dir):
-    """Composed Gopher repetition gate: survivors of the published
-    top-n-gram / duplicate-line / duplicate-paragraph caps, integer-exact
-    (ops/text_analysis.py repetition_filter)."""
-    from ocr_search_spark.ops.text_analysis import repetition_filter
-
-    return repetition_filter(_docs(spark, sf_dir)).withColumnRenamed("id", "doc_id")
-
-
-def q_substring_dedup(spark, sf_dir):
-    """Passage-level dedup (Lee-et-al-style): positional winnowing
-    fingerprints → verified partial-dup pairs → the later doc's duplicated
-    shingle ranges removed, rest kept (ops/text_analysis.py
-    substring_dedup)."""
-    from ocr_search_spark.ops.text_analysis import substring_dedup
-
-    return substring_dedup(
-        _docs(spark, sf_dir), "doc_id", "text", min_shared=2
-    ).withColumnRenamed("id", "doc_id")
-
-
-def q_repetition_signals(spark, sf_dir):
-    """Gopher-style repetition quality signals (integer-exact counts)."""
-    from ocr_search_spark.ops.text_analysis import repetition_signals
-
-    return repetition_signals(_docs(spark, sf_dir)).withColumnRenamed("id", "doc_id")
-
-
-def q_para_lang_profile(spark, sf_dir):
-    """Per-document language mixture over blank-line paragraphs
-    (ops/text_analysis.py paragraph_lang_profile — the CCNet/mC4-style
-    per-paragraph LID segmentation signal). Every third doc gets a
-    planted Russian boilerplate paragraph, so majority/minority shares
-    are exercised; the planted para trips the Cyrillic-ratio rule."""
-    from ocr_search_spark.ops.text_analysis import paragraph_lang_profile
-
-    planted = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit("\n\nскидка сегодня на все товары и услуги"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return paragraph_lang_profile(planted, "doc_id", "text")
-
-
-def q_oversample(spark, sf_dir):
-    """Epoch-factor oversampling (the 'wikipedia ×3.5' mixing recipe):
-    en ×2.5, es ×1.2, rest ×1.0 — whole copies plus a deterministic
-    md5-bucket fractional top-up; bounded explode, no shuffle, no RNG
-    (ops/sampling.py oversample)."""
-    from ocr_search_spark.ops.sampling import oversample
-
-    return oversample(
-        _docs(spark, sf_dir), "lang", {"en": 2.5, "es": 1.2}, salt="epoch"
-    ).select("doc_id", "lang", "copy_idx")
-
-
-def q_split_leakage(spark, sf_dir):
-    """Eval-hygiene diagnostic: the matrix of verified near-dup pairs by
-    (split, split) after the train/val/test hash split — off-diagonal
-    rows are TEST-SET LEAKAGE the split inherited from uncaught near-dups
-    (the check run before freezing any benchmark). Composes
-    verified_near_dup_pairs with hash_split; pair key is canonicalized
-    (least, greatest) so the matrix is order-free."""
-    from ocr_search_spark.ops.dedup import verified_near_dup_pairs
-    from ocr_search_spark.ops.sampling import hash_split
-
-    docs = _docs(spark, sf_dir)
-    pairs = verified_near_dup_pairs(
-        docs, "doc_id", "text", threshold=0.3, n_hashes=8, band_size=2
-    ).select("a_id", "b_id")
-    split = hash_split(
-        docs, {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).select("doc_id", "split")
-    j = pairs.join(
-        split.select(F.col("doc_id").alias("a_id"), F.col("split").alias("sa")),
-        "a_id",
-    ).join(
-        split.select(F.col("doc_id").alias("b_id"), F.col("split").alias("sb")),
-        "b_id",
-    )
-    return (
-        j.select(
-            F.least("sa", "sb").alias("split_1"),
-            F.greatest("sa", "sb").alias("split_2"),
-        )
-        .groupBy("split_1", "split_2")
-        .agg(F.count("*").alias("n_pairs"))
-        .orderBy("split_1", "split_2")
-    )
-
-
-def q_simhash_dedup(spark, sf_dir):
-    """SimHash near-dedup via the pigeonhole band join (Manku et al.
-    WWW'07): 4 bands over the 32-bit fingerprint find every pair within
-    hamming 3 with 100% recall (exact, unlike MinHash-LSH), Hamming
-    verify, min-id keeper (ops/dedup.py simhash_near_dedup)."""
-    from ocr_search_spark.ops.dedup import simhash_near_dedup
-
-    return simhash_near_dedup(
-        _docs(spark, sf_dir), "doc_id", "text",
-        bits=32, n_bands=4, max_hamming=3,
-    ).select("doc_id")
-
-
-def q_ngram_novelty(spark, sf_dir):
-    """Per-doc shingle novelty: fraction of a doc's distinct 3-token
-    shingles that appear in no other document — the remix-vs-novel
-    curation signal (ops/text_analysis.py ngram_novelty)."""
-    from ocr_search_spark.ops.text_analysis import ngram_novelty
-
-    return ngram_novelty(_docs(spark, sf_dir), "doc_id", "text")
-
-
-def q_bpe_pairs(spark, sf_dir):
-    """Top-50 BPE merge candidates: adjacent character pairs inside
-    words, weighted by word frequency, counted over the DISTINCT-WORD
-    table (the tokenizer-training workhorse statistic —
-    ops/text_analysis.py bpe_pair_stats)."""
-    from ocr_search_spark.ops.text_analysis import bpe_pair_stats
-
-    return bpe_pair_stats(_docs(spark, sf_dir), "text", top_k=50)
-
-
-def q_bpe_train(spark, sf_dir):
-    """First 6 BPE merges actually TRAINED on the corpus (the ordered
-    merge table a tokenizer ships): per round, the globally most
-    frequent adjacent symbol pair, applied left-to-right non-overlapping
-    to the distinct-word vocabulary (ops/text_analysis.py bpe_train —
-    the driver loop over the bpe_pairs workhorse; one corpus scan, then
-    vocab-sized rounds)."""
-    from ocr_search_spark.ops.text_analysis import bpe_train
-
-    return bpe_train(_docs(spark, sf_dir), "text", n_merges=6)
-
-
-def q_bpe_vocab_stats(spark, sf_dir):
-    """Vocabulary-utilization report of the trained segmentation: after
-    6 BPE merge rounds, the top-30 symbols by corpus occurrence — which
-    learned symbols carry corpus mass vs residual single characters
-    (ops/text_analysis.py bpe_vocab_stats; the tokenizer-eval statistic
-    over the trainer's own final vocab state)."""
-    from ocr_search_spark.ops.text_analysis import bpe_vocab_stats
-
-    return bpe_vocab_stats(_docs(spark, sf_dir), "text", n_merges=6, top_k=30)
-
-
-def q_bpe_encode(spark, sf_dir):
-    """The trained merge table APPLIED: the full corpus token stream
-    re-encoded into vocab-convention token ids after 6 BPE merge rounds
-    — one row per emitted symbol with word/symbol positions
-    (ops/text_analysis.py bpe_encode; train → encode → ship, the
-    missing apply side of the tokenizer lifecycle)."""
-    from ocr_search_spark.ops.text_analysis import bpe_encode
-
-    return bpe_encode(_docs(spark, sf_dir), "doc_id", "text", n_merges=6)
-
-
-def q_heaps_law(spark, sf_dir):
-    """Vocabulary growth curve over nested deterministic 1%/10%/100%
-    document samples — exact doc/token/distinct-word counts per
-    fraction, the Heaps'-law audit that sizes tokenizer vocabularies
-    and hash widths (ops/sketch.py heaps_law; one scan, one word-keyed
-    min-tier shuffle)."""
-    from ocr_search_spark.ops.sketch import heaps_law
-
-    return heaps_law(_docs(spark, sf_dir))
-
-
-def q_bpe_fertility(spark, sf_dir):
-    """Tokenizer fertility per language after 6 BPE merge rounds
-    trained on the whole corpus: (lang, docs, words, symbols,
-    fertility_ppm) — the multilingual tokenizer-equity report
-    (ops/text_analysis.py bpe_fertility_by_lang; bpe_train's cost plus
-    one corpus explode joined to the vocab-sized symbol-count map)."""
-    from ocr_search_spark.ops.text_analysis import bpe_fertility_by_lang
-
-    return bpe_fertility_by_lang(_docs(spark, sf_dir), "lang", "text", n_merges=6)
-
-
-def q_wordpiece_train(spark, sf_dir):
-    """WordPiece merge table, 6 rounds over the corpus: the likelihood
-    criterion pair_count/(l_count·r_count) on the exact q40 integer
-    lattice — (step, l, r, merged, pair_count, l_count, r_count,
-    score_q40), BERT's tokenizer trainer beside bpe_train's
-    frequency criterion (ops/text_analysis.py wordpiece_train)."""
-    from ocr_search_spark.ops.text_analysis import wordpiece_train
-
-    return wordpiece_train(_docs(spark, sf_dir), "text", n_merges=6)
-
-
-def q_wordpiece_encode(spark, sf_dir):
-    """BERT-style greedy tokenization of the corpus under a 6-round
-    WordPiece vocab: longest-match-first pieces, whole-word [UNK] for
-    words over 6 chars (the max_input_chars_per_word rule — the
-    synthetic corpus has 7-8 char words, so the rule fires under the
-    oracle) — (id, pos, sym_pos, token_id, symbol)
-    (ops/text_analysis.py wordpiece_artifacts + wordpiece_encode)."""
-    from ocr_search_spark.ops.text_analysis import (
-        wordpiece_artifacts_with_words,
-        wordpiece_encode,
-    )
-
-    docs = _docs(spark, sf_dir)
-    # trainer's distinct-word table rides along: the serve-side matcher
-    # does not re-tokenize its own training corpus (r6)
-    vocab, words = wordpiece_artifacts_with_words(docs, "text", n_merges=6)
-    return wordpiece_encode(
-        docs, vocab, "doc_id", "text", max_word_len=6, words=words
-    )
-
-
-def q_unigram_segment(spark, sf_dir):
-    """Viterbi-optimal unigram-LM tokenization of the corpus
-    (SentencePiece's runtime): piece costs = half-bit NLLs read off
-    the 6-round WordPiece segmentation state, each word taking its
-    minimum-cost lattice path (smallest-backpointer ties) —
-    (id, pos, sym_pos, symbol, cost_hb)
-    (ops/text_analysis.py unigram_artifacts + unigram_segment)."""
-    from ocr_search_spark.ops.text_analysis import (
-        unigram_artifacts_with_words,
-        unigram_segment,
-    )
-
-    docs = _docs(spark, sf_dir)
-    # the trainer's distinct-word table rides along so the lattice does
-    # not re-tokenize the corpus to rebuild the same set (r6)
-    costs, words = unigram_artifacts_with_words(docs, "text", n_merges=6)
-    return unigram_segment(
-        docs, costs, "doc_id", "text", max_word_len=8, words=words
-    )
-
-
-def q_bpe_apply(spark, sf_dir):
-    """Shipped-tokenizer serve path: train 6 BPE merges on the
-    even-doc_id HALF of the corpus, export the (merges, vocab)
-    artifact pair, and apply it to the FULL corpus —
-    (id, pos, sym_pos, token_id, symbol) with symbols the training
-    half never saw mapped to unk_id = -1 (ops/text_analysis.py
-    bpe_artifacts + bpe_apply; the train→ship→apply seam, the only
-    BPE query whose encode corpus differs from its training corpus).
-    Driver state is the artifact itself (|alphabet| + K entries);
-    application is K chained codegen'd folds over the distinct-word
-    table plus one posexplode/broadcast-join encode pass — no
-    training rounds on the serve corpus."""
-    from ocr_search_spark.ops.text_analysis import bpe_apply, bpe_artifacts
-
-    docs = _docs(spark, sf_dir)
-    merges, vocab = bpe_artifacts(
-        docs.filter(F.col("doc_id") % 2 == 0), "text", n_merges=6
-    )
-    return bpe_apply(docs, merges, vocab, "doc_id", "text")
-
-
-def q_kmeans_train(spark, sf_dir):
-    """Integer-lattice Lloyd's k-means over the embedding table (k=8,
-    3 iterations): the coarse-quantizer TRAINER the IVF family's
-    md5-sample seeding approximates — exact BIGINT distances, floor
-    means and inertia, so training is bit-reproducible in any engine
-    (ops/similarity.py kmeans_train)."""
-    from ocr_search_spark.ops.similarity import kmeans_train
-
-    return kmeans_train(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), k=8, n_iters=3
-    )
-
-
-def q_pq_train(spark, sf_dir):
-    """PQ codebooks TRAINED (per-subspace lattice Lloyd, m=8 k=16,
-    2 iterations) instead of sampled — exact BIGINT distances, floor
-    means, per-code quantization error; all subspaces train in the same
-    jobs (ops/similarity.py pq_train)."""
-    from ocr_search_spark.ops.similarity import pq_train
-
-    return pq_train(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        m=8, k=16, dim=64, n_iters=2,
-    )
-
-
-def q_ivf_pq_recall(spark, sf_dir):
-    """Recall@10 of the full compressed serve path (IVF n_probe=4 of 16
-    cells + PQ-ADC over m=8 codebooks) vs exact brute force — the
-    accept/reject eval for an index configuration, quantifying probe
-    pruning AND quantization loss together (ops/similarity.py
-    ivf_pq_recall)."""
-    from ocr_search_spark.ops.similarity import (
-        ivf_pq_recall,
-        ivf_pq_seeds_from_sample,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # one collect for both seed tables (same k smallest-md5 rows, r6)
-    cents, cb = ivf_pq_seeds_from_sample(emb, m=8, k=16, dim=64)
-    return ivf_pq_recall(
-        emb, emb.filter(F.col("vec_id") < 5), cents, cb, k=10, n_probe=4
-    )
-
-
-def q_tokenized_pack(spark, sf_dir):
-    """End-to-end tokenizer→loader lifecycle: per-document token counts
-    under the TRAINED 6-merge BPE segmentation (bpe_token_counts — what
-    the LM loader actually consumes, not whitespace words) packed into
-    exact 512-token training sequences with boundary splits
-    (ops/sampling.py pack_sequences over ops/text_analysis.py
-    bpe_token_counts)."""
-    from ocr_search_spark.ops.sampling import pack_sequences
-    from ocr_search_spark.ops.text_analysis import bpe_token_counts
-
-    counts = bpe_token_counts(_docs(spark, sf_dir), "doc_id", "text", n_merges=6)
-    return pack_sequences(counts, "id", "bpe_tokens", seq_len=512, n_groups=16)
-
-
-def q_zipf_spectrum(spark, sf_dir):
-    """Token frequency-of-frequencies per half-bit band — hapax mass,
-    Good-Turing smoothing bands, stop-word head, all exact integers
-    (ops/sketch.py zipf_spectrum; one vocab shuffle + a ≤64-key
-    aggregate)."""
-    from ocr_search_spark.ops.sketch import zipf_spectrum
-
-    return zipf_spectrum(_docs(spark, sf_dir))
-
-
-def q_pq_recall_trained(spark, sf_dir):
-    """The train→serve payoff, certified: recall@10 of the compressed
-    serve path with TRAINED codebooks (pq_train, 2 Lloyd rounds) in
-    place of the md5-sampled seeding — compare against `ivf_pq_recall`
-    to see what training buys (ops/similarity.py pq_train_codebooks
-    feeding ivf_pq_recall; codewords dequantize by an exact
-    power-of-two division so both engines serve identical floats)."""
-    from ocr_search_spark.ops.similarity import (
-        ivf_centroids_from_sample,
-        ivf_pq_recall,
-        pq_train_codebooks,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = ivf_centroids_from_sample(emb, k=16)
-    cb = pq_train_codebooks(emb, m=8, k=16, dim=64, n_iters=2)
-    return ivf_pq_recall(
-        emb, emb.filter(F.col("vec_id") < 5), cents, cb, k=10, n_probe=4
-    )
-
-
-def q_curriculum_shards(spark, sf_dir):
-    """Curriculum corpus assembly: documents tiered into training
-    phases by the SHARED integer quality signals (0 = bulk, 1 = mid,
-    2 = anneal — the end-of-training high-quality phase of
-    curriculum/anneal pretraining recipes), then shard-packed WITHIN
-    each phase (phase-salted hash groups, ~2000 tokens/shard) —
-    the data-ordering step composed entirely from certified parts
-    (_quality_signals + ops/sampling.py pack_shards)."""
-    from ocr_search_spark.ops.sampling import pack_shards
-    from ocr_search_spark.search.analysis import with_search_columns
-
-    d = with_search_columns(_docs(spark, sf_dir), "text")
-    n_tokens, n_stop, _ = _quality_signals()
-    # materialize the scored table ONCE: the three phase branches below
-    # each reference it, and without the checkpoint every branch re-runs
-    # the corpus tokenize+quality subtree (3 scans -> 1; measured
-    # 1.99 -> 0.80 s at sf0.1, r6)
-    scored = d.select(
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        F.when((n_stop * 10 >= n_tokens * 2) & (n_tokens >= 30), F.lit(2))
-        .when(n_stop * 20 >= n_tokens, F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("phase"),
-    ).localCheckpoint()
-    parts = []
-    for p in (0, 1, 2):
-        packed = pack_shards(
-            scored.filter(F.col("phase") == p),
-            "doc_id",
-            "n_tokens",
-            target_tokens=2000,
-            n_groups=16,
-            salt=f"cur{p}",
-        )
-        parts.append(packed.select(F.lit(p).alias("phase"), "*"))
-    out = parts[0]
-    for more in parts[1:]:
-        out = out.unionByName(more)
-    return out.select("doc_id", "phase", "tokens", "shard_group", "shard_idx")
-
-
-def q_tfidf_related(spark, sf_dir):
-    """Per-document top-3 related documents ("more like this"): sparse
-    tf-idf inner product over a df-pruned posting-list self-join, with
-    the ranking path in exact BIGINT half-bit arithmetic so the top-k
-    set is engine-reproducible; cosine reported round-6
-    (search/ranking.py tfidf_related_topk)."""
-    from ocr_search_spark.search.ranking import tfidf_related_topk
-
-    return tfidf_related_topk(
-        _docs(spark, sf_dir), k=3, max_df_frac=0.25
-    )
-
-
-def q_lang_id(spark, sf_dir):
-    """Heuristic language id over stopword votes (en vs other)."""
-    from ocr_search_spark.search.analysis import with_search_columns
-
-    d = with_search_columns(_docs(spark, sf_dir), "text")
-    en = F.size(
-        F.array_intersect(
-            F.array_distinct("toks"), F.array(F.lit("the"), F.lit("a"), F.lit("of"))
-        )
-    )
-    return d.select(
-        "doc_id", F.when(en > 0, F.lit("en")).otherwise(F.lit("und")).alias("lang_pred")
-    )
-
-
-def q_meta_filter(spark, sf_dir):
-    """S10: exiftool-analogue metadata map, filtered via element_at — the
-    Spark analogue of ``meta->>'Tag'`` predicates on the reference's JSON
-    column (app/services/metadata.py:8-37, models.py:14)."""
-    from ocr_search_spark.ops.metadata import with_metadata
-
-    d = with_metadata(_docs(spark, sf_dir))
-    m = F.col("meta")
-    return d.filter(
-        (F.element_at(m, "FileType") == "PDF") & (F.element_at(m, "Language") == "en")
-    ).select(
-        "doc_id",
-        F.element_at(m, "FileName").alias("file_name"),
-        F.element_at(m, "MIMEType").alias("mime"),
-        F.element_at(m, "FileSize").alias("file_size"),
-        F.element_at(m, "Checksum").alias("checksum"),
-    )
-
-
-def q_ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-10 for query vectors vec_id < 5."""
-    from ocr_search_spark.ops.similarity import cosine_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-
-
-def q_sq_topk(spark, sf_dir):
-    """Int8 scalar-quantized top-10 (faiss SQ8 serve shape): per-vector
-    max-abs encode to int8 codes, integer dot + precomputed integer
-    norms, cosine reconstructed on the 6-dp lattice — the 4x-smaller
-    serving arm for query vectors vec_id < 5 (ops/similarity.py
-    sq_encode + sq_topk; quantized cosine is scale-invariant, so the
-    float scales never ship to serving)."""
-    from ocr_search_spark.ops.similarity import sq_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return sq_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-
-
-def q_sq_recall(spark, sf_dir):
-    """What int8 compression costs on THIS corpus: recall@10 of the
-    SQ8 serving arm vs exact float cosine, per query —
-    (query_id, n_hits, recall_ppm), the same integer-ppm contract as
-    ann_recall / ivf_pq_recall (ops/similarity.py sq_recall)."""
-    from ocr_search_spark.ops.similarity import sq_recall
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return sq_recall(emb, emb.filter(F.col("vec_id") < 5), k=10)
-
-
-def q_margin_mine(spark, sf_dir):
-    """Ratio-margin pair mining (Artetxe-Schwenk / CCMatrix) between the
-    even-vec_id and odd-vec_id halves of the embedding table playing
-    source and target language: per src vector, the single best-margin
-    tgt whose cos/(mean kNN cos) ratio clears 1.05 —
-    (src_id, tgt_id, cos_e6, margin_e6) on the exact e6 integer lattice
-    (ops/similarity.py margin_mine; hubness-corrected mining, k=4)."""
-    from ocr_search_spark.ops.similarity import margin_mine
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return margin_mine(
-        emb.filter(F.col("vec_id") % 2 == 0),
-        emb.filter(F.col("vec_id") % 2 == 1),
-        k=4,
-        threshold_e6=1_050_000,
-    )
-
-
-def q_margin_mine_mutual(spark, sf_dir):
-    """Intersection-strategy margin mining: pairs where EACH embedding
-    half's best-margin match is the other — forward ∩ backward argmax,
-    both clearing 1.05 (ops/similarity.py margin_mine_mutual; the
-    precision mode CCMatrix ships)."""
-    from ocr_search_spark.ops.similarity import margin_mine_mutual
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return margin_mine_mutual(
-        emb.filter(F.col("vec_id") % 2 == 0),
-        emb.filter(F.col("vec_id") % 2 == 1),
-        k=4,
-        threshold_e6=1_050_000,
-    )
-
-
-def q_cosine_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs, exact form (threshold tuned to the
-    synthetic embeddings' cosine range — testdata has no true dups)."""
-    from ocr_search_spark.ops.similarity import cosine_neardup_pairs_exact
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return cosine_neardup_pairs_exact(emb, threshold=0.42)
-
-
-def q_cosine_neardup_lsh(spark, sf_dir):
-    """Embedding-cosine near-dup, banded-LSH scale path (approximate
-    candidate recall — rows-only check by design). Short bands (8×2)
-    because the synthetic embeddings only reach cos ≈ 0.42; production
-    near-dup (cos ≥ 0.95) uses the long-band defaults."""
-    from ocr_search_spark.ops.similarity import cosine_neardup_pairs_lsh
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return cosine_neardup_pairs_lsh(
-        emb, dim=64, threshold=0.42, n_bands=8, band_size=2
-    )
-
-
-
-def q_cosine_near_dedup(spark, sf_dir):
-    """Embedding near-dedup composition: banded-LSH candidates -> exact
-    cosine verify -> min-id keeper -> surviving vectors."""
-    from ocr_search_spark.ops.similarity import cosine_near_dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return cosine_near_dedup(
-        emb, dim=64, threshold=0.42, n_bands=8, band_size=2
-    ).select("vec_id")
-
-
-def q_cosine_near_dedup_cc(spark, sf_dir):
-    """Embedding near-dedup with the connected-components keeper: one
-    canonical vector per verified-cosine cluster (ops/similarity.py
-    cosine_near_dedup_cc + ops/dedup.py min-label propagation)."""
-    from ocr_search_spark.ops.similarity import cosine_near_dedup_cc
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return cosine_near_dedup_cc(
-        emb, dim=64, threshold=0.42, n_bands=8, band_size=2
-    ).select("vec_id")
-
-
-def q_semdedup(spark, sf_dir):
-    """SemDeDup (cluster-then-dedup): k-means cells -> within-cluster
-    exact cosine pairs -> connected components -> keep the member
-    FARTHEST from its centroid per group (ops/similarity.py semdedup).
-    Candidate cost is sum(cluster_size^2), not n^2 — the composition
-    used in practice for billion-doc semantic dedup."""
-    from ocr_search_spark.ops.similarity import (
-        ivf_centroids_from_sample,
-        semdedup,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # cell count grows with the corpus (the paper's k ∝ n rule keeps the
-    # per-cell quadratic verify constant); n//64 pins k=8 at the sf0.01
-    # oracle operating point
-    k = max(8, emb.count() // 64)
-    cents = ivf_centroids_from_sample(emb, k=k)
-    # join assignment strategy: bit-identical, k-independent plan —
-    # 5.7 s vs 9.8 s at sf0.1 (literal-expression compile dominated)
-    return semdedup(emb, cents, threshold=0.42, method="join").select("vec_id")
-
-
-def q_semdedup_cluster_sizes(spark, sf_dir):
-    """Duplicate-group size histogram over the SemDeDup components: how
-    many near-dup groups of each size exist (group_size, n_groups) —
-    the standard corpus-health diagnostic after a dedup pass."""
-    from ocr_search_spark.ops.dedup import connected_components_labels
-    from ocr_search_spark.ops.similarity import (
-        ivf_centroids_from_sample,
-        semdedup_pairs,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    k = max(8, emb.count() // 64)  # the q_semdedup k ∝ n rule
-    cents = ivf_centroids_from_sample(emb, k=k)
-    pairs = semdedup_pairs(
-        emb, cents, threshold=0.42, method="join"
-    ).select("a_id", "b_id")
-    labels = connected_components_labels(pairs)
-    return (
-        labels.groupBy("label")
-        .agg(F.count("*").alias("group_size"))
-        .groupBy("group_size")
-        .agg(F.count("*").alias("n_groups"))
-        .orderBy("group_size")
-    )
-
-
-def q_dsir_select(spark, sf_dir):
-    """DSIR importance-resampling data selection (ops/dsir.py): hashed
-    unigram+bigram multinomials fit on the English slice (target) and
-    the full pool (raw); every doc scored by the integer-exact half-bit
-    log importance weight; deterministic top-50 selected. The weight
-    table is n_buckets rows and broadcast; one shuffle keyed by doc."""
-    from ocr_search_spark.ops.dsir import dsir_select
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # target is a SLICE of the pool: pass it as a flag column so the fit
-    # reads both multinomials off one materialized gram stream instead of
-    # re-tokenizing the slice (dsir_weights target_flag path, r6)
-    return dsir_select(
-        docs, None, n=50, target_flag=F.col("lang") == "en"
-    ).select("doc_id", "n_grams", "w_hb", "rnk")
 
 
 def q_revenue_by_nation(spark, sf_dir):
@@ -1925,4943 +92,13 @@ def q_revenue_by_nation(spark, sf_dir):
     )
 
 
-def q_running_revenue(spark, sf_dir):
-    """Windowed analytic over a grouped aggregate (TPC-H-ish): monthly
-    revenue per return-flag with a running cumulative sum. Shape: a
-    map-side-combined groupBy shuffle on (flag, month), then one small
-    exchange of the ~250 aggregate rows for the per-flag window — the
-    window never sees raw lineitem rows. Money in integer e4
-    (engine-exact)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    rev_e4 = F.round(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 10000
-    ).cast("long")
-    monthly = (
-        li.groupBy(
-            "l_returnflag", F.date_trunc("month", "l_shipdate").alias("month")
-        )
-        .agg(F.sum(rev_e4).alias("rev_e4"))
-    )
-    w = Window.partitionBy("l_returnflag").orderBy("month")
-    return monthly.select(
-        "l_returnflag",
-        "month",
-        "rev_e4",
-        F.sum("rev_e4").over(w).alias("running_e4"),
-    )
-
-
-def q_vocab_topk(spark, sf_dir):
-    """Corpus vocabulary: term frequency + document frequency, top 50 terms
-    (the idf feed / tokenizer-audit artifact; map-side partial aggregation
-    means the shuffle carries per-partition partials, not token rows)."""
-    d = _docs(spark, sf_dir)
-    toks = d.select("doc_id", F.explode(_tokens("text")).alias("term"))
-    vocab = toks.groupBy("term").agg(
-        F.count("*").alias("tf"), F.count_distinct("doc_id").alias("df")
-    )
-    return vocab.orderBy(F.col("tf").desc(), F.col("term")).limit(50)
-
-
-def _lm_parts(spark, sf_dir):
-    """Shared LM-build stage: bigram LM + vocab size trained on a
-    deterministic 30% md5 slice (the trusted-reference-corpus stand-in),
-    then every document scored against it."""
-    from ocr_search_spark.ops.lm import lm_score, lm_vocab_size, ngram_lm
-    from ocr_search_spark.ops.sampling import deterministic_sample
-
-    d = _docs(spark, sf_dir)
-    ref = deterministic_sample(d, 0.30, salt="lm")
-    return d, lm_score(d, ngram_lm(ref), lm_vocab_size(ref))
-
-
-def q_lm_bits(spark, sf_dir):
-    """CCNet-style LM quality scores: per-document bigram surprise in
-    whole bits (integer-exact floor-log2 form) + bits-per-kilotoken."""
-    _, scored = _lm_parts(spark, sf_dir)
-    return scored
-
-
-def q_kn_bits(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram LM scores (ops/lm.py kn_lm +
-    kn_score): the KenLM smoothing family ccnet's real perplexity
-    filter uses — type-count continuation probabilities, absolute
-    discount 3/4, integer-exact on the 4*cp*(B+V) lattice, distributed
-    model joins (nothing but two scalars broadcasts)."""
-    from ocr_search_spark.ops.lm import kn_lm, kn_score
-    from ocr_search_spark.ops.sampling import deterministic_sample
-
-    d = _docs(spark, sf_dir)
-    ref = deterministic_sample(d, 0.30, salt="lm")
-    return kn_score(d, kn_lm(ref))
-
-
-def q_ccnet_buckets(spark, sf_dir):
-    """CCNet head/middle/tail: per-language perplexity terciles of the
-    LM score — the quality split a web-crawl mixing recipe keys on."""
-    from ocr_search_spark.ops.lm import ccnet_buckets
-
-    d, scored = _lm_parts(spark, sf_dir)
-    return ccnet_buckets(scored, d.select("doc_id", "lang"))
-
-
-def q_hash_split(spark, sf_dir):
-    """Deterministic train/val/test assignment by md5 hash range —
-    repeatable across runs/engines, disjoint and exhaustive."""
-    from ocr_search_spark.ops.sampling import hash_split
-
-    return hash_split(
-        _docs(spark, sf_dir), {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).select("doc_id", "split")
-
-
-def q_deterministic_sample(spark, sf_dir):
-    """Repeatable 25% hash sample (pure filter, no RNG, pushes to scan)."""
-    from ocr_search_spark.ops.sampling import deterministic_sample
-
-    return deterministic_sample(_docs(spark, sf_dir), 0.25, salt="s1").select(
-        "doc_id"
-    )
-
-
-def _quality_gated(spark, sf_dir):
-    """The shared quality+language gate stage of the training pipelines:
-    length / stopword-ratio / punctuation / english-vote thresholds."""
-    from ocr_search_spark.search.analysis import with_search_columns
-
-    d = with_search_columns(_docs(spark, sf_dir), "text")
-    n_tokens, n_stop, n_punct = _quality_signals()
-    en_votes = F.size(
-        F.array_intersect(
-            F.array_distinct("toks"), F.array(F.lit("the"), F.lit("a"), F.lit("of"))
-        )
-    )
-    return d.filter(
-        _quality_keep(n_tokens, n_stop, n_punct) & (en_votes > 0)
-    ).select("doc_id", "text")
-
-
-def q_training_corpus(spark, sf_dir):
-    """The composed training-data pipeline a user actually runs: quality
-    gate → language filter → near-dedup survivors → deterministic split.
-    Every stage is an existing oracle-checked operator; the composition is
-    itself oracle-checked end to end."""
-    from ocr_search_spark.ops.dedup import near_dedup
-    from ocr_search_spark.ops.sampling import hash_split
-
-    survivors = near_dedup(
-        _quality_gated(spark, sf_dir), "doc_id", "text",
-        threshold=0.3, n_hashes=8, band_size=2,
-    )
-    return hash_split(survivors, {"train": 0.8, "val": 0.1, "test": 0.1}).select(
-        "doc_id", "split"
-    )
-
-
-def q_training_corpus_cc(spark, sf_dir):
-    """The FULL composed pipeline: quality gate ∧ Gopher repetition gate →
-    connected-components near-dedup (one canonical doc per dup cluster) →
-    deterministic split — every round-3 addition composed end to end and
-    oracle-checked as one query."""
-    from ocr_search_spark.ops.dedup import near_dedup_cc
-    from ocr_search_spark.ops.sampling import hash_split
-    from ocr_search_spark.ops.text_analysis import repetition_filter
-
-    gated = _quality_gated(spark, sf_dir).join(
-        repetition_filter(_docs(spark, sf_dir)).withColumnRenamed("id", "doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    survivors = near_dedup_cc(
-        gated, "doc_id", "text", threshold=0.3, n_hashes=8, band_size=2
-    )
-    return hash_split(survivors, {"train": 0.8, "val": 0.1, "test": 0.1}).select(
-        "doc_id", "split"
-    )
-
-
-def q_selected_corpus(spark, sf_dir):
-    """The DCLM/FineWeb-shaped SELECTION pipeline end to end: quality
-    gate ∧ Gopher repetition gate → connected-components near-dedup →
-    DSIR importance resampling against the English target slice →
-    deterministic top-100 — filtering, dedup and model-based selection
-    composed as one oracled query. The DSIR model is fit on the GATED,
-    DEDUPED pool (selection operates on what survived hygiene, the
-    order real recipes use)."""
-    from ocr_search_spark.ops.dedup import near_dedup_cc
-    from ocr_search_spark.ops.dsir import dsir_select
-    from ocr_search_spark.ops.text_analysis import repetition_filter
-
-    gated = _quality_gated(spark, sf_dir).join(
-        repetition_filter(_docs(spark, sf_dir)).withColumnRenamed("id", "doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    pool = near_dedup_cc(
-        gated, "doc_id", "text", threshold=0.3, n_hashes=8, band_size=2
-    )
-    # the gate projects (doc_id, text); recover lang for the target slice
-    en_ids = (
-        _docs(spark, sf_dir)
-        .filter(F.col("lang") == "en")
-        .select("doc_id", F.lit(True).alias("__is_en"))
-    )
-    # target = the English slice OF THE POOL: attach the membership flag
-    # and let the fit read both multinomials off one gram stream
-    # (dsir_weights target_flag path, r6)
-    pool_flagged = pool.join(F.broadcast(en_ids), "doc_id", "left")
-    return dsir_select(
-        pool_flagged,
-        None,
-        n=100,
-        target_flag=F.coalesce(F.col("__is_en"), F.lit(False)),
-    ).select("doc_id", "n_grams", "w_hb", "rnk")
-
-
-def q_bm25(spark, sf_dir):
-    """Okapi BM25 over the query terms — one-pass HOF term counts + scalar
-    corpus-stats broadcast (no explode, no wide shuffle)."""
-    from ocr_search_spark.search.ranking import bm25_scores
-
-    return bm25_scores(_docs(spark, sf_dir), FTS_TERMS)
-
-
-def q_hybrid_search(spark, sf_dir):
-    """Hybrid retrieval by reciprocal-rank fusion (search/ranking.py
-    rrf_fuse): the lexical arm ranks the BM25 scores for the Q1 terms
-    (top-50), the semantic arm ranks embedding-cosine neighbors of
-    query vector 0 (top-50, vec_id ≡ doc_id at oracle scale), and RRF
-    with k0=60 fuses the two incommensurable scorers in exact BIGINT
-    reciprocal-rank arithmetic — the modern generalization of the
-    reference's GREATEST(rank, sim) two-signal sort (app/search.py:81).
-    Both arms are lattice-rounded with deterministic tie-breaks, so the
-    fused top-25 is engine-reproducible."""
-    from pyspark.sql.window import Window
-
-    from ocr_search_spark.ops.similarity import cosine_topk
-    from ocr_search_spark.search.ranking import bm25_scores, rrf_fuse
-
-    # distributed top-k first (TakeOrderedAndProject — per-partition heaps,
-    # no global sort), THEN the global rank window over the 50 survivors:
-    # the single-partition window is bounded at k rows regardless of how
-    # many documents matched
-    lex = (
-        bm25_scores(_docs(spark, sf_dir), FTS_TERMS)
-        .orderBy(F.col("bm25").desc(), F.col("doc_id"))
-        .limit(50)
-        .withColumn(
-            "rank",
-            # row-bound: the post-limit feedback set (<= fb_docs rows)
-            F.row_number().over(
-                Window.orderBy(F.col("bm25").desc(), F.col("doc_id"))
-            ),
-        )
-        .select("doc_id", "rank")
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    sem = cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=50).select(
-        F.col("neighbor_id").alias("doc_id"), F.col("rnk").alias("rank")
-    )
-    return rrf_fuse([lex, sem], id_col="doc_id", k0=60, topk=25)
-
-
-def q_mmr_rerank(spark, sf_dir):
-    """Diversified head reranking: MMR (ops/similarity.py mmr_select)
-    over the cosine top-50 pool for query vector 0 — greedy top-10
-    trading relevance (λ=0.7) against redundancy to the already-selected
-    set, every per-step score exact BIGINT on the e6 lattice with a
-    deterministic (score, id) tie-break. The pool arrives pre-truncated
-    by the distributed arm (cosine_topk's TakeOrderedAndProject shape),
-    so the pairwise-sim crossJoin and each greedy step are O(50) rows
-    regardless of corpus size."""
-    from ocr_search_spark.ops.similarity import cosine_topk, mmr_select
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pool = cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=50)
-    cands = pool.select(
-        F.col("neighbor_id").alias("vec_id"),
-        F.round(F.col("cos") * 1_000_000).cast("long").alias("rel_e6"),
-    ).join(emb.select("vec_id", "embedding"), "vec_id")
-    return mmr_select(cands, k=10, lambda_bp=7000)
-
-
-def q_prf_search(spark, sf_dir):
-    """The full PRF retrieval loop: RM3 expansion terms from the BM25
-    top-10 feedback set (prf_terms), unioned with the original Q1 terms
-    as a TERM TABLE, re-scored by the data-driven BM25
-    (search/ranking.py bm25_scores_terms_df — terms as broadcast rows,
-    per-term contributions on the e6 BIGINT lattice so the dynamic-term
-    sum stays engine-exact), top-20 by (bm25_e6 DESC, doc_id). The
-    second pass is one token explode ⋈ broadcast(7 terms) — no
-    recompile, no driver round-trip for the term set."""
-    from ocr_search_spark.search.ranking import (
-        bm25_scores_terms_df,
-        prf_expansion_terms,
-    )
-
-    d = _docs(spark, sf_dir)
-    exp = prf_expansion_terms(d, FTS_TERMS, fb_docs=10, fb_terms=5).select(
-        "term"
-    )
-    from ocr_search_spark.localrel import strings_df
-
-    orig = strings_df(spark, FTS_TERMS, "term")  # JVM-local, no RDD scan (r6)
-    terms = exp.unionByName(orig)
-    return (
-        bm25_scores_terms_df(d, terms)
-        .orderBy(F.col("bm25_e6").desc(), "doc_id")
-        .limit(20)
-    )
-
-
-def q_ql_scores(spark, sf_dir):
-    """Dirichlet-smoothed query-likelihood ranking (search/ranking.py
-    ql_scores, μ=2000) for the Q1 terms — the language-model scorer
-    beside BM25, same single-pass + broadcast-scalar-stats plan."""
-    from ocr_search_spark.search.ranking import ql_scores
-
-    return ql_scores(_docs(spark, sf_dir), FTS_TERMS, mu=2000.0)
-
-
-def q_ndcg_eval(spark, sf_dir):
-    """Retrieval evaluation: NDCG@10 of the brute-force cosine ranking
-    for query vectors 0–4, with binary same-label relevance from the
-    embeddings table (search/ranking.py ndcg_at_k) — the graded sibling
-    of ann_recall. Position discounts are precomputed BIGINT literals
-    (round(1e9/log2(i+1))), both DCG sums exact integer arithmetic,
-    ndcg_ppm = dcg·1e6 DIV idcg — engine-reproducible end to end."""
-    from ocr_search_spark.ops.similarity import cosine_topk
-    from ocr_search_spark.search.ranking import ndcg_at_k
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qset = emb.filter(F.col("vec_id") < 5)
-    ranked = cosine_topk(emb, qset, k=10).select(
-        "query_id",
-        F.col("neighbor_id").alias("doc_id"),
-        F.col("rnk").alias("rank"),
-    )
-    rels = (
-        emb.select(F.col("vec_id").alias("doc_id"), "label")
-        .crossJoin(
-            F.broadcast(
-                qset.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("label").alias("__ql"),
-                )
-            )
-        )
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "doc_id",
-            (F.col("label") == F.col("__ql")).cast("int").alias("rel"),
-        )
-    )
-    return ndcg_at_k(ranked, rels, k=10).orderBy("query_id")
-
-
-def q_ltr_features(spark, sf_dir):
-    """Learning-to-rank feature assembly: one row per BM25-matched doc
-    carrying the standard LTR feature set — bm25, cover-density
-    proximity (0.0 when not all terms present), pg_trgm-style trigram
-    Jaccard to the query string, token count, and embedding cosine to
-    query vector 0 (0.0 when the doc has no embedding) — the feature
-    export in front of a LambdaMART/GBDT ranker. Every float is a
-    round-6 lattice value computed identically by both engines; the
-    joins are (broadcast-small matched set) ⋈ attributes, no new wide
-    shuffle beyond the arms' own plans."""
-    from ocr_search_spark.ops.similarity import _dot, _norm
-    from ocr_search_spark.search.analysis import with_search_columns
-    from ocr_search_spark.search.ranking import bm25_scores, cover_density_rank
-
-    d = _docs(spark, sf_dir)
-    base = bm25_scores(d, FTS_TERMS)
-    cd = cover_density_rank(d, FTS_TERMS).select("doc_id", "rank_cd")
-    q = TRIGRAM_QUERY.lower()
-    q_grams = sorted({q[i : i + 3] for i in range(len(q) - 2)})
-    q_lit = F.array(*[F.lit(g) for g in q_grams])
-    attrs = with_search_columns(d, "text", grams=True).select(
-        "doc_id",
-        F.size("toks").alias("n_tokens"),
-        F.round(
-            F.when(
-                F.size(F.array_union("grams", q_lit)) > 0,
-                F.size(F.array_intersect("grams", q_lit))
-                / F.size(F.array_union("grams", q_lit)),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("tri_sim"),
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("__qv")
-    )
-    cosd = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                _dot(F.col("embedding"), F.col("__qv"))
-                / (_norm(F.col("embedding")) * _norm(F.col("__qv"))),
-                6,
-            ).alias("cos"),
-        )
-    )
-    return (
-        base.join(attrs, "doc_id")
-        .join(cd, "doc_id", "left")
-        .join(cosd, "doc_id", "left")
-        .select(
-            "doc_id",
-            "bm25",
-            F.coalesce("rank_cd", F.lit(0.0)).alias("rank_cd"),
-            "tri_sim",
-            "n_tokens",
-            F.coalesce("cos", F.lit(0.0)).alias("cos"),
-        )
-    )
-
-
-def q_prf_terms(spark, sf_dir):
-    """RM3-style pseudo-relevance-feedback expansion (search/ranking.py
-    prf_expansion_terms): BM25 top-10 feedback docs for the Q1 terms →
-    relevance-model term weights Σ_d (tf·bm25_e6·1000 DIV dl) in exact
-    BIGINT → top-5 expansion candidates, original terms excluded. Only
-    the 10 feedback docs are re-tokenized — corpus-wide cost is the one
-    BM25 pass."""
-    from ocr_search_spark.search.ranking import prf_expansion_terms
-
-    return prf_expansion_terms(
-        _docs(spark, sf_dir), FTS_TERMS, fb_docs=10, fb_terms=5
-    )
-
-
-def q_rank_cd(spark, sf_dir):
-    """Cover-density proximity rank (ts_rank_cd analogue, search.py:77):
-    best window covering all query terms, n_terms/min_cover."""
-    from ocr_search_spark.search.ranking import cover_density_rank
-
-    return cover_density_rank(_docs(spark, sf_dir), FTS_TERMS)
-
-
-def q_events_rollup(spark, sf_dir):
-    """Hierarchical rollup: per-(type, day) counts plus per-type and grand
-    totals in one pass (GROUPING SETS — map-side partial aggs per set)."""
-    e = _events(spark, sf_dir)
-    return (
-        e.rollup("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (30-min) over events — analytic-window batch
-    form; the streaming twin (applyInPandasWithState, event-time timeout)
-    lives in streaming/sessionize.py and is pytest-equivalence-checked."""
-    from ocr_search_spark.streaming.sessionize import sessionize_batch
-
-    return sessionize_batch(_events(spark, sf_dir), gap_minutes=30)
-
-
-def q_hard_negatives(spark, sf_dir):
-    """Hard-negative mining for embedding training: per query vector
-    (vec_id < 5), the top-5 HIGHEST-cosine vectors with a DIFFERENT
-    label — the near-miss negatives contrastive training needs (easy
-    random negatives teach nothing). Brute-force arm here; at scale the
-    candidate tuples come from ivf_search unchanged, the margin_mine
-    pattern. Deterministic: lattice cosine + (cos DESC, id) tie-break."""
-    from pyspark.sql.window import Window
-
-    from ocr_search_spark.ops.similarity import cosine_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qset = emb.filter(F.col("vec_id") < 5)
-    # top-50 neighbors first (cheap arm), then drop same-label and keep 5
-    ranked = cosine_topk(emb, qset, k=50)
-    labels = emb.select(F.col("vec_id").alias("neighbor_id"), "label")
-    qlabels = qset.select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("__ql")
-    )
-    negs = (
-        ranked.join(labels, "neighbor_id")
-        .join(F.broadcast(qlabels), "query_id")
-        .filter(F.col("label") != F.col("__ql"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        negs.withColumn("neg_rank", F.row_number().over(w))
-        .filter(F.col("neg_rank") <= 5)
-        .select("query_id", "neighbor_id", "cos", "neg_rank")
-        .orderBy("query_id", "neg_rank")
-    )
-
-
-def q_weighted_sample(spark, sf_dir):
-    """Deterministic weighted sampling without replacement
-    (ops/sampling.py weighted_sample, Efraimidis-Spirakis A-Res):
-    100 docs drawn ∝ n_chars via hash-derived lattice uniforms —
-    reproducible quality-weighted corpus draws, distributed top-n, no
-    RNG state. Output: sampled (doc_id, n_chars)."""
-    from ocr_search_spark.ops.sampling import weighted_sample
-
-    d = _docs(spark, sf_dir).select("doc_id", "n_chars")
-    return weighted_sample(d, 100, "n_chars").orderBy("doc_id")
-
-
-def q_mrr_eval(spark, sf_dir):
-    """MRR@10 of the cosine ranking for query vectors 0-4 with binary
-    same-label relevance (search/ranking.py mrr_at_k) — the
-    first-relevant-rank companion to ndcg_eval; rr_ppm = 1e6 DIV
-    first_rel_rank, exact integers."""
-    from ocr_search_spark.ops.similarity import cosine_topk
-    from ocr_search_spark.search.ranking import mrr_at_k
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qset = emb.filter(F.col("vec_id") < 5)
-    ranked = cosine_topk(emb, qset, k=10).select(
-        "query_id",
-        F.col("neighbor_id").alias("doc_id"),
-        F.col("rnk").alias("rank"),
-    )
-    rels = (
-        emb.select(F.col("vec_id").alias("doc_id"), "label")
-        .crossJoin(
-            F.broadcast(
-                qset.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("label").alias("__ql"),
-                )
-            )
-        )
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "doc_id",
-            (F.col("label") == F.col("__ql")).cast("int").alias("rel"),
-        )
-    )
-    return mrr_at_k(ranked, rels, k=10).orderBy("query_id")
-
-
-def q_event_transitions(spark, sf_dir):
-    """Markov transition matrix over per-user event sequences
-    (ops/events.py event_transitions): one analytic-window pass, total
-    per-user order via the (ts, event_id) tiebreak, |types|² output."""
-    from ocr_search_spark.ops.events import event_transitions
-
-    return event_transitions(_events(spark, sf_dir))
-
-
-def q_group_split(spark, sf_dir):
-    """Group-integrity train/val/test split: hash_split keyed on the
-    GROUP (source) instead of the doc id, so every document of a source
-    lands in the same split — the leakage-safe split for corpora with
-    near-duplicates inside a group (split_leakage MEASURES the problem;
-    this prevents it, sklearn's GroupShuffleSplit semantics,
-    deterministic). Output: per (split, source) doc counts — group
-    integrity is visible as each source appearing under exactly one
-    split."""
-    from ocr_search_spark.ops.sampling import hash_split
-
-    d = hash_split(
-        _docs(spark, sf_dir),
-        {"train": 0.8, "val": 0.1, "test": 0.1},
-        id_col="source",
-    )
-    return (
-        d.groupBy("split", "source")
-        .agg(F.count("*").alias("docs"))
-        .orderBy("split", "source")
-    )
-
-
-def q_length_outliers(spark, sf_dir):
-    """IQR outlier gate per language: p25/p75 from the exact
-    group-percentile operator, Tukey fences computed in integers
-    (q1 - (15·iqr) DIV 10, q3 + (15·iqr) DIV 10), docs outside flagged —
-    the numeric-column hygiene gate beside the text-quality filters.
-    Output: per-lang fence values + outlier count."""
-    from ocr_search_spark.ops.text_analysis import group_percentiles
-
-    d = _docs(spark, sf_dir)
-    pcts = (
-        group_percentiles(d, "lang", "n_chars", ps=[25, 75])
-        .groupBy("lang")
-        .pivot("p", [25, 75])
-        .agg(F.first("value"))
-        .select(
-            "lang",
-            F.col("25").alias("q1"),
-            F.col("75").alias("q3"),
-        )
-        .withColumn(
-            "lo", F.expr("q1 - (15 * (q3 - q1)) div 10").cast("long")
-        )
-        .withColumn(
-            "hi", F.expr("q3 + (15 * (q3 - q1)) div 10").cast("long")
-        )
-    )
-    return (
-        d.join(F.broadcast(pcts), "lang")
-        .groupBy("lang", "q1", "q3", "lo", "hi")
-        .agg(
-            F.sum(
-                (
-                    (F.col("n_chars") < F.col("lo"))
-                    | (F.col("n_chars") > F.col("hi"))
-                ).cast("long")
-            ).alias("outliers"),
-            F.count("*").alias("docs"),
-        )
-        .orderBy("lang")
-    )
-
-
-def q_fuzzy_source_pairs(spark, sf_dir):
-    """Character-level fuzzy duplicates among the distinct source names
-    (ops/dedup.py edit_distance_pairs): q-gram posting candidates +
-    length filter, exact JVM levenshtein verify ≤ 1 — the short-string
-    normalization pass (source/title/author strings) where token
-    shingles are useless. src1/src11-style near-collisions surface as
-    distance-1 pairs."""
-    from ocr_search_spark.ops.dedup import edit_distance_pairs
-
-    srcs = _docs(spark, sf_dir).select("source").distinct()
-    return edit_distance_pairs(srcs, "source", "source", max_dist=1, q=2)
-
-
-def q_length_percentiles(spark, sf_dir):
-    """Exact discrete p50/p90/p99 of document length per language
-    (ops/text_analysis.py group_percentiles) — the distribution row of a
-    data card; value at rank ceil(p·n/100), always an actual data value,
-    integer-exact. Production twin at petabyte scale is
-    percentile_approx (t-digest); this exact form is its validation
-    twin, the jaccard-exact/minhash pairing."""
-    from ocr_search_spark.ops.text_analysis import group_percentiles
-
-    return group_percentiles(
-        _docs(spark, sf_dir), "lang", "n_chars", ps=[50, 90, 99]
-    )
-
-
-def q_funnel(spark, sf_dir):
-    """Ordered funnel view → click → purchase (ops/events.py funnel):
-    greedy-earliest completion per user under strict timestamp order;
-    per-step user counts and exact basis-point conversion. Each step is
-    one keyed aggregation against a monotonically shrinking per-user
-    frontier — no windows over the raw stream."""
-    from ocr_search_spark.ops.events import funnel
-
-    return funnel(_events(spark, sf_dir), ["view", "click", "purchase"])
-
-
-def q_cohort_retention(spark, sf_dir):
-    """Cohort retention matrix (ops/events.py cohort_retention): users
-    bucketed by first-activity day, counted at each active day offset —
-    two keyed shuffles (per-user min, per-(user, day) distinct), output
-    O(days²) rows regardless of event count."""
-    from ocr_search_spark.ops.events import cohort_retention
-
-    return cohort_retention(_events(spark, sf_dir))
-
-
-def q_events_hourly(spark, sf_dir):
-    """Batch windowed aggregation: per-type hourly counts."""
-    e = _events(spark, sf_dir)
-    return (
-        e.groupBy("event_type", F.date_trunc("hour", "ts").alias("hour"))
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# rows-only queries (no SQL oracle — extraction / approximate ops)
-# ---------------------------------------------------------------------------
-
-
-def q_extract_spans(spark, sf_dir):
-    """Full extraction pipeline at this sf (rows-only; the span-equality
-    gate is pytest vs the scalar golden implementation)."""
-    from ocr_search_spark.corpus import corpus_df
-    from ocr_search_spark.pipeline import explode_spans, extract_documents
-
-    n = {"sf0.001": 1000, "sf0.01": 2000, "sf0.1": 100000}.get(
-        sf_dir.rstrip("/").rsplit("/", 1)[-1], 1000
-    )
-    docs = corpus_df(spark, sf_dir, n_docs=n)
-    return explode_spans(extract_documents(docs))
-
-
-def q_caption_pairs(spark, sf_dir):
-    """Media↔caption pairing over the interleaved extracted span table
-    (ops/multimodal.py caption_pairs): each image span gets its nearest
-    non-blank text span by span order (tie → preceding) — the
-    LAION/OBELICS-style multimodal training-pair builder; one per-doc
-    window pass, no self-join. Oracle: the same argmin in SQL over the
-    scalar-reference golden spans."""
-    from ocr_search_spark.ops.multimodal import caption_pairs
-
-    return caption_pairs(q_extract_spans(spark, sf_dir))
-
-
-def q_html_links(spark, sf_dir):
-    """Out-link extraction from raw interleaved HTML spans
-    (ops/graph.py html_links): whole-anchor regexp_extract_all +
-    posexplode, JVM-side end to end — the web-graph edge front end for
-    domain_link_edges/pagerank. Oracle: golden parquet from the Python
-    `re` scalar twin (independent regex engine)."""
-    from ocr_search_spark.corpus import corpus_df
-    from ocr_search_spark.ops.graph import html_links
-
-    n = {"sf0.001": 1000, "sf0.01": 2000, "sf0.1": 100000}.get(
-        sf_dir.rstrip("/").rsplit("/", 1)[-1], 1000
-    )
-    return html_links(corpus_df(spark, sf_dir, n_docs=n))
-
-
-def q_interleave_profile(spark, sf_dir):
-    """Per-doc multimodal interleave data card (ops/multimodal.py
-    interleave_profile): text/media span counts, media ratio in basis
-    points, and the longest consecutive media run (gaps-and-islands via
-    two row_numbers sharing ONE doc-keyed shuffle) — the OBELICS-style
-    gate signals for interleaved training docs."""
-    from ocr_search_spark.ops.multimodal import interleave_profile
-
-    return interleave_profile(q_extract_spans(spark, sf_dir))
-
-
-def q_extract_kind_stats(spark, sf_dir):
-    """Per-kind extraction metrics (audit-table feed)."""
-    flat = q_extract_spans(spark, sf_dir)
-    return flat.groupBy("kind").agg(
-        F.count("*").alias("n_spans"),
-        F.sum(F.length("text")).alias("total_chars"),
-    )
-
-
-def q_html_main_content(spark, sf_dir):
-    """Link-density main-content variant over the corpus html spans.
-
-    Runs the fast-scanner kernel (html_fast.html_main_text_fast); the
-    DuckDB oracle reads a golden parquet generated by the independent
-    parser-based implementation (html_extract.html_main_text), mirroring
-    the extract_spans golden design."""
-    from ocr_search_spark.corpus import corpus_df
-    from ocr_search_spark.kernels.html_fast import html_main_text_fast
-    import pandas as pd
-
-    docs = corpus_df(spark, sf_dir, n_docs=500)
-    # filter html spans inside the array before exploding (no row
-    # amplification for non-html spans)
-    flat = docs.select(
-        "doc_id",
-        F.explode(F.filter("spans", lambda s: s["kind"] == "html")).alias("s"),
-    ).select("doc_id", F.col("s.text").alias("html"))
-
-    def kern(it):
-        for pdf in it:
-            if len(pdf):
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "main_text": pdf["html"].map(html_main_text_fast),
-                    }
-                )
-
-    return flat.mapInPandas(kern, "doc_id string, main_text string")
-
-
-def q_simhash(spark, sf_dir):
-    """SimHash fingerprints (32-bit) over documents."""
-    from ocr_search_spark.ops.dedup import simhash_df
-
-    return simhash_df(_docs(spark, sf_dir), "doc_id", "text").withColumnRenamed(
-        "id", "doc_id"
-    )
-
-
-def q_lsh_bands(spark, sf_dir):
-    """MinHash-LSH band buckets with >1 member (near-dup candidates)."""
-    from ocr_search_spark.ops.dedup import lsh_candidate_pairs, minhash_signatures
-
-    sig = minhash_signatures(_docs(spark, sf_dir), "doc_id", "text", n_hashes=8)
-    return lsh_candidate_pairs(sig, n_hashes=8, band_size=2)
-
-
-def q_ann_lsh_buckets(spark, sf_dir):
-    """Random-hyperplane LSH buckets over embeddings (ANN scale path)."""
-    from ocr_search_spark.ops.similarity import hyperplane_lsh_buckets
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return hyperplane_lsh_buckets(emb, dim=64, n_planes=8)
-
-
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF probe-search ANN (coarse cells + exact re-rank within probed
-    cells; approximate by probe count — rows-only check)."""
-    from ocr_search_spark.ops.similarity import ivf_centroids_from_sample, ivf_search
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = ivf_centroids_from_sample(emb, k=16)
-    return ivf_search(emb, emb.filter(F.col("vec_id") < 5), cents, k=10, n_probe=4)
-
-
-def q_ann_recall(spark, sf_dir):
-    """Recall@10 of IVF probe search vs exact brute force per query — the
-    index-quality audit run on a query sample before trusting an ANN
-    configuration (ops/similarity.py ann_recall)."""
-    from ocr_search_spark.ops.similarity import (
-        ann_recall,
-        ivf_centroids_from_sample,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = ivf_centroids_from_sample(emb, k=16)
-    # join strategy: bit-identical to the literal path, but the plan is
-    # k-independent — measured 0.8 s vs 5.0 s at sf0.1 (the literal
-    # path's 16x64-literal compile dominates at audit scale)
-    return ann_recall(
-        emb, emb.filter(F.col("vec_id") < 5), cents, k=10, n_probe=4,
-        method="join",
-    )
-
-
-def q_pq_adc_topk(spark, sf_dir):
-    """Product-quantization ANN (the billion-vector compression path):
-    md5-deterministic codebooks → per-subvector nearest-codeword encode
-    → asymmetric-distance top-k with fixed-point (integer) accumulation
-    so the distributed sum is order-independent and engine-exact
-    (ops/similarity.py pq_*)."""
-    from ocr_search_spark.ops.similarity import (
-        pq_adc_topk,
-        pq_codebooks_from_sample,
-        pq_encode,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cb = pq_codebooks_from_sample(emb, m=8, k=16, dim=64)
-    codes = pq_encode(emb, cb)
-    return pq_adc_topk(codes, cb, emb.filter(F.col("vec_id") < 5), k=10)
-
-
-def q_ivf_pq_topk(spark, sf_dir):
-    """Full IVF-PQ ANN: coarse-cell pruning (n_probe=4 of 16 cells) +
-    ADC scoring over PQ codes — the production billion-vector
-    architecture, composed from the two individually-oracled halves
-    (ops/similarity.py ivf_pq_topk)."""
-    from ocr_search_spark.ops.similarity import (
-        ivf_pq_seeds_from_sample,
-        ivf_pq_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # one collect for both seed tables (same k smallest-md5 rows, r6)
-    cents, cb = ivf_pq_seeds_from_sample(emb, m=8, k=16, dim=64)
-    return ivf_pq_topk(
-        emb, emb.filter(F.col("vec_id") < 5), cents, cb, k=10, n_probe=4
-    )
-
-
-def q_ann_ivf_topk_join(spark, sf_dir):
-    """IVF probe search through the broadcast-join strategy (the
-    production-cell-count shape: centroids as data, struct-max argmax,
-    k-independent plan) — bit-identical to the literal path, so it shares
-    ann_ivf_topk's oracle."""
-    from ocr_search_spark.ops.similarity import ivf_centroids_from_sample, ivf_search
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = ivf_centroids_from_sample(emb, k=16)
-    return ivf_search(
-        emb, emb.filter(F.col("vec_id") < 5), cents, k=10, n_probe=4, method="join"
-    )
-
-
-def q_media_features(spark, sf_dir):
-    """Multimodal plumbing: binary payloads → stub-decoded features.
-
-    The feature array is projected to scalar f0..f7 doubles — the harness
-    canonicalizer sorts result columns with pandas, which cannot hash list
-    cells; scalars also make the DuckDB oracle exact (float32 storage of a
-    6-decimal value round-trips through round(x, 6), verified for all byte
-    values)."""
-    from ocr_search_spark.ops.multimodal import extract_media_features, synth_media_df
-
-    feats = extract_media_features(synth_media_df(spark, n=64))
-    f_cols = [
-        F.round(F.element_at(F.col("feature"), k + 1).cast("double"), 6).alias(f"f{k}")
-        for k in range(8)
-    ]
-    return feats.select(
-        "media_ref", "n_bytes", "fingerprint", "width", "height", *f_cols
-    )
-
-
-def q_media_dedup(spark, sf_dir):
-    """Exact media dedup over binary payloads: content-hash groupBy on a
-    synth table with planted duplicates (rows collide mod lcm(8,5)=40)."""
-    from ocr_search_spark.ops.multimodal import media_exact_dedup, synth_media_df
-
-    return media_exact_dedup(synth_media_df(spark, n=64, groups=8))
-
-
-def q_media_near_dedup(spark, sf_dir):
-    """Multimodal near-dedup composition: payloads → stub feature vectors →
-    banded-LSH cosine dedup (min-ref keeper) over the planted-dup synth
-    table (ops/multimodal.py media_near_dedup)."""
-    from ocr_search_spark.ops.multimodal import media_near_dedup, synth_media_df
-
-    return media_near_dedup(synth_media_df(spark, n=64, groups=8)).select("media_ref")
-
-
-def q_media_resize(spark, sf_dir):
-    """Multimodal resize plumbing: batch kernel → fixed-dim thumbnails
-    (pixel resample stubbed deterministically — ops/multimodal.py)."""
-    from ocr_search_spark.ops.multimodal import resize_images, synth_media_df
-
-    return resize_images(synth_media_df(spark, n=64), 128, 96)
-
-
-def q_media_frames(spark, sf_dir):
-    """Multimodal frame sampling: one row per sampled 16-byte 'frame'
-    (demux stubbed deterministically — ops/multimodal.py)."""
-    from ocr_search_spark.ops.multimodal import sample_frames, synth_media_df
-
-    return sample_frames(synth_media_df(spark, n=64), every_n=2)
-
-
-def q_meta_tags(spark, sf_dir):
-    """S10 media half: the fixture-driven EXIF/IPTC tag contract
-    (ops/metadata.py exif_tags_expr — deterministic media_ref → tags, the
-    OCR-stub pattern standing in for the exiftool process boundary,
-    reference app/services/metadata.py:8-37). Tag values projected to
-    scalars for the hash compare."""
-    from ocr_search_spark.ops.metadata import with_media_tags
-    from ocr_search_spark.ops.multimodal import synth_media_df
-
-    m = with_media_tags(synth_media_df(spark, n=64).select("media_ref"))
-    t = F.col("tags")
-    return m.select(
-        "media_ref",
-        F.element_at(t, "EXIF:Make").alias("make"),
-        F.element_at(t, "EXIF:Model").alias("model"),
-        F.element_at(t, "EXIF:ImageWidth").cast("long").alias("width"),
-        F.element_at(t, "EXIF:ImageHeight").cast("long").alias("height"),
-        F.element_at(t, "EXIF:Orientation").cast("long").alias("orientation"),
-        F.element_at(t, "EXIF:DateTimeOriginal").alias("dt_orig"),
-        F.element_at(t, "IPTC:Keywords").alias("keyword"),
-    )
-
-
-def q_dedup_stream_twin(spark, sf_dir):
-    """Driver-facing certification of the streaming dedup semantics via
-    its batch twin (streaming/dedup_stream.py dedup_batch_twin): first
-    occurrence (min ts, tie min id) of each md5(text) fingerprint over a
-    corpus with planted later-arriving duplicates. The stream operator is
-    equivalence-tested against this exact formulation in pytest."""
-    from ocr_search_spark.streaming.dedup_stream import dedup_batch_twin
-
-    base = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "text",
-        F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
-    )
-    dups = base.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"),
-        "text",
-        (F.col("ts") + F.expr("INTERVAL 600 SECONDS")).alias("ts"),
-    )
-    return dedup_batch_twin(base.unionByName(dups))
-
-
-def q_range_join_stream_twin(spark, sf_dir):
-    """Driver-facing certification of the stream-stream interval-join
-    semantics via the batch twin at FULL microsecond precision: the
-    events table's sub-second timestamps go through range_join raw (no
-    epoch flooring), certifying the inclusive micros bounds the streaming
-    twin shares (streaming/join_stream.py; batch/stream equivalence incl.
-    sub-second cases in pytest)."""
-    from ocr_search_spark.ops.relational import range_join
-
-    e = _events(spark, sf_dir)
-    l = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    r = e.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    out = range_join(
-        l, r, on="user_id", left_ts="ts", right_ts="ts", lookback_s=86400
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("event_id_r").alias("err_id"),
-        (
-            F.unix_micros(F.col("ts").cast("timestamp_ltz"))
-            - F.unix_micros(F.col("ts_r").cast("timestamp_ltz"))
-        ).alias("gap_us"),
-    )
-
-
-def q_semantic_decontaminate(spark, sf_dir):
-    """Embedding-space benchmark decontamination (the semantic complement
-    of `decontaminate`'s n-gram overlap): an 8-vector 'benchmark' set is
-    drawn deterministically (smallest md5(vec_id) — the SQL-reproducible
-    sampling trick), and every remaining vector whose cosine to ANY of
-    them reaches 0.27 is dropped. One BroadcastNestedLoopJoin anti pass
-    over the pool — no shuffle. Threshold sits at the p90 of the synthetic
-    embeddings' max-cosine-to-eval distribution so the gate genuinely
-    fires (~10% dropped at sf0.01)."""
-    from ocr_search_spark.ops.similarity import semantic_decontaminate
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    ev = emb.orderBy(
-        F.md5(F.encode(F.col("vec_id").cast("string"), "utf-8")), "vec_id"
-    ).limit(8)
-    pool = emb.join(F.broadcast(ev.select("vec_id")), "vec_id", "left_anti")
-    return semantic_decontaminate(pool, ev, threshold=0.27)
-
-
-def q_data_card(spark, sf_dir):
-    """Corpus data card: docs / tokens / chars by language × split with
-    every subtotal and the grand total — CUBE in one pass (one shuffle of
-    map-side-combined cells, not 4 separate jobs). Subtotal rows carry
-    NULL dims, the ANSI convention both engines share."""
-    from ocr_search_spark.ops.sampling import hash_split
-    from ocr_search_spark.ops.text_analysis import corpus_data_card
-    from ocr_search_spark.search.analysis import tokens_expr
-
-    d = hash_split(
-        _docs(spark, sf_dir), {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).withColumn("toks_n", F.size(tokens_expr("text")))
-    return corpus_data_card(
-        d,
-        ["lang", "split"],
-        {"tokens": F.sum("toks_n"), "chars": F.sum("n_chars")},
-    )
-
-
-def q_nb_train_weights(spark, sf_dir):
-    """Naive Bayes quality/language classifier TRAINING (ops/classify.py
-    nb_train — the trainable half of the fastText-shaped filter): seed
-    label lang='en' vs rest, hashed unigram+bigram features, add-one-
-    smoothed log-likelihood-ratio weights on the integer half-bit
-    lattice scaled by NB_HB_FP. Output: the 100 strongest pro-English
-    model weights (weight_fp desc, bucket asc) — the model artifact
-    linear_scores serves."""
-    from ocr_search_spark.ops.classify import nb_train
-
-    w = nb_train(_docs(spark, sf_dir), "lang", "en", n_buckets=1 << 18)
-    order = [F.col("weight_fp").desc(), F.col("bucket").asc()]
-    top = w.orderBy(*order).limit(100)
-    # row-bound: `top` is the post-limit slice (<= k rows)
-    return top.withColumn("rnk", F.row_number().over(Window.orderBy(*order)))
-
-
-def q_nb_select(spark, sf_dir):
-    """Train-then-serve composition: nb_train fits the lang='en' NB model
-    on the corpus, linear_scores broadcast-joins the weight table back
-    onto the same hashed feature stream, and the top 100 documents by
-    integer logit are selected (logit_fp desc, id asc) — the CCNet /
-    LLaMA seed-classifier data-selection loop end-to-end in two
-    aggregation passes."""
-    from ocr_search_spark.ops.classify import nb_select
-
-    return nb_select(
-        _docs(spark, sf_dir), "lang", "en", n_buckets=1 << 18, k=100
-    )
-
-
-def q_perceptron_train(spark, sf_dir):
-    """Averaged batch-perceptron training (Collins-style, the
-    discriminative twin of nb_train_weights — same lang='en' seed
-    labels, same hashed unigram+bigram feature map): 3 integer-exact
-    rounds of add-Σy·x-over-misclassified with bias on bucket −1,
-    model = the round-summed weights (sign/rank-equal to the average,
-    no division) — output the 100 strongest pro-English weights
-    (weight desc, bucket asc) (ops/classify.py perceptron_train)."""
-    from ocr_search_spark.ops.classify import perceptron_train
-
-    w = perceptron_train(
-        _docs(spark, sf_dir), "lang", "en", n_buckets=1 << 18, n_iters=3
-    )
-    order = [F.col("weight").desc(), F.col("bucket").asc()]
-    top = w.orderBy(*order).limit(100)
-    # row-bound: `top` is the post-limit slice (<= k rows)
-    return top.withColumn("rnk", F.row_number().over(Window.orderBy(*order)))
-
-
-def q_perceptron_select(spark, sf_dir):
-    """Train-then-serve for the averaged perceptron: the 100
-    highest-scoring documents under the trained model (score desc, id
-    asc — the nb_select rank-selection contract; measured better than
-    the NB baseline at en-in-top-100 on this corpus)
-    (ops/classify.py perceptron_select)."""
-    from ocr_search_spark.ops.classify import perceptron_select
-
-    return perceptron_select(
-        _docs(spark, sf_dir), "lang", "en", n_buckets=1 << 18, n_iters=3, k=100
-    )
-
-
-def q_vocab_distinct_est(spark, sf_dir):
-    """Bounded-shuffle distinct-cardinality estimation (ops/sketch.py —
-    deterministic hash-threshold sampling, the engine-reproducible
-    alternative to HLL): per-language distinct-token estimates at
-    sample_bits=4 (a 1/16 sample of the distinct-value space; only the
-    sampled values ever shuffle), joined against the exact distinct
-    count so the estimate's accuracy is visible in the result."""
-    from ocr_search_spark.ops.sketch import distinct_estimate
-    from ocr_search_spark.search.analysis import tokens_expr
-
-    d = _docs(spark, sf_dir).select(
-        "lang", F.explode(tokens_expr("text")).alias("tok")
-    )
-    est = distinct_estimate(d, ["lang"], "tok", sample_bits=4)
-    exact = d.groupBy("lang").agg(F.countDistinct("tok").alias("n_exact"))
-    return est.join(exact, "lang").select(
-        "lang", "n_sampled", "n_est", "n_exact"
-    )
-
-
-def q_vocab_overlap(spark, sf_dir):
-    """Cross-split vocabulary overlap via the shared distinct-value
-    sample (ops/sketch.py sampled_jaccard): token-level Jaccard between
-    train/val/test vocabularies in exact per-mille integers. The
-    self-join runs on the sampled table, never the token stream — the
-    token-level complement of the document-level `split_leakage`
-    matrix."""
-    from ocr_search_spark.ops.sampling import hash_split
-    from ocr_search_spark.ops.sketch import sampled_jaccard
-    from ocr_search_spark.search.analysis import tokens_expr
-
-    d = hash_split(
-        _docs(spark, sf_dir), {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).select("split", F.explode(tokens_expr("text")).alias("tok"))
-    return sampled_jaccard(d, "split", "tok", sample_bits=3)
-
-
-def q_shard_manifest(spark, sf_dir):
-    """Data-release manifest (ops/sampling.py shard_manifest): per-split
-    doc/token counts, id range, and an order-independent XOR content
-    checksum (60-bit per-doc digests, sign-bit-safe in both engines) —
-    the integrity sidecar a published corpus ships so two independently
-    produced copies compare by one 8-byte value per shard, no sorting."""
-    from ocr_search_spark.ops.sampling import hash_split, shard_manifest
-    from ocr_search_spark.search.analysis import tokens_expr
-
-    d = hash_split(
-        _docs(spark, sf_dir), {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).withColumn("toks_n", F.size(tokens_expr("text")))
-    return shard_manifest(
-        d, ["split"], "doc_id", "text", token_count_col="toks_n"
-    )
-
-
-def q_length_buckets(spark, sf_dir):
-    """Length-bucketed batching (ops/sampling.py length_buckets):
-    power-of-two token-length buckets + deterministic fixed-size batch
-    ordinals within each bucket — the padding-waste killer for batched
-    tokenization/inference; one per-bucket window shuffle."""
-    from ocr_search_spark.ops.sampling import length_buckets
-    from ocr_search_spark.search.analysis import tokens_expr
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.size(tokens_expr("text")).alias("n_tokens")
-    )
-    return length_buckets(d, "doc_id", "n_tokens", batch_size=32)
-
-
-def q_global_shuffle(spark, sf_dir):
-    """Deterministic global training order (ops/sampling.py
-    global_shuffle): every document gets a dense position 0..N-1 in
-    md5(salt||id) order — the final corpus-shuffle step before packing —
-    via two-level enumeration (65k hash buckets: broadcast cumulative
-    offsets + per-bucket row_number), never a one-partition global
-    sort."""
-    from ocr_search_spark.ops.sampling import global_shuffle
-
-    return global_shuffle(_docs(spark, sf_dir), "doc_id", salt="epoch0")
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so every entry is certified within the driver's 50-entry
-    CORRECTNESS window at least once across rounds (the sweep reports the
-    first 50; entries 51+ rotate).
-
-    Round-5 rotation (VERDICT r4 next-round #3): the 25 entries that sat
-    outside the r4 window return to the front — each was hash-exact in
-    every round it was checked (r1–r3) and re-certified by the judge's
-    local oracle run in the r4 verdict, but returns for a fresh driver
-    row.  They displace 25 entries just certified green in r4 (see
-    CORRECTNESS_r04.json).  Also inside the window: the entries whose
-    semantics changed this round (`range_join` sub-second precision,
-    `pack_shards` null guard, `ivf_pq_topk` index/search split), the
-    corpus-derived goldens regenerated for the rtf/xls/email mix
-    (`extract_spans`, `extract_kind_stats`, `html_main_content`), and
-    ALL 20 round-5 queries that have never held a driver row — from
-    `meta_tags`/the stream twins through the late additions
-    (`semdedup`, `dsir_select`, `pack_sequences`).  That fills the
-    window exactly: 25 stale + 5 changed + 20 new = 50.  The displaced
-    r4-green block (fts/dedup/sessionize etc.), `pack_shards` (null
-    guard can't change values on null-free tables) and
-    `semdedup_cluster_sizes` (local-oracle green) queue for r6.
-    """
-    return {
-        # --- returning after rotating out of the r4 window (all r1–r3
-        # hash-exact; judge-recertified locally in the r4 verdict) ---
-        "trigram_topk": q_trigram_topk,
-        "normalize_chain": q_normalize_chain,
-        "charset_score": q_charset_score,
-        "bm25": q_bm25,
-        "rank_cd": q_rank_cd,
-        "vocab_topk": q_vocab_topk,
-        "deterministic_sample": q_deterministic_sample,
-        "hash_split": q_hash_split,
-        "meta_filter": q_meta_filter,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "events_hourly": q_events_hourly,
-        "winnow_partial_dups": q_winnow_partial_dups,
-        "cosine_neardup": q_cosine_neardup,
-        "simhash": q_simhash,
-        "fts_count_postings": q_fts_count_postings,
-        "fts_phrase": q_fts_phrase,
-        "fts_phrase_postings": q_fts_phrase_postings,
-        "fts_or_not": q_fts_or_not,
-        "snippet_multi": q_snippet_multi,
-        "ilike_source": q_ilike_source,
-        "date_range_count": q_date_range_count,
-        "latest_k": q_latest_k,
-        "snippet": q_snippet,
-        "events_rollup": q_events_rollup,
-        "running_revenue": q_running_revenue,
-        # --- semantics changed in round 5 — must re-certify ---
-        "range_join": q_range_join,
-        "ivf_pq_topk": q_ivf_pq_topk,
-        # --- corpus-derived goldens regenerated (rtf/xls/email mix) ---
-        "extract_spans": q_extract_spans,
-        "extract_kind_stats": q_extract_kind_stats,
-        "html_main_content": q_html_main_content,
-        # --- NEW in round 5 (never driver-certified) — every remaining
-        # window slot goes to these ---
-        "meta_tags": q_meta_tags,
-        "dedup_stream_twin": q_dedup_stream_twin,
-        "range_join_stream_twin": q_range_join_stream_twin,
-        "lm_bits": q_lm_bits,
-        "ccnet_buckets": q_ccnet_buckets,
-        "url_dedup": q_url_dedup,
-        "reg_domain_counts": q_reg_domain_counts,
-        "temperature_rebalance": q_temperature_rebalance,
-        "incremental_dedup": q_incremental_dedup,
-        "chunk_documents": q_chunk_documents,
-        "classifier_scores": q_classifier_scores,
-        "unimax_rebalance": q_unimax_rebalance,
-        "adaptive_quality": q_adaptive_quality,
-        "para_dedup": q_para_dedup,
-        "domain_pagerank": q_domain_pagerank,
-        "warc_roundtrip": q_warc_roundtrip,
-        "corpus_diff": q_corpus_diff,
-        "pack_sequences": q_pack_sequences,
-        "semdedup": q_semdedup,
-        "dsir_select": q_dsir_select,
-        # --- entries below rotate outside the driver's 50-entry window:
-        # every one is hash-exact in a prior driver window or certified by
-        # scripts/check_oracles.py this round (pack_shards' r5 null-guard
-        # cannot change values on the null-free tables, so its r4 row
-        # stands; semdedup_cluster_sizes shares semdedup's machinery and
-        # is local-oracle green — both queue for the r6 window, with the
-        # displaced r4-green fts/dedup block) ---
-        "pack_shards": q_pack_shards,
-        "semdedup_cluster_sizes": q_semdedup_cluster_sizes,
-        "fts_count": q_fts_count,
-        "fts_search_topk": q_fts_search_topk,
-        "dedup_exact": q_dedup_exact,
-        "minhash": q_minhash,
-        "near_dedup_survivors": q_near_dedup_survivors,
-        "near_dedup_cc": q_near_dedup_cc,
-        "substring_dedup": q_substring_dedup,
-        "sessionize": q_sessionize,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "asof_join": q_asof_join,
-        "line_dedup": q_line_dedup,
-        "line_dedup_within": q_line_dedup_within,
-        "compression_signals": q_compression_signals,
-        "mixing_corpus": q_mixing_corpus,
-        "training_corpus": q_training_corpus,
-        "training_corpus_cc": q_training_corpus_cc,
-        "selected_corpus": q_selected_corpus,
-        "pq_adc_topk": q_pq_adc_topk,
-        "decontaminate": q_decontaminate,
-        "interval_join": q_interval_join,
-        "vocab_drift": q_vocab_drift,
-        "collocations": q_collocations,
-        "badwords_filter": q_badwords_filter,
-        "bloom_probe": q_bloom_probe,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "token_quality": q_token_quality,
-        "token_counts": q_token_counts,
-        "mojibake": q_mojibake,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "repetition_signals": q_repetition_signals,
-        "gopher_filter": q_gopher_filter,
-        "lang_id": q_lang_id,
-        "para_lang_profile": q_para_lang_profile,
-        "bpe_pairs": q_bpe_pairs,
-        "ngram_novelty": q_ngram_novelty,
-        "simhash_dedup": q_simhash_dedup,
-        "split_leakage": q_split_leakage,
-        "oversample": q_oversample,
-        "quality_filter": q_quality_filter,
-        "cosine_neardup_lsh": q_cosine_neardup_lsh,
-        "cosine_near_dedup": q_cosine_near_dedup,
-        "cosine_near_dedup_cc": q_cosine_near_dedup_cc,
-        "pii_redact": q_pii_redact,
-        "topk_per_lang": q_topk_per_lang,
-        "revenue_by_nation": q_revenue_by_nation,
-        "domain_counts": q_domain_counts,
-        "domain_filter": q_domain_filter,
-        "stratified_sample": q_stratified_sample,
-        "length_stats": q_length_stats,
-        "lsh_bands": q_lsh_bands,
-        "ann_lsh_buckets": q_ann_lsh_buckets,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "ann_ivf_topk_join": q_ann_ivf_topk_join,
-        "ann_recall": q_ann_recall,
-        "sq_topk": q_sq_topk,
-        "sq_recall": q_sq_recall,
-        "margin_mine": q_margin_mine,
-        "margin_mine_mutual": q_margin_mine_mutual,
-        "media_features": q_media_features,
-        "media_dedup": q_media_dedup,
-        "media_near_dedup": q_media_near_dedup,
-        "media_resize": q_media_resize,
-        "media_frames": q_media_frames,
-        # --- NEW late round 5 (never driver-certified; r6 window queue) ---
-        "semantic_decontaminate": q_semantic_decontaminate,
-        "data_card": q_data_card,
-        "nb_train_weights": q_nb_train_weights,
-        "nb_select": q_nb_select,
-        "perceptron_train": q_perceptron_train,
-        "perceptron_select": q_perceptron_select,
-        "vocab_distinct_est": q_vocab_distinct_est,
-        "vocab_overlap": q_vocab_overlap,
-        "shard_manifest": q_shard_manifest,
-        "bpe_train": q_bpe_train,
-        "bpe_vocab_stats": q_bpe_vocab_stats,
-        "bpe_encode": q_bpe_encode,
-        "tfidf_related": q_tfidf_related,
-        "heaps_law": q_heaps_law,
-        "bpe_fertility": q_bpe_fertility,
-        "bpe_apply": q_bpe_apply,
-        "wordpiece_train": q_wordpiece_train,
-        "wordpiece_encode": q_wordpiece_encode,
-        "unigram_segment": q_unigram_segment,
-        "kmeans_train": q_kmeans_train,
-        "pq_train": q_pq_train,
-        "curriculum_shards": q_curriculum_shards,
-        "ivf_pq_recall": q_ivf_pq_recall,
-        "zipf_spectrum": q_zipf_spectrum,
-        "tokenized_pack": q_tokenized_pack,
-        "pq_recall_trained": q_pq_recall_trained,
-        "global_shuffle": q_global_shuffle,
-        "kn_bits": q_kn_bits,
-        "neardup_recall": q_neardup_recall,
-        "length_buckets": q_length_buckets,
-        "caption_pairs": q_caption_pairs,
-        "html_links": q_html_links,
-        "interleave_profile": q_interleave_profile,
-        "containment_pairs": q_containment_pairs,
-        "hybrid_search": q_hybrid_search,
-        "mmr_rerank": q_mmr_rerank,
-        "prf_terms": q_prf_terms,
-        "ltr_features": q_ltr_features,
-        "ndcg_eval": q_ndcg_eval,
-        "ql_scores": q_ql_scores,
-        "prf_search": q_prf_search,
-        "funnel": q_funnel,
-        "cohort_retention": q_cohort_retention,
-        "length_percentiles": q_length_percentiles,
-        "fuzzy_source_pairs": q_fuzzy_source_pairs,
-        "group_split": q_group_split,
-        "length_outliers": q_length_outliers,
-        "mrr_eval": q_mrr_eval,
-        "event_transitions": q_event_transitions,
-        "weighted_sample": q_weighted_sample,
-        "hard_negatives": q_hard_negatives,
-    }
-
-
-# ---------------------------------------------------------------------------
-# DuckDB oracles
-# ---------------------------------------------------------------------------
-
+#: the ``search.analysis.tokens_expr`` tokenizer as DuckDB SQL over ``text``
 _TOK = "list_filter(regexp_split_to_array(lower(text), '[^a-zа-яё0-9_]+'), x -> x <> '')"
-
-#: 3-token shingle set of `text` (the ops.dedup default), as DuckDB SQL
-_SHINGLES3 = (
-    f"list_distinct(list_transform(range(1, greatest(len({_TOK}) - 1, 1)), "
-    f"i -> array_to_string(list_slice({_TOK}, i, i + 2), ' ')))"
-)
-#: 8-hash MinHash signature columns over a `shingles` column
-_SIG8 = ", ".join(
-    f"list_min(list_transform(shingles, s -> md5('{i}:' || s))) AS mh{i}"
-    for i in range(8)
-)
-#: signature-agreement count between aliases n and b (ops.dedup.sig_jaccard_est)
-_AGREE8 = " + ".join(
-    f"(CASE WHEN n.mh{i} = b.mh{i} THEN 1 ELSE 0 END)" for i in range(8)
-)
-
-
-def _bands8_sql(sig_cte: str) -> str:
-    """LSH band rows (id, band, bucket) of an 8-hash signature CTE,
-    band_size 2 — mirrors ops.dedup.lsh_band_table."""
-    return " UNION ALL ".join(
-        f"SELECT id, {b} AS band, md5(mh{b} || '|' || mh{b + 1}) AS bucket "
-        f"FROM {sig_cte} WHERE mh0 IS NOT NULL"
-        for b in range(0, 8, 2)
-    )
-
-
-def _simhash_vote_sql(bits: int = 32) -> str:
-    """Bit-vote sum matching ops.dedup._simhash_of_hashes, in DuckDB SQL."""
-    terms = [
-        f"(CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN (h >> {b}) & 1 = 1 "
-        f"THEN 1 ELSE -1 END)) > 0 THEN {2 ** b} ELSE 0 END)"
-        for b in range(bits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _bpe_rounds_cte(n_merges: int, source: str = "documents") -> str:
-    """Shared unrolled BPE-round CTE chain (the domain_pagerank
-    discipline): round k counts pairs over the re-segmented vocab v{k},
-    picks the (cnt DESC, l, r) argmax b{k}, and applies it with a
-    string-accumulator list_reduce — the same left-to-right
-    non-overlapping fold the engine runs. An exhausted round leaves
-    b{k} empty; every later b{j} stays empty (matching bpe_train's
-    early stop) while v{k+1} CARRIES v{k} unchanged via a LEFT JOIN —
-    the engine's `_bpe_loop` keeps its last vocab state on exhaustion,
-    and the encode-side consumers (bpe_vocab_stats/bpe_encode/
-    bpe_fertility/tokenized_pack) read v{n}, so an inner-join fold here
-    would falsely empty their oracles on any corpus that fully fuses
-    in under n_merges rounds."""
-    parts = [
-        f"""
-            WITH v0 AS (
-              SELECT count(*)::BIGINT AS wc,
-                     list_transform(range(1, length(w) + 1), i -> w[i]) AS syms
-              FROM (SELECT unnest({_TOK}) AS w FROM {source})
-              GROUP BY w
-            )"""
-    ]
-    for k in range(n_merges):
-        parts.append(
-            f""", p{k} AS (
-              SELECT syms[i] AS l, syms[i + 1] AS r, sum(wc)::BIGINT AS cnt
-              FROM v{k}, LATERAL (
-                SELECT unnest(range(1, greatest(len(syms), 1))) AS i
-              ) t
-              GROUP BY 1, 2
-            ), b{k} AS (
-              SELECT l, r, cnt FROM p{k} ORDER BY cnt DESC, l, r LIMIT 1
-            ), v{k + 1} AS (
-              SELECT v.wc,
-                     CASE WHEN b.l IS NULL THEN v.syms
-                          ELSE str_split(list_reduce(v.syms, (acc, x) -> CASE
-                            WHEN x = b.r AND (acc = b.l
-                                 OR right(acc, length(b.l) + 1) = ' ' || b.l)
-                            THEN left(acc, length(acc) - length(b.l))
-                                 || b.l || b.r
-                            ELSE acc || ' ' || x END), ' ')
-                     END AS syms
-              FROM v{k} v LEFT JOIN b{k} b ON TRUE
-            )"""
-        )
-    return "".join(parts)
-
-
-def _bpe_train_oracle(n_merges: int) -> str:
-    union = "\n              UNION ALL ".join(
-        f"SELECT {k + 1} AS step, l, r, l || r AS merged, "
-        f"cnt AS pair_count FROM b{k}"
-        for k in range(n_merges)
-    )
-    return (
-        _bpe_rounds_cte(n_merges)
-        + f"""
-            SELECT * FROM (
-              {union}
-            ) ORDER BY step"""
-    )
-
-
-def _bpe_vocab_stats_oracle(n_merges: int, top_k: int) -> str:
-    return (
-        _bpe_rounds_cte(n_merges)
-        + f"""
-            SELECT symbol, sym_count, rnk FROM (
-              SELECT symbol, sym_count,
-                     row_number() OVER (ORDER BY sym_count DESC, symbol)
-                       AS rnk
-              FROM (
-                SELECT u AS symbol, sum(wc)::BIGINT AS sym_count
-                FROM (SELECT wc, unnest(syms) AS u FROM v{n_merges})
-                GROUP BY u
-              )
-            ) WHERE rnk <= {top_k}"""
-    )
-
-
-def _hb_wide_sql(col: str = "c") -> str:
-    """floor(2·log2(c)) without squaring — the ops.sketch._hb_wide twin:
-    2L + [c >= T_L], thresholds T_L = ceil(sqrt(2^(2L+1))) embedded as a
-    list literal indexed by L+1 = length(bin(c))."""
-    import math
-
-    ts = ", ".join(
-        str(math.isqrt((1 << (2 * lv + 1)) - 1) + 1) for lv in range(63)
-    )
-    return (
-        f"(2 * (length(bin({col})) - 1) + CASE WHEN {col} >= "
-        f"([{ts}])[length(bin({col}))] THEN 1 ELSE 0 END)::INT"
-    )
-
-
-def _kmeans_oracle(k: int, iters: int, scale_bits: int) -> str:
-    """Unrolled integer-lattice Lloyd iterations (the domain_pagerank /
-    bpe discipline): assignment = row_number argmin over (d2, cid);
-    update = per-(cid, dim) BIGINT sums with floor(s/cnt) means (equal
-    to the engine's exact floor division for |s| < 2^53); empty
-    clusters keep their previous centroid."""
-    scale = 1 << scale_bits
-    parts = [
-        f"""
-            WITH q AS (
-              SELECT vec_id AS id,
-                     list_transform(embedding,
-                                    x -> floor(x * {scale}.0)::BIGINT) AS qv
-              FROM embeddings
-            ), c0 AS (
-              SELECT (row_number() OVER (ORDER BY md5(id::VARCHAR), id) - 1)
-                       AS cid,
-                     qv AS cv
-              FROM (SELECT id, qv FROM q
-                    ORDER BY md5(id::VARCHAR), id LIMIT {k})
-            )"""
-    ]
-    for i in range(iters + 1):  # one extra assignment for the final stats
-        parts.append(
-            f""", d{i} AS (
-              SELECT q.id, q.qv, c.cid,
-                     list_sum(list_transform(range(1, len(q.qv) + 1),
-                       j -> (q.qv[j] - c.cv[j]) * (q.qv[j] - c.cv[j])))
-                       AS d2
-              FROM q, c{i} c
-            ), a{i} AS (
-              SELECT id, qv, cid, d2 FROM (
-                SELECT *, row_number() OVER (PARTITION BY id
-                                             ORDER BY d2, cid) AS rn
-                FROM d{i}
-              ) WHERE rn = 1
-            )"""
-        )
-        if i == iters:
-            break
-        parts.append(
-            f""", s{i} AS (
-              SELECT cid, jj, sum(qv[jj])::BIGINT AS s,
-                     count(*)::BIGINT AS cnt
-              FROM a{i},
-                   LATERAL (SELECT unnest(range(1, len(qv) + 1)) AS jj) t
-              GROUP BY cid, jj
-            ), c{i + 1} AS (
-              SELECT c.cid,
-                     CASE WHEN m.cid IS NULL THEN c.cv
-                          ELSE (SELECT list(floor(s / cnt)::BIGINT ORDER BY jj)
-                                FROM s{i} WHERE s{i}.cid = c.cid)
-                     END AS cv
-              FROM c{i} c
-              LEFT JOIN (SELECT DISTINCT cid FROM s{i}) m USING (cid)
-            )"""
-        )
-    parts.append(
-        f"""
-            SELECT c.cid::INT AS cluster_id,
-                   coalesce(st.size, 0)::BIGINT AS size,
-                   coalesce(st.inertia, 0)::BIGINT AS inertia,
-                   c.cv AS centroid
-            FROM c{iters} c LEFT JOIN (
-              SELECT cid, count(*)::BIGINT AS size,
-                     sum(d2)::BIGINT AS inertia
-              FROM a{iters} GROUP BY cid
-            ) st USING (cid)"""
-    )
-    return "".join(parts)
-
-
-def _pq_train_oracle(
-    m: int, k: int, dim: int, iters: int, scale_bits: int
-) -> str:
-    """Unrolled per-subspace lattice Lloyd iterations — the _kmeans_oracle
-    discipline with a (s)ubspace dimension carried through every stage;
-    list_slice(qv, a, b) is inclusive, matching Spark slice(qv, a, len)."""
-    scale = 1 << scale_bits
-    dsub = dim // m
-    parts = [
-        f"""
-            WITH q AS (
-              SELECT vec_id AS id,
-                     list_transform(embedding,
-                                    x -> floor(x * {scale}.0)::BIGINT) AS qv
-              FROM embeddings
-            ), seeds AS (
-              SELECT qv, (row_number() OVER (ORDER BY md5(id::VARCHAR), id)
-                          - 1) AS code
-              FROM (SELECT id, qv FROM q
-                    ORDER BY md5(id::VARCHAR), id LIMIT {k})
-            ), sub AS (
-              SELECT id, s,
-                     list_slice(qv, s * {dsub} + 1, s * {dsub} + {dsub}) AS sv
-              FROM q, LATERAL (SELECT unnest(range(0, {m})) AS s) t
-            ), c0 AS (
-              SELECT s, code,
-                     list_slice(qv, s * {dsub} + 1, s * {dsub} + {dsub}) AS cv
-              FROM seeds, LATERAL (SELECT unnest(range(0, {m})) AS s) t
-            )"""
-    ]
-    for i in range(iters + 1):
-        parts.append(
-            f""", d{i} AS (
-              SELECT sub.id, sub.s, sub.sv, c.code,
-                     list_sum(list_transform(range(1, len(sub.sv) + 1),
-                       j -> (sub.sv[j] - c.cv[j]) * (sub.sv[j] - c.cv[j])))
-                       AS d2
-              FROM sub JOIN c{i} c USING (s)
-            ), a{i} AS (
-              SELECT id, s, sv, code, d2 FROM (
-                SELECT *, row_number() OVER (PARTITION BY id, s
-                                             ORDER BY d2, code) AS rn
-                FROM d{i}
-              ) WHERE rn = 1
-            )"""
-        )
-        if i == iters:
-            break
-        parts.append(
-            f""", s{i} AS (
-              SELECT s, code, jj, sum(sv[jj])::BIGINT AS sm,
-                     count(*)::BIGINT AS cnt
-              FROM a{i},
-                   LATERAL (SELECT unnest(range(1, len(sv) + 1)) AS jj) t
-              GROUP BY s, code, jj
-            ), c{i + 1} AS (
-              SELECT c.s, c.code,
-                     CASE WHEN m2.code IS NULL THEN c.cv
-                          ELSE (SELECT list(floor(sm / cnt)::BIGINT
-                                            ORDER BY jj)
-                                FROM s{i}
-                                WHERE s{i}.s = c.s AND s{i}.code = c.code)
-                     END AS cv
-              FROM c{i} c
-              LEFT JOIN (SELECT DISTINCT s, code FROM s{i}) m2
-                USING (s, code)
-            )"""
-        )
-    parts.append(
-        f"""
-            SELECT c.s::INT AS s, c.code::INT AS code,
-                   coalesce(st.size, 0)::BIGINT AS size,
-                   coalesce(st.inertia, 0)::BIGINT AS inertia,
-                   c.cv AS centroid
-            FROM c{iters} c LEFT JOIN (
-              SELECT s, code, count(*)::BIGINT AS size,
-                     sum(d2)::BIGINT AS inertia
-              FROM a{iters} GROUP BY s, code
-            ) st USING (s, code)"""
-    )
-    return "".join(parts)
-
-
-def _bpe_encode_oracle(n_merges: int) -> str:
-    merge_union = "\n                UNION ALL ".join(
-        f"SELECT {k + 1} AS step, l || r AS symbol FROM b{k}"
-        for k in range(n_merges)
-    )
-    return (
-        _bpe_rounds_cte(n_merges)
-        + f""", seg AS (
-              SELECT array_to_string(syms, '') AS w, syms FROM v{n_merges}
-            ), alpha AS (
-              SELECT symbol,
-                     (row_number() OVER (ORDER BY symbol) - 1)::INT AS token_id
-              FROM (
-                SELECT DISTINCT unnest(list_transform(
-                  range(1, length(w) + 1), i -> w[i])) AS symbol
-                FROM seg
-              )
-            ), id_map AS (
-              SELECT symbol, min(token_id)::INT AS token_id FROM (
-                SELECT symbol, token_id FROM alpha
-                UNION ALL
-                SELECT symbol,
-                       ((SELECT count(*) FROM alpha) + step - 1)::INT AS token_id
-                FROM ({merge_union})
-              ) GROUP BY symbol
-            ), toks AS (
-              SELECT doc_id AS id, (i - 1)::INT AS pos, tok[i] AS w
-              FROM (SELECT doc_id, {_TOK} AS tok FROM documents) d,
-                   LATERAL (SELECT unnest(range(1, len(tok) + 1)) AS i) t
-            ), enc AS (
-              SELECT toks.id, toks.pos, (j - 1)::INT AS sym_pos,
-                     seg.syms[j] AS symbol
-              FROM toks JOIN seg USING (w),
-                   LATERAL (SELECT unnest(range(1, len(seg.syms) + 1)) AS j) u
-            )
-            SELECT e.id, e.pos, e.sym_pos, m.token_id, e.symbol
-            FROM enc e JOIN id_map m USING (symbol)"""
-    )
-
-
-def _wp_rounds_cte(n_merges: int, materialized: bool = False) -> str:
-    """WordPiece twin of _bpe_rounds_cte: round k additionally counts
-    per-symbol frequencies sc{k} over the current segmentation and picks
-    the argmax of (cnt << 40) // (l_count * r_count) — DuckDB // and
-    Spark DIV share trunc semantics; all quantities positive here.
-    Exhaustion carries v{k} forward unchanged, same as the BPE chain.
-    ``materialized`` marks every CTE AS MATERIALIZED — required when a
-    LONG chain consumes this one (DuckDB inlines CTEs by default, and
-    v{k}'s two consumers per round double the inlined tree each round:
-    the composed wordpiece_encode oracle exhausts file handles
-    without it)."""
-    m = "MATERIALIZED " if materialized else ""
-    parts = [
-        f"""
-            WITH v0 AS {m}(
-              SELECT count(*)::BIGINT AS wc,
-                     list_transform(range(1, length(w) + 1), i -> w[i]) AS syms
-              FROM (SELECT unnest({_TOK}) AS w FROM documents)
-              GROUP BY w
-            )"""
-    ]
-    for k in range(n_merges):
-        parts.append(
-            f""", sc{k} AS {m}(
-              SELECT u AS sym, sum(wc)::BIGINT AS sc
-              FROM (SELECT wc, unnest(syms) AS u FROM v{k})
-              GROUP BY u
-            ), p{k} AS {m}(
-              SELECT syms[i] AS l, syms[i + 1] AS r, sum(wc)::BIGINT AS cnt
-              FROM v{k}, LATERAL (
-                SELECT unnest(range(1, greatest(len(syms), 1))) AS i
-              ) t
-              GROUP BY 1, 2
-            ), b{k} AS {m}(
-              SELECT p.l, p.r, p.cnt, lc.sc AS lcnt, rc.sc AS rcnt,
-                     (p.cnt * 1099511627776) // (lc.sc * rc.sc) AS score
-              FROM p{k} p
-              JOIN sc{k} lc ON lc.sym = p.l
-              JOIN sc{k} rc ON rc.sym = p.r
-              ORDER BY score DESC, p.l, p.r LIMIT 1
-            ), v{k + 1} AS {m}(
-              SELECT v.wc,
-                     CASE WHEN b.l IS NULL THEN v.syms
-                          ELSE str_split(list_reduce(v.syms, (acc, x) -> CASE
-                            WHEN x = b.r AND (acc = b.l
-                                 OR right(acc, length(b.l) + 1) = ' ' || b.l)
-                            THEN left(acc, length(acc) - length(b.l))
-                                 || b.l || b.r
-                            ELSE acc || ' ' || x END), ' ')
-                     END AS syms
-              FROM v{k} v LEFT JOIN b{k} b ON TRUE
-            )"""
-        )
-    return "".join(parts)
-
-
-def _wordpiece_train_oracle(n_merges: int) -> str:
-    union = "\n              UNION ALL ".join(
-        f"SELECT {k + 1} AS step, l, r, l || r AS merged, "
-        f"cnt AS pair_count, lcnt AS l_count, rcnt AS r_count, "
-        f"score AS score_q40 FROM b{k}"
-        for k in range(n_merges)
-    )
-    return (
-        _wp_rounds_cte(n_merges)
-        + f"""
-            SELECT * FROM (
-              {union}
-            ) ORDER BY step"""
-    )
-
-
-def _wordpiece_encode_oracle(n_merges: int, max_word_len: int) -> str:
-    """Greedy longest-match WordPiece twin (ops.text_analysis
-    wordpiece_encode): id_map = train alphabet + _wp_rounds_cte merges
-    in the bpe_artifacts id convention; g{i} chain unrolls the greedy
-    loop max_word_len rounds (per round: bounded prefix unnest → piece
-    join → per-word max-L argmax; no match or over-cap word → whole-word
-    '[UNK]'), then the bpe_encode stream shape with unk_id -1."""
-    merge_union = "\n                UNION ALL ".join(
-        f"SELECT {k + 1} AS step, l || r AS symbol FROM b{k}"
-        for k in range(n_merges)
-    )
-    greedy_chain = "".join(
-        f""", m{i} AS MATERIALIZED (
-              SELECT p.w, max(p.L)::INT AS bl
-              FROM (
-                SELECT g.w, g.rest,
-                       unnest(range(1, least(length(g.rest),
-                         (SELECT max(length(symbol)) FROM id_map)) + 1)) AS L
-                FROM g{i} g WHERE g.rest <> ''
-              ) p JOIN id_map v ON substring(p.rest, 1, p.L) = v.symbol
-              GROUP BY p.w
-            ), g{i + 1} AS MATERIALIZED (
-              SELECT g.w,
-                     CASE WHEN g.rest = '' THEN g.rest
-                          WHEN m.bl IS NULL THEN ''
-                          ELSE substring(g.rest, m.bl + 1) END AS rest,
-                     CASE WHEN g.rest = '' THEN g.toks
-                          WHEN m.bl IS NULL THEN ['[UNK]']
-                          ELSE list_append(g.toks,
-                                           substring(g.rest, 1, m.bl))
-                     END AS toks
-              FROM g{i} g LEFT JOIN m{i} m USING (w)
-            )"""
-        for i in range(max_word_len)
-    )
-    return (
-        _wp_rounds_cte(n_merges, materialized=True)
-        + f""", alpha AS MATERIALIZED (
-              SELECT symbol,
-                     (row_number() OVER (ORDER BY symbol) - 1)::INT AS token_id
-              FROM (SELECT DISTINCT unnest(syms) AS symbol FROM v0)
-            ), id_map AS MATERIALIZED (
-              SELECT symbol, min(token_id)::INT AS token_id FROM (
-                SELECT symbol, token_id FROM alpha
-                UNION ALL
-                SELECT symbol,
-                       ((SELECT count(*) FROM alpha) + step - 1)::INT AS token_id
-                FROM ({merge_union})
-              ) GROUP BY symbol
-            ), g0 AS MATERIALIZED (
-              SELECT w,
-                     CASE WHEN length(w) <= {max_word_len} THEN w
-                          ELSE '' END AS rest,
-                     CASE WHEN length(w) <= {max_word_len}
-                          THEN CAST([] AS VARCHAR[])
-                          ELSE ['[UNK]'] END AS toks
-              FROM (SELECT DISTINCT unnest({_TOK}) AS w FROM documents)
-            ){greedy_chain}, toks AS (
-              SELECT doc_id AS id, (i - 1)::INT AS pos, tok[i] AS w
-              FROM (SELECT doc_id, {_TOK} AS tok FROM documents) d,
-                   LATERAL (SELECT unnest(range(1, len(tok) + 1)) AS i) t
-            ), enc AS (
-              SELECT t.id, t.pos, (j - 1)::INT AS sym_pos,
-                     g.toks[j] AS symbol
-              FROM toks t JOIN g{max_word_len} g USING (w),
-                   LATERAL (SELECT unnest(range(1, len(g.toks) + 1)) AS j) u
-            )
-            SELECT e.id, e.pos, e.sym_pos,
-                   coalesce(m.token_id, -1)::INT AS token_id, e.symbol
-            FROM enc e LEFT JOIN id_map m ON m.symbol = e.symbol"""
-    )
-
-
-def _unigram_segment_oracle(n_merges: int, max_word_len: int) -> str:
-    """Viterbi unigram-segmentation twin (ops.text_analysis
-    unigram_segment over unigram_artifacts): piece costs are half-bit
-    NLLs hb(T) - hb(c) read off the _wp_rounds_cte final state; the DP
-    lattice unrolls as two chained CTEs per position (dp then
-    backpointer, smallest-j tie rule, INF = 2^40 sentinel) against a
-    1-row piece-cost MAP, then the backpointer walk and the shared
-    encode stream. Candidate j ranges use the max_word_len bound — a
-    superset of the engine's max-piece bound; extra candidates are
-    lattice misses (INF) on both sides, so the argmin agrees. All CTEs
-    MATERIALIZED (DuckDB inlining doubles the tree per round
-    otherwise)."""
-    inf = 1 << 40
-    n = max_word_len
-    parts = [
-        _wp_rounds_cte(n_merges, materialized=True),
-        f""", pc AS MATERIALIZED (
-              SELECT sym, sum(wc)::BIGINT AS c
-              FROM (SELECT wc, unnest(syms) AS sym FROM v{n_merges})
-              GROUP BY sym
-            ), costs AS MATERIALIZED (
-              SELECT sym,
-                     ({_hb_wide_sql("t")} - {_hb_wide_sql("c")})::INT
-                       AS cost_hb
-              FROM pc, (SELECT sum(c)::BIGINT AS t FROM pc)
-            ), cm AS MATERIALIZED (
-              SELECT map(list(sym ORDER BY sym),
-                         list(cost_hb ORDER BY sym)) AS m
-              FROM costs
-            ), u0 AS MATERIALIZED (
-              SELECT w, length(w)::INT AS n, 0::BIGINT AS dp_0, m
-              FROM (SELECT DISTINCT unnest({_TOK}) AS w FROM documents), cm
-            )""",
-    ]
-
-    def cand(j: int, i: int) -> str:
-        piece = f"substring(w, {j + 1}, {i - j})"
-        val = f"map_extract(m, {piece})[1]"
-        return (
-            f"CASE WHEN {val} IS NULL OR dp_{j} >= {inf} "
-            f"THEN {inf} ELSE dp_{j} + {val} END"
-        )
-
-    for i in range(1, n + 1):
-        js = list(range(max(0, i - n), i))
-        cands = ", ".join(cand(j, i) for j in js)
-        least = f"least({cands})" if len(js) > 1 else cand(js[0], i)
-        bp_cases = " ".join(
-            f"WHEN ({cand(j, i)}) = dp_{i} THEN {j}" for j in js
-        )
-        parts.append(
-            f""", ua{i} AS MATERIALIZED (
-              SELECT *, CASE WHEN n >= {i} THEN {least}
-                             ELSE {inf} END AS dp_{i}
-              FROM u{i - 1}
-            ), u{i} AS MATERIALIZED (
-              SELECT *, CASE WHEN n >= {i} AND dp_{i} < {inf}
-                             THEN (CASE {bp_cases} END)::INT
-                        END AS bp_{i}
-              FROM ua{i}
-            )"""
-        )
-    dp_list = ", ".join(f"dp_{i}" for i in range(1, n + 1))
-    bp_list = ", ".join(f"bp_{i}" for i in range(1, n + 1))
-    parts.append(
-        f""", w0 AS MATERIALIZED (
-              SELECT w, n, [{bp_list}] AS bps,
-                     (n <= {n} AND [{dp_list}][n] < {inf}) AS ok,
-                     CASE WHEN (n <= {n} AND [{dp_list}][n] < {inf})
-                          THEN n END AS e_0
-              FROM u{n}
-            )"""
-    )
-    for t in range(1, n + 1):
-        parts.append(
-            f""", w{t} AS MATERIALIZED (
-              SELECT *, CASE WHEN e_{t - 1} IS NOT NULL AND e_{t - 1} > 0
-                             THEN bps[e_{t - 1}] END AS e_{t}
-              FROM w{t - 1}
-            )"""
-        )
-    piece_list = ", ".join(
-        f"CASE WHEN e_{t - 1} IS NOT NULL AND e_{t - 1} > 0 "
-        f"THEN substring(w, e_{t} + 1, e_{t - 1} - e_{t}) END"
-        for t in range(1, n + 1)
-    )
-    parts.append(
-        f""", segd AS MATERIALIZED (
-              SELECT w,
-                     CASE WHEN ok THEN list_reverse(list_filter(
-                            [{piece_list}], x -> x IS NOT NULL))
-                          ELSE ['[UNK]'] END AS toks
-              FROM w{n}
-            ), toks AS MATERIALIZED (
-              SELECT doc_id AS id, (i - 1)::INT AS pos, tok[i] AS w
-              FROM (SELECT doc_id, {_TOK} AS tok FROM documents) d,
-                   LATERAL (SELECT unnest(range(1, len(tok) + 1)) AS i) t
-            ), enc AS (
-              SELECT t.id, t.pos, (j - 1)::INT AS sym_pos,
-                     g.toks[j] AS symbol
-              FROM toks t JOIN segd g USING (w),
-                   LATERAL (SELECT unnest(range(1, len(g.toks) + 1)) AS j) u
-            )
-            SELECT e.id, e.pos, e.sym_pos, e.symbol,
-                   coalesce(c.cost_hb, -1)::INT AS cost_hb
-            FROM enc e LEFT JOIN costs c ON c.sym = e.symbol"""
-    )
-    return "".join(parts)
-
-
-def _bpe_apply_oracle(n_merges: int) -> str:
-    """Cross-corpus serve-path twin of ops.text_analysis.bpe_apply:
-    train the merge rounds on the even-doc_id HALF of the corpus
-    (the _bpe_rounds_cte chain over a filtered source), then re-fold
-    the FULL corpus's distinct words through the shipped b{k} merges
-    (a{k} chain — LEFT JOIN so an exhausted round is a no-op, exactly
-    the engine's shorter-merge-list case), assign ids in the
-    bpe_artifacts convention (train alphabet sorted at 0..A-1, merge k
-    at A+k-1, min-id dedup), and LEFT-join the encode stream so
-    symbols outside the shipped vocab — characters the training half
-    never saw — surface as unk_id = -1 instead of dropping."""
-    train = "(SELECT * FROM documents WHERE doc_id % 2 = 0)"
-    merge_union = "\n                UNION ALL ".join(
-        f"SELECT {k + 1} AS step, l || r AS symbol FROM b{k}"
-        for k in range(n_merges)
-    )
-    apply_chain = "".join(
-        f""", a{k + 1} AS (
-              SELECT a.w,
-                     CASE WHEN b.l IS NULL THEN a.syms
-                          ELSE str_split(list_reduce(a.syms, (acc, x) -> CASE
-                            WHEN x = b.r AND (acc = b.l
-                                 OR right(acc, length(b.l) + 1) = ' ' || b.l)
-                            THEN left(acc, length(acc) - length(b.l))
-                                 || b.l || b.r
-                            ELSE acc || ' ' || x END), ' ')
-                     END AS syms
-              FROM a{k} a LEFT JOIN b{k} b ON TRUE
-            )"""
-        for k in range(n_merges)
-    )
-    return (
-        _bpe_rounds_cte(n_merges, source=train)
-        + f""", a0 AS (
-              SELECT w, list_transform(range(1, length(w) + 1),
-                                       i -> w[i]) AS syms
-              FROM (SELECT DISTINCT unnest({_TOK}) AS w FROM documents)
-            ){apply_chain}, alpha AS (
-              SELECT symbol,
-                     (row_number() OVER (ORDER BY symbol) - 1)::INT AS token_id
-              FROM (SELECT DISTINCT unnest(syms) AS symbol FROM v0)
-            ), id_map AS (
-              SELECT symbol, min(token_id)::INT AS token_id FROM (
-                SELECT symbol, token_id FROM alpha
-                UNION ALL
-                SELECT symbol,
-                       ((SELECT count(*) FROM alpha) + step - 1)::INT AS token_id
-                FROM ({merge_union})
-              ) GROUP BY symbol
-            ), toks AS (
-              SELECT doc_id AS id, (i - 1)::INT AS pos, tok[i] AS w
-              FROM (SELECT doc_id, {_TOK} AS tok FROM documents) d,
-                   LATERAL (SELECT unnest(range(1, len(tok) + 1)) AS i) t
-            ), enc AS (
-              SELECT toks.id, toks.pos, (j - 1)::INT AS sym_pos,
-                     a.syms[j] AS symbol
-              FROM toks JOIN a{n_merges} a USING (w),
-                   LATERAL (SELECT unnest(range(1, len(a.syms) + 1)) AS j) u
-            )
-            SELECT e.id, e.pos, e.sym_pos,
-                   coalesce(m.token_id, -1)::INT AS token_id, e.symbol
-            FROM enc e LEFT JOIN id_map m USING (symbol)"""
-    )
-
-
-def _margin_mine_oracle(src_mod: int) -> str:
-    """One direction of ratio-margin mining (ops.similarity.margin_mine)
-    with the vec_id % 2 == src_mod half playing source: e6-lattice
-    cosine, per-side top-4 kNN sums, BIGINT trunc-div margin (DuckDB //
-    ≡ Spark DIV), per-src argmax at threshold 1.05. margin_mine_mutual
-    composes two of these nested-WITH (the ann_recall discipline)."""
-    return f"""
-            WITH s AS (
-              SELECT vec_id AS src_id, embedding AS svec FROM embeddings
-              WHERE vec_id % 2 = {src_mod}
-            ), t AS (
-              SELECT vec_id AS tgt_id, embedding AS tvec FROM embeddings
-              WHERE vec_id % 2 = {1 - src_mod}
-            ), cross_cos AS (
-              SELECT src_id, tgt_id,
-                     CAST(round(round(
-                       list_sum(list_transform(range(1, 65),
-                         i -> svec[i]::DOUBLE * tvec[i]::DOUBLE))
-                       / (sqrt(list_sum(list_transform(range(1, 65),
-                            i -> svec[i]::DOUBLE * svec[i]::DOUBLE)))
-                        * sqrt(list_sum(list_transform(range(1, 65),
-                            i -> tvec[i]::DOUBLE * tvec[i]::DOUBLE)))),
-                     6) * 1000000) AS BIGINT) AS cos_e6
-              FROM s CROSS JOIN t
-            ), src_nn AS (
-              SELECT src_id, sum(cos_e6)::BIGINT AS sum_x,
-                     count(*)::BIGINT AS kx
-              FROM (
-                SELECT src_id, cos_e6, row_number() OVER (
-                  PARTITION BY src_id ORDER BY cos_e6 DESC, tgt_id) AS rn
-                FROM cross_cos
-              ) WHERE rn <= 4 GROUP BY src_id
-            ), tgt_nn AS (
-              SELECT tgt_id, sum(cos_e6)::BIGINT AS sum_y,
-                     count(*)::BIGINT AS ky
-              FROM (
-                SELECT tgt_id, cos_e6, row_number() OVER (
-                  PARTITION BY tgt_id ORDER BY cos_e6 DESC, src_id) AS rn
-                FROM cross_cos
-              ) WHERE rn <= 4 GROUP BY tgt_id
-            ), scored AS (
-              SELECT c.src_id, c.tgt_id, c.cos_e6,
-                     (2 * c.cos_e6 * x.kx * y.ky * 1000000)
-                       // (x.sum_x * y.ky + y.sum_y * x.kx) AS margin_e6
-              FROM cross_cos c
-              JOIN src_nn x USING (src_id) JOIN tgt_nn y USING (tgt_id)
-              WHERE x.sum_x * y.ky + y.sum_y * x.kx > 0
-            ), best AS (
-              SELECT src_id, tgt_id, cos_e6, margin_e6, row_number() OVER (
-                PARTITION BY src_id ORDER BY margin_e6 DESC, tgt_id) AS rn
-              FROM scored
-            )
-            SELECT src_id, tgt_id, cos_e6, margin_e6 FROM best
-            WHERE rn = 1 AND margin_e6 >= 1050000"""
-
-
-def oracle_sql() -> dict[str, str]:
-    # portable mojibake pattern (\x{...} parses identically in Java & RE2)
-    from ocr_search_spark.ops.scrub import MOJIBAKE_PATTERN as _MOJI
-
-    q = TRIGRAM_QUERY.lower()
-    q_grams = sorted({q[i : i + 3] for i in range(len(q) - 2)})
-    q_grams_sql = "[" + ", ".join("'" + g.replace("'", "''") + "'" for g in q_grams) + "]"
-    terms_sql = "['spark', 'join']"
-    grams = (
-        "list_distinct(list_transform(range(1, greatest(length(lower(text)) - 1, 1)),"
-        " i -> substring(lower(text), i, 3)))"
-    )
-    return {
-        "fts_count": f"""
-            SELECT count(*) AS cnt FROM documents
-            WHERE list_has_all({_TOK}, {terms_sql})
-        """,
-        "fts_count_postings": f"""
-            SELECT count(*) AS cnt FROM documents
-            WHERE list_has_all({_TOK}, {terms_sql})
-        """,
-        "fts_phrase": _websearch_oracle_sql(PHRASE_QUERY),
-        "fts_phrase_postings": _websearch_oracle_sql(PHRASE_QUERY),
-        "fts_or_not": _websearch_oracle_sql(OR_NOT_QUERY),
-        "fts_search_topk": f"""
-            WITH scored AS (
-              SELECT doc_id,
-                     len(list_intersect(list_distinct({_TOK}), {terms_sql})) AS rank_hits,
-                     len(list_intersect({grams}, {q_grams_sql})) AS inter,
-                     len(list_distinct(list_concat({grams}, {q_grams_sql}))) AS union_sz
-              FROM documents
-              WHERE list_has_all({_TOK}, {terms_sql})
-            )
-            SELECT doc_id, rank_hits, inter, union_sz FROM scored
-            ORDER BY greatest(rank_hits / 2.0, inter * 1.0 / union_sz) DESC, doc_id
-            LIMIT 25
-        """,
-        "ilike_source": """
-            SELECT doc_id, source FROM documents WHERE source ILIKE '%rc1%'
-        """,
-        "date_range_count": f"""
-            SELECT event_type, count(*) AS cnt FROM events
-            WHERE ts BETWEEN TIMESTAMP '{DATE_FROM}' AND TIMESTAMP '{DATE_TO}'
-            GROUP BY event_type
-        """,
-        "latest_k": """
-            SELECT event_id, ts, event_type FROM events
-            ORDER BY ts DESC, event_id DESC LIMIT 10
-        """,
-        "snippet": """
-            SELECT doc_id,
-                   replace(substring(text, greatest(strpos(lower(text), 'spark') - 30, 1), 65),
-                           'spark', '<b>spark</b>') AS snippet
-            FROM documents WHERE strpos(lower(text), 'spark') > 0
-        """,
-        "snippet_multi": """
-            WITH base AS (
-              SELECT doc_id, text, lower(text) AS lc FROM documents
-            ), p1 AS (
-              SELECT *, strpos(lc, 'spark') AS sp1 FROM base
-            ), p2 AS (
-              SELECT *, CASE WHEN sp1 > 0 AND strpos(substring(lc, sp1 + 5), 'spark') > 0
-                             THEN sp1 + 4 + strpos(substring(lc, sp1 + 5), 'spark')
-                             ELSE 0 END AS sp2
-              FROM p1
-            ), p3 AS (
-              SELECT *, CASE WHEN sp2 > 0 AND strpos(substring(lc, sp2 + 5), 'spark') > 0
-                             THEN sp2 + 4 + strpos(substring(lc, sp2 + 5), 'spark')
-                             ELSE 0 END AS sp3
-              FROM p2
-            )
-            SELECT doc_id,
-                   array_to_string(list_filter([
-                     CASE WHEN sp1 > 0 THEN regexp_replace(substring(text, greatest(sp1 - 30, 1), 65), '(?i)(spark)', '<b>\\1</b>', 'g') END,
-                     CASE WHEN sp2 > 0 THEN regexp_replace(substring(text, greatest(sp2 - 30, 1), 65), '(?i)(spark)', '<b>\\1</b>', 'g') END,
-                     CASE WHEN sp3 > 0 THEN regexp_replace(substring(text, greatest(sp3 - 30, 1), 65), '(?i)(spark)', '<b>\\1</b>', 'g') END
-                   ], x -> x IS NOT NULL), ' ... ') AS snippet
-            FROM p3 WHERE sp1 > 0
-        """,
-        "trigram_topk": f"""
-            SELECT doc_id,
-                   len(list_intersect({grams}, {q_grams_sql})) AS inter,
-                   len(list_distinct(list_concat({grams}, {q_grams_sql}))) AS union_sz
-            FROM documents
-            ORDER BY len(list_intersect({grams}, {q_grams_sql})) * 1.0 /
-                     len(list_distinct(list_concat({grams}, {q_grams_sql}))) DESC, doc_id
-            LIMIT 20
-        """,
-        "normalize_chain": r"""
-            WITH noised AS (
-              SELECT doc_id,
-                replace(replace(replace(replace(replace(text,
-                  ' table ', chr(13) || chr(10)),
-                  ' value ', '-' || chr(10)),
-                  ' data ', repeat(chr(10), 4)),
-                  ' row ', chr(9) || chr(9) || ' '),
-                  ' big ', chr(7) || ' ') AS t
-              FROM documents
-            ), s1 AS (
-              SELECT doc_id,
-                     replace(replace(t, chr(13) || chr(10), chr(10)), chr(13), chr(10)) AS t
-              FROM noised
-            ), s2 AS (
-              SELECT doc_id,
-                     regexp_replace(t, '([A-Za-z0-9_])-[ \t\n]*\n([A-Za-z0-9_])', '\1\2', 'g') AS t
-              FROM s1
-            ), s3 AS (
-              SELECT doc_id, regexp_replace(t, '\n{3,}', chr(3), 'g') AS t FROM s2
-            ), s4 AS (
-              SELECT doc_id, replace(t, chr(10) || chr(10), chr(2)) AS t FROM s3
-            ), s5 AS (
-              SELECT doc_id, replace(t, chr(10), ' ') AS t FROM s4
-            ), s6 AS (
-              SELECT doc_id, regexp_replace(t, '[ \t]+', ' ', 'g') AS t FROM s5
-            ), s7 AS (
-              SELECT doc_id,
-                     replace(replace(t, chr(3), chr(10)), chr(2), chr(10) || chr(10)) AS t
-              FROM s6
-            ), s8 AS (
-              SELECT doc_id,
-                     regexp_replace(t, '[\x01-\x08\x0b\x0c\x0e-\x1f]', '', 'g') AS t
-              FROM s7
-            )
-            SELECT doc_id, trim(t, ' ' || chr(10) || chr(9)) AS norm_text FROM s8
-        """,
-        "charset_score": """
-            SELECT doc_id,
-                   length(text) - length(regexp_replace(text, '[a-z0-9 .,;:!?()=+-]', '', 'g')) AS hits,
-                   length(text) AS n_chars,
-                   (length(text) - length(regexp_replace(text, '[a-z0-9 .,;:!?()=+-]', '', 'g'))) * 10
-                     >= length(text) * 4 AS is_match
-            FROM documents
-        """,
-        "pii_redact": """
-            WITH planted AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 3 = 0 THEN
-                       text || ' contact u' || doc_id || '@ex.com or 10.0.'
-                            || (doc_id % 256) || '.' || (doc_id % 100)
-                            || ' tel +7 912 345 67' || (doc_id % 89 + 10)
-                     ELSE text END AS text
-              FROM documents
-            )
-            -- staged counts: each type counted on the text as it stands
-            -- just before that type's redaction (matches ops/scrub.py)
-            SELECT doc_id,
-                   len(regexp_extract_all(text,
-                       '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}')) AS n_email,
-                   len(regexp_extract_all(t1,
-                       '\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}')) AS n_ipv4,
-                   len(regexp_extract_all(t2,
-                       '\\+?\\d[\\d\\- ]{6,}\\d')) AS n_phone,
-                   md5(regexp_replace(t2,
-                       '\\+?\\d[\\d\\- ]{6,}\\d', '[PII]', 'g')) AS red_md5
-            FROM (
-              SELECT doc_id, text, t1,
-                     regexp_replace(t1,
-                       '\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}', '[PII]', 'g') AS t2
-              FROM (
-                SELECT doc_id, text,
-                       regexp_replace(text,
-                         '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}', '[PII]', 'g') AS t1
-                FROM planted
-              )
-            )
-        """,
-        "domain_counts": """
-            WITH planted AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 5 = 0 THEN
-                       text || ' see https://site' || (doc_id % 20)
-                            || '.example.org/p/' || doc_id
-                            || ' and https://mirror.example.net/x'
-                     ELSE text END AS text
-              FROM documents
-            ), urls AS (
-              SELECT doc_id AS id,
-                     unnest(regexp_extract_all(text,
-                       'https?://[a-z0-9.-]+(/[^\\s]*)?')) AS url
-              FROM planted
-            )
-            SELECT regexp_extract(url, 'https?://([a-z0-9.-]+)', 1) AS domain,
-                   count(*) AS n_urls,
-                   count(DISTINCT id) AS n_docs
-            FROM urls
-            GROUP BY 1
-        """,
-        "asof_join": """
-            WITH l AS (
-              SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ets
-              FROM events WHERE event_type = 'purchase'
-            ), r AS (
-              SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ets
-              FROM events WHERE event_type = 'click'
-            ), j AS (
-              SELECT l.event_id, l.user_id, l.ets,
-                     r.event_id AS click_id, r.ets AS cts,
-                     ROW_NUMBER() OVER (PARTITION BY l.event_id
-                                        ORDER BY r.ets DESC, r.event_id DESC) AS rn
-              FROM l LEFT JOIN r ON r.user_id = l.user_id AND r.ets <= l.ets
-            )
-            SELECT event_id, user_id, ets, click_id,
-                   CASE WHEN click_id IS NULL THEN NULL ELSE ets - cts END AS gap_s
-            FROM j WHERE rn = 1
-        """,
-        "range_join": """
-            WITH l AS (
-              SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ets
-              FROM events WHERE event_type = 'purchase'
-            ), r AS (
-              SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ets
-              FROM events WHERE event_type = 'error'
-            )
-            SELECT l.event_id, l.user_id, r.event_id AS err_id,
-                   l.ets - r.ets AS gap_s
-            FROM l JOIN r ON r.user_id = l.user_id
-                         AND r.ets <= l.ets AND r.ets >= l.ets - 86400
-        """,
-        "line_dedup_within": """
-            WITH planted AS (
-              SELECT doc_id, CASE WHEN doc_id % 3 = 0
-                THEN text || chr(10) || 'footer line' || chr(10) || 'footer line'
-                     || chr(10) || text
-                ELSE text || chr(10) || 'footer line' END AS text
-              FROM documents
-            ), lined AS (
-              SELECT doc_id, string_split(text, chr(10)) AS arr FROM planted
-            ), kept AS (
-              SELECT doc_id, arr,
-                     list_filter(arr, (x, i) ->
-                       length(x) < 1 OR list_position(arr, x) = i) AS k
-              FROM lined
-            )
-            SELECT doc_id,
-                   md5(array_to_string(k, chr(10))) AS clean_md5,
-                   len(arr)::INT AS n_lines,
-                   (len(arr) - len(k))::INT AS n_removed
-            FROM kept
-        """,
-        "line_dedup": """
-            WITH planted AS (
-              SELECT doc_id, CASE WHEN doc_id % 2 = 0
-                THEN 'subscribe to our newsletter' || chr(10) || text
-                     || chr(10) || 'all rights reserved'
-                ELSE text || chr(10) || 'all rights reserved' END AS text
-              FROM documents
-            ), ex AS (
-              SELECT doc_id, u.line, u.pos
-              FROM planted, LATERAL (
-                SELECT unnest(string_split(text, chr(10))) AS line,
-                       generate_subscripts(string_split(text, chr(10)), 1) AS pos
-              ) u
-            ), dups AS (
-              SELECT md5(line) AS line_md5 FROM ex WHERE length(line) >= 1
-              GROUP BY md5(line) HAVING count(DISTINCT doc_id) >= 2
-            ), kept AS (
-              SELECT * FROM ex
-              WHERE md5(line) NOT IN (SELECT line_md5 FROM dups)
-            ), rebuilt AS (
-              SELECT doc_id,
-                     string_agg(line, chr(10) ORDER BY pos) AS text_clean,
-                     count(*) AS n_kept
-              FROM kept GROUP BY doc_id
-            ), totals AS (
-              SELECT doc_id, count(*) AS n_lines FROM ex GROUP BY doc_id
-            )
-            SELECT t.doc_id, md5(coalesce(r.text_clean, '')) AS clean_md5,
-                   t.n_lines, t.n_lines - coalesce(r.n_kept, 0) AS n_removed
-            FROM totals t LEFT JOIN rebuilt r USING (doc_id)
-        """,
-        "para_dedup": """
-            WITH planted AS (
-              SELECT doc_id, CASE WHEN doc_id % 2 = 0
-                THEN 'we use cookies to improve your browsing experience'
-                     || chr(10) || chr(10) || text || chr(10) || chr(10)
-                     || 'all rights reserved worldwide by the publisher'
-                ELSE text || chr(10) || chr(10)
-                     || 'all rights reserved worldwide by the publisher'
-                END AS text
-              FROM documents
-            ), ex AS (
-              SELECT doc_id, u.para, u.pos
-              FROM planted, LATERAL (
-                SELECT unnest(string_split(text, chr(10) || chr(10))) AS para,
-                       generate_subscripts(
-                         string_split(text, chr(10) || chr(10)), 1) AS pos
-              ) u
-            ), dups AS (
-              SELECT md5(para) AS para_md5 FROM ex WHERE length(para) >= 10
-              GROUP BY md5(para) HAVING count(DISTINCT doc_id) >= 2
-            ), kept AS (
-              SELECT * FROM ex
-              WHERE md5(para) NOT IN (SELECT para_md5 FROM dups)
-            ), rebuilt AS (
-              SELECT doc_id,
-                     string_agg(para, chr(10) || chr(10) ORDER BY pos)
-                       AS text_clean,
-                     count(*) AS n_kept
-              FROM kept GROUP BY doc_id
-            ), totals AS (
-              SELECT doc_id, count(*) AS n_paras FROM ex GROUP BY doc_id
-            )
-            SELECT t.doc_id, md5(coalesce(r.text_clean, '')) AS clean_md5,
-                   t.n_paras, t.n_paras - coalesce(r.n_kept, 0) AS n_removed
-            FROM totals t LEFT JOIN rebuilt r USING (doc_id)
-        """,
-        "topk_per_lang": """
-            SELECT doc_id, lang, n_chars FROM (
-              SELECT doc_id, lang, n_chars,
-                     ROW_NUMBER() OVER (PARTITION BY lang
-                                        ORDER BY n_chars DESC, doc_id ASC) AS rn
-              FROM documents
-            ) WHERE rn <= 5
-        """,
-        "domain_filter": """
-            WITH planted AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 5 = 0 THEN
-                       text || ' see https://site' || (doc_id % 20)
-                            || '.example.org/p/' || doc_id
-                     ELSE text END AS text
-              FROM documents
-            ), urls AS (
-              SELECT doc_id AS id,
-                     regexp_extract(u.url, 'https?://([a-z0-9.-]+)', 1) AS domain
-              FROM (
-                SELECT doc_id,
-                       unnest(regexp_extract_all(text,
-                         'https?://[a-z0-9.-]+(/[^\\s]*)?')) AS url
-                FROM planted
-              ) u
-            ), offenders AS (
-              SELECT DISTINCT id FROM urls
-              WHERE domain = 'site5.example.org'
-                 OR domain LIKE '%.site5.example.org'
-                 OR domain = 'site15.example.org'
-                 OR domain LIKE '%.site15.example.org'
-            )
-            SELECT doc_id FROM planted
-            WHERE doc_id NOT IN (SELECT id FROM offenders)
-        """,
-        "url_dedup": """
-            -- independent derivation: every planted raw-URL variant
-            -- canonicalizes to site{d%10}/p/{d%25} (+ ?a=1&b=2 iff odd);
-            -- the oracle computes that form arithmetically from doc_id
-            -- and never runs the Spark-side regex chain
-            WITH c AS (
-              SELECT doc_id,
-                     'https://site' || (doc_id % 10)
-                       || '.example.org/p/' || (doc_id % 25)
-                       || CASE WHEN doc_id % 2 = 1
-                               THEN '?a=1&b=2' ELSE '' END AS canon_url
-              FROM documents
-            )
-            SELECT canon_url,
-                   count(*) AS n_urls,
-                   count(DISTINCT doc_id) AS n_docs,
-                   min(doc_id) AS first_doc
-            FROM c GROUP BY 1
-        """,
-        "length_stats": """
-            SELECT lang, count(*) AS n,
-                   quantile_cont(n_chars, 0.25) AS p25,
-                   quantile_cont(n_chars, 0.5)  AS p50,
-                   quantile_cont(n_chars, 0.75) AS p75,
-                   quantile_cont(n_chars, 0.9)  AS p90,
-                   quantile_cont(n_chars, 0.99) AS p99
-            FROM documents
-            GROUP BY lang
-        """,
-        "decontaminate": f"""
-            WITH bench AS (
-              SELECT text FROM documents ORDER BY md5(doc_id::VARCHAR), doc_id LIMIT 10
-            ), bsh AS (
-              SELECT DISTINCT unnest(list_distinct(list_transform(
-                  range(1, greatest(len({_TOK}) - 3, 1)),
-                  i -> array_to_string(list_slice({_TOK}, i, i + 4), ' ')))) AS s
-              FROM bench
-            ), contam AS (
-              SELECT DISTINCT doc_id FROM (
-                SELECT doc_id, unnest(list_distinct(list_transform(
-                    range(1, greatest(len({_TOK}) - 3, 1)),
-                    i -> array_to_string(list_slice({_TOK}, i, i + 4), ' ')))) AS s
-                FROM documents) d
-              JOIN bsh USING (s)
-            )
-            SELECT doc_id FROM documents
-            WHERE doc_id NOT IN (SELECT doc_id FROM contam)
-        """,
-        "vocab_drift": f"""
-            WITH co AS (
-              SELECT w, count(*)::BIGINT AS c
-              FROM (SELECT unnest({_TOK}) AS w FROM documents WHERE lang <> 'en')
-              GROUP BY w
-            ), cn AS (
-              SELECT w, count(*)::BIGINT AS c
-              FROM (SELECT unnest({_TOK}) AS w FROM documents WHERE lang = 'en')
-              GROUP BY w
-            ), j AS (
-              SELECT coalesce(co.w, cn.w) AS w,
-                     coalesce(co.c, 0)::BIGINT AS c_old,
-                     coalesce(cn.c, 0)::BIGINT AS c_new
-              FROM co FULL JOIN cn ON co.w = cn.w
-            ), tot AS (
-              SELECT count(*)::BIGINT AS v,
-                     coalesce(sum(c_old), 0)::BIGINT AS t_old,
-                     coalesce(sum(c_new), 0)::BIGINT AS t_new
-              FROM j
-            ), scored AS (
-              SELECT w, c_old, c_new,
-                     (({_hb_wide_sql("(c_new + 1)")} - {_hb_wide_sql("(t_new + v)")})
-                      - ({_hb_wide_sql("(c_old + 1)")} - {_hb_wide_sql("(t_old + v)")}))::INT AS lr_hb
-              FROM j CROSS JOIN tot
-            )
-            SELECT w, c_old, c_new, lr_hb, rnk FROM (
-              SELECT *, row_number() OVER (
-                ORDER BY abs(lr_hb) DESC, lr_hb DESC, w) AS rnk
-              FROM scored
-            ) WHERE rnk <= 50
-        """,
-        "interval_join": """
-            WITH l AS (
-              SELECT event_id, user_id, epoch_us(ts) AS s,
-                     epoch_us(ts + INTERVAL 7200 SECOND) AS e
-              FROM events WHERE event_type = 'error'
-            ), r AS (
-              SELECT event_id, user_id, epoch_us(ts) AS s,
-                     epoch_us(ts + INTERVAL 3600 SECOND) AS e
-              FROM events WHERE event_type = 'click'
-            )
-            SELECT l.user_id, l.event_id, r.event_id AS click_id,
-                   least(l.e, r.e) - greatest(l.s, r.s) AS overlap_us
-            FROM l JOIN r ON r.user_id = l.user_id
-                         AND l.s <= r.e AND r.s <= l.e
-        """,
-        "collocations": f"""
-            WITH toked AS (
-              SELECT {_TOK} AS toks FROM documents
-            ), uni AS (
-              SELECT w, count(*)::BIGINT AS c
-              FROM (SELECT unnest(toks) AS w FROM toked) GROUP BY w
-            ), pr AS (
-              SELECT toks[i] AS l, toks[i + 1] AS r
-              FROM toked, LATERAL (
-                SELECT unnest(range(1, greatest(len(toks), 1))) AS i
-              ) t
-            ), pairs AS (
-              SELECT l, r, count(*)::BIGINT AS pair_count
-              FROM pr GROUP BY l, r HAVING count(*) >= 5
-            ), scored AS (
-              SELECT p.l, p.r, p.pair_count,
-                     ((p.pair_count - 5) * 1099511627776) // (cl.c * cr.c) AS score_q40
-              FROM pairs p
-              JOIN uni cl ON cl.w = p.l
-              JOIN uni cr ON cr.w = p.r
-            )
-            SELECT l, r, pair_count, score_q40, rnk FROM (
-              SELECT *, row_number() OVER (ORDER BY score_q40 DESC, l, r) AS rnk
-              FROM scored
-            ) WHERE rnk <= 50
-        """,
-        "badwords_filter": f"""
-            SELECT doc_id FROM documents
-            WHERE NOT list_has_any({_TOK}, ['dup', 'verboten'])
-        """,
-        "bloom_probe": _bloom_sql("probe"),
-        "bloom_decontaminate": _bloom_sql("survivors"),
-        "dedup_exact": """
-            SELECT md5(text) AS fingerprint, count(*) AS n_dups, min(doc_id) AS keeper_id
-            FROM documents GROUP BY md5(text)
-        """,
-        "minhash": f"""
-            WITH sh AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(len({_TOK}) - 1, 1)),
-                       i -> array_to_string(list_slice({_TOK}, i, i + 2), ' ')
-                     )) AS shingles
-              FROM documents
-            )
-            SELECT doc_id,
-                   list_min(list_transform(shingles, s -> md5('0:' || s))) AS mh0,
-                   list_min(list_transform(shingles, s -> md5('1:' || s))) AS mh1,
-                   list_min(list_transform(shingles, s -> md5('2:' || s))) AS mh2,
-                   list_min(list_transform(shingles, s -> md5('3:' || s))) AS mh3
-            FROM sh
-        """,
-        "ngram_jaccard_pairs": f"""
-            WITH sh AS (
-              SELECT doc_id AS id,
-                     list_distinct(list_transform(
-                       range(1, greatest(len({_TOK}) - 1, 1)),
-                       i -> array_to_string(list_slice({_TOK}, i, i + 2), ' ')
-                     )) AS s
-              FROM documents
-            )
-            SELECT a.id AS a_id, b.id AS b_id,
-                   len(list_intersect(a.s, b.s)) AS inter,
-                   len(list_distinct(list_concat(a.s, b.s))) AS union_sz
-            FROM sh a JOIN sh b ON a.id < b.id
-            WHERE len(list_distinct(list_concat(a.s, b.s))) > 0
-              AND len(list_intersect(a.s, b.s))
-                  >= len(list_distinct(list_concat(a.s, b.s))) * 0.3
-        """,
-        "token_quality": f"""
-            SELECT doc_id,
-                   len({_TOK}) AS n_tokens,
-                   length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
-                   len(list_filter({_TOK},
-                       t -> list_contains(['the','a','of','and','to','in','is'], t))) AS n_stopwords,
-                   CAST(coalesce(list_sum(list_transform({_TOK}, t -> length(t))), 0) AS BIGINT) AS token_chars
-            FROM documents
-        """,
-        "token_counts": rf"""
-            SELECT doc_id,
-                   len({_TOK}) AS n_word,
-                   len(list_filter(regexp_split_to_array(text, '\s+'),
-                                   x -> x <> '')) AS n_ws,
-                   len(regexp_extract_all(lower(text),
-                       '[a-zа-яё]+|[0-9]+|[^a-zа-яё0-9\s]+')) AS n_bpe
-            FROM documents
-        """,
-        "winnow_fingerprints": f"""
-            WITH toked AS (
-              SELECT doc_id, {_TOK} AS toks FROM documents
-            ), sh AS (
-              SELECT doc_id,
-                     CASE WHEN len(toks) >= 3
-                          THEN list_transform(range(1, len(toks) - 1),
-                                 i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-                          ELSE []::VARCHAR[] END AS sh
-              FROM toked
-            ), h AS (
-              SELECT doc_id, len(sh) AS n_sh,
-                     list_transform(sh, s -> md5(s)) AS hs
-              FROM sh
-            ), f AS (
-              SELECT doc_id,
-                     CASE WHEN n_sh >= 4
-                          THEN list_distinct(list_transform(range(1, n_sh - 2),
-                                 j -> list_min(list_slice(hs, j, j + 3))))
-                          ELSE list_distinct(hs) END AS fps
-              FROM h
-            )
-            SELECT doc_id, array_to_string(list_sort(fps), ',') AS fps_csv FROM f
-        """,
-        "near_dedup_cc": _near_dedup_cc_oracle_sql(),
-        "training_corpus_cc": _training_corpus_cc_oracle_sql(),
-        "selected_corpus": _selected_corpus_oracle_sql(),
-        "winnow_partial_dups": _winnow_pairs_oracle_sql(),
-        "substring_dedup": _substring_dedup_oracle_sql(),
-        "repetition_signals": _repetition_signals_oracle_sql(),
-        "gopher_filter": f"""
-            WITH r AS ({_repetition_signals_oracle_sql()})
-            SELECT doc_id FROM r
-            WHERE top2_chars * 100 <= n_chars * 20
-              AND top3_chars * 100 <= n_chars * 18
-              AND top4_chars * 100 <= n_chars * 16
-              AND dup_line_chars * 100 <= line_chars * 20
-              AND dup_para_chars * 100 <= para_chars * 20
-        """,
-        "lang_id": f"""
-            SELECT doc_id,
-                   CASE WHEN len(list_intersect(list_distinct({_TOK}), ['the','a','of'])) > 0
-                        THEN 'en' ELSE 'und' END AS lang_pred
-            FROM documents
-        """,
-        "oversample": """
-            WITH f AS (
-              SELECT doc_id, lang,
-                     CASE WHEN lang = 'en' THEN 2.5
-                          WHEN lang = 'es' THEN 1.2
-                          ELSE 1.0 END AS fac
-              FROM documents
-            ), n AS (
-              SELECT doc_id, lang,
-                     (floor(fac)::BIGINT
-                      + CASE WHEN ('0x' || substring(md5('epoch' || doc_id), 1, 8))::BIGINT
-                                  % 10000
-                             < floor((fac - floor(fac)) * 10000)::BIGINT
-                             THEN 1 ELSE 0 END) AS n_copies
-              FROM f
-            )
-            SELECT doc_id, lang, unnest(generate_series(0, n_copies - 1)) AS copy_idx
-            FROM n WHERE n_copies > 0
-        """,
-        "split_leakage": f"""
-            WITH sh AS (
-              SELECT doc_id, {_SHINGLES3} AS shingles FROM documents
-            ), sig AS (
-              SELECT doc_id AS id, {_SIG8} FROM sh
-            ), bands AS (
-              {_bands8_sql("sig")}
-            ), cand AS (
-              SELECT DISTINCT a.id AS a_id, b.id AS b_id
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-            ), ver AS (
-              SELECT c.a_id, c.b_id
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.a_id
-              JOIN sh sb ON sb.doc_id = c.b_id
-              WHERE len(list_distinct(list_concat(sa.shingles, sb.shingles))) > 0
-                AND len(list_intersect(sa.shingles, sb.shingles))
-                    >= len(list_distinct(list_concat(sa.shingles, sb.shingles))) * 0.3
-            ), sp AS (
-              SELECT doc_id,
-                     CASE WHEN b < 8000 THEN 'train'
-                          WHEN b < 9000 THEN 'val'
-                          ELSE 'test' END AS split
-              FROM (
-                SELECT doc_id,
-                       ('0x' || substring(md5('split' || doc_id), 1, 8))::BIGINT
-                         % 10000 AS b
-                FROM documents
-              )
-            )
-            SELECT least(x.split, y.split) AS split_1,
-                   greatest(x.split, y.split) AS split_2,
-                   count(*)::BIGINT AS n_pairs
-            FROM ver v
-            JOIN sp x ON x.doc_id = v.a_id
-            JOIN sp y ON y.doc_id = v.b_id
-            GROUP BY 1, 2
-            ORDER BY 1, 2
-        """,
-        "simhash_dedup": f"""
-            WITH toked AS (
-              SELECT doc_id, list_distinct({_TOK}) AS toks FROM documents
-            ), hashed AS (
-              SELECT doc_id, len(toks) AS n,
-                     list_transform(toks,
-                       t -> ('0x' || substring(md5(t), 1, 8))::BIGINT) AS hs
-              FROM toked
-            ), sim AS (
-              SELECT doc_id,
-                     CAST(CASE WHEN n > 0 THEN {_simhash_vote_sql()} ELSE 0 END AS BIGINT)
-                       AS simhash
-              FROM hashed
-            ), bands AS (
-              SELECT doc_id, simhash, b,
-                     (simhash >> (b * 8)) & 255 AS v
-              FROM sim, LATERAL (SELECT unnest([0, 1, 2, 3]) AS b) t
-            ), cand AS (
-              SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-                              a.simhash AS sa, b.simhash AS sb
-              FROM bands a JOIN bands b
-                ON a.b = b.b AND a.v = b.v AND a.doc_id < b.doc_id
-            ), losers AS (
-              SELECT DISTINCT b_id FROM cand
-              WHERE bit_count(xor(sa, sb)) <= 3
-            )
-            SELECT doc_id FROM documents
-            WHERE doc_id NOT IN (SELECT b_id FROM losers)
-        """,
-        "ngram_novelty": f"""
-            WITH sh AS (
-              SELECT doc_id, {_SHINGLES3} AS shingles FROM documents
-            ), ex AS (
-              SELECT doc_id, md5(unnest(shingles)) AS s_md5 FROM sh
-            ), dfreq AS (
-              SELECT s_md5, count(DISTINCT doc_id) AS df FROM ex GROUP BY s_md5
-            ), per_doc AS (
-              SELECT e.doc_id,
-                     count(*)::BIGINT AS n_shingles,
-                     sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END)::BIGINT AS n_novel
-              FROM ex e JOIN dfreq d ON d.s_md5 = e.s_md5
-              GROUP BY e.doc_id
-            )
-            SELECT d.doc_id AS id,
-                   coalesce(p.n_shingles, 0)::BIGINT AS n_shingles,
-                   coalesce(p.n_novel, 0)::BIGINT AS n_novel,
-                   CASE WHEN coalesce(p.n_shingles, 0) > 0
-                        THEN floor(p.n_novel * 1000000 / p.n_shingles)::BIGINT
-                        ELSE NULL END AS novelty_ppm
-            FROM documents d LEFT JOIN per_doc p ON p.doc_id = d.doc_id
-        """,
-        "bpe_pairs": f"""
-            WITH words AS (
-              SELECT w, count(*)::BIGINT AS wc FROM (
-                SELECT unnest({_TOK}) AS w FROM documents
-              ) GROUP BY w
-            ), pairs AS (
-              SELECT substring(w, i, 1) AS a, substring(w, i + 1, 1) AS b, wc
-              FROM words, LATERAL (
-                SELECT unnest(range(1, greatest(length(w), 1))) AS i
-              ) t
-            ), counts AS (
-              SELECT a, b, sum(wc)::BIGINT AS pair_count
-              FROM pairs GROUP BY a, b
-            )
-            SELECT a, b, pair_count, rnk FROM (
-              SELECT *, row_number() OVER (ORDER BY pair_count DESC, a, b) AS rnk
-              FROM counts
-            ) WHERE rnk <= 50
-        """,
-        "para_lang_profile": f"""
-            WITH planted AS (
-              SELECT doc_id, CASE WHEN doc_id % 3 = 0
-                THEN text || chr(10) || chr(10)
-                     || 'скидка сегодня на все товары и услуги'
-                ELSE text END AS text
-              FROM documents
-            ), ex AS (
-              SELECT doc_id, u.para FROM planted, LATERAL (
-                SELECT unnest(string_split(text, chr(10) || chr(10))) AS para
-              ) u
-            ), tagged AS (
-              -- corpus-valid simplification of lang_id_expr (same
-              -- argument as the lang_id oracle): only en stopwords occur
-              -- in the base vocabulary, and the planted paragraph is
-              -- caught by the Cyrillic-ratio rule before any vote
-              SELECT doc_id,
-                     CASE WHEN length(regexp_replace(para, '[^а-яёА-ЯЁ]', '', 'g')) * 2
-                               > length(para) THEN 'ru'
-                          WHEN len(list_intersect(
-                                 list_distinct(list_filter(
-                                   regexp_split_to_array(lower(para), '[^a-zа-яё0-9_]+'),
-                                   x -> x <> '')),
-                                 ['the','a','of','and','to','in','is'])) > 0
-                               THEN 'en'
-                          ELSE 'und' END AS plang
-              FROM ex WHERE length(para) > 0
-            ), counts AS (
-              SELECT doc_id, plang, count(*)::BIGINT AS c
-              FROM tagged GROUP BY doc_id, plang
-            ), maj AS (
-              SELECT doc_id, plang AS majority_lang, c AS majority_paras
-              FROM (
-                SELECT *, row_number() OVER (PARTITION BY doc_id
-                                             ORDER BY c DESC, plang) AS rn
-                FROM counts
-              ) WHERE rn = 1
-            ), tot AS (
-              SELECT doc_id, sum(c)::BIGINT AS n_paras FROM counts GROUP BY doc_id
-            )
-            SELECT t.doc_id AS id, t.n_paras, m.majority_lang, m.majority_paras,
-                   floor((t.n_paras - m.majority_paras) * 1000000
-                         / t.n_paras)::BIGINT AS minority_ppm
-            FROM tot t JOIN maj m ON m.doc_id = t.doc_id
-        """,
-        "meta_tags": """
-            WITH refs AS (
-              SELECT 'media://synth/' || i AS media_ref FROM range(64) t(i)
-            ), h AS (
-              SELECT media_ref,
-                     ('0x' || substring(md5(media_ref), 1, 8))::BIGINT AS h1,
-                     ('0x' || substring(md5(media_ref), 9, 8))::BIGINT AS h2,
-                     ('0x' || substring(md5(media_ref), 17, 8))::BIGINT AS h3,
-                     ('0x' || substring(md5(media_ref), 25, 8))::BIGINT AS h4
-              FROM refs
-            )
-            SELECT media_ref,
-                   ['Canon','Nikon','Sony','Fujifilm','Olympus'][(h1 % 5) + 1]
-                     AS make,
-                   ['Canon','Nikon','Sony','Fujifilm','Olympus'][(h1 % 5) + 1]
-                     || ' X' || ((h2 % 900) + 100)::VARCHAR AS model,
-                   640 + (h2 % 8) * 160 AS width,
-                   480 + (h3 % 8) * 120 AS height,
-                   (h3 % 8) + 1 AS orientation,
-                   printf('2023:%02d:%02d %02d:%02d:%02d',
-                          ((h4 % 12) + 1)::INT,
-                          (((h4 // 12) % 28) + 1)::INT,
-                          ((h4 // 336) % 24)::INT,
-                          ((h4 // 8064) % 60)::INT,
-                          ((h4 // 483840) % 60)::INT) AS dt_orig,
-                   ['report','scan','invoice','contract','archive','photo']
-                     [(h4 % 6) + 1] AS keyword
-            FROM h
-        """,
-        "dedup_stream_twin": """
-            WITH planted AS (
-              SELECT doc_id::BIGINT AS doc_id, md5(text) AS fingerprint,
-                     make_timestamp((1704067200 + doc_id) * 1000000) AS ts
-              FROM documents
-              UNION ALL
-              SELECT doc_id + 10000000, md5(text),
-                     make_timestamp((1704067200 + doc_id + 600) * 1000000)
-              FROM documents WHERE doc_id % 3 = 0
-            ), ranked AS (
-              SELECT doc_id, fingerprint, ts,
-                     row_number() OVER (
-                       PARTITION BY fingerprint ORDER BY ts, doc_id
-                     ) AS rn
-              FROM planted
-            )
-            SELECT doc_id, ts, fingerprint FROM ranked WHERE rn = 1
-        """,
-        "range_join_stream_twin": """
-            WITH l AS (
-              SELECT event_id, user_id, epoch_us(ts) AS us
-              FROM events WHERE event_type = 'purchase'
-            ), r AS (
-              SELECT event_id, user_id, epoch_us(ts) AS us
-              FROM events WHERE event_type = 'error'
-            )
-            SELECT l.event_id, l.user_id, r.event_id AS err_id,
-                   l.us - r.us AS gap_us
-            FROM l JOIN r ON r.user_id = l.user_id
-                         AND r.us <= l.us AND r.us >= l.us - 86400000000
-        """,
-        "lm_bits": f"""
-            WITH ref AS (
-              SELECT doc_id, {_TOK} AS t FROM documents
-              WHERE ('0x' || substring(md5('lm' || doc_id), 1, 8))::BIGINT
-                    % 10000 < 3000
-            ), ref_grams AS (
-              SELECT g.w1 AS w1, g.w2 AS w2
-              FROM (
-                SELECT unnest(list_transform(range(2, len(t) + 1),
-                              i -> {{'w1': t[i-1], 'w2': t[i]}})) AS g
-                FROM ref
-              )
-            ), c_gram AS (
-              SELECT w1, w2, count(*) AS c_gram FROM ref_grams GROUP BY 1, 2
-            ), c_prefix AS (
-              SELECT w1, count(*) AS c_prefix FROM ref_grams GROUP BY 1
-            ), vocab AS (
-              SELECT count(DISTINCT tk) AS v
-              FROM (SELECT unnest(t) AS tk FROM ref)
-            ), doc_grams AS (
-              SELECT doc_id, g.w1 AS w1, g.w2 AS w2
-              FROM (
-                SELECT doc_id,
-                       unnest(list_transform(range(2, len(t) + 1),
-                              i -> {{'w1': t[i-1], 'w2': t[i]}})) AS g
-                FROM (SELECT doc_id, {_TOK} AS t FROM documents)
-              )
-            ), scored AS (
-              SELECT doc_id,
-                     length(bin((coalesce(cp.c_prefix, 0) + v)
-                                // (coalesce(cg.c_gram, 0) + 1))) - 1 AS bits
-              FROM doc_grams dg
-              LEFT JOIN c_gram cg USING (w1, w2)
-              LEFT JOIN c_prefix cp USING (w1)
-              , vocab
-            ), per_doc AS (
-              SELECT doc_id, count(*) AS n_grams, sum(bits)::BIGINT AS bits_total
-              FROM scored GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   coalesce(n_grams, 0) AS n_grams,
-                   coalesce(bits_total, 0) AS bits_total,
-                   CASE WHEN coalesce(n_grams, 0) = 0 THEN NULL
-                        ELSE (bits_total * 1000) // n_grams END
-                     AS bits_per_kilotoken
-            FROM documents d LEFT JOIN per_doc USING (doc_id)
-        """,
-        "ccnet_buckets": f"""
-            WITH ref AS (
-              SELECT doc_id, {_TOK} AS t FROM documents
-              WHERE ('0x' || substring(md5('lm' || doc_id), 1, 8))::BIGINT
-                    % 10000 < 3000
-            ), ref_grams AS (
-              SELECT g.w1 AS w1, g.w2 AS w2
-              FROM (
-                SELECT unnest(list_transform(range(2, len(t) + 1),
-                              i -> {{'w1': t[i-1], 'w2': t[i]}})) AS g
-                FROM ref
-              )
-            ), c_gram AS (
-              SELECT w1, w2, count(*) AS c_gram FROM ref_grams GROUP BY 1, 2
-            ), c_prefix AS (
-              SELECT w1, count(*) AS c_prefix FROM ref_grams GROUP BY 1
-            ), vocab AS (
-              SELECT count(DISTINCT tk) AS v
-              FROM (SELECT unnest(t) AS tk FROM ref)
-            ), doc_grams AS (
-              SELECT doc_id, g.w1 AS w1, g.w2 AS w2
-              FROM (
-                SELECT doc_id,
-                       unnest(list_transform(range(2, len(t) + 1),
-                              i -> {{'w1': t[i-1], 'w2': t[i]}})) AS g
-                FROM (SELECT doc_id, {_TOK} AS t FROM documents)
-              )
-            ), scored AS (
-              SELECT doc_id,
-                     length(bin((coalesce(cp.c_prefix, 0) + v)
-                                // (coalesce(cg.c_gram, 0) + 1))) - 1 AS bits
-              FROM doc_grams dg
-              LEFT JOIN c_gram cg USING (w1, w2)
-              LEFT JOIN c_prefix cp USING (w1)
-              , vocab
-            ), per_doc AS (
-              SELECT doc_id, count(*) AS n_grams, sum(bits)::BIGINT AS bits_total
-              FROM scored GROUP BY 1
-            )
-            SELECT doc_id, lang,
-                   (bits_total * 1000) // n_grams AS bits_per_kilotoken,
-                   ['head','middle','tail'][
-                     ntile(3) OVER (
-                       PARTITION BY lang
-                       ORDER BY (bits_total * 1000) // n_grams, doc_id)]
-                     AS bucket
-            FROM per_doc JOIN documents USING (doc_id)
-            WHERE n_grams > 0
-        """,
-        "meta_filter": """
-            WITH m AS (
-              SELECT doc_id, text, source, lang,
-                     ['docx','html','pdf','txt'][
-                       (('0x' || substring(md5('ext:' || doc_id::VARCHAR), 1, 8))::BIGINT
-                        % 4) + 1] AS ext
-              FROM documents
-            )
-            SELECT doc_id,
-                   source || '/' || doc_id::VARCHAR || '.' || ext AS file_name,
-                   'application/pdf' AS mime,
-                   CAST(length(text) AS VARCHAR) AS file_size,
-                   md5(text) AS checksum
-            FROM m
-            WHERE upper(ext) = 'PDF' AND lang = 'en'
-        """,
-        "quality_filter": f"""
-            WITH t AS (
-              SELECT doc_id,
-                     len({_TOK}) AS n_tokens,
-                     len(list_filter({_TOK},
-                         t -> list_contains(['the','a','of','and','to','in','is'], t))) AS n_stop,
-                     length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct
-              FROM documents
-            )
-            SELECT doc_id, n_tokens FROM t
-            WHERE n_tokens >= 30 AND n_stop * 20 >= n_tokens
-              AND n_punct * 10 <= n_tokens * 3
-        """,
-        "simhash": f"""
-            WITH toked AS (
-              SELECT doc_id, list_distinct({_TOK}) AS toks FROM documents
-            ), hashed AS (
-              SELECT doc_id, len(toks) AS n,
-                     list_transform(toks,
-                       t -> ('0x' || substring(md5(t), 1, 8))::BIGINT) AS hs
-              FROM toked
-            )
-            SELECT doc_id,
-                   CAST(CASE WHEN n > 0 THEN {_simhash_vote_sql()} ELSE 0 END AS BIGINT)
-                     AS simhash
-            FROM hashed
-        """,
-        "lsh_bands": f"""
-            WITH sh AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(len({_TOK}) - 1, 1)),
-                       i -> array_to_string(list_slice({_TOK}, i, i + 2), ' ')
-                     )) AS shingles
-              FROM documents
-            ), sig AS (
-              SELECT doc_id AS id,
-                     {", ".join(f"list_min(list_transform(shingles, s -> md5('{i}:' || s))) AS mh{i}" for i in range(8))}
-              FROM sh
-            ), bands AS (
-              {" UNION ALL ".join(f"SELECT id, {b} AS band, md5(mh{b} || '|' || mh{b + 1}) AS bucket FROM sig WHERE mh{b} IS NOT NULL" for b in range(0, 8, 2))}
-            )
-            SELECT DISTINCT a.id AS a_id, b.id AS b_id
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-        """,
-        "near_dedup_survivors": f"""
-            WITH sh AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(len({_TOK}) - 1, 1)),
-                       i -> array_to_string(list_slice({_TOK}, i, i + 2), ' ')
-                     )) AS shingles
-              FROM documents
-            ), sig AS (
-              SELECT doc_id AS id,
-                     {", ".join(f"list_min(list_transform(shingles, s -> md5('{i}:' || s))) AS mh{i}" for i in range(8))}
-              FROM sh
-            ), bands AS (
-              {" UNION ALL ".join(f"SELECT id, {b} AS band, md5(mh{b} || '|' || mh{b + 1}) AS bucket FROM sig WHERE mh{b} IS NOT NULL" for b in range(0, 8, 2))}
-            ), cand AS (
-              SELECT DISTINCT a.id AS a_id, b.id AS b_id
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-            ), ver AS (
-              SELECT c.b_id
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.a_id
-              JOIN sh sb ON sb.doc_id = c.b_id
-              WHERE len(list_distinct(list_concat(sa.shingles, sb.shingles))) > 0
-                AND len(list_intersect(sa.shingles, sb.shingles))
-                    >= len(list_distinct(list_concat(sa.shingles, sb.shingles))) * 0.3
-            )
-            SELECT doc_id FROM documents
-            WHERE doc_id NOT IN (SELECT b_id FROM ver)
-        """,
-        "ann_cosine_topk": """
-            WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-            scored AS (
-              SELECT q.query_id, e.vec_id AS neighbor_id,
-                     round(
-                       list_sum(list_transform(range(1, 65),
-                         i -> e.embedding[i]::DOUBLE * q.qvec[i]::DOUBLE))
-                       / (sqrt(list_sum(list_transform(range(1, 65), i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))
-                        * sqrt(list_sum(list_transform(range(1, 65), i -> q.qvec[i]::DOUBLE * q.qvec[i]::DOUBLE)))),
-                     6) AS cos
-              FROM embeddings e CROSS JOIN q
-              WHERE e.vec_id <> q.query_id
-            ),
-            ranked AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-              FROM scored
-            )
-            SELECT query_id, neighbor_id, cos, rnk FROM ranked WHERE rnk <= 10
-        """,
-        "events_hourly": """
-            SELECT event_type, date_trunc('hour', ts) AS hour, count(*) AS cnt
-            FROM events GROUP BY event_type, date_trunc('hour', ts)
-        """,
-        "events_rollup": """
-            SELECT event_type, date_trunc('day', ts) AS day, count(*) AS cnt
-            FROM events
-            GROUP BY ROLLUP (event_type, date_trunc('day', ts))
-        """,
-        "sessionize": """
-            WITH flagged AS (
-              -- epoch MICROseconds, matching the Spark operator (sub-second
-              -- gaps split identically to the streaming twin)
-              SELECT user_id, ts,
-                     CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                            > 1800000000
-                          THEN 1 ELSE 0 END AS new_session
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-            ), idx AS (
-              SELECT user_id, ts,
-                     sum(new_session) OVER (PARTITION BY user_id ORDER BY ts)
-                       AS session_idx
-              FROM flagged
-            )
-            SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-                   count(*) AS n_events
-            FROM idx GROUP BY user_id, session_idx
-        """,
-        "revenue_by_nation": """
-            SELECT n_name,
-                   CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000)
-                                 AS BIGINT)) AS BIGINT) AS revenue_e4,
-                   count(*) AS n_items
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation   ON c_nationkey = n_nationkey
-            GROUP BY n_name
-        """,
-        "running_revenue": """
-            WITH monthly AS (
-              SELECT l_returnflag, date_trunc('month', l_shipdate) AS month,
-                     CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000)
-                                   AS BIGINT)) AS BIGINT) AS rev_e4
-              FROM lineitem
-              GROUP BY l_returnflag, date_trunc('month', l_shipdate)
-            )
-            SELECT l_returnflag, month, rev_e4,
-                   CAST(SUM(rev_e4) OVER (PARTITION BY l_returnflag ORDER BY month) AS BIGINT)
-                     AS running_e4
-            FROM monthly
-        """,
-        "vocab_topk": f"""
-            SELECT term, count(*) AS tf, count(DISTINCT doc_id) AS df
-            FROM (SELECT doc_id, unnest({_TOK}) AS term FROM documents)
-            GROUP BY term
-            ORDER BY tf DESC, term
-            LIMIT 50
-        """,
-        "hash_split": """
-            SELECT doc_id,
-                   CASE WHEN b < 8000 THEN 'train'
-                        WHEN b < 9000 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (
-              SELECT doc_id,
-                     ('0x' || substring(md5('split' || doc_id), 1, 8))::BIGINT
-                       % 10000 AS b
-              FROM documents
-            )
-        """,
-        "deterministic_sample": """
-            SELECT doc_id FROM documents
-            WHERE ('0x' || substring(md5('s1' || doc_id), 1, 8))::BIGINT
-                  % 10000 < 2500
-        """,
-        "mixing_corpus": f"""
-            WITH planted AS (
-              SELECT doc_id, lang,
-                     CASE WHEN doc_id % 2 = 0
-                          THEN 'subscribe to our newsletter' || chr(10)
-                          ELSE '' END
-                     || text || chr(10) || 'all rights reserved'
-                     || CASE WHEN doc_id % 7 = 0
-                             THEN repeat(chr(195) || chr(169), 200)
-                             ELSE '' END AS text
-              FROM documents
-            ), gated AS (
-              SELECT * FROM planted
-              WHERE floor(len(regexp_extract_all(text, '{_MOJI}')) * 10000
-                          / greatest(length(text), 1))::BIGINT <= 10
-            ), ex AS (
-              SELECT doc_id, lang, u.line, u.pos
-              FROM gated, LATERAL (
-                SELECT unnest(string_split(text, chr(10))) AS line,
-                       generate_subscripts(string_split(text, chr(10)), 1) AS pos
-              ) u
-            ), dups AS (
-              SELECT md5(line) AS line_md5 FROM ex WHERE length(line) >= 1
-              GROUP BY md5(line) HAVING count(DISTINCT doc_id) >= 2
-            ), kept AS (
-              SELECT * FROM ex
-              WHERE md5(line) NOT IN (SELECT line_md5 FROM dups)
-            ), rebuilt AS (
-              SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text_clean
-              FROM kept GROUP BY doc_id
-            ), totals AS (
-              SELECT DISTINCT doc_id, lang FROM ex
-            ), cleaned AS (
-              SELECT t.doc_id, t.lang, coalesce(r.text_clean, '') AS text_clean
-              FROM totals t LEFT JOIN rebuilt r USING (doc_id)
-            ), mixed AS (
-              SELECT doc_id, length(text_clean) AS n_clean FROM cleaned
-              WHERE ('0x' || substring(md5('mix' || doc_id), 1, 8))::BIGINT
-                    % 10000
-                    < CASE WHEN lang = 'es' THEN 6000
-                           WHEN lang = 'en' THEN 3000
-                           ELSE 10000 END
-            )
-            SELECT doc_id, n_clean AS tokens,
-                   ('0x' || substring(md5('pack' || doc_id), 1, 8))::BIGINT
-                     % 16 AS shard_group,
-                   floor((sum(n_clean) OVER (
-                        PARTITION BY ('0x' || substring(md5('pack' || doc_id), 1, 8))::BIGINT % 16
-                        ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) - n_clean) / 2000)::BIGINT AS shard_idx
-            FROM mixed
-        """,
-        "pack_shards": """
-            SELECT doc_id, n_chars AS tokens,
-                   ('0x' || substring(md5('pack' || doc_id), 1, 8))::BIGINT
-                     % 16 AS shard_group,
-                   floor((sum(n_chars) OVER (
-                        PARTITION BY ('0x' || substring(md5('pack' || doc_id), 1, 8))::BIGINT % 16
-                        ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) - n_chars) / 2000)::BIGINT AS shard_idx
-            FROM documents
-        """,
-        "pack_sequences": """
-            WITH s AS (
-              SELECT doc_id, n_chars::BIGINT AS tokens,
-                     ('0x' || substring(md5('pack' || doc_id), 1, 8))::BIGINT
-                       % 16 AS shard_group,
-                     sum(n_chars::BIGINT) OVER (
-                       PARTITION BY ('0x' || substring(md5('pack' || doc_id), 1, 8))::BIGINT % 16
-                       ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     )::BIGINT AS cum
-              FROM documents
-            ), nz AS (
-              SELECT doc_id, tokens, shard_group, cum,
-                     cum - tokens AS strt
-              FROM s WHERE tokens > 0
-            ), pieces AS (
-              SELECT doc_id, tokens, shard_group, strt,
-                     unnest(generate_series(floor(strt / 512)::BIGINT,
-                                            floor((cum - 1) / 512)::BIGINT)) AS seq_idx
-              FROM nz
-            )
-            SELECT doc_id, tokens, shard_group, seq_idx,
-                   greatest(0, seq_idx * 512 - strt)::BIGINT AS begin_tok,
-                   least(tokens, (seq_idx + 1) * 512 - strt)::BIGINT AS end_tok
-            FROM pieces
-        """,
-        "mojibake": f"""
-            WITH planted AS (
-              SELECT doc_id,
-                     text || repeat(chr(195) || chr(169), (doc_id % 5)::INT) AS text
-              FROM documents
-            )
-            SELECT doc_id,
-                   len(regexp_extract_all(text, '{_MOJI}')) AS n_mojibake,
-                   floor(len(regexp_extract_all(text, '{_MOJI}')) * 10000
-                         / greatest(length(text), 1))::BIGINT AS mojibake_per_10k
-            FROM planted
-        """,
-        "stratified_sample": """
-            SELECT doc_id, lang FROM documents
-            WHERE ('0x' || substring(md5('mix' || doc_id), 1, 8))::BIGINT
-                  % 10000
-                  < CASE WHEN lang = 'es' THEN 6000
-                         WHEN lang = 'en' THEN 3000
-                         ELSE 10000 END
-        """,
-        "chunk_documents": f"""
-            WITH t AS (
-              SELECT doc_id, {_TOK} AS toks FROM documents
-            ), c AS (
-              SELECT doc_id, toks,
-                     unnest(range(0, greatest(1,
-                       ceil((len(toks) - 16) / 48.0)::BIGINT))) AS chunk_idx
-              FROM t
-            )
-            SELECT doc_id AS id,
-                   chunk_idx,
-                   len(list_slice(toks, chunk_idx * 48 + 1,
-                                  chunk_idx * 48 + 64)) AS n_tokens,
-                   md5(array_to_string(
-                     list_slice(toks, chunk_idx * 48 + 1, chunk_idx * 48 + 64),
-                     ' ')) AS chunk_md5
-            FROM c
-        """,
-        "classifier_scores": f"""
-            WITH t AS (
-              SELECT doc_id, {_TOK} AS toks FROM documents
-            ), f AS (
-              SELECT doc_id,
-                     unnest(list_concat(toks,
-                       list_transform(range(1, greatest(len(toks), 1)),
-                         i -> toks[i] || '_' || toks[i + 1]))) AS feat
-              FROM t
-            ), b AS (
-              SELECT doc_id,
-                     ('0x' || substring(md5(feat), 1, 8))::BIGINT % 262144 AS bk
-              FROM f
-            ), s AS (
-              SELECT doc_id, sum(bk % 2001 - 1000)::BIGINT AS w
-              FROM b GROUP BY doc_id
-            )
-            SELECT d.doc_id AS id,
-                   coalesce(s.w, 0) AS logit_fp,
-                   coalesce(s.w, 0) >= 0 AS keep
-            FROM documents d LEFT JOIN s ON s.doc_id = d.doc_id
-        """,
-        "corpus_diff": """
-            WITH old AS (
-              SELECT doc_id, md5(text) AS old_md5 FROM documents
-            ), changed AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 7 = 0
-                          THEN text || ' [edited]' ELSE text END AS text
-              FROM documents
-            ), new AS (
-              SELECT doc_id, md5(text) AS new_md5 FROM changed
-              WHERE doc_id % 11 <> 0
-              UNION ALL
-              SELECT doc_id + 1000000 AS doc_id, md5(text) AS new_md5
-              FROM documents WHERE doc_id % 13 = 0
-            )
-            SELECT coalesce(o.doc_id, n.doc_id) AS id,
-                   CASE WHEN o.old_md5 IS NULL THEN 'added'
-                        WHEN n.new_md5 IS NULL THEN 'removed'
-                        WHEN o.old_md5 = n.new_md5 THEN 'unchanged'
-                        ELSE 'changed' END AS status,
-                   o.old_md5, n.new_md5
-            FROM old o FULL OUTER JOIN new n ON n.doc_id = o.doc_id
-        """,
-        "warc_roundtrip": """
-            -- independent derivation: the Spark side BUILDS a WARC
-            -- container from each doc (gzip members for odd ids) and
-            -- PARSES it back; the oracle states the expected fields
-            -- directly, so a byte error in either writer or reader
-            -- breaks the md5 match
-            SELECT doc_id,
-                   'response' AS warc_type,
-                   'https://w.example/doc/' || doc_id AS target_uri,
-                   200 AS http_status,
-                   'text/html; charset=utf-8' AS mime,
-                   md5(text) AS body_md5
-            FROM documents
-        """,
-        "domain_pagerank": """
-            WITH e AS (
-              SELECT 'd' || (doc_id % 17) AS src,
-                     'd' || ((doc_id * 7 + 3) % 17) AS dst
-              FROM documents
-              WHERE (doc_id % 17) <> ((doc_id * 7 + 3) % 17)
-            ), n AS (
-              SELECT DISTINCT node FROM (
-                SELECT src AS node FROM e UNION ALL SELECT dst FROM e
-              )
-            ), deg AS (
-              SELECT src, count(*) AS deg FROM e GROUP BY src
-            ), pr0 AS (
-              SELECT node, 1000000::BIGINT AS pr FROM n
-            ), c1 AS (
-              SELECT e.dst AS node, sum(pr0.pr // deg.deg) AS s
-              FROM e JOIN pr0 ON pr0.node = e.src
-                     JOIN deg ON deg.src = e.src
-              GROUP BY e.dst
-            ), pr1 AS (
-              SELECT n.node,
-                     (150000 + (coalesce(c1.s, 0) * 85) // 100)::BIGINT AS pr
-              FROM n LEFT JOIN c1 ON c1.node = n.node
-            ), c2 AS (
-              SELECT e.dst AS node, sum(pr1.pr // deg.deg) AS s
-              FROM e JOIN pr1 ON pr1.node = e.src
-                     JOIN deg ON deg.src = e.src
-              GROUP BY e.dst
-            ), pr2 AS (
-              SELECT n.node,
-                     (150000 + (coalesce(c2.s, 0) * 85) // 100)::BIGINT AS pr
-              FROM n LEFT JOIN c2 ON c2.node = n.node
-            ), c3 AS (
-              SELECT e.dst AS node, sum(pr2.pr // deg.deg) AS s
-              FROM e JOIN pr2 ON pr2.node = e.src
-                     JOIN deg ON deg.src = e.src
-              GROUP BY e.dst
-            ), pr3 AS (
-              SELECT n.node,
-                     (150000 + (coalesce(c3.s, 0) * 85) // 100)::BIGINT AS pr
-              FROM n LEFT JOIN c3 ON c3.node = n.node
-            )
-            SELECT node, pr AS pr_fp FROM pr3
-        """,
-        "reg_domain_counts": """
-            -- independent derivation: each planted variant's registered
-            -- domain follows arithmetically from doc_id (subdomain depth
-            -- never reaches the key), so the oracle never runs the
-            -- public-suffix matcher
-            WITH c AS (
-              SELECT doc_id,
-                     'site' || (doc_id % 7) ||
-                     CASE doc_id % 4
-                       WHEN 0 THEN '.co.uk'
-                       WHEN 1 THEN '.org'
-                       WHEN 2 THEN '.act.gov.au'
-                       ELSE '.com' END AS reg_domain
-              FROM documents
-            )
-            SELECT reg_domain,
-                   count(*) AS n_urls,
-                   count(DISTINCT doc_id) AS n_docs
-            FROM c GROUP BY 1
-        """,
-        "incremental_dedup": f"""
-            WITH newraw AS (
-              SELECT n.doc_id,
-                     CASE WHEN n.doc_id % 10 = 0 AND d.text IS NOT NULL
-                          THEN d.text ELSE n.text END AS text
-              FROM documents n LEFT JOIN documents d
-                ON d.doc_id = n.doc_id + 1 AND d.doc_id % 5 <> 0
-              WHERE n.doc_id % 5 = 0
-            ), base AS (
-              SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0
-            ), bsh AS (
-              SELECT doc_id, {_SHINGLES3} AS shingles FROM base
-            ), bsig AS (
-              SELECT doc_id AS id, {_SIG8} FROM bsh
-            ), bband AS (
-              {_bands8_sql("bsig")}
-            ), nsh AS (
-              SELECT doc_id, {_SHINGLES3} AS shingles FROM newraw
-            ), nsig AS (
-              SELECT doc_id AS id, {_SIG8} FROM nsh
-            ), nband AS (
-              {_bands8_sql("nsig")}
-            ), cand AS (
-              SELECT DISTINCT nb.id AS new_id, bb.id AS base_id
-              FROM nband nb JOIN bband bb
-                ON nb.band = bb.band AND nb.bucket = bb.bucket
-            ), dup AS (
-              SELECT DISTINCT c.new_id FROM cand c
-              JOIN nsig n ON n.id = c.new_id
-              JOIN bsig b ON b.id = c.base_id
-              WHERE ({_AGREE8}) / 8.0 >= 0.5
-            ), fresh AS (
-              SELECT * FROM newraw
-              WHERE doc_id NOT IN (SELECT new_id FROM dup)
-            ), fsh AS (
-              SELECT doc_id, {_SHINGLES3} AS shingles FROM fresh
-            ), fsig AS (
-              SELECT doc_id AS id, {_SIG8} FROM fsh
-            ), fband AS (
-              {_bands8_sql("fsig")}
-            ), fcand AS (
-              SELECT DISTINCT a.id AS a_id, b.id AS b_id
-              FROM fband a JOIN fband b
-                ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-            ), ver AS (
-              SELECT c.b_id FROM fcand c
-              JOIN fsh sa ON sa.doc_id = c.a_id
-              JOIN fsh sb ON sb.doc_id = c.b_id
-              WHERE len(list_distinct(list_concat(sa.shingles, sb.shingles))) > 0
-                AND len(list_intersect(sa.shingles, sb.shingles))
-                    >= len(list_distinct(list_concat(sa.shingles, sb.shingles))) * 0.5
-            )
-            SELECT doc_id FROM fresh
-            WHERE doc_id NOT IN (SELECT b_id FROM ver)
-        """,
-        "adaptive_quality": """
-            WITH th AS (
-              SELECT lang, quantile_cont(n_chars, 0.25) AS p25
-              FROM documents GROUP BY lang
-            )
-            SELECT d.doc_id, d.lang, d.n_chars
-            FROM documents d JOIN th ON th.lang = d.lang
-            WHERE d.n_chars >= th.p25
-        """,
-        "unimax_rebalance": """
-            WITH counts AS (
-              SELECT lang, count(*) AS c FROM documents GROUP BY lang
-            ), ranked AS (
-              SELECT lang, c,
-                     row_number() OVER (ORDER BY c, lang) AS i,
-                     sum(c) OVER (ORDER BY c, lang
-                                  ROWS UNBOUNDED PRECEDING) AS p,
-                     count(*) OVER () AS n
-              FROM counts
-            ), shared AS (
-              SELECT lang, c,
-                     (300 - (p - c)) // (n - i + 1) AS share,
-                     c <= (300 - (p - c)) // (n - i + 1) AS isfull
-              FROM ranked
-            ), capped AS (
-              SELECT *, max(CASE WHEN NOT isfull THEN share END)
-                          OVER () AS cap
-              FROM shared
-            ), rates AS (
-              SELECT lang,
-                     ((CASE WHEN isfull THEN c ELSE cap END) * 10000) // c
-                       AS thresh
-              FROM capped
-            )
-            SELECT d.doc_id, d.lang
-            FROM documents d JOIN rates r ON r.lang = d.lang
-            WHERE ('0x' || substring(md5('unimax' || d.doc_id), 1, 8))::BIGINT
-                  % 10000 < r.thresh
-        """,
-        "temperature_rebalance": """
-            WITH counts AS (
-              SELECT lang, count(*) AS c FROM documents GROUP BY lang
-            ), m AS (
-              SELECT min(c) AS cmin FROM counts
-            ), rates AS (
-              SELECT lang,
-                     least(10000,
-                           floor(sqrt(cmin::DOUBLE / c) * 10000))::BIGINT
-                       AS thresh
-              FROM counts, m
-            )
-            SELECT d.doc_id, d.lang
-            FROM documents d JOIN rates r ON d.lang = r.lang
-            WHERE ('0x' || substring(md5('temp' || d.doc_id), 1, 8))::BIGINT
-                  % 10000 < r.thresh
-        """,
-        "training_corpus": f"""
-            WITH t AS (
-              SELECT doc_id, text,
-                     len({_TOK}) AS n_tokens,
-                     len(list_filter({_TOK},
-                         t -> list_contains(['the','a','of','and','to','in','is'], t))) AS n_stop,
-                     length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
-                     len(list_intersect(list_distinct({_TOK}), ['the','a','of'])) AS en_votes
-              FROM documents
-            ), gated AS (
-              SELECT doc_id, text FROM t
-              WHERE n_tokens >= 30 AND n_stop * 20 >= n_tokens
-                AND n_punct * 10 <= n_tokens * 3 AND en_votes > 0
-            ), sh AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(len({_TOK}) - 1, 1)),
-                       i -> array_to_string(list_slice({_TOK}, i, i + 2), ' ')
-                     )) AS shingles
-              FROM gated
-            ), sig AS (
-              SELECT doc_id AS id,
-                     {", ".join(f"list_min(list_transform(shingles, s -> md5('{i}:' || s))) AS mh{i}" for i in range(8))}
-              FROM sh
-            ), bands AS (
-              {" UNION ALL ".join(f"SELECT id, {b} AS band, md5(mh{b} || '|' || mh{b + 1}) AS bucket FROM sig WHERE mh{b} IS NOT NULL" for b in range(0, 8, 2))}
-            ), cand AS (
-              SELECT DISTINCT a.id AS a_id, b.id AS b_id
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-            ), ver AS (
-              SELECT c.b_id
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.a_id
-              JOIN sh sb ON sb.doc_id = c.b_id
-              WHERE len(list_distinct(list_concat(sa.shingles, sb.shingles))) > 0
-                AND len(list_intersect(sa.shingles, sb.shingles))
-                    >= len(list_distinct(list_concat(sa.shingles, sb.shingles))) * 0.3
-            ), survivors AS (
-              SELECT doc_id FROM gated
-              WHERE doc_id NOT IN (SELECT b_id FROM ver)
-            )
-            SELECT doc_id,
-                   CASE WHEN b < 8000 THEN 'train'
-                        WHEN b < 9000 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (
-              SELECT doc_id,
-                     ('0x' || substring(md5('split' || doc_id), 1, 8))::BIGINT
-                       % 10000 AS b
-              FROM survivors
-            )
-        """,
-        "bm25": f"""
-            WITH tfd AS (
-              SELECT doc_id, len({_TOK}) AS dl,
-                     len(list_filter({_TOK}, t -> t = 'spark')) AS tf0,
-                     len(list_filter({_TOK}, t -> t = 'join')) AS tf1
-              FROM documents
-            ), stats AS (
-              SELECT count(*) AS n, sum(dl) AS sumdl,
-                     sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                     sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1
-              FROM tfd
-            )
-            SELECT doc_id,
-                   round(
-                     ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0 * 2.2
-                       / (tf0 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n)))
-                   + ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1 * 2.2
-                       / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n))),
-                   6) AS bm25
-            FROM tfd, stats
-            WHERE tf0 > 0 OR tf1 > 0
-        """,
-        "rank_cd": f"""
-            WITH toked AS (
-              SELECT doc_id, {_TOK} AS toks FROM documents
-            ), pos0 AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       list_transform(range(1, len(toks) + 1),
-                                      i -> struct_pack(p := i - 1, term := toks[i])),
-                       s -> s.term IN ('join', 'spark'))) AS s
-              FROM toked
-            ), pos AS (
-              SELECT doc_id, s.p AS p, s.term AS term FROM pos0
-            ), covered AS (
-              SELECT doc_id, p,
-                     max(CASE WHEN term = 'join' THEN p END) OVER w AS l0,
-                     max(CASE WHEN term = 'spark' THEN p END) OVER w AS l1
-              FROM pos
-              WINDOW w AS (PARTITION BY doc_id ORDER BY p
-                           ROWS UNBOUNDED PRECEDING)
-            )
-            SELECT doc_id,
-                   min(p - least(l0, l1) + 1) AS min_cover,
-                   round(2.0 / min(p - least(l0, l1) + 1), 6) AS rank_cd
-            FROM covered
-            WHERE l0 IS NOT NULL AND l1 IS NOT NULL
-            GROUP BY doc_id
-        """,
-        "cosine_neardup": """
-            WITH v AS (SELECT vec_id AS id, embedding AS e FROM embeddings),
-            pairs AS (
-              SELECT a.id AS a_id, b.id AS b_id,
-                     round(
-                       list_sum(list_transform(range(1, 65),
-                         i -> a.e[i]::DOUBLE * b.e[i]::DOUBLE))
-                       / (sqrt(list_sum(list_transform(range(1, 65), i -> a.e[i]::DOUBLE * a.e[i]::DOUBLE)))
-                        * sqrt(list_sum(list_transform(range(1, 65), i -> b.e[i]::DOUBLE * b.e[i]::DOUBLE)))),
-                     6) AS cos
-              FROM v a JOIN v b ON a.id < b.id
-            )
-            SELECT a_id, b_id, cos FROM pairs WHERE cos >= 0.42
-        """,
-        "ann_lsh_buckets": _ann_lsh_oracle_sql(),
-        "ann_ivf_topk": _ann_ivf_oracle_sql(),
-        "pq_adc_topk": _pq_adc_oracle_sql(),
-        "ivf_pq_topk": _ivf_pq_oracle_sql(),
-        # the join strategy is bit-identical to the literal strategy by
-        # construction — same oracle
-        "ann_ivf_topk_join": _ann_ivf_oracle_sql(),
-        "ann_recall": _ann_recall_oracle_sql(),
-        "sq_topk": _SQ_TOPK_SQL
-        + """
-            SELECT query_id, neighbor_id, cos_q, rnk FROM sq_ranked
-            WHERE rnk <= 10
-        """,
-        "sq_recall": _SQ_TOPK_SQL
-        + """
-            , sq AS (
-              SELECT query_id, neighbor_id FROM sq_ranked WHERE rnk <= 10
-            ), exact AS (
-              SELECT query_id, neighbor_id FROM (
-                SELECT fq.vec_id AS query_id, fe.vec_id AS neighbor_id,
-                       row_number() OVER (
-                         PARTITION BY fq.vec_id
-                         ORDER BY round((list_sum(list_transform(range(1, 65), i -> fe.embedding[i]::DOUBLE * fq.embedding[i]::DOUBLE))
-                                  / (sqrt(list_sum(list_transform(range(1, 65), i -> fe.embedding[i]::DOUBLE * fe.embedding[i]::DOUBLE)))
-                                   * sqrt(list_sum(list_transform(range(1, 65), i -> fq.embedding[i]::DOUBLE * fq.embedding[i]::DOUBLE))))), 6) DESC,
-                                  fe.vec_id
-                       ) AS rnk
-                FROM embeddings fe
-                CROSS JOIN (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) fq
-                WHERE fe.vec_id <> fq.vec_id
-              ) WHERE rnk <= 10
-            ), hits AS (
-              SELECT s.query_id, count(*)::BIGINT AS n_hits
-              FROM sq s JOIN exact e
-                ON e.query_id = s.query_id AND e.neighbor_id = s.neighbor_id
-              GROUP BY s.query_id
-            )
-            SELECT q.vec_id AS query_id,
-                   coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-                   floor(coalesce(h.n_hits, 0) * 1000000 / 10)::BIGINT AS recall_ppm
-            FROM (SELECT vec_id FROM embeddings WHERE vec_id < 5) q
-            LEFT JOIN hits h ON h.query_id = q.vec_id
-        """,
-        "margin_mine": _margin_mine_oracle(0),
-        "margin_mine_mutual": f"""
-            WITH fwd AS ({_margin_mine_oracle(0)}),
-            bwd AS ({_margin_mine_oracle(1)})
-            SELECT f.src_id, f.tgt_id, f.cos_e6, f.margin_e6
-            FROM fwd f JOIN bwd b
-              ON f.src_id = b.tgt_id AND f.tgt_id = b.src_id
-        """,
-        "ivf_pq_recall": _ivf_pq_recall_oracle_sql(),
-        "pq_recall_trained": _ivf_pq_recall_oracle_sql(
-            cb_cte=_pq_trained_cb_cte(8, 16, 8, 2, 20)
-        ),
-        "global_shuffle": """
-            SELECT doc_id,
-                   row_number() OVER (
-                       ORDER BY md5('epoch0' || doc_id), doc_id
-                   ) - 1 AS position
-            FROM documents
-        """,
-        "kn_bits": f"""
-            WITH ref AS (
-              SELECT doc_id, {_TOK} AS t FROM documents
-              WHERE ('0x' || substring(md5('lm' || doc_id), 1, 8))::BIGINT
-                    % 10000 < 3000
-            ), ref_grams AS (
-              SELECT g.w1 AS w1, g.w2 AS w2
-              FROM (
-                SELECT unnest(list_transform(range(2, len(t) + 1),
-                              i -> {{'w1': t[i-1], 'w2': t[i]}})) AS g
-                FROM ref
-              )
-            ), c_gram AS (
-              SELECT w1, w2, count(*) AS c_gram FROM ref_grams GROUP BY 1, 2
-            ), c_prefix AS (
-              SELECT w1, sum(c_gram)::BIGINT AS c_prefix,
-                     count(*) AS n1p
-              FROM c_gram GROUP BY 1
-            ), cont AS (
-              SELECT w2, count(*) AS n1c FROM c_gram GROUP BY 1
-            ), scal AS (
-              SELECT (SELECT count(*) FROM c_gram)
-                     + (SELECT count(DISTINCT tk)
-                        FROM (SELECT unnest(t) AS tk FROM ref)) AS bv
-            ), doc_grams AS (
-              SELECT doc_id, g.w1 AS w1, g.w2 AS w2
-              FROM (
-                SELECT doc_id,
-                       unnest(list_transform(range(2, len(t) + 1),
-                              i -> {{'w1': t[i-1], 'w2': t[i]}})) AS g
-                FROM (SELECT doc_id, {_TOK} AS t FROM documents)
-              )
-            ), scored AS (
-              SELECT doc_id,
-                     length(bin(
-                       (CASE WHEN cp.c_prefix IS NULL THEN bv
-                             ELSE 4 * cp.c_prefix * bv END)
-                       // (CASE WHEN cp.c_prefix IS NULL
-                                THEN coalesce(ct.n1c, 0) + 1
-                                ELSE (CASE WHEN cg.c_gram IS NULL THEN 0
-                                           ELSE 4 * cg.c_gram - 3 END) * bv
-                                     + 3 * cp.n1p * (coalesce(ct.n1c, 0) + 1)
-                           END)
-                     )) - 1 AS bits
-              FROM doc_grams dg
-              LEFT JOIN c_gram cg USING (w1, w2)
-              LEFT JOIN c_prefix cp USING (w1)
-              LEFT JOIN cont ct USING (w2)
-              , scal
-            ), per_doc AS (
-              SELECT doc_id, count(*) AS n_grams,
-                     sum(bits)::BIGINT AS bits_total
-              FROM scored GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   coalesce(n_grams, 0) AS n_grams,
-                   coalesce(bits_total, 0) AS bits_total,
-                   CASE WHEN coalesce(n_grams, 0) = 0 THEN NULL
-                        ELSE (bits_total * 1000) // n_grams END
-                     AS bits_per_kilotoken
-            FROM documents d LEFT JOIN per_doc USING (doc_id)
-        """,
-        "length_buckets": f"""
-            WITH t AS (
-              SELECT doc_id, len({_TOK})::BIGINT AS tokens FROM documents
-            ), b AS (
-              SELECT doc_id, tokens,
-                     CASE WHEN tokens <= 0 THEN 0
-                          ELSE length(bin(tokens)) - 1 END AS bucket
-              FROM t
-            )
-            SELECT doc_id, tokens, bucket,
-                   (row_number() OVER (
-                        PARTITION BY bucket ORDER BY doc_id) - 1) // 32
-                     AS batch_idx
-            FROM b
-        """,
-        "containment_pairs": f"""
-            WITH sh AS (
-              SELECT doc_id, {_SHINGLES3} AS s FROM documents
-            ), p AS (
-              SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                     len(list_intersect(a.s, b.s)) AS inter,
-                     len(a.s) AS n_a, len(b.s) AS n_b
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              WHERE len(a.s) > 0 AND len(b.s) > 0
-            )
-            SELECT a_id, b_id, inter, n_a, n_b,
-                   (inter * 10000) // least(n_a, n_b) AS containment_bp
-            FROM p
-            WHERE inter * 10000 >= 8000 * least(n_a, n_b)
-        """,
-        "neardup_recall": f"""
-            WITH sh AS (
-              SELECT doc_id, {_SHINGLES3} AS shingles FROM documents
-            ), true_pairs AS (
-              SELECT a.doc_id AS a_id, b.doc_id AS b_id
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              WHERE len(list_distinct(list_concat(a.shingles, b.shingles))) > 0
-                AND len(list_intersect(a.shingles, b.shingles))
-                    >= len(list_distinct(list_concat(a.shingles, b.shingles))) * 0.3
-            ), sig AS (
-              SELECT doc_id AS id, {_SIG8} FROM sh
-            ), bands AS (
-              {_bands8_sql("sig")}
-            ), cand AS (
-              SELECT DISTINCT a.id AS a_id, b.id AS b_id
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-            ), found AS (
-              SELECT t.a_id FROM true_pairs t
-              JOIN cand c ON t.a_id = c.a_id AND t.b_id = c.b_id
-            )
-            SELECT (SELECT count(*) FROM true_pairs) AS n_true,
-                   (SELECT count(*) FROM found) AS n_found,
-                   CASE WHEN (SELECT count(*) FROM true_pairs) = 0 THEN NULL
-                        ELSE ((SELECT count(*) FROM found) * 10000)
-                             // (SELECT count(*) FROM true_pairs) END
-                     AS recall_bp
-        """,
-        "cosine_neardup_lsh": _cosine_neardup_lsh_oracle_sql(),
-        "cosine_near_dedup": _cosine_near_dedup_oracle_sql(),
-        "cosine_near_dedup_cc": _cosine_near_dedup_cc_oracle_sql(),
-        "semdedup": _semdedup_oracle_sql(),
-        "semdedup_cluster_sizes": _semdedup_cluster_sizes_oracle_sql(),
-        "dsir_select": _dsir_select_oracle_sql(),
-        "media_features": _media_features_oracle_sql(),
-        "media_near_dedup": _media_near_dedup_oracle_sql(),
-        "media_dedup": """
-            WITH m AS (
-              SELECT 'media://synth/' || i AS media_ref,
-                     md5(upper(repeat(md5('media://synth/' || (i % 8)),
-                                      CAST(1 + i % 5 AS INTEGER)))) AS fingerprint
-              FROM range(64) t(i)
-            )
-            SELECT fingerprint, count(*) AS n_dups, min(media_ref) AS keeper_ref
-            FROM m GROUP BY fingerprint
-        """,
-        "media_resize": """
-            WITH refs AS (
-              SELECT 'media://synth/' || i AS media_ref, 1 + i % 5 AS reps
-              FROM range(64) t(i)
-            ), pay AS (
-              SELECT media_ref, repeat(unhex(md5(media_ref)), reps) AS payload
-              FROM refs
-            ), fp AS (
-              SELECT media_ref, md5(hex(payload)) AS fingerprint,
-                     CAST(octet_length(payload) AS BIGINT) AS n_bytes
-              FROM pay
-            )
-            SELECT media_ref, 128::INT AS width, 96::INT AS height,
-                   md5(fingerprint || ':128x96') AS thumb_fp, n_bytes
-            FROM fp
-        """,
-        "media_frames": """
-            WITH refs AS (
-              SELECT 'media://synth/' || i AS media_ref, 1 + i % 5 AS reps
-              FROM range(64) t(i)
-            )
-            SELECT media_ref,
-                   unnest(range(0, reps, 2))::INT AS frame_idx,
-                   md5(hex(unhex(md5(media_ref)))) AS frame_fp
-            FROM refs
-        """,
-        "extract_spans": f"""
-            SELECT doc_id, kind, text, media_ref, "order"
-            FROM read_parquet('{_golden_spans_parquet()}')
-        """,
-        "html_main_content": f"""
-            SELECT doc_id, main_text
-            FROM read_parquet('{_golden_main_content_parquet()}')
-        """,
-        "caption_pairs": f"""
-            WITH g AS (
-              SELECT doc_id, kind, text, media_ref, "order"
-              FROM read_parquet('{_golden_spans_parquet()}')
-            ), media AS (
-              SELECT doc_id, media_ref, "order" AS media_order
-              FROM g WHERE kind = 'image'
-            ), caps AS (
-              SELECT doc_id, "order" AS c_ord, text
-              FROM g WHERE kind <> 'image' AND length(trim(text)) > 0
-            ), best AS (
-              SELECT m.doc_id, m.media_order, c.c_ord, c.text,
-                     row_number() OVER (
-                       PARTITION BY m.doc_id, m.media_order
-                       ORDER BY abs(c.c_ord - m.media_order), c.c_ord
-                     ) AS rn
-              FROM media m JOIN caps c USING (doc_id)
-            )
-            SELECT m.doc_id, m.media_ref, m.media_order,
-                   b.c_ord AS caption_order, b.text AS caption,
-                   abs(b.c_ord - m.media_order) AS distance
-            FROM media m
-            LEFT JOIN (SELECT * FROM best WHERE rn = 1) b
-              ON b.doc_id = m.doc_id AND b.media_order = m.media_order
-        """,
-        "html_links": f"""
-            SELECT doc_id, span_offset, link_order, href, anchor
-            FROM read_parquet('{_golden_links_parquet()}')
-        """,
-        "interleave_profile": f"""
-            WITH g AS (
-              SELECT doc_id, "order",
-                     CASE WHEN kind = 'image' THEN 1 ELSE 0 END AS m
-              FROM read_parquet('{_golden_spans_parquet()}')
-            ), i AS (
-              SELECT doc_id, m,
-                     row_number() OVER (PARTITION BY doc_id ORDER BY "order")
-                   - row_number() OVER (PARTITION BY doc_id, m
-                                        ORDER BY "order") AS island
-              FROM g
-            ), runs AS (
-              SELECT doc_id, max(run)::BIGINT AS max_media_run
-              FROM (
-                SELECT doc_id, island, count(*) AS run
-                FROM i WHERE m = 1 GROUP BY 1, 2
-              ) GROUP BY 1
-            ), c AS (
-              SELECT doc_id, sum(1 - m)::BIGINT AS n_text,
-                     sum(m)::BIGINT AS n_media
-              FROM g GROUP BY 1
-            )
-            SELECT c.doc_id, n_text, n_media,
-                   (n_media * 10000) // (n_text + n_media) AS media_ratio_bp,
-                   coalesce(max_media_run, 0) AS max_media_run
-            FROM c LEFT JOIN runs USING (doc_id)
-        """,
-        "extract_kind_stats": f"""
-            SELECT kind, count(*) AS n_spans,
-                   CAST(sum(length(text)) AS BIGINT) AS total_chars
-            FROM read_parquet('{_golden_spans_parquet()}')
-            GROUP BY kind
-        """,
-        "compression_signals": f"""
-            SELECT doc_id, n_bytes, n_zlib
-            FROM read_parquet('{_golden_zlib_parquet()}')
-        """,
-        "semantic_decontaminate": """
-            WITH v AS (SELECT vec_id AS id, embedding AS e FROM embeddings),
-            ev AS (
-              SELECT id, e FROM v ORDER BY md5(id::VARCHAR), id LIMIT 8
-            ),
-            pool AS (
-              SELECT * FROM v WHERE id NOT IN (SELECT id FROM ev)
-            )
-            , contam AS (
-              SELECT DISTINCT p.id
-              FROM pool p, ev
-              WHERE round(
-                  list_sum(list_transform(range(1, 65),
-                    i -> p.e[i]::DOUBLE * ev.e[i]::DOUBLE))
-                  / (sqrt(list_sum(list_transform(range(1, 65),
-                       i -> p.e[i]::DOUBLE * p.e[i]::DOUBLE)))
-                   * sqrt(list_sum(list_transform(range(1, 65),
-                       i -> ev.e[i]::DOUBLE * ev.e[i]::DOUBLE)))), 6)
-                >= 0.27
-            )
-            SELECT id AS vec_id FROM pool
-            WHERE id NOT IN (SELECT id FROM contam)
-        """,
-        "nb_train_weights": f"""
-            WITH {_nb_weights_sql()}
-            SELECT bucket, weight_fp, rnk FROM (
-              SELECT bk AS bucket, weight_fp,
-                     row_number() OVER (ORDER BY weight_fp DESC, bk) AS rnk
-              FROM w
-            ) WHERE rnk <= 100
-        """,
-        "perceptron_train": _perceptron_sql(3, "weights"),
-        "perceptron_select": _perceptron_sql(3, "select"),
-        "nb_select": f"""
-            WITH {_nb_weights_sql()},
-            s AS (
-              SELECT fb.doc_id, sum(w.weight_fp)::BIGINT AS logit_fp
-              FROM fb JOIN w ON w.bk = fb.bk GROUP BY fb.doc_id
-            ), scored AS (
-              SELECT d.doc_id AS id, coalesce(s.logit_fp, 0) AS logit_fp
-              FROM documents d LEFT JOIN s ON s.doc_id = d.doc_id
-            )
-            SELECT id, logit_fp, rnk FROM (
-              SELECT *,
-                     row_number() OVER (ORDER BY logit_fp DESC, id) AS rnk
-              FROM scored
-            ) WHERE rnk <= 100
-        """,
-        "shard_manifest": f"""
-            WITH s AS (
-              SELECT CASE WHEN b < 8000 THEN 'train'
-                          WHEN b < 9000 THEN 'val'
-                          ELSE 'test' END AS split,
-                     doc_id, text, len({_TOK}) AS toks_n
-              FROM (
-                SELECT *,
-                       ('0x' || substring(md5('split' || doc_id), 1, 8))::BIGINT
-                         % 10000 AS b
-                FROM documents
-              )
-            )
-            SELECT split, count(*) AS n_docs,
-                   sum(toks_n)::BIGINT AS n_tokens,
-                   min(doc_id) AS min_id, max(doc_id) AS max_id,
-                   bit_xor(('0x' || substring(
-                       md5(doc_id::VARCHAR || ':' || text), 1, 15))::BIGINT)
-                     AS content_xor
-            FROM s GROUP BY split
-        """,
-        "vocab_distinct_est": f"""
-            WITH toks AS (
-              SELECT lang, unnest({_TOK}) AS tok FROM documents
-            ), s AS (
-              SELECT DISTINCT lang,
-                     ('0x' || substring(md5(tok), 1, 8))::BIGINT AS h
-              FROM toks
-              WHERE ('0x' || substring(md5(tok), 1, 8))::BIGINT < 268435456
-            ), est AS (
-              SELECT lang, count(*) AS n_sampled,
-                     (count(*) * 16)::BIGINT AS n_est
-              FROM s GROUP BY lang
-            ), ex AS (
-              SELECT lang, count(DISTINCT tok) AS n_exact
-              FROM toks GROUP BY lang
-            )
-            SELECT est.lang, n_sampled, n_est, n_exact
-            FROM est JOIN ex ON ex.lang = est.lang
-        """,
-        "vocab_overlap": f"""
-            WITH base AS (
-              SELECT CASE WHEN b < 8000 THEN 'train'
-                          WHEN b < 9000 THEN 'val'
-                          ELSE 'test' END AS split,
-                     text
-              FROM (
-                SELECT *,
-                       ('0x' || substring(md5('split' || doc_id), 1, 8))::BIGINT
-                         % 10000 AS b
-                FROM documents
-              )
-            ), toks AS (
-              SELECT split, unnest({_TOK}) AS tok FROM base
-            ), s AS (
-              SELECT DISTINCT split,
-                     ('0x' || substring(md5(tok), 1, 8))::BIGINT AS h
-              FROM toks
-              WHERE ('0x' || substring(md5(tok), 1, 8))::BIGINT < 536870912
-            ), sz AS (
-              SELECT split, count(*) AS n FROM s GROUP BY split
-            ), inter AS (
-              SELECT a.split AS set_a, b.split AS set_b,
-                     count(*) AS n_inter
-              FROM s a JOIN s b ON a.h = b.h AND a.split < b.split
-              GROUP BY 1, 2
-            )
-            SELECT set_a, set_b, n_inter,
-                   (na.n + nb.n - n_inter)::BIGINT AS n_union,
-                   floor(1000.0 * n_inter / (na.n + nb.n - n_inter))::BIGINT
-                     AS jaccard_pm
-            FROM inter
-            JOIN sz na ON na.split = set_a
-            JOIN sz nb ON nb.split = set_b
-        """,
-        "data_card": f"""
-            WITH s AS (
-              SELECT lang,
-                     CASE WHEN b < 8000 THEN 'train'
-                          WHEN b < 9000 THEN 'val'
-                          ELSE 'test' END AS split,
-                     len({_TOK}) AS toks_n, n_chars
-              FROM (
-                SELECT *,
-                       ('0x' || substring(md5('split' || doc_id), 1, 8))::BIGINT
-                         % 10000 AS b
-                FROM documents
-              )
-            )
-            SELECT lang, split, count(*) AS docs,
-                   sum(toks_n)::BIGINT AS tokens,
-                   sum(n_chars)::BIGINT AS chars
-            FROM s GROUP BY CUBE (lang, split)
-        """,
-        "bpe_train": _bpe_train_oracle(6),
-        "bpe_vocab_stats": _bpe_vocab_stats_oracle(6, 30),
-        "bpe_encode": _bpe_encode_oracle(6),
-        "bpe_apply": _bpe_apply_oracle(6),
-        "wordpiece_train": _wordpiece_train_oracle(6),
-        "wordpiece_encode": _wordpiece_encode_oracle(6, 6),
-        "unigram_segment": _unigram_segment_oracle(6, 8),
-        "zipf_spectrum": f"""
-            WITH v AS (
-              SELECT w, count(*)::BIGINT AS c
-              FROM (SELECT unnest({_TOK}) AS w FROM documents)
-              GROUP BY w
-            )
-            SELECT {_hb_wide_sql("c")} AS hb_band,
-                   count(*)::BIGINT AS n_words,
-                   sum(c)::BIGINT AS tokens,
-                   min(c)::BIGINT AS min_count,
-                   max(c)::BIGINT AS max_count
-            FROM v GROUP BY 1 ORDER BY 1
-        """,
-        "kmeans_train": _kmeans_oracle(8, 3, 20),
-        "pq_train": _pq_train_oracle(8, 16, 64, 2, 20),
-        "tokenized_pack": _bpe_rounds_cte(6) + f"""
-            , seg AS (
-              SELECT array_to_string(syms, '') AS w, len(syms)::BIGINT AS ns
-              FROM v6
-            ), cnts AS (
-              SELECT d.doc_id AS id, coalesce(x.bt, 0)::BIGINT AS bpe_tokens
-              FROM documents d LEFT JOIN (
-                SELECT doc_id, sum(ns)::BIGINT AS bt
-                FROM (SELECT doc_id, unnest({_TOK}) AS w FROM documents) t
-                JOIN seg USING (w) GROUP BY doc_id
-              ) x ON x.doc_id = d.doc_id
-            ), s AS (
-              SELECT id, bpe_tokens AS tokens,
-                     ('0x' || substring(md5('pack' || id), 1, 8))::BIGINT
-                       % 16 AS shard_group,
-                     sum(bpe_tokens) OVER (
-                       PARTITION BY ('0x' || substring(md5('pack' || id),
-                                                       1, 8))::BIGINT % 16
-                       ORDER BY id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     )::BIGINT AS cum
-              FROM cnts
-            ), nz AS (
-              SELECT id, tokens, shard_group, cum, cum - tokens AS strt
-              FROM s WHERE tokens > 0
-            ), pieces AS (
-              SELECT id, tokens, shard_group, strt,
-                     unnest(generate_series(floor(strt / 512)::BIGINT,
-                                            floor((cum - 1) / 512)::BIGINT))
-                       AS seq_idx
-              FROM nz
-            )
-            SELECT id, tokens, shard_group, seq_idx,
-                   greatest(0, seq_idx * 512 - strt)::BIGINT AS begin_tok,
-                   least(tokens, (seq_idx + 1) * 512 - strt)::BIGINT AS end_tok
-            FROM pieces
-        """,
-        "curriculum_shards": f"""
-            WITH t AS (
-              SELECT doc_id,
-                     len({_TOK}) AS n_tokens,
-                     len(list_filter({_TOK},
-                         t -> list_contains(
-                           ['the','a','of','and','to','in','is'], t)))
-                       AS n_stop
-              FROM documents
-            ), ph AS (
-              SELECT doc_id, n_tokens,
-                     CASE WHEN n_stop * 10 >= n_tokens * 2
-                               AND n_tokens >= 30 THEN 2
-                          WHEN n_stop * 20 >= n_tokens THEN 1
-                          ELSE 0 END AS phase
-              FROM t
-            )
-            SELECT doc_id, phase, n_tokens AS tokens,
-                   ('0x' || substring(md5('cur' || phase || doc_id), 1, 8))
-                     ::BIGINT % 16 AS shard_group,
-                   floor((sum(n_tokens) OVER (
-                       PARTITION BY phase,
-                         ('0x' || substring(md5('cur' || phase || doc_id),
-                                            1, 8))::BIGINT % 16
-                       ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) - n_tokens) / 2000)::BIGINT AS shard_idx
-            FROM ph
-        """,
-        "heaps_law": f"""
-            WITH d AS (
-              SELECT CASE WHEN b < 100 THEN 0
-                          WHEN b < 1000 THEN 1
-                          ELSE 2 END AS tier,
-                     {_TOK} AS tok
-              FROM (
-                SELECT ('0x' || substring(md5('heaps' || doc_id), 1, 8))::BIGINT
-                         % 10000 AS b,
-                       text
-                FROM documents
-              )
-            ), per_tier AS (
-              SELECT tier, count(*)::BIGINT AS docs,
-                     sum(len(tok))::BIGINT AS tokens
-              FROM d GROUP BY tier
-            ), fs AS (
-              SELECT tier, count(*)::BIGINT AS words FROM (
-                SELECT w, min(tier) AS tier
-                FROM (SELECT tier, unnest(tok) AS w FROM d)
-                GROUP BY w
-              ) GROUP BY tier
-            ), base AS (
-              SELECT * FROM (VALUES (0, 10000), (1, 100000), (2, 1000000))
-                AS t(tier, frac_ppm)
-            )
-            SELECT frac_ppm,
-                   sum(coalesce(docs, 0)) OVER (ORDER BY tier)::BIGINT AS docs,
-                   sum(coalesce(tokens, 0)) OVER (ORDER BY tier)::BIGINT
-                     AS tokens,
-                   sum(coalesce(words, 0)) OVER (ORDER BY tier)::BIGINT
-                     AS distinct_words
-            FROM base LEFT JOIN per_tier USING (tier) LEFT JOIN fs USING (tier)
-            ORDER BY frac_ppm
-        """,
-        "bpe_fertility": _bpe_rounds_cte(6) + """
-            , seg AS (
-              SELECT array_to_string(syms, '') AS w, len(syms)::BIGINT AS ns
-              FROM v6
-            ), stream AS (
-              SELECT lang, count(*)::BIGINT AS words, sum(ns)::BIGINT AS symbols
-              FROM (SELECT lang, unnest(""" + _TOK + """) AS w FROM documents) t
-              JOIN seg USING (w)
-              GROUP BY lang
-            ), dd AS (
-              SELECT lang, count(*)::BIGINT AS docs FROM documents GROUP BY lang
-            )
-            SELECT dd.lang, dd.docs,
-                   coalesce(words, 0) AS words,
-                   coalesce(symbols, 0) AS symbols,
-                   CASE WHEN coalesce(words, 0) > 0
-                        THEN floor(symbols * 1000000 / words)::BIGINT
-                   END AS fertility_ppm
-            FROM dd LEFT JOIN stream USING (lang)
-        """,
-        "tfidf_related": f"""
-            WITH tok AS (
-              SELECT doc_id AS id, unnest({_TOK}) AS term FROM documents
-            ), tf AS (
-              SELECT id, term, count(*)::BIGINT AS tf FROM tok GROUP BY 1, 2
-            ), dfq AS (
-              SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1
-            ), nn AS (
-              SELECT count(*)::BIGINT AS n FROM documents
-            ), wp AS (
-              -- 1+hb(tf) = length(bin(tf*tf)); hb(n)-hb(df) collapses to
-              -- a length difference (the ops.dsir half-bit identity)
-              SELECT id, term, w FROM (
-                SELECT id, term,
-                       (length(bin((tf * tf)::BIGINT))
-                        * (length(bin((n * n)::BIGINT))
-                           - length(bin((df * df)::BIGINT))))::BIGINT AS w
-                FROM tf JOIN dfq USING (term), nn
-                WHERE df <= floor(0.25 * n)
-              ) WHERE w > 0
-            ), nrm AS (
-              SELECT id, sum(w * w)::BIGINT AS n2 FROM wp GROUP BY id
-            ), dots AS (
-              SELECT a.id AS a, b.id AS b, sum(a.w * b.w)::BIGINT AS dot
-              FROM wp a JOIN wp b ON a.term = b.term AND a.id < b.id
-              GROUP BY 1, 2
-            ), sym AS (
-              SELECT a, b, dot FROM dots
-              UNION ALL SELECT b AS a, a AS b, dot FROM dots
-            ), ranked AS (
-              SELECT s.a, s.b, s.dot,
-                     round(s.dot / sqrt(na.n2::DOUBLE * nb.n2::DOUBLE), 6)
-                       AS sim,
-                     row_number() OVER (PARTITION BY s.a
-                                        ORDER BY s.dot DESC, s.b) AS rnk
-              FROM sym s
-              JOIN nrm na ON na.id = s.a
-              JOIN nrm nb ON nb.id = s.b
-            )
-            SELECT a, b, dot, sim, rnk FROM ranked WHERE rnk <= 3
-        """,
-        "hybrid_search": f"""
-            WITH tfd AS (
-              SELECT doc_id, len({_TOK}) AS dl,
-                     len(list_filter({_TOK}, t -> t = 'spark')) AS tf0,
-                     len(list_filter({_TOK}, t -> t = 'join')) AS tf1
-              FROM documents
-            ), stats AS (
-              SELECT count(*) AS n, sum(dl) AS sumdl,
-                     sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                     sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1
-              FROM tfd
-            ), bm AS (
-              SELECT doc_id,
-                     round(
-                       ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0 * 2.2
-                         / (tf0 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n)))
-                     + ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1 * 2.2
-                         / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n))),
-                     6) AS bm25
-              FROM tfd, stats
-              WHERE tf0 > 0 OR tf1 > 0
-            ), lex AS (
-              SELECT doc_id,
-                     row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rank
-              FROM bm QUALIFY rank <= 50
-            ), q AS (
-              SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0
-            ), cos AS (
-              SELECT e.vec_id AS doc_id,
-                     round(
-                       list_sum(list_transform(range(1, 65),
-                         i -> e.embedding[i]::DOUBLE * q.qvec[i]::DOUBLE))
-                       / (sqrt(list_sum(list_transform(range(1, 65),
-                            i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))
-                        * sqrt(list_sum(list_transform(range(1, 65),
-                            i -> q.qvec[i]::DOUBLE * q.qvec[i]::DOUBLE)))),
-                     6) AS cs
-              FROM embeddings e CROSS JOIN q
-              WHERE e.vec_id <> 0
-            ), sem AS (
-              SELECT doc_id,
-                     row_number() OVER (ORDER BY cs DESC, doc_id) AS rank
-              FROM cos QUALIFY rank <= 50
-            ), u AS (
-              SELECT doc_id, rank FROM lex
-              UNION ALL SELECT doc_id, rank FROM sem
-            )
-            SELECT doc_id,
-                   sum(1000000000 // (60 + rank))::BIGINT AS rrf,
-                   count(*) AS n_arms
-            FROM u GROUP BY doc_id
-            ORDER BY rrf DESC, doc_id LIMIT 25
-        """,
-        "mmr_rerank": _mmr_oracle_sql(),
-        "ndcg_eval": _ndcg_oracle_sql(),
-        "hard_negatives": """
-            WITH q AS (
-              SELECT vec_id AS query_id, embedding AS qvec, label AS qlabel
-              FROM embeddings WHERE vec_id < 5
-            ),
-            scored AS (
-              SELECT q.query_id, q.qlabel, e.vec_id AS neighbor_id, e.label,
-                     round(
-                       list_sum(list_transform(range(1, 65),
-                         i -> e.embedding[i]::DOUBLE * q.qvec[i]::DOUBLE))
-                       / (sqrt(list_sum(list_transform(range(1, 65),
-                            i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))
-                        * sqrt(list_sum(list_transform(range(1, 65),
-                            i -> q.qvec[i]::DOUBLE * q.qvec[i]::DOUBLE)))),
-                     6) AS cos
-              FROM embeddings e CROSS JOIN q
-              WHERE e.vec_id <> q.query_id
-            ),
-            ranked AS (
-              SELECT query_id, qlabel, neighbor_id, label, cos,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, neighbor_id) AS rnk
-              FROM scored QUALIFY rnk <= 50
-            ),
-            negs AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, neighbor_id)
-                       AS neg_rank
-              FROM ranked WHERE label <> qlabel
-            )
-            SELECT query_id, neighbor_id, cos, neg_rank
-            FROM negs WHERE neg_rank <= 5
-            ORDER BY query_id, neg_rank
-        """,
-        "weighted_sample": """
-            WITH pr AS (
-              SELECT doc_id, n_chars,
-                     round(
-                       ln((('0x' || substring(md5('wsample' || doc_id), 1, 8))::BIGINT
-                           % 10000 + 1)::DOUBLE / 10001.0)
-                       / n_chars::DOUBLE,
-                     6) AS priority
-              FROM documents
-              WHERE n_chars::DOUBLE > 0
-            )
-            SELECT doc_id, n_chars
-            FROM pr
-            ORDER BY priority DESC, doc_id LIMIT 100
-        """,
-        "mrr_eval": """
-            WITH q AS (
-              SELECT vec_id AS query_id, embedding AS qvec, label AS qlabel
-              FROM embeddings WHERE vec_id < 5
-            ),
-            scored AS (
-              SELECT q.query_id, e.vec_id AS doc_id,
-                     round(
-                       list_sum(list_transform(range(1, 65),
-                         i -> e.embedding[i]::DOUBLE * q.qvec[i]::DOUBLE))
-                       / (sqrt(list_sum(list_transform(range(1, 65),
-                            i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))
-                        * sqrt(list_sum(list_transform(range(1, 65),
-                            i -> q.qvec[i]::DOUBLE * q.qvec[i]::DOUBLE)))),
-                     6) AS cos
-              FROM embeddings e CROSS JOIN q
-              WHERE e.vec_id <> q.query_id
-            ),
-            ranked AS (
-              SELECT query_id, doc_id,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, doc_id) AS rnk
-              FROM scored QUALIFY rnk <= 10
-            ),
-            rels AS (
-              SELECT q.query_id, e.vec_id AS doc_id
-              FROM embeddings e CROSS JOIN q
-              WHERE e.vec_id <> q.query_id AND e.label = q.qlabel
-            ),
-            hits AS (
-              SELECT r.query_id, min(r.rnk)::BIGINT AS first_rel_rank
-              FROM ranked r JOIN rels USING (query_id, doc_id)
-              GROUP BY r.query_id
-            )
-            SELECT a.query_id, h.first_rel_rank,
-                   coalesce(1000000 // h.first_rel_rank, 0)::BIGINT AS rr_ppm
-            FROM (SELECT DISTINCT query_id FROM ranked) a
-            LEFT JOIN hits h USING (query_id)
-        """,
-        "event_transitions": """
-            WITH p AS (
-              SELECT lag(event_type) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id)
-                       AS from_type,
-                     event_type AS to_type
-              FROM events
-            )
-            SELECT from_type, to_type, count(*) AS transitions
-            FROM p WHERE from_type IS NOT NULL
-            GROUP BY 1, 2 ORDER BY 1, 2
-        """,
-        "group_split": """
-            WITH s AS (
-              SELECT source,
-                     CASE WHEN b < 8000 THEN 'train'
-                          WHEN b < 9000 THEN 'val'
-                          ELSE 'test' END AS split
-              FROM (
-                SELECT doc_id, source,
-                       ('0x' || substring(md5('split' || source), 1, 8))::BIGINT
-                         % 10000 AS b
-                FROM documents
-              )
-            )
-            SELECT split, source, count(*) AS docs
-            FROM s GROUP BY split, source
-            ORDER BY split, source
-        """,
-        "length_outliers": """
-            WITH ranked AS (
-              SELECT lang, n_chars,
-                     row_number() OVER (PARTITION BY lang
-                                        ORDER BY n_chars) AS rn,
-                     count(*) OVER (PARTITION BY lang) AS n
-              FROM documents WHERE n_chars IS NOT NULL
-            ), q AS (
-              SELECT lang,
-                     max(CASE WHEN rn = (25 * n + 99) // 100
-                              THEN n_chars END) AS q1,
-                     max(CASE WHEN rn = (75 * n + 99) // 100
-                              THEN n_chars END) AS q3
-              FROM ranked GROUP BY lang
-            ), fences AS (
-              SELECT lang, q1, q3,
-                     (q1 - (15 * (q3 - q1)) // 10)::BIGINT AS lo,
-                     (q3 + (15 * (q3 - q1)) // 10)::BIGINT AS hi
-              FROM q
-            )
-            SELECT d.lang, f.q1, f.q3, f.lo, f.hi,
-                   sum(CASE WHEN d.n_chars < f.lo OR d.n_chars > f.hi
-                            THEN 1 ELSE 0 END)::BIGINT AS outliers,
-                   count(*) AS docs
-            FROM documents d JOIN fences f USING (lang)
-            GROUP BY d.lang, f.q1, f.q3, f.lo, f.hi
-            ORDER BY d.lang
-        """,
-        "fuzzy_source_pairs": """
-            WITH s AS (SELECT DISTINCT source FROM documents),
-            g AS (
-              SELECT source, length(source) AS len,
-                     unnest(list_distinct(list_transform(
-                       range(1, greatest(length(source) - 1, 0) + 1),
-                       i -> substring(source, i, 2)))) AS gram
-              FROM s
-            ), cand AS (
-              SELECT DISTINCT a.source AS a_id, b.source AS b_id,
-                     a.source AS ta, b.source AS tb
-              FROM g a JOIN g b ON a.gram = b.gram
-              WHERE a.source < b.source AND abs(a.len - b.len) <= 1
-            )
-            SELECT a_id, b_id, levenshtein(ta, tb) AS dist
-            FROM cand
-            WHERE levenshtein(ta, tb) <= 1
-        """,
-        "length_percentiles": """
-            WITH ranked AS (
-              SELECT lang, n_chars,
-                     row_number() OVER (PARTITION BY lang
-                                        ORDER BY n_chars) AS rn,
-                     count(*) OVER (PARTITION BY lang) AS n
-              FROM documents WHERE n_chars IS NOT NULL
-            ), t AS (
-              SELECT lang, n_chars AS value, rn, n,
-                     unnest([struct_pack(p := 50, r := (50 * n + 99) // 100),
-                             struct_pack(p := 90, r := (90 * n + 99) // 100),
-                             struct_pack(p := 99, r := (99 * n + 99) // 100)])
-                       AS tgt
-              FROM ranked
-            )
-            SELECT lang, tgt.p AS p, value
-            FROM t WHERE tgt.r = rn
-            ORDER BY lang, p
-        """,
-        "funnel": """
-            WITH s1 AS (
-              SELECT user_id, min(ts) AS t FROM events
-              WHERE event_type = 'view' GROUP BY user_id
-            ), s2 AS (
-              SELECT e.user_id, min(e.ts) AS t
-              FROM events e JOIN s1 ON s1.user_id = e.user_id AND e.ts > s1.t
-              WHERE e.event_type = 'click' GROUP BY e.user_id
-            ), s3 AS (
-              SELECT e.user_id, min(e.ts) AS t
-              FROM events e JOIN s2 ON s2.user_id = e.user_id AND e.ts > s2.t
-              WHERE e.event_type = 'purchase' GROUP BY e.user_id
-            ), c AS (
-              SELECT 1 AS step, 'view' AS event_type,
-                     (SELECT count(*) FROM s1) AS users
-              UNION ALL
-              SELECT 2, 'click', (SELECT count(*) FROM s2)
-              UNION ALL
-              SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-            )
-            SELECT step, event_type, users::BIGINT AS users,
-                   (CASE WHEN (SELECT count(*) FROM s1) > 0
-                         THEN users * 10000 // (SELECT count(*) FROM s1)
-                         ELSE 0 END)::BIGINT AS conversion_bp
-            FROM c
-        """,
-        "cohort_retention": """
-            WITH frst AS (
-              SELECT user_id, date_trunc('day', min(ts)) AS cohort_day
-              FROM events GROUP BY user_id
-            ), active AS (
-              SELECT DISTINCT user_id, date_trunc('day', ts) AS dy
-              FROM events
-            )
-            SELECT f.cohort_day,
-                   date_diff('day', f.cohort_day, a.dy)::BIGINT AS day_offset,
-                   count(DISTINCT a.user_id)::BIGINT AS users
-            FROM active a JOIN frst f USING (user_id)
-            GROUP BY 1, 2
-            ORDER BY 1, 2
-        """,
-        "prf_search": f"""
-            WITH tfd AS (
-              SELECT doc_id, {_TOK} AS toks, len({_TOK}) AS dl,
-                     len(list_filter({_TOK}, t -> t = 'spark')) AS tf0,
-                     len(list_filter({_TOK}, t -> t = 'join')) AS tf1
-              FROM documents
-            ), stats0 AS (
-              SELECT count(*) AS n, sum(dl) AS sumdl,
-                     sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                     sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1
-              FROM tfd
-            ), bm AS (
-              SELECT doc_id,
-                     round(
-                       ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0 * 2.2
-                         / (tf0 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n)))
-                     + ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1 * 2.2
-                         / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n))),
-                     6) AS bm25
-              FROM tfd, stats0
-              WHERE tf0 > 0 OR tf1 > 0
-            ), top AS (
-              SELECT doc_id, round(bm25 * 1000000)::BIGINT AS s_e6
-              FROM bm ORDER BY bm25 DESC, doc_id LIMIT 10
-            ), fbtoks AS (
-              SELECT t.doc_id, top.s_e6, t.dl, unnest(t.toks) AS term
-              FROM tfd t JOIN top USING (doc_id)
-              WHERE t.dl > 0
-            ), fbtf AS (
-              SELECT doc_id, s_e6, dl, term, count(*) AS tf
-              FROM fbtoks GROUP BY doc_id, s_e6, dl, term
-            ), expn AS (
-              SELECT term
-              FROM (
-                SELECT term, sum((tf * s_e6 * 1000) // dl) AS weight
-                FROM fbtf
-                WHERE term NOT IN ('spark', 'join')
-                GROUP BY term
-                ORDER BY weight DESC, term LIMIT 5
-              )
-            ), terms AS (
-              SELECT term FROM expn
-              UNION
-              SELECT unnest(['spark', 'join']) AS term
-            ), hits AS (
-              SELECT t.doc_id, u.term, count(*) AS tf
-              FROM (SELECT doc_id, unnest(toks) AS term FROM tfd) u
-              JOIN tfd t ON t.doc_id = u.doc_id
-              JOIN terms USING (term)
-              GROUP BY t.doc_id, u.term
-            ), stats AS (
-              SELECT count(*) AS n, sum(dl) AS sumdl FROM tfd
-            ), dfreq AS (
-              SELECT term, count(DISTINCT doc_id) AS dft
-              FROM hits GROUP BY term
-            )
-            SELECT h.doc_id,
-                   sum(round(
-                     ln(1 + (n - dft + 0.5) / (dft + 0.5)) * h.tf * 2.2
-                       / (h.tf + 1.2 * (1 - 0.75 + 0.75 * t.dl / (sumdl * 1.0 / n)))
-                     * 1000000)::BIGINT)::BIGINT AS bm25_e6,
-                   count(*) AS n_terms_hit
-            FROM hits h
-            JOIN tfd t USING (doc_id)
-            JOIN dfreq USING (term), stats
-            GROUP BY h.doc_id
-            ORDER BY bm25_e6 DESC, h.doc_id LIMIT 20
-        """,
-        "ql_scores": f"""
-            WITH tfd AS (
-              SELECT doc_id, len({_TOK}) AS dl,
-                     len(list_filter({_TOK}, t -> t = 'spark')) AS tf0,
-                     len(list_filter({_TOK}, t -> t = 'join')) AS tf1
-              FROM documents
-            ), stats AS (
-              SELECT sum(dl) AS ctot, sum(tf0) AS cf0, sum(tf1) AS cf1
-              FROM tfd
-            )
-            SELECT doc_id,
-                   round(
-                     (CASE WHEN tf0::DOUBLE + 2000.0 *
-                            (CASE WHEN coalesce(ctot, 0) > 0
-                                  THEN cf0::DOUBLE / ctot ELSE 0.0 END) > 0
-                           THEN ln((tf0::DOUBLE + 2000.0 *
-                            (CASE WHEN coalesce(ctot, 0) > 0
-                                  THEN cf0::DOUBLE / ctot ELSE 0.0 END))
-                                / (dl::DOUBLE + 2000.0))
-                           ELSE 0.0 END)
-                   + (CASE WHEN tf1::DOUBLE + 2000.0 *
-                            (CASE WHEN coalesce(ctot, 0) > 0
-                                  THEN cf1::DOUBLE / ctot ELSE 0.0 END) > 0
-                           THEN ln((tf1::DOUBLE + 2000.0 *
-                            (CASE WHEN coalesce(ctot, 0) > 0
-                                  THEN cf1::DOUBLE / ctot ELSE 0.0 END))
-                                / (dl::DOUBLE + 2000.0))
-                           ELSE 0.0 END),
-                   6) AS ql
-            FROM tfd, stats
-            WHERE tf0 > 0 OR tf1 > 0
-        """,
-        "ltr_features": f"""
-            WITH tfd AS (
-              SELECT doc_id, len({_TOK}) AS dl,
-                     len(list_filter({_TOK}, t -> t = 'spark')) AS tf0,
-                     len(list_filter({_TOK}, t -> t = 'join')) AS tf1
-              FROM documents
-            ), stats AS (
-              SELECT count(*) AS n, sum(dl) AS sumdl,
-                     sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                     sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1
-              FROM tfd
-            ), bm AS (
-              SELECT doc_id,
-                     round(
-                       ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0 * 2.2
-                         / (tf0 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n)))
-                     + ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1 * 2.2
-                         / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n))),
-                     6) AS bm25
-              FROM tfd, stats
-              WHERE tf0 > 0 OR tf1 > 0
-            ), toked AS (
-              SELECT doc_id, {_TOK} AS toks FROM documents
-            ), pos0 AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       list_transform(range(1, len(toks) + 1),
-                                      i -> struct_pack(p := i - 1, term := toks[i])),
-                       s -> s.term IN ('join', 'spark'))) AS s
-              FROM toked
-            ), pos AS (
-              SELECT doc_id, s.p AS p, s.term AS term FROM pos0
-            ), covered AS (
-              SELECT doc_id, p,
-                     max(CASE WHEN term = 'join' THEN p END) OVER w AS l0,
-                     max(CASE WHEN term = 'spark' THEN p END) OVER w AS l1
-              FROM pos
-              WINDOW w AS (PARTITION BY doc_id ORDER BY p
-                           ROWS UNBOUNDED PRECEDING)
-            ), cd AS (
-              SELECT doc_id,
-                     round(2.0 / min(p - least(l0, l1) + 1), 6) AS rank_cd
-              FROM covered
-              WHERE l0 IS NOT NULL AND l1 IS NOT NULL
-              GROUP BY doc_id
-            ), attrs AS (
-              SELECT doc_id, len({_TOK}) AS n_tokens,
-                     CASE WHEN len(list_distinct(list_concat({grams}, {q_grams_sql}))) > 0
-                          THEN round(len(list_intersect({grams}, {q_grams_sql})) * 1.0
-                               / len(list_distinct(list_concat({grams}, {q_grams_sql}))), 6)
-                          ELSE 0.0 END AS tri_sim
-              FROM documents
-            ), q AS (
-              SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0
-            ), cosd AS (
-              SELECT e.vec_id AS doc_id,
-                     round(
-                       list_sum(list_transform(range(1, 65),
-                         i -> e.embedding[i]::DOUBLE * q.qvec[i]::DOUBLE))
-                       / (sqrt(list_sum(list_transform(range(1, 65),
-                            i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))
-                        * sqrt(list_sum(list_transform(range(1, 65),
-                            i -> q.qvec[i]::DOUBLE * q.qvec[i]::DOUBLE)))),
-                     6) AS cos
-              FROM embeddings e CROSS JOIN q WHERE e.vec_id <> 0
-            )
-            SELECT b.doc_id, b.bm25,
-                   coalesce(cd.rank_cd, 0.0) AS rank_cd,
-                   a.tri_sim, a.n_tokens,
-                   coalesce(cosd.cos, 0.0) AS cos
-            FROM bm b
-            JOIN attrs a USING (doc_id)
-            LEFT JOIN cd USING (doc_id)
-            LEFT JOIN cosd USING (doc_id)
-        """,
-        "prf_terms": f"""
-            WITH tfd AS (
-              SELECT doc_id, {_TOK} AS toks, len({_TOK}) AS dl,
-                     len(list_filter({_TOK}, t -> t = 'spark')) AS tf0,
-                     len(list_filter({_TOK}, t -> t = 'join')) AS tf1
-              FROM documents
-            ), stats AS (
-              SELECT count(*) AS n, sum(dl) AS sumdl,
-                     sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                     sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1
-              FROM tfd
-            ), bm AS (
-              SELECT doc_id,
-                     round(
-                       ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0 * 2.2
-                         / (tf0 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n)))
-                     + ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1 * 2.2
-                         / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / (sumdl * 1.0 / n))),
-                     6) AS bm25
-              FROM tfd, stats
-              WHERE tf0 > 0 OR tf1 > 0
-            ), top AS (
-              SELECT doc_id, round(bm25 * 1000000)::BIGINT AS s_e6
-              FROM bm ORDER BY bm25 DESC, doc_id LIMIT 10
-            ), toks AS (
-              SELECT t.doc_id, top.s_e6, t.dl, unnest(t.toks) AS term
-              FROM tfd t JOIN top USING (doc_id)
-              WHERE t.dl > 0
-            ), tf AS (
-              SELECT doc_id, s_e6, dl, term, count(*) AS tf
-              FROM toks GROUP BY doc_id, s_e6, dl, term
-            )
-            SELECT term, sum((tf * s_e6 * 1000) // dl)::BIGINT AS weight
-            FROM tf
-            WHERE term NOT IN ('spark', 'join')
-            GROUP BY term
-            ORDER BY weight DESC, term LIMIT 5
-        """,
-    }
-
-
-def _websearch_oracle_sql(q: str) -> str:
-    """The same websearch parse compiled to DuckDB SQL (search/websearch.py
-    emits both the Catalyst predicate and this SQL twin from one parse)."""
-    from ocr_search_spark.search.websearch import (
-        parse_websearch,
-        token_string_sql,
-        websearch_sql,
-    )
-
-    pred = websearch_sql(parse_websearch(q), "toks", "tokstr")
-    return f"""
-        WITH t AS (SELECT doc_id, {_TOK} AS toks FROM documents),
-             s AS (SELECT doc_id, toks,
-                          {token_string_sql('toks')} AS tokstr
-                   FROM t)
-        SELECT doc_id FROM s WHERE {pred}
-    """
-
-
-def _repetition_signals_oracle_sql() -> str:
-    """Twin of ops.text_analysis.repetition_signals (full Gopher set):
-    n-gram char coverage via a lexicographic (cnt, chars) struct max —
-    identical tie-break order in both engines — plus duplicate-line /
-    duplicate-paragraph character sums."""
-
-    def gram(k: int) -> str:
-        parts = " || ' ' || ".join(f"toks[i + {j}]" for j in range(k))
-        return (
-            f"CASE WHEN len(toks) >= {k} "
-            f"THEN list_transform(range(1, len(toks) - {k - 2}), i -> {parts}) "
-            f"ELSE []::VARCHAR[] END"
-        )
-
-    def top(col: str, field: str) -> str:
-        return (
-            f"coalesce((list_max(list_transform(list_distinct({col}), x -> "
-            f"{{'cnt': len(list_filter({col}, y -> y = x))::BIGINT, "
-            f"'chars': (len(list_filter({col}, y -> y = x)) * length(x))::BIGINT"
-            f"}})))['{field}'], 0)"
-        )
-
-    def total(col: str) -> str:
-        return (
-            f"coalesce(CAST(list_sum(list_transform({col}, x -> length(x))) "
-            f"AS BIGINT), 0)"
-        )
-
-    def dup(col: str) -> str:
-        return (
-            f"coalesce(CAST(list_sum(list_transform(list_distinct({col}), x -> "
-            f"CASE WHEN len(list_filter({col}, y -> y = x)) >= 2 "
-            f"THEN len(list_filter({col}, y -> y = x)) * length(x) "
-            f"ELSE 0 END)) AS BIGINT), 0)"
-        )
-
-    return f"""
-        WITH toked AS (
-          SELECT doc_id, text, {_TOK} AS toks FROM documents
-        ), arrays AS (
-          SELECT doc_id,
-                 len(toks) AS n_tokens,
-                 len(list_distinct(toks)) AS n_distinct_tok,
-                 length(text) AS n_chars,
-                 {gram(2)} AS g2,
-                 {gram(3)} AS g3,
-                 {gram(4)} AS g4,
-                 list_filter(string_split(text, chr(10)), x -> x <> '') AS lines,
-                 list_filter(string_split(text, chr(10) || chr(10)), x -> x <> '') AS paras
-          FROM toked
-        )
-        SELECT doc_id, n_tokens, n_distinct_tok, n_chars,
-               len(g2) AS n_bigrams,
-               {top("g2", "cnt")} AS top_bigram_count,
-               {top("g2", "chars")} AS top2_chars,
-               {top("g3", "chars")} AS top3_chars,
-               {top("g4", "chars")} AS top4_chars,
-               len(lines) AS n_lines,
-               {total("lines")} AS line_chars,
-               {dup("lines")} AS dup_line_chars,
-               len(paras) AS n_paras,
-               {total("paras")} AS para_chars,
-               {dup("paras")} AS dup_para_chars
-        FROM arrays
-    """
-
-
-def _training_corpus_cc_oracle_sql(threshold: float = 0.3) -> str:
-    """Full-pipeline twin: quality gate ∧ Gopher gate (IN-subquery over the
-    repetition oracle) → LSH+verify pairs → recursive-CTE closure →
-    cluster survivors → md5 hash split."""
-    sigs = ", ".join(
-        f"list_min(list_transform(shingles, s -> md5('{i}:' || s))) AS mh{i}"
-        for i in range(8)
-    )
-    bands = " UNION ALL ".join(
-        f"SELECT id, {b} AS band, md5(mh{b} || '|' || mh{b + 1}) AS bucket "
-        f"FROM sig WHERE mh{b} IS NOT NULL"
-        for b in range(0, 8, 2)
-    )
-    gopher = f"""
-            WITH r AS ({_repetition_signals_oracle_sql()})
-            SELECT doc_id FROM r
-            WHERE top2_chars * 100 <= n_chars * 20
-              AND top3_chars * 100 <= n_chars * 18
-              AND top4_chars * 100 <= n_chars * 16
-              AND dup_line_chars * 100 <= line_chars * 20
-              AND dup_para_chars * 100 <= para_chars * 20
-    """
-    return f"""
-        WITH RECURSIVE t AS (
-          SELECT doc_id, text,
-                 len({_TOK}) AS n_tokens,
-                 len(list_filter({_TOK},
-                     t -> list_contains(['the','a','of','and','to','in','is'], t))) AS n_stop,
-                 length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
-                 len(list_intersect(list_distinct({_TOK}), ['the','a','of'])) AS en_votes
-          FROM documents
-        ), gated AS (
-          SELECT doc_id, text FROM t
-          WHERE n_tokens >= 30 AND n_stop * 20 >= n_tokens
-            AND n_punct * 10 <= n_tokens * 3 AND en_votes > 0
-            AND doc_id IN ({gopher})
-        ), sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, greatest(len({_TOK}) - 1, 1)),
-                   i -> array_to_string(list_slice({_TOK}, i, i + 2), ' ')
-                 )) AS shingles
-          FROM gated
-        ), sig AS (
-          SELECT doc_id AS id, {sigs} FROM sh
-        ), bands AS (
-          {bands}
-        ), cand AS (
-          SELECT DISTINCT a.id AS a_id, b.id AS b_id
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-        ), ver AS (
-          SELECT c.a_id, c.b_id
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.a_id
-          JOIN sh sb ON sb.doc_id = c.b_id
-          WHERE len(list_distinct(list_concat(sa.shingles, sb.shingles))) > 0
-            AND len(list_intersect(sa.shingles, sb.shingles))
-                >= len(list_distinct(list_concat(sa.shingles, sb.shingles))) * {threshold}
-        ), edges AS (
-          SELECT a_id AS s, b_id AS d FROM ver
-          UNION
-          SELECT b_id AS s, a_id AS d FROM ver
-        ), reach AS (
-          SELECT s AS id, d AS r FROM edges
-          UNION
-          SELECT e.s AS id, rc.r AS r FROM edges e JOIN reach rc ON rc.id = e.d
-        ), lbl AS (
-          SELECT id, least(id, min(r)) AS label FROM reach GROUP BY id
-        ), survivors AS (
-          SELECT doc_id FROM gated
-          WHERE doc_id NOT IN (SELECT id FROM lbl WHERE label < id)
-        )
-        SELECT doc_id,
-               CASE WHEN b < 8000 THEN 'train'
-                    WHEN b < 9000 THEN 'val'
-                    ELSE 'test' END AS split
-        FROM (
-          SELECT doc_id,
-                 ('0x' || substring(md5('split' || doc_id), 1, 8))::BIGINT
-                   % 10000 AS b
-          FROM survivors
-        )
-    """
 
 
 def _near_dedup_cc_oracle_sql(threshold: float = 0.3) -> str:
-    """Recursive-CTE twin of ops.dedup.near_dedup_cc: the verified-pair
-    CTEs of the near_dedup_survivors oracle, then transitive closure
+    """Recursive-CTE twin of ops.dedup.near_dedup_cc: MinHash signatures,
+    LSH band candidates and Jaccard-verified pairs, then transitive closure
     (DuckDB WITH RECURSIVE over the symmetric edge list) → min reachable id
     per node → drop every node whose component has a smaller id."""
     sigs = ", ".join(
@@ -6910,1379 +147,4 @@ def _near_dedup_cc_oracle_sql(threshold: float = 0.3) -> str:
         )
         SELECT doc_id FROM documents
         WHERE doc_id NOT IN (SELECT id FROM lbl WHERE label < id)
-    """
-
-
-def _substring_dedup_oracle_sql(min_shared: int = 2, k: int = 3, w: int = 4) -> str:
-    """Twin of ops.text_analysis.substring_dedup: positional winnowing
-    (list_position = Spark array_position, both first-occurrence), posting
-    self-join, count-distinct pair verification, b-side shingle-range
-    removal, token rejoin. array_to_string([]) is NULL in DuckDB → coalesce
-    to '' (Spark array_join returns '')."""
-    pos_min = f"list_min(list_slice(hs, j, j + {w - 1}))"
-    return f"""
-        WITH toked AS (
-          SELECT doc_id AS id, {_TOK} AS toks FROM documents
-        ), sh AS (
-          SELECT id, toks,
-                 CASE WHEN len(toks) >= {k}
-                      THEN list_transform(range(1, len(toks) - {k - 2}),
-                             i -> array_to_string(list_slice(toks, i, i + {k - 1}), ' '))
-                      ELSE []::VARCHAR[] END AS sh
-          FROM toked
-        ), h AS (
-          SELECT id, list_transform(sh, s -> md5(s)) AS hs FROM sh
-        ), f AS (
-          SELECT id,
-                 CASE WHEN len(hs) >= {w}
-                      THEN list_transform(range(1, len(hs) - {w - 2}),
-                             j -> {{'fp': {pos_min},
-                                    'pos': list_position(list_slice(hs, j, j + {w - 1}),
-                                                         {pos_min}) + j - 1}})
-                      ELSE list_transform(range(1, len(hs) + 1),
-                             j -> {{'fp': hs[j], 'pos': j}})
-                 END AS fps
-          FROM h
-        ), flat AS (
-          SELECT id, u.fp AS fp, u.pos AS pos
-          FROM (SELECT id, unnest(fps) AS u FROM f)
-        ), shared_occ AS (
-          SELECT a.id AS a_id, b.id AS b_id, a.fp AS fp, b.pos AS b_pos
-          FROM flat a JOIN flat b ON a.fp = b.fp AND a.id < b.id
-        ), verified AS (
-          SELECT a_id, b_id FROM shared_occ
-          GROUP BY a_id, b_id HAVING count(DISTINCT fp) >= {min_shared}
-        ), drops AS (
-          SELECT s.b_id AS id, list(DISTINCT s.b_pos) AS drop_starts
-          FROM shared_occ s
-          JOIN verified v ON s.a_id = v.a_id AND s.b_id = v.b_id
-          GROUP BY s.b_id
-        ), kept AS (
-          SELECT t.id, t.toks,
-                 list_transform(
-                   list_filter(range(1, len(t.toks) + 1),
-                     i -> len(list_filter(coalesce(d.drop_starts, []::BIGINT[]),
-                            s -> i >= s AND i <= s + {k - 1})) = 0),
-                   i -> t.toks[i]) AS kept_toks
-          FROM toked t LEFT JOIN drops d ON t.id = d.id
-        )
-        SELECT id AS doc_id,
-               len(toks) AS n_tokens,
-               len(toks) - len(kept_toks) AS n_dropped,
-               coalesce(array_to_string(kept_toks, ' '), '') AS kept_text
-        FROM kept
-    """
-
-
-def _winnow_pairs_oracle_sql(min_shared: int = 2) -> str:
-    """Fingerprint posting self-join over the same winnowing CTEs."""
-    return f"""
-        WITH toked AS (
-          SELECT doc_id, {_TOK} AS toks FROM documents
-        ), sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) >= 3
-                      THEN list_transform(range(1, len(toks) - 1),
-                             i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-                      ELSE []::VARCHAR[] END AS sh
-          FROM toked
-        ), h AS (
-          SELECT doc_id, len(sh) AS n_sh,
-                 list_transform(sh, s -> md5(s)) AS hs
-          FROM sh
-        ), f AS (
-          SELECT doc_id,
-                 CASE WHEN n_sh >= 4
-                      THEN list_distinct(list_transform(range(1, n_sh - 2),
-                             j -> list_min(list_slice(hs, j, j + 3))))
-                      ELSE list_distinct(hs) END AS fps
-          FROM h
-        ), flat AS (
-          SELECT doc_id AS id, unnest(fps) AS fp FROM f
-        )
-        SELECT a.id AS a_id, b.id AS b_id, count(*) AS shared
-        FROM flat a JOIN flat b ON a.fp = b.fp AND a.id < b.id
-        GROUP BY a.id, b.id
-        HAVING count(*) >= {min_shared}
-    """
-
-
-def _golden_spans_parquet(sf_dir: str = "/root/testdata/sf0.01") -> str:
-    """Golden flat span table for the sf0.01 correctness run, built by the
-    scalar reference implementation (kernels/reference_impl.py) — a fully
-    independent code path from the vectorized Arrow pipeline. Cached under
-    .data/ (gitignored); regenerated deterministically on demand."""
-    import glob
-    import hashlib
-    import os
-
-    # cache key = hash of every source the golden depends on, so a kernel
-    # change in a later round regenerates instead of silently comparing
-    # against stale goldens
-    import ocr_search_spark.corpus as _corpus
-    import ocr_search_spark.kernels as _kernels
-
-    h = hashlib.md5()
-    kdir = os.path.dirname(_kernels.__file__)
-    for path in sorted([_corpus.__file__, *glob.glob(os.path.join(kdir, "*.py"))]):
-        with open(path, "rb") as fh:
-            h.update(fh.read())
-    out = f"/root/repo/.data/golden_spans_sf0.01_{h.hexdigest()[:10]}.parquet"
-    if os.path.exists(out):
-        return out
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_search_spark.corpus import build_document, load_base_texts
-    from ocr_search_spark.kernels.reference_impl import extract_document_spans
-
-    base = load_base_texts(sf_dir)
-    doc_ids, kinds, texts, refs, orders = [], [], [], [], []
-    for i in range(2000):  # must match q_extract_spans's n at sf0.01
-        doc = build_document(i, base)
-        for s in extract_document_spans(doc["spans"]):
-            doc_ids.append(doc["doc_id"])
-            kinds.append(s["kind"])
-            texts.append(s["text"])
-            refs.append(s["media_ref"])
-            orders.append(s["order"])
-    table = pa.table(
-        {
-            "doc_id": pa.array(doc_ids, pa.string()),
-            "kind": pa.array(kinds, pa.string()),
-            "text": pa.array(texts, pa.string()),
-            "media_ref": pa.array(refs, pa.string()),
-            "order": pa.array(orders, pa.int32()),
-        }
-    )
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = out + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, out)
-    return out
-
-
-def _golden_main_content_parquet(sf_dir: str = "/root/testdata/sf0.01") -> str:
-    """Golden (doc_id, main_text) table for q_html_main_content, built by
-    the parser-based html_extract.html_main_text — an independent code path
-    from the fast-scanner kernel the Spark query runs. Same cache-key scheme
-    as _golden_spans_parquet (hash of corpus + kernel sources)."""
-    import glob
-    import hashlib
-    import os
-
-    import ocr_search_spark.corpus as _corpus
-    import ocr_search_spark.kernels as _kernels
-
-    h = hashlib.md5()
-    kdir = os.path.dirname(_kernels.__file__)
-    for path in sorted([_corpus.__file__, *glob.glob(os.path.join(kdir, "*.py"))]):
-        with open(path, "rb") as fh:
-            h.update(fh.read())
-    out = f"/root/repo/.data/golden_main_sf0.01_{h.hexdigest()[:10]}.parquet"
-    if os.path.exists(out):
-        return out
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_search_spark.corpus import build_document, load_base_texts
-    from ocr_search_spark.kernels.html_extract import html_main_text
-
-    base = load_base_texts(sf_dir)
-    doc_ids, mains = [], []
-    for i in range(500):  # must match q_html_main_content's n_docs
-        doc = build_document(i, base)
-        for s in doc["spans"]:
-            if s["kind"] == "html":
-                doc_ids.append(doc["doc_id"])
-                mains.append(html_main_text(s["text"]))
-    table = pa.table(
-        {
-            "doc_id": pa.array(doc_ids, pa.string()),
-            "main_text": pa.array(mains, pa.string()),
-        }
-    )
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = out + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, out)
-    return out
-
-
-def _golden_links_parquet(sf_dir: str = "/root/testdata/sf0.01") -> str:
-    """Golden (doc_id, span_offset, link_order, href, anchor) table for
-    q_html_links, built by a Python `re` scalar twin over the same
-    deterministic corpus — independent of the JVM regex path the Spark
-    query runs. Same cache-key scheme as the other goldens."""
-    import hashlib
-    import os
-    import re as _re
-
-    import ocr_search_spark.corpus as _corpus
-    import ocr_search_spark.ops.graph as _graph
-
-    h = hashlib.md5()
-    for mod in (_corpus, _graph):
-        with open(mod.__file__, "rb") as fh:
-            h.update(fh.read())
-    out = f"/root/repo/.data/golden_links_sf0.01_{h.hexdigest()[:10]}.parquet"
-    if os.path.exists(out):
-        return out
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_search_spark.corpus import build_document, load_base_texts
-
-    pat = _re.compile(r'<a\s[^>]*href="[^"]*"[^>]*>[^<]*</a>')
-    base = load_base_texts(sf_dir)
-    ids, offs, orders, hrefs, anchors = [], [], [], [], []
-    for i in range(2000):  # must match q_html_links's n at sf0.01
-        doc = build_document(i, base)
-        for sp in doc["spans"]:
-            if sp["kind"] != "html":
-                continue
-            for order, m in enumerate(pat.findall(sp["text"])):
-                ids.append(doc["doc_id"])
-                offs.append(sp["offset"])
-                orders.append(order)
-                hrefs.append(_re.search(r'href="([^"]*)"', m).group(1))
-                anchors.append(_re.search(r">([^<]*)</a>", m).group(1))
-    table = pa.table(
-        {
-            "doc_id": pa.array(ids, pa.string()),
-            "span_offset": pa.array(offs, pa.int32()),
-            "link_order": pa.array(orders, pa.int32()),
-            "href": pa.array(hrefs, pa.string()),
-            "anchor": pa.array(anchors, pa.string()),
-        }
-    )
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    pq.write_table(table, out)
-    return out
-
-
-def _golden_zlib_parquet(sf_dir: str = "/root/testdata/sf0.01") -> str:
-    """Golden (doc_id, n_bytes, n_zlib) table for q_compression_signals,
-    built by the scalar zlib twin (ops/compress.py scalar_zlib_len) in a
-    plain Python loop — independent of the Arrow-batched UDF path the
-    Spark query runs. Same cache-key scheme as the other goldens."""
-    import hashlib
-    import os
-
-    import ocr_search_spark.ops.compress as _compress
-
-    h = hashlib.md5()
-    with open(_compress.__file__, "rb") as fh:
-        h.update(fh.read())
-    out = f"/root/repo/.data/golden_zlib_sf0.01_{h.hexdigest()[:10]}.parquet"
-    if os.path.exists(out):
-        return out
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_search_spark.ops.compress import scalar_zlib_len
-
-    docs = pq.read_table(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
-    )
-    doc_ids = docs.column("doc_id").to_pylist()
-    texts = docs.column("text").to_pylist()
-    table = pa.table(
-        {
-            "doc_id": pa.array(doc_ids, pa.int64()),
-            "n_bytes": pa.array(
-                [len(t.encode("utf-8")) for t in texts], pa.int64()
-            ),
-            "n_zlib": pa.array(
-                [scalar_zlib_len(t) for t in texts], pa.int64()
-            ),
-        }
-    )
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = out + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, out)
-    return out
-
-
-def _dd_cos(a: str, b: str, dim: int = 64) -> str:
-    """DuckDB cosine between two list columns, expression-shape-identical to
-    ops.similarity._dot/_norm (sequential left fold → bit-identical doubles)."""
-    dot = f"list_sum(list_transform(range(1, {dim + 1}), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"
-    na = f"sqrt(list_sum(list_transform(range(1, {dim + 1}), i -> {a}[i]::DOUBLE * {a}[i]::DOUBLE)))"
-    nb = f"sqrt(list_sum(list_transform(range(1, {dim + 1}), i -> {b}[i]::DOUBLE * {b}[i]::DOUBLE)))"
-    return f"({dot} / ({na} * {nb}))"
-
-
-def _dd_l2sq(a: str, b: str, dim: int) -> str:
-    """DuckDB squared-L2 between two list columns — the same sequential
-    left fold as ops.similarity._l2sq (bit-identical doubles)."""
-    return (
-        f"list_sum(list_transform(range(1, {dim + 1}), "
-        f"i -> ({a}[i]::DOUBLE - {b}[i]::DOUBLE) * ({a}[i]::DOUBLE - {b}[i]::DOUBLE)))"
-    )
-
-
-def _pq_adc_oracle_sql(m: int = 8, k_codes: int = 16, sub: int = 8, k: int = 10) -> str:
-    """PQ ADC oracle: md5-sample codebooks, per-subvector argmin encode
-    (ties → smaller code, matching min(struct(d, code))), fixed-point
-    integer ADC sum, top-k by (adist_micro, neighbor_id)."""
-    l2 = _dd_l2sq("sv", "cvec", sub)
-    l2q = _dd_l2sq("qsv", "cvec", sub)
-    return f"""
-        WITH samp AS (
-          SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS c,
-                 embedding AS v
-          FROM (SELECT vec_id, embedding FROM embeddings
-                ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {k_codes})
-        ), subs AS (
-          SELECT unnest(range(0, {m})) AS s
-        ), cb AS (
-          SELECT s, c AS code, list_slice(v, s * {sub} + 1, s * {sub} + {sub}) AS cvec
-          FROM samp CROSS JOIN subs
-        ), slices AS (
-          SELECT vec_id AS id, s,
-                 list_slice(embedding, s * {sub} + 1, s * {sub} + {sub}) AS sv
-          FROM embeddings CROSS JOIN subs
-        ), enc AS (
-          SELECT id, s, code FROM (
-            SELECT id, sl.s, code,
-                   row_number() OVER (PARTITION BY id, sl.s
-                                      ORDER BY {l2} ASC, code ASC) AS rn
-            FROM slices sl JOIN cb ON sl.s = cb.s
-          ) WHERE rn = 1
-        ), q AS (
-          SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-          WHERE vec_id < 5
-        ), lut AS (
-          SELECT query_id, s, code,
-                 round({l2q} * 1000000)::BIGINT AS d_micro
-          FROM (
-            SELECT query_id, s, code, cvec,
-                   list_slice(qvec, s * {sub} + 1, s * {sub} + {sub}) AS qsv
-            FROM q CROSS JOIN cb
-          )
-        ), scored AS (
-          SELECT l.query_id, e.id AS neighbor_id,
-                 sum(d_micro)::BIGINT AS adist_micro
-          FROM enc e JOIN lut l ON e.s = l.s AND e.code = l.code
-          WHERE e.id <> l.query_id
-          GROUP BY 1, 2
-        )
-        SELECT query_id, neighbor_id, adist_micro, rnk FROM (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY adist_micro ASC, neighbor_id ASC) AS rnk
-          FROM scored
-        ) WHERE rnk <= {k}
-    """
-
-
-def _ivf_pq_oracle_sql(
-    k_cent: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    k_codes: int = 16,
-    sub: int = 8,
-    k: int = 10,
-    cb_cte: str | None = None,
-) -> str:
-    """IVF-PQ oracle: the _ann_ivf_oracle_sql cell-pruning front composed
-    with the _pq_adc_oracle_sql encode/LUT scoring — candidates restricted
-    to probed cells before the ADC sum. ``cb_cte`` overrides the codebook
-    source: a WITH-fragment ending in ``cb(s, code, cvec)`` (the trained
-    variant passes the t-prefixed pq_train chain; default is the
-    md5-sampled seeding)."""
-    l2 = _dd_l2sq("sv", "cvec", sub)
-    l2q = _dd_l2sq("qsv", "cvec", sub)
-    if cb_cte is None:
-        cb_cte = f"""samp AS (
-          SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS c,
-                 embedding AS v
-          FROM (SELECT vec_id, embedding FROM embeddings
-                ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {k_codes})
-        ), cb AS (
-          SELECT s, c AS code, list_slice(v, s * {sub} + 1, s * {sub} + {sub}) AS cvec
-          FROM samp CROSS JOIN subs
-        )"""
-    return f"""
-        WITH cent AS (
-          SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS cid,
-                 embedding AS cevec
-          FROM (SELECT vec_id, embedding FROM embeddings
-                ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {k_cent})
-        ), corpus AS (
-          SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
-        ), asg AS (
-          SELECT neighbor_id, cid,
-                 row_number() OVER (PARTITION BY neighbor_id
-                                    ORDER BY {_dd_cos("cv", "cevec")} DESC, cid DESC) AS rn
-          FROM corpus CROSS JOIN cent
-        ), assigned AS (
-          SELECT neighbor_id, cid FROM asg WHERE rn = 1
-        ), q AS (
-          SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-          WHERE vec_id < 5
-        ), pr AS (
-          SELECT query_id, cid,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY {_dd_cos("qvec", "cevec")} DESC, cid DESC) AS rn
-          FROM q CROSS JOIN cent
-        ), probes AS (
-          SELECT query_id, cid FROM pr WHERE rn <= {n_probe}
-        ), cand AS (
-          SELECT p.query_id, a.neighbor_id
-          FROM probes p JOIN assigned a ON p.cid = a.cid
-          WHERE a.neighbor_id <> p.query_id
-        ), subs AS (
-          SELECT unnest(range(0, {m})) AS s
-        ), {cb_cte}, slices AS (
-          SELECT vec_id AS id, s,
-                 list_slice(embedding, s * {sub} + 1, s * {sub} + {sub}) AS sv
-          FROM embeddings CROSS JOIN subs
-        ), enc AS (
-          SELECT id, s, code FROM (
-            SELECT id, sl.s, code,
-                   row_number() OVER (PARTITION BY id, sl.s
-                                      ORDER BY {l2} ASC, code ASC) AS rn
-            FROM slices sl JOIN cb ON sl.s = cb.s
-          ) WHERE rn = 1
-        ), lut AS (
-          SELECT query_id, s, code,
-                 round({l2q} * 1000000)::BIGINT AS d_micro
-          FROM (
-            SELECT query_id, s, code, cvec,
-                   list_slice(qvec, s * {sub} + 1, s * {sub} + {sub}) AS qsv
-            FROM q CROSS JOIN cb
-          )
-        ), scored AS (
-          SELECT c.query_id, c.neighbor_id,
-                 sum(d_micro)::BIGINT AS adist_micro
-          FROM cand c
-          JOIN enc e ON e.id = c.neighbor_id
-          JOIN lut l ON l.query_id = c.query_id AND l.s = e.s AND l.code = e.code
-          GROUP BY 1, 2
-        )
-        SELECT query_id, neighbor_id, adist_micro, rnk FROM (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY adist_micro ASC, neighbor_id ASC) AS rnk
-          FROM scored
-        ) WHERE rnk <= {k}
-    """
-
-
-def _ann_ivf_oracle_sql(k_cent: int = 16, n_probe: int = 4, k: int = 10) -> str:
-    """Full IVF probe-search oracle: centroid selection (smallest md5(id)),
-    nearest-cell assignment (ties → larger cid, matching array_max struct
-    ordering in ivf_assign), per-query probe lists, exact re-rank."""
-    return f"""
-        WITH cent AS (
-          SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS cid,
-                 embedding AS cvec
-          FROM (SELECT vec_id, embedding FROM embeddings
-                ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {k_cent})
-        ), corpus AS (
-          SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
-        ), asg AS (
-          SELECT neighbor_id, cid,
-                 row_number() OVER (PARTITION BY neighbor_id
-                                    ORDER BY {_dd_cos("cv", "cvec")} DESC, cid DESC) AS rn
-          FROM corpus CROSS JOIN cent
-        ), assigned AS (
-          SELECT neighbor_id, cid FROM asg WHERE rn = 1
-        ), q AS (
-          SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5
-        ), pr AS (
-          SELECT query_id, cid,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY {_dd_cos("qvec", "cvec")} DESC, cid DESC) AS rn
-          FROM q CROSS JOIN cent
-        ), probes AS (
-          SELECT query_id, cid FROM pr WHERE rn <= {n_probe}
-        ), cand AS (
-          SELECT p.query_id, a.neighbor_id
-          FROM probes p JOIN assigned a ON p.cid = a.cid
-          WHERE a.neighbor_id <> p.query_id
-        ), scored AS (
-          SELECT c.query_id, c.neighbor_id, round({_dd_cos("co.cv", "q.qvec")}, 6) AS cos
-          FROM cand c
-          JOIN corpus co ON co.neighbor_id = c.neighbor_id
-          JOIN q ON q.query_id = c.query_id
-        )
-        SELECT query_id, neighbor_id, cos, rnk FROM (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM scored
-        ) WHERE rnk <= {k}
-    """
-
-
-def _perceptron_sql(n_iters: int, final: str, n_buckets: int = 1 << 18) -> str:
-    """DuckDB twin of ops/classify.perceptron_train: the same hashed
-    unigram+bigram feature map as the nb oracles, then ``n_iters``
-    unrolled batch-perceptron rounds (score under w_{r-1} → misclassified
-    set → Σy·x delta → full-join merge), model = round-summed weights
-    (the Collins average up to the n_iters scale). ``final`` picks the
-    tail: 'weights' (top-100 + rnk) or 'select' (top-100 scored docs)."""
-    rounds = []
-    for r in range(1, n_iters + 1):
-        prev = f"w{r - 1}"
-        rounds.append(f"""
-            , s{r} AS (
-              SELECT f.doc_id, f.y, sum(f.cnt * coalesce(w.weight, 0))::BIGINT AS score
-              FROM feats f LEFT JOIN {prev} w ON w.bucket = f.bucket
-              GROUP BY f.doc_id, f.y
-            ), m{r} AS (
-              SELECT doc_id, y FROM s{r} WHERE y * score <= 0
-            ), d{r} AS (
-              SELECT f.bucket, sum(m.y * f.cnt)::BIGINT AS dw
-              FROM feats f JOIN m{r} m ON m.doc_id = f.doc_id
-              GROUP BY f.bucket
-            ), w{r} AS (
-              SELECT coalesce(w.bucket, d.bucket) AS bucket,
-                     (coalesce(w.weight, 0) + coalesce(d.dw, 0))::BIGINT AS weight
-              FROM {prev} w FULL JOIN d{r} d ON w.bucket = d.bucket
-            )""")
-    avg = f"""
-            , wavg AS (
-              SELECT bucket, sum(weight)::BIGINT AS weight
-              FROM ({" UNION ALL ".join(f"SELECT * FROM w{r}" for r in range(1, n_iters + 1))})
-              GROUP BY bucket
-            )"""
-    if final == "weights":
-        tail = avg + """
-            SELECT bucket, weight, rnk FROM (
-              SELECT bucket, weight,
-                     row_number() OVER (ORDER BY weight DESC, bucket) AS rnk
-              FROM wavg WHERE weight <> 0
-            ) WHERE rnk <= 100
-        """
-    else:
-        tail = avg + """
-            , sf AS (
-              SELECT f.doc_id AS id, sum(f.cnt * coalesce(w.weight, 0))::BIGINT AS score
-              FROM feats f
-              LEFT JOIN (SELECT * FROM wavg WHERE weight <> 0) w
-                ON w.bucket = f.bucket
-              GROUP BY f.doc_id
-            )
-            SELECT id, score, rnk FROM (
-              SELECT id, score,
-                     row_number() OVER (ORDER BY score DESC, id) AS rnk
-              FROM sf
-            ) WHERE rnk <= 100
-        """
-    return (
-        "\n            WITH "
-        + _hashed_feat_rows_sql(n_buckets)
-        + """, feats AS (
-              SELECT doc_id, bk AS bucket, count(*)::BIGINT AS cnt,
-                     (CASE WHEN lang = 'en' THEN 1 ELSE -1 END)::BIGINT AS y
-              FROM fb GROUP BY doc_id, bk, lang
-              UNION ALL
-              SELECT doc_id, -1::BIGINT, 1::BIGINT,
-                     (CASE WHEN lang = 'en' THEN 1 ELSE -1 END)::BIGINT
-              FROM documents
-            ), w0 AS (
-              SELECT 0::BIGINT AS bucket, 0::BIGINT AS weight WHERE 1 = 0
-            )"""
-        + "".join(rounds)
-        + tail
-    )
-
-
-# shared WITH-prefix of the SQ8 oracles: per-vector max-abs int8 encode,
-# integer dot + integer norms, cosine on the 6-dp lattice, ranked per
-# query — composed by "sq_topk" (direct) and "sq_recall" (vs exact arm)
-_SQ_TOPK_SQL = """
-            WITH sc AS (
-              SELECT vec_id, embedding,
-                     list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS scale
-              FROM embeddings
-            ), enc AS (
-              SELECT vec_id,
-                     CASE WHEN scale = 0
-                          THEN list_transform(embedding, x -> 0::BIGINT)
-                          ELSE list_transform(embedding, x -> round(x::DOUBLE / scale * 127)::BIGINT)
-                     END AS codes
-              FROM sc
-            ), nq AS (
-              SELECT vec_id, codes,
-                     list_sum(list_transform(codes, c -> c * c))::BIGINT AS norm_q
-              FROM enc
-            ), qside AS (
-              SELECT vec_id AS query_id, codes AS qc, norm_q AS qn
-              FROM nq WHERE vec_id < 5 AND norm_q > 0
-            ), sq_scored AS (
-              SELECT qside.query_id, e.vec_id AS neighbor_id,
-                     round(list_sum(list_transform(range(1, 65), i -> e.codes[i] * qside.qc[i]))::DOUBLE
-                           / (sqrt(e.norm_q::DOUBLE) * sqrt(qside.qn::DOUBLE)), 6) AS cos_q
-              FROM nq e CROSS JOIN qside
-              WHERE e.vec_id <> qside.query_id AND e.norm_q > 0
-            ), sq_ranked AS (
-              SELECT *, row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos_q DESC, neighbor_id) AS rnk
-              FROM sq_scored
-            )
-"""
-
-
-def _ann_recall_oracle_sql(
-    k_cent: int = 16, n_probe: int = 4, k: int = 10
-) -> str:
-    """Recall@k twin: the IVF probe-search oracle and the brute-force
-    top-k oracle as nested-WITH subqueries, intersected per query."""
-    exact = f"""
-        WITH q AS (
-          SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-          WHERE vec_id < 5
-        ), scored AS (
-          SELECT q.query_id, e.vec_id AS neighbor_id,
-                 round({_dd_cos("e.embedding", "q.qvec")}, 6) AS cos
-          FROM embeddings e CROSS JOIN q
-          WHERE e.vec_id <> q.query_id
-        )
-        SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM scored
-        ) WHERE rnk <= {k}
-    """
-    return f"""
-        WITH ivf AS (
-          SELECT query_id, neighbor_id
-          FROM ({_ann_ivf_oracle_sql(k_cent, n_probe, k)})
-        ), exact AS (
-          SELECT * FROM ({exact})
-        ), hits AS (
-          SELECT i.query_id, count(*)::BIGINT AS n_hits
-          FROM ivf i JOIN exact e
-            ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-          GROUP BY i.query_id
-        )
-        SELECT q.vec_id AS query_id,
-               coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-               floor(coalesce(h.n_hits, 0) * 1000000 / {k})::BIGINT AS recall_ppm
-        FROM (SELECT vec_id FROM embeddings WHERE vec_id < 5) q
-        LEFT JOIN hits h ON h.query_id = q.vec_id
-    """
-
-
-def _pq_trained_cb_cte(
-    m: int, k_codes: int, sub: int, iters: int, scale_bits: int
-) -> str:
-    """WITH-fragment producing ``cb(s, code, cvec)`` from the TRAINED
-    per-subspace lattice Lloyd chain (_pq_train_oracle's stages,
-    t-prefixed to avoid colliding with the serve oracle's CTE names);
-    codewords dequantize by an exact power-of-two division, so the
-    float cvec values are bit-identical to the Spark helper's v/2^b."""
-    scale = 1 << scale_bits
-    parts = [
-        f"""tq AS (
-          SELECT vec_id AS id,
-                 list_transform(embedding,
-                                x -> floor(x * {scale}.0)::BIGINT) AS qv
-          FROM embeddings
-        ), tseeds AS (
-          SELECT qv, (row_number() OVER (ORDER BY md5(id::VARCHAR), id) - 1)
-                   AS code
-          FROM (SELECT id, qv FROM tq
-                ORDER BY md5(id::VARCHAR), id LIMIT {k_codes})
-        ), tsub AS (
-          SELECT id, s,
-                 list_slice(qv, s * {sub} + 1, s * {sub} + {sub}) AS sv
-          FROM tq, LATERAL (SELECT unnest(range(0, {m})) AS s) t
-        ), tc0 AS (
-          SELECT s, code,
-                 list_slice(qv, s * {sub} + 1, s * {sub} + {sub}) AS cv
-          FROM tseeds, LATERAL (SELECT unnest(range(0, {m})) AS s) t
-        )"""
-    ]
-    for i in range(iters):
-        parts.append(
-            f""", td{i} AS (
-              SELECT tsub.id, tsub.s, tsub.sv, c.code,
-                     list_sum(list_transform(range(1, len(tsub.sv) + 1),
-                       j -> (tsub.sv[j] - c.cv[j]) * (tsub.sv[j] - c.cv[j])))
-                       AS d2
-              FROM tsub JOIN tc{i} c USING (s)
-            ), ta{i} AS (
-              SELECT id, s, sv, code FROM (
-                SELECT *, row_number() OVER (PARTITION BY id, s
-                                             ORDER BY d2, code) AS rn
-                FROM td{i}
-              ) WHERE rn = 1
-            ), ts{i} AS (
-              SELECT s, code, jj, sum(sv[jj])::BIGINT AS sm,
-                     count(*)::BIGINT AS cnt
-              FROM ta{i},
-                   LATERAL (SELECT unnest(range(1, len(sv) + 1)) AS jj) t
-              GROUP BY s, code, jj
-            ), tc{i + 1} AS (
-              SELECT c.s, c.code,
-                     CASE WHEN m2.code IS NULL THEN c.cv
-                          ELSE (SELECT list(floor(sm / cnt)::BIGINT
-                                            ORDER BY jj)
-                                FROM ts{i}
-                                WHERE ts{i}.s = c.s AND ts{i}.code = c.code)
-                     END AS cv
-              FROM tc{i} c
-              LEFT JOIN (SELECT DISTINCT s, code FROM ts{i}) m2
-                USING (s, code)
-            )"""
-        )
-    parts.append(
-        f""", cb AS (
-          SELECT s::BIGINT AS s, code::BIGINT AS code,
-                 list_transform(cv, x -> x / {scale}.0) AS cvec
-          FROM tc{iters}
-        )"""
-    )
-    return "".join(parts)
-
-
-def _ivf_pq_recall_oracle_sql(
-    k_cent: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    k_codes: int = 16,
-    sub: int = 8,
-    k: int = 10,
-    cb_cte: str | None = None,
-) -> str:
-    """Recall@k of the compressed path: the full IVF-PQ oracle and the
-    brute-force top-k oracle intersected per query — the
-    _ann_recall_oracle_sql shape with the PQ serve oracle inside."""
-    exact = f"""
-        WITH q AS (
-          SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-          WHERE vec_id < 5
-        ), scored AS (
-          SELECT q.query_id, e.vec_id AS neighbor_id,
-                 round({_dd_cos("e.embedding", "q.qvec")}, 6) AS cos
-          FROM embeddings e CROSS JOIN q
-          WHERE e.vec_id <> q.query_id
-        )
-        SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM scored
-        ) WHERE rnk <= {k}
-    """
-    return f"""
-        WITH pq AS (
-          SELECT query_id, neighbor_id
-          FROM ({_ivf_pq_oracle_sql(k_cent, n_probe, m, k_codes, sub, k, cb_cte)})
-        ), exact AS (
-          SELECT * FROM ({exact})
-        ), hits AS (
-          SELECT p.query_id, count(*)::BIGINT AS n_hits
-          FROM pq p JOIN exact e
-            ON e.query_id = p.query_id AND e.neighbor_id = p.neighbor_id
-          GROUP BY p.query_id
-        )
-        SELECT q.vec_id AS query_id,
-               coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-               floor(coalesce(h.n_hits, 0) * 1000000 / {k})::BIGINT
-                 AS recall_ppm
-        FROM (SELECT vec_id FROM embeddings WHERE vec_id < 5) q
-        LEFT JOIN hits h ON h.query_id = q.vec_id
-    """
-
-
-def _cosine_neardup_lsh_oracle_sql(
-    dim: int = 64, threshold: float = 0.42, n_bands: int = 8, band_size: int = 2
-) -> str:
-    """Banded-LSH near-dup oracle: the deterministic hyperplane sign bits are
-    inlined as literals (exactly like _ann_lsh_oracle_sql), band keys and the
-    exact cosine re-rank mirror ops.similarity.cosine_neardup_pairs_lsh."""
-    from ocr_search_spark.ops.similarity import _planes
-
-    planes = _planes(dim, n_bands * band_size)
-    bit_exprs = []
-    for plane in planes:
-        dot = " + ".join(
-            f"embedding[{i + 1}]::DOUBLE * ({v!r})" for i, v in enumerate(plane)
-        )
-        bit_exprs.append(f"(CASE WHEN ({dot}) >= 0 THEN '1' ELSE '0' END)")
-    band_keys = ", ".join(
-        f"'{b}:' || " + " || ".join(bit_exprs[b * band_size : (b + 1) * band_size])
-        for b in range(n_bands)
-    )
-    cos = _dd_cos("va.e", "vb.e", dim)
-    return f"""
-        WITH banded AS (
-          SELECT vec_id AS id, unnest([{band_keys}]) AS band_key FROM embeddings
-        ), cand AS (
-          SELECT DISTINCT a.id AS a_id, b.id AS b_id
-          FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.id < b.id
-        ), v AS (SELECT vec_id AS id, embedding AS e FROM embeddings)
-        SELECT c.a_id, c.b_id, round({cos}, 6) AS cos
-        FROM cand c JOIN v va ON va.id = c.a_id JOIN v vb ON vb.id = c.b_id
-        WHERE round({cos}, 6) >= {threshold}
-    """
-
-
-def _cosine_near_dedup_oracle_sql(
-    dim: int = 64, threshold: float = 0.42, n_bands: int = 8, band_size: int = 2
-) -> str:
-    """Survivors oracle: the verified-pair CTE of the LSH near-dup oracle,
-    minus every b_id (pairwise min-id keeper)."""
-    pairs = _cosine_neardup_lsh_oracle_sql(dim, threshold, n_bands, band_size)
-    return f"""
-        WITH pairs AS ({pairs})
-        SELECT vec_id FROM embeddings
-        WHERE vec_id NOT IN (SELECT b_id FROM pairs)
-    """
-
-
-def _cosine_near_dedup_cc_oracle_sql(
-    dim: int = 64, threshold: float = 0.42, n_bands: int = 8, band_size: int = 2
-) -> str:
-    """Cluster-keeper survivors oracle: the verified-pair CTE of the LSH
-    near-dup oracle, then the same WITH RECURSIVE transitive closure as
-    _near_dedup_cc_oracle_sql — drop every vector whose component holds a
-    smaller id."""
-    pairs = _cosine_neardup_lsh_oracle_sql(dim, threshold, n_bands, band_size)
-    return f"""
-        WITH RECURSIVE pairs AS ({pairs}
-        ), edges AS (
-          SELECT a_id AS s, b_id AS d FROM pairs
-          UNION
-          SELECT b_id AS s, a_id AS d FROM pairs
-        ), reach AS (
-          SELECT s AS id, d AS r FROM edges
-          UNION
-          SELECT e.s AS id, rc.r AS r FROM edges e JOIN reach rc ON rc.id = e.d
-        ), lbl AS (
-          SELECT id, least(id, min(r)) AS label FROM reach GROUP BY id
-        )
-        SELECT vec_id FROM embeddings
-        WHERE vec_id NOT IN (SELECT id FROM lbl WHERE label < id)
-    """
-
-
-def _bloom_sql(final: str) -> str:
-    """DuckDB twin of ops.dedup.bloom_probe / bloom_decontaminate over
-    the 10-doc benchmark (shingle_k=5, m_bits=16384, k_hashes=3) — ONE
-    home for the shared sh/bench/bsh/bits chain and the all-k-bits
-    membership predicate, so the two bloom oracles cannot
-    de-synchronize (bloom_decontaminate must drop exactly the docs
-    bloom_probe flags). ``final``: 'probe' (per-doc counts) or
-    'survivors' (doc_ids the gate keeps)."""
-    member = "\n                ".join(
-        f"{'WHERE' if i == 0 else '  AND'} ('0x' || substring(md5('b{i}:' || s), 1, 8))::BIGINT"
-        f" % 16384 IN (SELECT bit FROM bits)"
-        for i in range(3)
-    )
-    prefix = f"""
-            WITH sh AS (
-              SELECT doc_id, list_distinct(list_transform(
-                  range(1, greatest(len({_TOK}) - 3, 1)),
-                  i -> array_to_string(list_slice({_TOK}, i, i + 4), ' '))) AS shingles
-              FROM documents
-            ), bench AS (
-              SELECT doc_id FROM documents ORDER BY md5(doc_id::VARCHAR), doc_id LIMIT 10
-            ), bsh AS (
-              SELECT DISTINCT unnest(shingles) AS s FROM sh
-              WHERE doc_id IN (SELECT doc_id FROM bench)
-            ), bits AS (
-              SELECT DISTINCT ('0x' || substring(md5('b' || i || ':' || s), 1, 8))::BIGINT % 16384 AS bit
-              FROM (SELECT s, unnest([0, 1, 2]) AS i FROM bsh)
-            ), doc_sh AS (
-              SELECT doc_id, unnest(shingles) AS s FROM sh
-            )"""
-    if final == "probe":
-        return prefix + f""", hits AS (
-              SELECT doc_id, count(*) AS n_hit FROM doc_sh
-                {member}
-              GROUP BY doc_id
-            ), totals AS (
-              SELECT doc_id, count(*) AS n_ngrams FROM doc_sh GROUP BY doc_id
-            )
-            SELECT d.doc_id AS id,
-                   coalesce(t.n_ngrams, 0) AS n_ngrams,
-                   coalesce(h.n_hit, 0) AS n_hit,
-                   coalesce(h.n_hit, 0) > 0 AS contaminated
-            FROM documents d
-            LEFT JOIN totals t ON t.doc_id = d.doc_id
-            LEFT JOIN hits h ON h.doc_id = d.doc_id
-        """
-    return prefix + f""", contam AS (
-              SELECT DISTINCT doc_id FROM doc_sh
-                {member}
-            )
-            SELECT doc_id FROM documents
-            WHERE doc_id NOT IN (SELECT doc_id FROM contam)
-        """
-
-
-def _hashed_feat_rows_sql(n_buckets: int = 1 << 18) -> str:
-    """One row per (doc_id, lang, bk) hashed unigram+'_'-bigram feature
-    occurrence — the ops.classify.hashed_features twin
-    (token_bucket_expr convention, unsalted md5). The SINGLE home of the
-    oracle-side feature-map SQL, composed by both the Naive Bayes and
-    the perceptron oracles so an edit cannot de-synchronize the two
-    classifiers' feature spaces. WITH-chain fragment (no WITH keyword)
-    ending in ``fb(doc_id, lang, bk)``."""
-    return f"""t AS (
-          SELECT doc_id, lang, {_TOK} AS toks FROM documents
-        ), f0 AS (
-          SELECT doc_id, lang,
-                 unnest(list_concat(toks,
-                   list_transform(range(1, greatest(len(toks), 1)),
-                     i -> toks[i] || '_' || toks[i + 1]))) AS feat
-          FROM t
-        ), fb AS (
-          SELECT doc_id, lang,
-                 ('0x' || substring(md5(feat), 1, 8))::BIGINT
-                   % {n_buckets} AS bk
-          FROM f0
-        )"""
-
-
-def _nb_weights_sql(n_buckets: int = 1 << 18) -> str:
-    """Twin of ops.classify.nb_train on documents with pos = lang='en':
-    a WITH-chain (no WITH keyword) ending in ``w(bk, weight_fp)`` —
-    the shared hashed feature rows, per-bucket class counts, add-one-
-    smoothed half-bit log-likelihood-ratio scaled by NB_HB_FP=346574."""
-    hb = "length(bin((({x}) * ({x}))::BIGINT)) - 1"
-    w = (
-        "346574 * (("
-        + hb.format(x="cp + 1")
-        + " - ("
-        + hb.format(x=f"tp + {n_buckets}")
-        + ")) - ("
-        + hb.format(x="cn + 1")
-        + " - ("
-        + hb.format(x=f"tn + {n_buckets}")
-        + ")))"
-    )
-    return _hashed_feat_rows_sql(n_buckets) + f""", per AS (
-          SELECT bk,
-                 sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS cp,
-                 sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END)::BIGINT AS cn
-          FROM fb GROUP BY bk
-        ), tot AS (
-          SELECT sum(cp)::BIGINT AS tp, sum(cn)::BIGINT AS tn FROM per
-        ), w AS (
-          SELECT bk, ({w})::BIGINT AS weight_fp
-          FROM per CROSS JOIN tot
-        )"""
-
-
-def _dsir_tail_sql(n_buckets: int = 1024, n: int = 50) -> str:
-    """The DSIR oracle CTE tail: expects a CTE ``pool(doc_id, lang,
-    text)`` in scope (the raw selection pool; target = its lang='en'
-    slice). Hashed unigram+bigram buckets (hash_bucket md5 convention),
-    add-one-smoothed per-bucket half-bit weights via length(bin(x*x))-1,
-    shared totals delta, integer score sum, deterministic top-n.
-    Returns the chain STARTING with a CTE body (no WITH keyword)."""
-    hb = "length(bin((({x}) * ({x}))::BIGINT)) - 1"
-    lam = (
-        hb.format(x="coalesce(ct, 0) + 1")
-        + " - ("
-        + hb.format(x="coalesce(cr, 0) + 1")
-        + ")"
-    )
-    delta = (
-        hb.format(x=f"tr + {n_buckets}")
-        + " - ("
-        + hb.format(x=f"tt + {n_buckets}")
-        + ")"
-    )
-    return f"""toks AS (
-          SELECT doc_id, lang, {_TOK} AS t FROM pool
-        ), g_raw AS (
-          SELECT doc_id, lang, unnest(
-            list_concat(t, list_transform(range(1, len(t)),
-                                          i -> t[i] || ' ' || t[i + 1]))
-          ) AS g
-          FROM toks
-        ), bucketed AS (
-          SELECT doc_id, lang,
-                 ('0x' || substring(md5('dsir:' || g), 1, 8))::BIGINT
-                   % {n_buckets} AS bucket
-          FROM g_raw
-        ), ctab AS (
-          SELECT bucket, count(*) AS ct FROM bucketed
-          WHERE lang = 'en' GROUP BY bucket
-        ), crab AS (
-          SELECT bucket, count(*) AS cr FROM bucketed GROUP BY bucket
-        ), lamtab AS (
-          SELECT coalesce(ctab.bucket, crab.bucket) AS bucket,
-                 {lam} AS lambda_hb
-          FROM ctab FULL OUTER JOIN crab ON ctab.bucket = crab.bucket
-        ), tot AS (
-          SELECT (SELECT count(*) FROM bucketed WHERE lang = 'en') AS tt,
-                 (SELECT count(*) FROM bucketed) AS tr
-        ), per_doc AS (
-          SELECT b.doc_id, count(*) AS n_grams,
-                 sum(l.lambda_hb) AS w_part
-          FROM bucketed b JOIN lamtab l ON l.bucket = b.bucket
-          GROUP BY b.doc_id
-        ), scored AS (
-          SELECT d.doc_id,
-                 coalesce(p.n_grams, 0) AS n_grams,
-                 (coalesce(p.w_part, 0)
-                   + coalesce(p.n_grams, 0) * ({delta}))::BIGINT AS w_hb
-          FROM pool d
-          LEFT JOIN per_doc p ON p.doc_id = d.doc_id
-          CROSS JOIN tot
-        )
-        SELECT doc_id, n_grams, w_hb, rnk FROM (
-          SELECT *, row_number() OVER (ORDER BY w_hb DESC, doc_id) AS rnk
-          FROM scored
-        ) WHERE rnk <= {n}
-    """
-
-
-def _dsir_select_oracle_sql(n_buckets: int = 1024, n: int = 50) -> str:
-    """Twin of ops.dsir.dsir_select over the full documents table with
-    target = lang='en'."""
-    return f"""
-        WITH pool AS (
-          SELECT doc_id, lang, text FROM documents
-        ), {_dsir_tail_sql(n_buckets, n)}
-    """
-
-
-def _selected_corpus_oracle_sql(n_buckets: int = 1024, n: int = 100) -> str:
-    """The composed selection-pipeline twin: the training_corpus_cc
-    oracle (quality ∧ Gopher gates → LSH+verify → recursive-CTE closure →
-    cluster survivors) defines the pool; the DSIR tail selects its
-    top-n against the pool's English slice."""
-    tcc = _training_corpus_cc_oracle_sql()
-    return f"""
-        WITH pool AS (
-          SELECT d.doc_id, d.lang, d.text FROM documents d
-          WHERE d.doc_id IN (SELECT doc_id FROM ({tcc}))
-        ), {_dsir_tail_sql(n_buckets, n)}
-    """
-
-
-def _semdedup_core_sql(k_cent: int = 8, threshold: float = 0.42) -> str:
-    """Shared CTE chain of the SemDeDup oracles: centroid sample (md5
-    order, as ivf_centroids_from_sample), nearest-cell assignment (ties →
-    larger cid, matching ivf_assign's struct-max), rounded
-    cosine-to-centroid, within-cluster pairs at >= threshold, transitive
-    closure labels. For use inside a WITH RECURSIVE."""
-    cosc = _dd_cos("c.v", "ct.cvec")
-    return f"""
-        cent AS (
-          SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS cid,
-                 embedding AS cvec
-          FROM (SELECT vec_id, embedding FROM embeddings
-                ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {k_cent})
-        ), corpus AS (
-          SELECT vec_id AS id, embedding AS v FROM embeddings
-        ), normed AS (
-          -- unit vectors, same element order as the Spark transform:
-          -- v[i]::DOUBLE / sqrt(sum v[i]^2) — identical IEEE op sequence
-          SELECT id,
-                 list_transform(range(1, 65), i -> v[i]::DOUBLE / nrm) AS vn
-          FROM (
-            SELECT id, v,
-                   sqrt(list_sum(list_transform(range(1, 65),
-                        i -> v[i]::DOUBLE * v[i]::DOUBLE))) AS nrm
-            FROM corpus
-          )
-        ), asg AS (
-          SELECT id, cid, round(cos, 6) AS ccos FROM (
-            SELECT c.id, ct.cid, {cosc} AS cos,
-                   row_number() OVER (PARTITION BY c.id
-                                      ORDER BY {cosc} DESC, ct.cid DESC) AS rn
-            FROM corpus c CROSS JOIN cent ct
-          ) WHERE rn = 1
-        ), pairs AS (
-          SELECT * FROM (
-            SELECT a.id AS a_id, b.id AS b_id,
-                   round(list_sum(list_transform(range(1, 65),
-                         i -> av.vn[i] * bv.vn[i])), 6) AS cos,
-                   a.ccos AS a_ccos, b.ccos AS b_ccos
-            FROM asg a JOIN asg b ON a.cid = b.cid AND a.id < b.id
-            JOIN normed av ON av.id = a.id
-            JOIN normed bv ON bv.id = b.id
-          ) WHERE cos >= {threshold}
-        ), edges AS (
-          SELECT a_id AS s, b_id AS d FROM pairs
-          UNION
-          SELECT b_id AS s, a_id AS d FROM pairs
-        ), reach AS (
-          SELECT s AS id, d AS r FROM edges
-          UNION
-          SELECT e.s AS id, rc.r AS r FROM edges e JOIN reach rc ON rc.id = e.d
-        ), lbl AS (
-          SELECT id, least(id, min(r)) AS label FROM reach GROUP BY id
-        )"""
-
-
-def _semdedup_oracle_sql(k_cent: int = 8, threshold: float = 0.42) -> str:
-    """SemDeDup survivors: per component keep the member with the LOWEST
-    rounded cosine-to-centroid (farthest from centroid, the paper's rule),
-    ties → min id; everything not in a component survives."""
-    return f"""
-        WITH RECURSIVE {_semdedup_core_sql(k_cent, threshold)}, mem AS (
-          SELECT l.id, l.label, a.ccos FROM lbl l JOIN asg a ON a.id = l.id
-        ), keep AS (
-          SELECT id FROM (
-            SELECT id, row_number() OVER (PARTITION BY label
-                                          ORDER BY ccos, id) AS rn
-            FROM mem
-          ) WHERE rn = 1
-        )
-        SELECT vec_id FROM embeddings
-        WHERE vec_id NOT IN (
-          SELECT id FROM mem WHERE id NOT IN (SELECT id FROM keep)
-        )
-    """
-
-
-def _semdedup_cluster_sizes_oracle_sql(
-    k_cent: int = 8, threshold: float = 0.42
-) -> str:
-    """Histogram of SemDeDup duplicate-group sizes."""
-    return f"""
-        WITH RECURSIVE {_semdedup_core_sql(k_cent, threshold)}
-        SELECT group_size, count(*)::BIGINT AS n_groups FROM (
-          SELECT label, count(*)::BIGINT AS group_size FROM lbl GROUP BY label
-        ) GROUP BY group_size ORDER BY group_size
-    """
-
-
-def _media_near_dedup_oracle_sql(
-    threshold: float = 0.999, n_bands: int = 16, band_size: int = 8
-) -> str:
-    """Twin of ops.multimodal.media_near_dedup over the planted-dup synth
-    table: features from hex pairs of the payload fingerprint, then the
-    same banded hyperplane LSH + exact-cosine verify as the embedding
-    oracle, at dim 8."""
-    from ocr_search_spark.ops.similarity import _planes
-
-    planes = _planes(8, n_bands * band_size)
-    bit_exprs = []
-    for plane in planes:
-        dot = " + ".join(
-            f"feature[{i + 1}]::DOUBLE * ({v!r})" for i, v in enumerate(plane)
-        )
-        bit_exprs.append(f"(CASE WHEN ({dot}) >= 0 THEN '1' ELSE '0' END)")
-    band_keys = ", ".join(
-        f"'{b}:' || " + " || ".join(bit_exprs[b * band_size : (b + 1) * band_size])
-        for b in range(n_bands)
-    )
-    cos = _dd_cos("va.e", "vb.e", 8)
-    return f"""
-        WITH m AS (
-          SELECT 'media://synth/' || i AS id,
-                 md5(upper(repeat(md5('media://synth/' || (i % 8)),
-                                  CAST(1 + i % 5 AS INTEGER)))) AS fp
-          FROM range(64) t(i)
-        ), f AS (
-          SELECT id,
-                 list_transform(range(0, 8),
-                   k -> round((('0x' || substring(fp, 2 * k + 5, 2))::INT)::DOUBLE / 255, 6)
-                 ) AS feature
-          FROM m
-        ), banded AS (
-          SELECT id, unnest([{band_keys}]) AS band_key FROM f
-        ), cand AS (
-          SELECT DISTINCT a.id AS a_id, b.id AS b_id
-          FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.id < b.id
-        ), v AS (SELECT id, feature AS e FROM f
-        ), pairs AS (
-          SELECT c.a_id, c.b_id
-          FROM cand c JOIN v va ON va.id = c.a_id JOIN v vb ON vb.id = c.b_id
-          WHERE round({cos}, 6) >= {threshold}
-        )
-        SELECT id AS media_ref FROM f
-        WHERE id NOT IN (SELECT b_id FROM pairs)
-    """
-
-
-def _media_features_oracle_sql(n: int = 64) -> str:
-    """Rebuilds the synthetic media table and the stub decode entirely in
-    SQL: payload = repeat(unhex(md5(ref)), 1 + i % 5); every derived value
-    is a function of md5(hex(payload)) hex pairs (ops/multimodal.py)."""
-    f_cols = ",\n                   ".join(
-        f"round(('0x' || substring(fingerprint, {5 + 2 * k}, 2))::INT / 255.0, 6) AS f{k}"
-        for k in range(8)
-    )
-    return f"""
-        WITH refs AS (
-          SELECT 'media://synth/' || i AS media_ref, 1 + i % 5 AS reps
-          FROM range({n}) t(i)
-        ), pay AS (
-          SELECT media_ref, repeat(unhex(md5(media_ref)), reps) AS payload
-          FROM refs
-        ), fp AS (
-          SELECT media_ref,
-                 CAST(octet_length(payload) AS BIGINT) AS n_bytes,
-                 md5(hex(payload)) AS fingerprint
-          FROM pay
-        )
-        SELECT media_ref, n_bytes, fingerprint,
-               64 + (('0x' || substring(fingerprint, 1, 2))::INT % 192) AS width,
-               64 + (('0x' || substring(fingerprint, 3, 2))::INT % 192) AS height,
-               {f_cols}
-        FROM fp
-    """
-
-
-def _ann_lsh_oracle_sql(dim: int = 64, n_planes: int = 8) -> str:
-    """Hyperplane-LSH bucket oracle: the deterministic plane constants are
-    inlined as literals; sign bits concatenated exactly like
-    ops.similarity.hyperplane_lsh_buckets."""
-    from ocr_search_spark.ops.similarity import _planes
-
-    planes = _planes(dim, n_planes)
-    bit_exprs = []
-    for plane in planes:
-        dot = " + ".join(
-            f"embedding[{i + 1}]::DOUBLE * ({v!r})" for i, v in enumerate(plane)
-        )
-        bit_exprs.append(f"(CASE WHEN ({dot}) >= 0 THEN '1' ELSE '0' END)")
-    bucket = " || ".join(bit_exprs)
-    return f"SELECT vec_id AS id, {bucket} AS bucket FROM embeddings"
-
-
-def _mmr_oracle_sql(
-    k: int = 10, lam: int = 7000, pool_k: int = 50, dim: int = 64
-) -> str:
-    """Unrolled greedy-MMR twin of ops.similarity.mmr_select: k chained
-    (m{i}, s{i}, sel{i}) CTE triples — max-sim-to-selected, BIGINT-score
-    argmax, cumulative selected set — over the cosine top-``pool_k`` pool
-    for query vector 0. MATERIALIZED CTEs: sel{i} is referenced three
-    times by round i+1 and DuckDB would otherwise re-inline the whole
-    prefix chain each time (the wordpiece_encode lesson)."""
-
-    def cos(a: str, b: str) -> str:
-        return (
-            f"round(list_sum(list_transform(range(1, {dim + 1}),"
-            f" i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"
-            f" / (sqrt(list_sum(list_transform(range(1, {dim + 1}),"
-            f" i -> {a}[i]::DOUBLE * {a}[i]::DOUBLE)))"
-            f" * sqrt(list_sum(list_transform(range(1, {dim + 1}),"
-            f" i -> {b}[i]::DOUBLE * {b}[i]::DOUBLE)))), 6)"
-        )
-
-    parts = [
-        f"""
-        WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-        cosq AS (
-          SELECT e.vec_id, {cos("e.embedding", "q.qvec")} AS cs
-          FROM embeddings e CROSS JOIN q WHERE e.vec_id <> 0
-        ),
-        pool AS MATERIALIZED (
-          SELECT vec_id, round(cs * 1000000)::BIGINT AS rel_e6
-          FROM cosq ORDER BY cs DESC, vec_id LIMIT {pool_k}
-        ),
-        pv AS MATERIALIZED (
-          SELECT p.vec_id, p.rel_e6, e.embedding
-          FROM pool p JOIN embeddings e USING (vec_id)
-        ),
-        sims AS MATERIALIZED (
-          SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                 round({cos("a.embedding", "b.embedding")} * 1000000)::BIGINT
-                   AS sim_e6
-          FROM pv a JOIN pv b ON a.vec_id <> b.vec_id
-        ),
-        sel1 AS MATERIALIZED (
-          SELECT vec_id, rel_e6, 1 AS pick_order FROM pv
-          ORDER BY rel_e6 DESC, vec_id LIMIT 1
-        )"""
-    ]
-    for i in range(2, int(k) + 1):
-        parts.append(
-            f""",
-        m{i} AS (
-          SELECT p.vec_id, p.rel_e6, max(s.sim_e6) AS ms
-          FROM pv p
-          JOIN sims s ON s.a_id = p.vec_id
-          JOIN sel{i - 1} t ON t.vec_id = s.b_id
-          WHERE p.vec_id NOT IN (SELECT vec_id FROM sel{i - 1})
-          GROUP BY p.vec_id, p.rel_e6
-        ),
-        s{i} AS (
-          SELECT vec_id, rel_e6, {i} AS pick_order FROM m{i}
-          ORDER BY {lam} * rel_e6 - {10000 - lam} * ms DESC, vec_id LIMIT 1
-        ),
-        sel{i} AS MATERIALIZED (
-          SELECT * FROM sel{i - 1} UNION ALL SELECT * FROM s{i}
-        )"""
-        )
-    parts.append(
-        f"""
-        SELECT vec_id, rel_e6, pick_order FROM sel{int(k)}"""
-    )
-    return "".join(parts)
-
-
-def _ndcg_oracle_sql(k: int = 10, dim: int = 64) -> str:
-    """NDCG@k twin of search.ranking.ndcg_at_k over the cosine top-k
-    ranking for query vectors 0-4 with binary same-label relevance. The
-    position-discount weights are THE SAME BIGINT literals the Spark
-    side uses (ranking._ndcg_weights), so both engines sum identical
-    integers."""
-    from ocr_search_spark.search.ranking import _ndcg_weights
-
-    w_rows = ", ".join(
-        f"({i + 1}, {wt})" for i, wt in enumerate(_ndcg_weights(int(k)))
-    )
-    return f"""
-        WITH q AS (
-          SELECT vec_id AS query_id, embedding AS qvec, label AS qlabel
-          FROM embeddings WHERE vec_id < 5
-        ),
-        scored AS (
-          SELECT q.query_id, e.vec_id AS doc_id,
-                 round(
-                   list_sum(list_transform(range(1, {dim + 1}),
-                     i -> e.embedding[i]::DOUBLE * q.qvec[i]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(range(1, {dim + 1}),
-                        i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))
-                    * sqrt(list_sum(list_transform(range(1, {dim + 1}),
-                        i -> q.qvec[i]::DOUBLE * q.qvec[i]::DOUBLE)))),
-                 6) AS cos
-          FROM embeddings e CROSS JOIN q
-          WHERE e.vec_id <> q.query_id
-        ),
-        ranked AS (
-          SELECT query_id, doc_id,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cos DESC, doc_id) AS rnk
-          FROM scored QUALIFY rnk <= {int(k)}
-        ),
-        w(i, wt) AS (VALUES {w_rows}),
-        rels AS (
-          SELECT q.query_id, e.vec_id AS doc_id,
-                 CASE WHEN e.label = q.qlabel THEN 1 ELSE 0 END AS rel
-          FROM embeddings e CROSS JOIN q
-          WHERE e.vec_id <> q.query_id
-        ),
-        dcg AS (
-          SELECT r.query_id,
-                 sum(coalesce(rel, 0)::BIGINT * wt)::BIGINT AS dcg
-          FROM ranked r
-          JOIN w ON w.i = r.rnk
-          LEFT JOIN rels USING (query_id, doc_id)
-          GROUP BY r.query_id
-        ),
-        ideal AS (
-          SELECT query_id, sum(rel::BIGINT * wt)::BIGINT AS idcg
-          FROM (
-            SELECT query_id, rel, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY rel DESC, doc_id) AS rr
-            FROM rels WHERE rel > 0
-          ) JOIN w ON w.i = rr
-          WHERE rr <= {int(k)}
-          GROUP BY query_id
-        )
-        SELECT d.query_id, d.dcg,
-               coalesce(i.idcg, 0)::BIGINT AS idcg,
-               (CASE WHEN coalesce(i.idcg, 0) > 0
-                     THEN (d.dcg * 1000000) // i.idcg
-                     ELSE 0 END)::BIGINT AS ndcg_ppm
-        FROM dcg d LEFT JOIN ideal i USING (query_id)
     """

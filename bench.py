@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
+"""Extraction timer: the extraction stage at $SPARK_GRAFT_SF_DIR on
 local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
-Headline metric (BASELINE.json): end-to-end extraction throughput —
-documents/sec and spans/sec over the interleaved corpus — measured as
-scan(parquet) → salt/shuffle → vectorized extraction → parquet write
-(the full pipeline, not a kernel microbenchmark). Secondary queries cover
-the search layer and the training-data operators.
+Metric (BASELINE.json): end-to-end extraction throughput — documents/sec
+and spans/sec over the interleaved corpus — measured as scan(parquet) →
+salt/shuffle → vectorized extraction → parquet write (the full pipeline,
+not a kernel microbenchmark), as the minimum of 2 timed passes. The repo's
+benchmark of the ingest and search paths is ``perfbench/``.
 
 The corpus is deterministic, derived from the sf's documents.parquet
 (corpus.build_document); it is materialized once to a cache dir so the
@@ -60,19 +60,15 @@ def corpus_cache_path(sf_dir: str) -> str:
     return os.path.join(CACHE_ROOT, f"corpus_{sf}_{h.hexdigest()[:10]}.parquet")
 
 
-def ensure_corpus(spark, sf_dir: str, n_docs: int | None = None, tag: str = "") -> str:
-    """Materialize the interleaved corpus parquet once per (sf, size)."""
+def ensure_corpus(spark, sf_dir: str) -> str:
+    """Materialize the interleaved corpus parquet once per sf."""
     from ocr_search_spark.corpus import corpus_df, n_docs_for
 
     path = corpus_cache_path(sf_dir)
-    if tag:
-        path = path.replace(".parquet", f"_{tag}.parquet")
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         corpus_df(
-            spark, sf_dir,
-            n_docs=n_docs if n_docs is not None else n_docs_for(sf_dir),
-            partitions=CPUS * 2,
+            spark, sf_dir, n_docs=n_docs_for(sf_dir), partitions=CPUS * 2
         ).write.mode("overwrite").parquet(path)
     return path
 
@@ -80,19 +76,14 @@ def ensure_corpus(spark, sf_dir: str, n_docs: int | None = None, tag: str = "") 
 def main() -> None:
     from ocr_search_spark.session import get_spark
 
-    import __spark_entry__ as entrymod
-
     spark = get_spark("bench", cores=CPUS, shuffle_partitions=max(CPUS, 16))
     spark.sparkContext.setLogLevel("ERROR")
-    timings: dict[str, float] = {}
 
     corpus_path = ensure_corpus(spark, SF_DIR)
     corpus = spark.read.parquet(corpus_path)
     n_docs = corpus.count()
 
-    # --- q1: flagship e2e extraction (scan -> shuffle -> extract -> write)
-    # one untimed warmup pass (python-worker spawn + codegen; long-lived
-    # executors on a real cluster), then the timed steady-state pass
+    # e2e extraction (scan -> shuffle -> extract -> write)
     from ocr_search_spark.pipeline import extract_documents
 
     # two warmup passes: one reaches codegen/Python-worker steady state, the
@@ -122,267 +113,6 @@ def main() -> None:
         ).parquet(out_dir)
         t_extract = min(t_extract, time.monotonic() - t0)
         shutil.rmtree(out_dir, ignore_errors=True)
-    timings["extract_e2e"] = round(t_extract, 3)
-
-    # --- secondary queries (search layer + training-data ops)
-    qs = entrymod.queries()
-    secondary = [
-        "fts_count",
-        "fts_phrase",
-        "fts_search_topk",
-        "trigram_topk",
-        "normalize_chain",
-        "dedup_exact",
-        "minhash",
-        "lsh_bands",
-        "near_dedup_survivors",
-        "near_dedup_cc",
-        "substring_dedup",
-        "winnow_fingerprints",
-        "token_quality",
-        "token_counts",
-        "meta_filter",
-        "ann_cosine_topk",
-        "events_hourly",
-        "bm25",
-        "rank_cd",
-        "sessionize",
-        "vocab_topk",
-        "revenue_by_nation",
-        "training_corpus",
-        "asof_join",
-        "range_join",
-        "line_dedup",
-        "compression_signals",
-        "mixing_corpus",
-        "lm_bits",
-        "ccnet_buckets",
-        "url_dedup",
-        "reg_domain_counts",
-        "temperature_rebalance",
-        "chunk_documents",
-        "classifier_scores",
-        "para_dedup",
-        "domain_pagerank",
-        "warc_roundtrip",
-        "corpus_diff",
-        "unimax_rebalance",
-        "adaptive_quality",
-        "semdedup",
-        "dsir_select",
-        "pack_sequences",
-        "para_lang_profile",
-        "bpe_pairs",
-        "oversample",
-        "ann_recall",
-        "ngram_novelty",
-        "split_leakage",
-        "simhash_dedup",
-        "semantic_decontaminate",
-        "bloom_probe",
-        "sq_topk",
-        "data_card",
-        "nb_select",
-        "vocab_distinct_est",
-        "vocab_overlap",
-        "shard_manifest",
-        "bpe_train",
-        "bpe_vocab_stats",
-        "bpe_encode",
-        "tfidf_related",
-        "heaps_law",
-        "bpe_fertility",
-        "kmeans_train",
-        "pq_train",
-        "curriculum_shards",
-        "ivf_pq_recall",
-        "zipf_spectrum",
-        "tokenized_pack",
-        "pq_recall_trained",
-        "bpe_apply",
-        "perceptron_select",
-        "margin_mine",
-        "wordpiece_train",
-        "wordpiece_encode",
-        "unigram_segment",
-        "kn_bits",
-        "neardup_recall",
-        "hybrid_search",
-        "mmr_rerank",
-        "prf_terms",
-        "ltr_features",
-        "ndcg_eval",
-        "ql_scores",
-        "prf_search",
-        "funnel",
-        "cohort_retention",
-        "length_percentiles",
-        "fuzzy_source_pairs",
-        "group_split",
-        "length_outliers",
-        "mrr_eval",
-        "event_transitions",
-        "weighted_sample",
-        "hard_negatives",
-    ]
-    for name in secondary:
-        # untimed warmup (codegen + python-worker/stage spin-up), then
-        # min-of-2 timed passes — this VM's multi-core throughput swings
-        # ±40% minute to minute, and a single timed pass recorded the r3
-        # near-dedup "regression" that a min-of-N protocol dissolves
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.monotonic()
-            qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            best = min(best, time.monotonic() - t0)
-        timings[name] = round(best, 3)
-
-    # --- PQ family: index build (one-time, amortizes in production) is
-    # timed SEPARATELY from the per-query probe search, so the headline
-    # pq_adc_topk / ivf_pq_topk rows measure the amortized serving cost
-    # the SCALE.md argument makes — not build+query conflated (r4 weak
-    # mark). The build phase materializes codes / the codes⋈cells index
-    # with persist()+count(), exactly what production does with a table.
-    from ocr_search_spark.ops.similarity import (
-        ivf_centroids_from_sample,
-        ivf_pq_index,
-        ivf_pq_search,
-        pq_adc_topk,
-        pq_codebooks_from_sample,
-        pq_encode,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    pq_queries = emb.filter(F.col("vec_id") < 5)
-
-    t0 = time.monotonic()
-    cb = pq_codebooks_from_sample(emb, m=8, k=16, dim=64)
-    codes = pq_encode(emb, cb).persist()
-    codes.count()
-    timings["pq_index_build"] = round(time.monotonic() - t0, 3)
-
-    t0 = time.monotonic()
-    cents = ivf_centroids_from_sample(emb, k=16)
-    ivf_index = ivf_pq_index(emb, cents, cb).persist()
-    ivf_index.count()
-    timings["ivf_pq_index_build"] = round(time.monotonic() - t0, 3)
-
-    for name, mk in (
-        ("pq_adc_topk", lambda: pq_adc_topk(codes, cb, pq_queries, k=10)),
-        (
-            "ivf_pq_topk",
-            lambda: ivf_pq_search(
-                ivf_index, pq_queries, cents, cb, k=10, n_probe=4
-            ),
-        ),
-    ):
-        mk().write.format("noop").mode("overwrite").save()  # warmup
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.monotonic()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.monotonic() - t0)
-        timings[name] = round(best, 3)
-    codes.unpersist()
-    ivf_index.unpersist()
-
-    # --- incremental dedup: in production the accepted-corpus MinHash
-    # signature store and its LSH band index are PERSISTED tables
-    # (appended per ingested batch), so store build is timed once and
-    # separately from the per-batch ingest dedup — same protocol as the
-    # PQ index split above
-    from ocr_search_spark.ops.dedup import (
-        incremental_near_dedup,
-        lsh_band_table,
-        minhash_signatures,
-    )
-
-    docs_tbl = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    inc_base = docs_tbl.filter(F.col("doc_id") % 5 != 0)
-    inc_new = docs_tbl.filter(F.col("doc_id") % 5 == 0)
-    t0 = time.monotonic()
-    inc_sigs = minhash_signatures(inc_base, "doc_id", "text").persist()
-    inc_sigs.count()
-    inc_bands = lsh_band_table(inc_sigs).persist()
-    inc_bands.count()
-    timings["sig_store_build"] = round(time.monotonic() - t0, 3)
-
-    def mk_inc():
-        return incremental_near_dedup(
-            inc_new, "doc_id", "text", inc_sigs, base_bands=inc_bands
-        )[0]
-
-    mk_inc().write.format("noop").mode("overwrite").save()  # warmup
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.monotonic()
-        mk_inc().write.format("noop").mode("overwrite").save()
-        best = min(best, time.monotonic() - t0)
-    timings["incremental_dedup_ingest"] = round(best, 3)
-    inc_sigs.unpersist()
-    inc_bands.unpersist()
-
-    # --- blowup section (standing per-round scale probe, SCALE.md): the
-    # same jobs at ~10× corpus size, to catch superlinear regressions the
-    # bench-scale rows can't see. One warmup + one timed pass each (these
-    # rows detect regressions, they are not the precision headline).
-    # Disable with SPARK_GRAFT_BLOWUP=0.
-    blowup: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BLOWUP", "1") != "0":
-        # extraction at 1M docs / ~6M spans (cached parquet, built once)
-        big = spark.read.parquet(
-            ensure_corpus(spark, SF_DIR, n_docs=1_000_000, tag="blowup1m")
-        )
-        nb_docs = big.count()
-        nb_spans = 0
-        for timed in (False, True):
-            out_dir = tempfile.mkdtemp(prefix="bench_blowup_")
-            t0 = time.monotonic()
-            extract_documents(big, num_partitions=CPUS * 2).write.mode(
-                "overwrite"
-            ).parquet(out_dir)
-            if timed:
-                blowup["extract_1m_sec"] = round(time.monotonic() - t0, 3)
-            nb_spans = int(
-                spark.read.parquet(out_dir)
-                .agg(F.sum("n_spans").alias("s")).collect()[0].s
-            )
-            shutil.rmtree(out_dir, ignore_errors=True)
-        blowup["extract_1m_docs_per_sec"] = round(
-            nb_docs / blowup["extract_1m_sec"], 1
-        )
-        blowup["extract_1m_spans_per_sec"] = round(
-            nb_spans / blowup["extract_1m_sec"], 1
-        )
-
-        # near-dedup CC at 50k docs (10 deterministic near-dup variants per
-        # base doc): LSH bands -> candidate verify -> label propagation at
-        # 10x the driver-window size
-        from ocr_search_spark.ops.dedup import near_dedup_cc
-
-        base_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-            F.col("doc_id").cast("string").alias("doc_id"), "text"
-        )
-        variants = base_docs.select(
-            F.explode(F.array(*[F.lit(i) for i in range(10)])).alias("v"),
-            "doc_id",
-            "text",
-        ).select(
-            F.concat_ws("_", "doc_id", "v").alias("doc_id"),
-            F.when(F.col("v") == 0, F.col("text"))
-            .otherwise(
-                F.concat_ws(" ", "text", F.lit("variant"), F.col("v"))
-            )
-            .alias("text"),
-        )
-        job = lambda: near_dedup_cc(
-            variants, "doc_id", "text", threshold=0.3, n_hashes=8, band_size=2
-        ).write.format("noop").mode("overwrite").save()
-        job()
-        t0 = time.monotonic()
-        job()
-        blowup["near_dedup_cc_50k_sec"] = round(time.monotonic() - t0, 3)
 
     docs_per_sec = n_docs / t_extract
     spans_per_sec = n_spans / t_extract
@@ -390,16 +120,14 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "extract_e2e_sec",
-                "value": timings["extract_e2e"],
+                "value": round(t_extract, 3),
                 "unit": "sec",
-                "queries": timings,
                 "sf": sf_of(SF_DIR),
                 "cpus": CPUS,
                 "docs": n_docs,
                 "spans": n_spans,
                 "docs_per_sec": round(docs_per_sec, 1),
                 "spans_per_sec": round(spans_per_sec, 1),
-                "blowup": blowup,
             }
         )
     )

@@ -14,10 +14,15 @@ interleaved text + media documents:
   trigram similarity, snippet, combined ordering (app/search.py:10-99);
 * skew-salted partitioning, per-partition lineage/audit metrics, and
   checkpointed resumability published by one atomic pointer (north_rule);
-* training-data-pipeline operators: dedup (exact / MinHash-LSH / n-gram
-  Jaccard / SimHash), ANN similarity search over embeddings, text analysis
-  (language id, quality score, token counting, fingerprinting), multimodal
-  binary-column plumbing.
+* near-duplicate removal over stored content (``ops.dedup.near_dedup_cc``
+  and the MinHash-LSH / Jaccard / SimHash operators it builds on) and the
+  exiftool-analogue metadata map (``ops.metadata``);
+* off those paths, training-data-pipeline operators in the other ``ops``
+  submodules and ``streaming``: ANN similarity search over embeddings, text
+  analysis and tokenizers, sampling, hygiene, multimodal column plumbing.
+
+The three paths are ``store.DocumentStore.ingest``, ``DocumentStore.search``
+and ``ops.dedup.near_dedup_cc``.
 """
 
 __version__ = "0.1.0"

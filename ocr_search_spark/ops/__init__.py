@@ -1,168 +1,12 @@
-"""Training-data-pipeline operators: dedup, similarity search, text analysis,
-temporal joins, corpus hygiene/mixing, multimodal column plumbing. All
-scale paths are built-in DataFrame ops."""
+"""Operators over stored content. On the store's paths: near-duplicate
+removal (``dedup``, whose ``near_dedup_cc`` is the store's dedup path) and
+the metadata map the store attaches to each document (``metadata``). Off
+them: the training-data-pipeline operators (``similarity``,
+``text_analysis``, ``sampling``, ``scrub``, ``classify``, ``lm``, ``dsir``,
+``sketch``, ``lines``, ``compress``, ``relational``, ``events``, ``graph``,
+``multimodal``).
 
-from .text_analysis import (
-    bpe_train,
-    bpe_vocab_stats,
-    corpus_data_card,
-    fingerprint_expr,
-    grouped_percentiles,
-    lang_id_expr,
-    quality_metrics,
-    token_count_expr,
-)
-from .dedup import (
-    corpus_diff,
-    decontaminate,
-    exact_dedup_groups,
-    incremental_near_dedup,
-    jaccard_pairs_exact,
-    jaccard_pairs_index,
-    neardup_recall,
-    lsh_band_table,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    near_dedup,
-    near_dedup_cc,
-    simhash_df,
-    simhash_expr,
-)
-from .similarity import (
-    cosine_neardup_pairs_exact,
-    cosine_neardup_pairs_lsh,
-    cosine_topk,
-    hyperplane_lsh_buckets,
-    ivf_pq_index,
-    ivf_pq_search,
-    ivf_pq_topk,
-    pq_adc_topk,
-    pq_codebooks_from_sample,
-    pq_encode,
-    semantic_decontaminate,
-)
-from .graph import domain_link_edges, pagerank
-from .sketch import (
-    distinct_estimate,
-    distinct_sample,
-    hash32_expr,
-    sampled_jaccard,
-)
-from .relational import asof_join, range_join
-from .lines import remove_duplicate_lines, remove_duplicate_paragraphs
-from .compress import compression_filter, compression_signals
-from .lm import ccnet_buckets, lm_score, lm_vocab_size, ngram_lm
-from .scrub import (
-    canonical_url_expr,
-    domain_blocklist_filter,
-    domain_counts,
-    mojibake_filter,
-    mojibake_signals,
-    redact_pii,
-    registered_domain_counts,
-    registered_domain_expr,
-    url_dedup,
-)
-from .classify import (
-    classifier_filter,
-    hashed_features,
-    linear_scores,
-    nb_train,
-    sigmoid_score,
-    token_bucket_expr,
-)
-from .sampling import (
-    chunk_documents,
-    deterministic_sample,
-    global_shuffle,
-    length_buckets,
-    hash_split,
-    pack_shards,
-    shard_manifest,
-    stratified_sample,
-    temperature_rates,
-    temperature_rebalance,
-    topk_per_group,
-    unimax_rates,
-    unimax_rebalance,
-)
-
-__all__ = [
-    "bpe_train",
-    "bpe_vocab_stats",
-    "fingerprint_expr",
-    "corpus_data_card",
-    "grouped_percentiles",
-    "lang_id_expr",
-    "quality_metrics",
-    "token_count_expr",
-    "decontaminate",
-    "exact_dedup_groups",
-    "jaccard_pairs_exact",
-    "jaccard_pairs_index",
-    "neardup_recall",
-    "lsh_candidate_pairs",
-    "minhash_signatures",
-    "corpus_diff",
-    "incremental_near_dedup",
-    "lsh_band_table",
-    "near_dedup",
-    "near_dedup_cc",
-    "simhash_df",
-    "simhash_expr",
-    "cosine_topk",
-    "cosine_neardup_pairs_exact",
-    "cosine_neardup_pairs_lsh",
-    "hyperplane_lsh_buckets",
-    "ivf_pq_index",
-    "ivf_pq_search",
-    "ivf_pq_topk",
-    "pq_adc_topk",
-    "pq_codebooks_from_sample",
-    "pq_encode",
-    "semantic_decontaminate",
-    "asof_join",
-    "range_join",
-    "domain_link_edges",
-    "pagerank",
-    "remove_duplicate_lines",
-    "remove_duplicate_paragraphs",
-    "compression_filter",
-    "compression_signals",
-    "ccnet_buckets",
-    "lm_score",
-    "lm_vocab_size",
-    "ngram_lm",
-    "domain_blocklist_filter",
-    "canonical_url_expr",
-    "domain_counts",
-    "registered_domain_counts",
-    "registered_domain_expr",
-    "url_dedup",
-    "mojibake_filter",
-    "mojibake_signals",
-    "redact_pii",
-    "deterministic_sample",
-    "hash_split",
-    "chunk_documents",
-    "classifier_filter",
-    "nb_train",
-    "distinct_estimate",
-    "distinct_sample",
-    "global_shuffle",
-    "length_buckets",
-    "hash32_expr",
-    "sampled_jaccard",
-    "shard_manifest",
-    "hashed_features",
-    "linear_scores",
-    "sigmoid_score",
-    "token_bucket_expr",
-    "pack_shards",
-    "stratified_sample",
-    "temperature_rates",
-    "temperature_rebalance",
-    "unimax_rates",
-    "unimax_rebalance",
-    "topk_per_group",
-]
+Import the submodule you need (``from ocr_search_spark.ops import dedup``);
+this package re-exports nothing, so importing one submodule loads only it
+and what it imports.
+"""

@@ -25,7 +25,7 @@ import zlib
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: deflate level for the signal — fixed so results are reproducible
@@ -60,12 +60,6 @@ def compression_signals(
             "n_zlib": _zlib_len_udf(level)(F.col(text_col)),
         }
     )
-
-
-def compression_ratio(n_zlib: Column, n_bytes: Column) -> Column:
-    """compressed/raw ratio as double (reporting only — the gate below
-    never compares floats)."""
-    return n_zlib.cast("double") / F.nullif(n_bytes, F.lit(0)).cast("double")
 
 
 def compression_filter(

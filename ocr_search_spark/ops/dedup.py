@@ -17,6 +17,30 @@ from pyspark.sql import functions as F
 from ..search.analysis import tokens_expr
 
 
+def _token_shingles(toks: Column, n: Column, k: int) -> Column:
+    """k-token shingle array via zip_with over shifted slices.
+
+    PUSHDOWN-SAFE by construction: the lambdas see only the paired
+    elements. The transform(sequence, element_at(toks, i+j)) formulation
+    references the token array INSIDE the lambda — fine while ``toks`` is
+    an attribute, but catastrophic when an optimizer rule
+    (InferFiltersFromGenerate below an explode, or a conjunct-split gate
+    predicate) substitutes the producer tree into the lambda: the
+    tokenizer then re-evaluates per element, O(n²·tokenize) per row. A
+    driver session does not carry this repo's excluded-rules config, so
+    every driver-facing producer must be safe under default optimization
+    (measured: winnow_partial_dups 270 s → ~2 s on a vanilla session).
+    """
+
+    def shifted(j: int) -> Column:
+        return F.slice(toks, j + 1, n - k + 1)
+
+    z = shifted(0)
+    for j in range(1, k):
+        z = F.zip_with(z, shifted(j), lambda a, b: F.concat(a, F.lit(" "), b))
+    return F.when(n >= k, z).otherwise(F.array().cast("array<string>"))
+
+
 def _shingles_of_tokens(toks, k: int = 3):
     """Distinct k-token shingles from a *materialized* tokens column.
 
@@ -489,15 +513,13 @@ def decontaminate(
     shuffle at all. Returns the surviving rows of ``df``.
 
     DRIVER-SESSION-SAFE plan shape: shingles come from the zip_with-over-
-    shifted-slices primitive (``text_analysis._token_shingles``) and the
+    shifted-slices primitive (``_token_shingles``) and the
     explode is ``explode_outer`` — InferFiltersFromGenerate cannot push a
     predicate below an OUTER generate, so a vanilla session (no excluded
     rules) never inlines the tokenizer into a scan filter (the inner-
     explode + transform/element_at formulation measured 19 s vs <1 s on
     500 docs under default optimization).
     """
-    from .text_analysis import _token_shingles
-
     def sh_rows(frame: DataFrame, txt: str, keep: list[str]) -> DataFrame:
         toked = frame.select(*keep, tokens_expr(F.col(txt)).alias("toks"))
         sh = toked.select(
@@ -560,8 +582,6 @@ def bloom_bits(
     """
     if shingle_k < 1 or k_hashes < 1 or m_bits < 2:
         raise ValueError("shingle_k, k_hashes >= 1 and m_bits >= 2 required")
-    from .text_analysis import _token_shingles
-
     toked = bench.select(tokens_expr(F.col(text_col)).alias("toks"))
     sh = (
         toked.select(
@@ -616,8 +636,6 @@ def bloom_probe(
     """
     if shingle_k < 1 or k_hashes < 1 or m_bits < 2:
         raise ValueError("shingle_k, k_hashes >= 1 and m_bits >= 2 required")
-    from .text_analysis import _token_shingles
-
     # materialize the bit set ONCE: each of the k semi-joins below would
     # otherwise re-derive the whole bench tokenize/shingle/hash lineage
     bits = bloom_bits(

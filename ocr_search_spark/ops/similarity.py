@@ -850,39 +850,6 @@ def pq_codebooks_from_sample(
     return out
 
 
-def ivf_pq_seeds_from_sample(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[list[tuple[int, list[float]]], list[tuple[int, int, list[float]]]]:
-    """Both seed tables — IVF coarse centroids AND PQ codebooks — from
-    ONE collect of the k smallest-md5 rows. ivf_centroids_from_sample
-    and pq_codebooks_from_sample read the very same seed rows when
-    called with the same k; a composition that needs both (the ivf_pq_*
-    serve/eval queries) pays two identical driver jobs for it (r6).
-    Returns (centroids, codebooks), bit-identical to calling the two
-    single-table helpers."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    rows = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.md5(F.encode(F.col("id").cast("string"), "utf-8")), F.col("id"))
-        .limit(k)
-        .collect()
-    )
-    cents = [(i, [float(x) for x in r.v]) for i, r in enumerate(rows)]
-    cbs = [
-        (s, c, [float(x) for x in r.v[s * sub : (s + 1) * sub]])
-        for s in range(m)
-        for c, r in enumerate(rows)
-    ]
-    return cents, cbs
-
-
 def pq_train(
     df: DataFrame,
     m: int = 8,

@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..search.analysis import tokens_expr
+from .dedup import _token_shingles
 
 #: BPE-ish pre-tokenizer: letter runs | digit runs | punctuation runs —
 #: the GPT-2-style split shape, RE2- and Java-regex-portable
@@ -28,30 +29,6 @@ LANG_STOPWORDS = {
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
-
-
-def _token_shingles(toks: Column, n: Column, k: int) -> Column:
-    """k-token shingle array via zip_with over shifted slices.
-
-    PUSHDOWN-SAFE by construction: the lambdas see only the paired
-    elements. The transform(sequence, element_at(toks, i+j)) formulation
-    references the token array INSIDE the lambda — fine while ``toks`` is
-    an attribute, but catastrophic when an optimizer rule
-    (InferFiltersFromGenerate below an explode, or a conjunct-split gate
-    predicate) substitutes the producer tree into the lambda: the
-    tokenizer then re-evaluates per element, O(n²·tokenize) per row. A
-    driver session does not carry this repo's excluded-rules config, so
-    every driver-facing producer must be safe under default optimization
-    (measured: winnow_partial_dups 270 s → ~2 s on a vanilla session).
-    """
-
-    def shifted(j: int) -> Column:
-        return F.slice(toks, j + 1, n - k + 1)
-
-    z = shifted(0)
-    for j in range(1, k):
-        z = F.zip_with(z, shifted(j), lambda a, b: F.concat(a, F.lit(" "), b))
-    return F.when(n >= k, z).otherwise(F.array().cast("array<string>"))
 
 
 def token_count_expr(col: Column | str) -> Column:

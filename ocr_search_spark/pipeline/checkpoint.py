@@ -103,8 +103,8 @@ def read_pointer(root: str) -> dict:
     ``{"order": n, "snapshot": id | None, "spans": {run_group:
     {"num_groups": k, "live": {"<group_id>": {"run_id": r, "order": o}}}}}``
     where ``order`` counts publishes and each live attempt keeps the order
-    it was published at. Before the first publish no snapshot and no
-    attempt is live."""
+    its rows were first published at (a compaction rewrite inherits it).
+    Before the first publish no snapshot and no attempt is live."""
     if os.path.isdir(os.path.join(root, "_ledger")):
         # spans used to be published by rows of a parquet ledger table;
         # resuming over one would re-extract everything next to the old
@@ -208,18 +208,23 @@ def committed_spans_latest(spark: SparkSession, out_dir: str) -> DataFrame:
     # ONE scan node regardless of attempt count: read every live attempt
     # path in a single multi-path parquet read with basePath so the g/r
     # partition columns surface, then attach the publication order by
-    # broadcast-joining the (run_id, order) table. A run_id is published
-    # in one swap, so it has one order. (One DataFrame per attempt reduced
-    # with unionByName would be an O(attempts)-leg plan, driver-slow to
-    # analyze at thousands of groups.)
+    # broadcast-joining the ("g/r", order) table. The key is the attempt,
+    # not the run_id: compaction keeps each group's order, so one compact
+    # run_id spans groups published at different orders. (One DataFrame
+    # per attempt reduced with unionByName would be an O(attempts)-leg
+    # plan, driver-slow to analyze at thousands of groups.)
     paths = [group_attempt_path(out_dir, g, r) for g, r, _ in live]
     allp = (
         spark.read.schema(SPANS_OUT_SCHEMA + ", g int, r string")
         .option("basePath", output_path(out_dir))
         .parquet(*paths)
     )
-    pub = string_int_df(spark, sorted({(r, o) for _, r, o in live}), "r, __pub")
-    allp = allp.join(F.broadcast(pub), "r").drop("g", "r")
+    pub = string_int_df(spark, sorted((f"{g}/{r}", o) for g, r, o in live), "__gr, __pub")
+    allp = (
+        allp.withColumn("__gr", F.concat_ws("/", F.col("g").cast("string"), "r"))
+        .join(F.broadcast(pub), "__gr")
+        .drop("g", "r", "__gr")
+    )
     payload = [c for c in allp.columns if c not in ("doc_id", "__pub")]
     return (
         allp.groupBy("doc_id")
@@ -241,9 +246,11 @@ def compact_group_outputs(
     accumulates P files per group per run — the classic small-files problem
     at 10^12 rows. Compaction reuses the same stage-then-publish protocol as
     extraction: readers never see a half-written rewrite, and a crash
-    mid-compaction leaves the previous publication live."""
-    pointer = read_pointer(out_dir)
-    live = _live_attempts(pointer, run_group)
+    mid-compaction leaves the previous publication live. The rewrite holds
+    the same rows, so each group keeps the publication order it had:
+    compacting an older run_group never makes its rows win over a newer
+    run_group's in :func:`committed_spans_latest`."""
+    live = _live_attempts(read_pointer(out_dir), run_group)
     if not live:
         return {"run_group": run_group, "groups_compacted": 0, "run_id": None}
     _validate_run_group(run_group)
@@ -276,11 +283,16 @@ def compact_group_outputs(
     for g in groups:
         _ensure_local_dir(group_attempt_path(out_dir, g, compact_id))
 
-    # Publish: one pointer swap makes every rewritten group live. A crash
-    # before it leaves the previous publications live (the staged rewrite
-    # is an invisible orphan — same contract as extraction).
-    num_groups = pointer["spans"][run_group]["num_groups"]
-    publish(out_dir, lambda p: _make_live(p, run_group, num_groups, groups, compact_id))
+    # Publish: one pointer swap makes every rewritten group live at the
+    # order it already had. A crash before it leaves the previous
+    # publications live (the staged rewrite is an invisible orphan — same
+    # contract as extraction).
+    def swap_in(p: dict) -> None:
+        live_now = p["spans"][run_group]["live"]
+        for g in groups:
+            live_now[str(g)]["run_id"] = compact_id
+
+    publish(out_dir, swap_in)
     return {
         "run_group": run_group,
         "groups_compacted": len(live),

@@ -10,20 +10,21 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_search_spark.ops import (
-    cosine_topk,
+from ocr_search_spark.ops.dedup import (
     exact_dedup_groups,
-    hyperplane_lsh_buckets,
     jaccard_pairs_exact,
-    lang_id_expr,
     lsh_candidate_pairs,
     minhash_signatures,
-    quality_metrics,
     simhash_expr,
-    token_count_expr,
 )
 from ocr_search_spark.ops.multimodal import extract_media_features, synth_media_df
-from ocr_search_spark.ops.text_analysis import fingerprint_expr
+from ocr_search_spark.ops.similarity import cosine_topk, hyperplane_lsh_buckets
+from ocr_search_spark.ops.text_analysis import (
+    fingerprint_expr,
+    lang_id_expr,
+    quality_metrics,
+    token_count_expr,
+)
 
 
 @pytest.fixture(scope="module")

@@ -307,6 +307,71 @@ class TestResume:
         for d in docs[30:]:
             assert latest[d["doc_id"]] == want[d["doc_id"]]
 
+    def _rewritten(self, spark, docs):
+        """The same doc_ids as ``docs`` with one new text span each."""
+        redo = [
+            {
+                "doc_id": d["doc_id"],
+                "spans": [{"kind": "txt", "text": f"rewritten {d['doc_id']}",
+                           "media_ref": None, "offset": 0}],
+            }
+            for d in docs
+        ]
+        pdf = pd.DataFrame(
+            {"doc_id": [d["doc_id"] for d in redo], "spans": [d["spans"] for d in redo]}
+        )
+        return redo, spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
+
+    def test_compacting_older_run_group_keeps_newer_rows_latest(
+        self, spark, docs, input_df, tmp_path
+    ):
+        """Compaction republishes a run_group without changing which rows are
+        newest: after compacting the older run_group, the latest view still
+        returns the newer run_group's rows for the documents both extracted."""
+        from ocr_search_spark.pipeline import committed_spans_latest
+        from ocr_search_spark.pipeline.checkpoint import compact_group_outputs
+
+        out = str(tmp_path / "compact_order")
+        run_extraction(spark, input_df, out, "rgA", num_partitions=8, num_groups=2)
+        redo, redo_df = self._rewritten(spark, docs[:30])
+        run_extraction(spark, redo_df, out, "rgB", num_partitions=8, num_groups=2)
+        before = _collected(committed_spans_latest(spark, out))
+
+        assert compact_group_outputs(spark, out, "rgA")["groups_compacted"] == 2
+        after = _collected(committed_spans_latest(spark, out))
+        want_redo = _golden(redo)
+        want = _golden(docs)
+        assert after == before
+        assert len(after) == len(docs)
+        for d in docs[:30]:
+            assert after[d["doc_id"]] == want_redo[d["doc_id"]] != want[d["doc_id"]]
+        for d in docs[30:]:
+            assert after[d["doc_id"]] == want[d["doc_id"]]
+
+    def test_compaction_keeps_per_group_order_across_interleaved_publishes(
+        self, spark, docs, input_df, tmp_path
+    ):
+        """run_group A publishes group 0, then B publishes, then A's resume
+        publishes group 1: one compact run_id of A then spans two orders, one
+        older and one newer than B. The latest view is unchanged by the
+        compaction, group by group."""
+        from ocr_search_spark.pipeline import committed_spans_latest
+        from ocr_search_spark.pipeline.checkpoint import compact_group_outputs
+
+        out = str(tmp_path / "compact_interleaved")
+        with pytest.raises(SimulatedFailure):
+            run_extraction(spark, input_df, out, "rgA", num_partitions=8,
+                           num_groups=2, fail_after_group=0)
+        _, redo_df = self._rewritten(spark, docs[:30])
+        run_extraction(spark, redo_df, out, "rgB", num_partitions=8, num_groups=2)
+        run_extraction(spark, input_df, out, "rgA", num_partitions=8, num_groups=2)
+        before = _collected(committed_spans_latest(spark, out))
+        winners = {before[d["doc_id"]] == _golden(docs[:30])[d["doc_id"]] for d in docs[:30]}
+        assert winners == {True, False}  # A wins one group's overlap, B the other's
+
+        compact_group_outputs(spark, out, "rgA")
+        assert _collected(committed_spans_latest(spark, out)) == before
+
     def test_old_format_ledger_fails_with_explicit_error(
         self, spark, input_df, tmp_path
     ):

@@ -135,7 +135,7 @@ class TestWarcSource:
         assert all(not r.path.endswith("noise.txt") for r in rows)
 
     def test_roundtrip_md5_matches(self, spark):
-        """The q_warc_roundtrip contract: build → parse → md5(body) equals
+        """The WARC round-trip contract: build → parse → md5(body) equals
         md5 of the original text, plain and gzip alike."""
         texts = ["alpha", "тело документа", ""]
         for i, t in enumerate(texts):
