@@ -370,9 +370,12 @@ def run_extraction(
     the first one at or above ``k``. Either publishes that prefix in the
     same single swap, then raises :class:`SimulatedFailure`; when no
     pending group reaches ``k`` the run completes normally.
+
+    ``num_partitions`` is the salt modulus of :func:`extract_documents`
+    (one audit row per salt value; default 2× the default parallelism),
+    not the task count: AQE sizes the extraction stage from its shuffle
+    bytes, so a small batch stages one file per group.
     """
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
     _validate_run_group(run_group)
     run_id = f"{run_group}-{uuid.uuid4().hex[:8]}"
     prior = read_pointer(out_dir)["spans"].get(run_group)

@@ -12,9 +12,13 @@ Scale design (100 TB / 10^12-doc framing):
   are spread by salting on ``pmod(xxhash64(doc_id), P)`` before the shuffle;
   the hash is uniform by construction so no key carries more than ~1/P of
   documents, and P is decoupled from input file layout.
-* **One shuffle total** — the only exchange is the salt repartition; the
+* **One shuffle total** — the only exchange is a REBALANCE on the salt; the
   extraction itself is a narrow ``mapInArrow`` and the output write is
-  pipelined into the same stage.
+  pipelined into the same stage. AQE sizes that stage from the shuffle
+  bytes: a small batch runs in one task (each Python task pays a fixed
+  worker set-up of about 0.2 s CPU, far more than a small batch's kernel
+  time), a large one keeps at least cores-many, and an oversized partition
+  is split.
 * **Arrow-native kernel** — the nested ``array<struct>`` spans column is
   flattened zero-copy with pyarrow (``ListArray.flatten``); only the three
   small string child arrays cross into pandas for the vectorized kernels.
@@ -57,24 +61,26 @@ _OUT_SPAN_TYPE = pa.struct(
 
 
 def add_partition_salt(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Deterministic salt column + shuffle (SURVEY.md §4 skew defense).
+    """Deterministic salt column + rebalance shuffle (SURVEY.md §4 skew
+    defense).
 
-    PHYSICAL-BALANCE CAVEAT (documented, deliberate): repartition(P, key)
-    re-hashes the already-uniform salt, a balls-into-bins assignment —
-    at P keys into P partitions ~1/e of partitions are empty and the
-    busiest holds 2-3 keys. Every call site therefore passes
-    ``num_partitions ≈ 2× cores`` so the task scheduler absorbs the
-    imbalance (measured: 41-50k docs/s at local[32] with P=64, and the
-    N→4N scaling samples pass at this layout). The alternative — a bare
-    round-robin ``repartition(P)`` — balances perfectly but scatters each
-    salt key across all partitions, multiplying the per-(g, r) file count
-    of the checkpointed ``partitionBy(g, r)`` write by num_groups. The
-    salt's job is deterministic group membership + giant-doc spreading,
-    not exact physical balance."""
+    The shuffle hashes the salt into ``num_partitions`` initial partitions
+    and AQE then sizes the stage by shuffle bytes. It coalesces adjacent
+    partitions up to ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
+    (1 MB by default) or, for a larger shuffle, to about the default
+    parallelism, so a 1000-doc batch runs in one task; and it splits a
+    partition above ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+    so a key that drew several giants is spread over tasks. A salt key
+    stays within its partition unless split, which keeps the per-(g, r)
+    file count of the checkpointed ``partitionBy(g, r)`` write at one file
+    per task and group (a bare round-robin ``repartition(P)`` scatters
+    every key and multiplies it by num_groups). The salt's job is
+    deterministic group membership + giant-doc spreading; the physical
+    balance is AQE's."""
     return df.withColumn(
         "part_id",
         F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_partitions)).cast("int"),
-    ).repartition(num_partitions, F.col("part_id"))
+    ).hint("rebalance", num_partitions, "part_id")
 
 
 def _extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
@@ -159,7 +165,10 @@ def extract_documents(df: DataFrame, num_partitions: int | None = None) -> DataF
 
     ``df`` must have columns (doc_id, spans) per BASELINE.json input_hint.
     Returns (doc_id, part_id, n_spans, n_failures, spans) with extracted +
-    normalized span sequences.
+    normalized span sequences. ``num_partitions`` (default 2× the default
+    parallelism) is the salt modulus and the shuffle's initial partition
+    count, not the task count: AQE coalesces or splits those partitions by
+    size (see :func:`add_partition_salt`).
     """
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2

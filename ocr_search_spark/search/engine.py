@@ -246,6 +246,10 @@ def _bm25_stats(
     return n, sum_tf or 0, [match.df.get(t, 0) for t in terms]
 
 
+#: the FTS rank terms :func:`search_documents` accepts as ``rank_mode``
+RANK_MODES = ("simple", "cd", "bm25")
+
+
 def search_documents(
     docs: DataFrame,
     q: str | None,
@@ -282,6 +286,8 @@ def search_documents(
     store keeps them per snapshot); the empty query and BM25 then run no
     statistics job.
     """
+    if rank_mode not in RANK_MODES:
+        raise ValueError(f"unknown rank_mode: {rank_mode!r}")
     q = (q or "").strip()
 
     if not (q or ocr_user or ocr_from or ocr_to):
@@ -358,7 +364,7 @@ def search_documents(
             ]
             best = rcols[0] if len(rcols) == 1 else F.greatest(*rcols)
             ranks = ranks.select("doc_id", best.alias("__rank"))
-        elif rank_mode == "bm25":
+        else:  # bm25
             stats = match and _bm25_stats(
                 match, terms, postings, corpus_scope, narrowed, corpus_stats
             )
@@ -366,8 +372,6 @@ def search_documents(
                 filtered, terms, id_col="doc_id", text_col="content",
                 stats_over=corpus_scope, stats=stats,
             ).select("doc_id", F.col("bm25").alias("__rank"))
-        else:
-            raise ValueError(f"unknown rank_mode: {rank_mode!r}")
         base = filtered.join(ranks, "doc_id", "left")
         rank_col = F.coalesce(F.col("__rank"), F.lit(0.0))
     else:

@@ -147,7 +147,9 @@ class DocumentStore:
         num_groups: int = 4,
     ) -> dict:
         """Extract (resumably), write content + postings into a fresh
-        snapshot and publish it (see the module docstring)."""
+        snapshot and publish it (see the module docstring).
+        ``num_partitions`` is the extraction's salt modulus, not its task
+        count (see :func:`run_extraction`)."""
         stats = run_extraction(
             self.spark,
             documents,

@@ -142,7 +142,7 @@ class TestResume:
     def test_crash_between_stage_and_publish_never_double_writes(
         self, spark, docs, input_df, tmp_path
     ):
-        """The spans write and the ledger publish are separate commits; a
+        """The spans write and the CURRENT publish are separate commits; a
         crash between them must not surface the orphan attempt (the round-1
         design re-appended the whole group on resume)."""
         golden = _golden(docs)
@@ -184,7 +184,7 @@ class TestResume:
         self, spark, docs, input_df, tmp_path
     ):
         """compact_group_outputs rewrites each group into one file and
-        republishes via the ledger (latest row wins); the committed view is
+        republishes it with one CURRENT swap; the committed view is
         unchanged, old attempts become invisible history."""
         import glob
 
@@ -230,8 +230,8 @@ class TestResume:
     ):
         """compact_group_outputs and committed_spans_latest must run a
         GROUP-COUNT-INDEPENDENT number of Spark jobs (the round-3
-        formulations were O(groups): a per-group job + 1-row ledger append
-        loop, and an O(attempts)-leg union plan)."""
+        formulations were O(groups): a per-group job + 1-row publication
+        append loop, and an O(attempts)-leg union plan)."""
         from ocr_search_spark.pipeline import committed_spans_latest
         from ocr_search_spark.pipeline.checkpoint import compact_group_outputs
 
@@ -251,7 +251,7 @@ class TestResume:
         n_extract = len(tracker.getJobIdsForGroup("extract200"))
         n_compact = len(tracker.getJobIdsForGroup("compact200"))
         n_latest = len(tracker.getJobIdsForGroup("latest200"))
-        # small constants (ledger resolution + parallel file listing +
+        # small constants (parallel file listing +
         # stage/publish or scan) — NOT proportional to the 200 groups
         assert n_extract <= 8, f"extraction ran {n_extract} jobs for 200 groups"
         assert n_compact <= 8, f"compaction ran {n_compact} jobs for 200 groups"

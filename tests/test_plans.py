@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_search_spark.corpus import SPANS_IN_SCHEMA, build_local
-from ocr_search_spark.pipeline import extract_documents
+from ocr_search_spark.pipeline import extract_documents, run_extraction
 from conftest import SF_DIR
 
 
@@ -87,6 +87,51 @@ class TestPartitionBalance:
         assert max(docs_counts) < 2 * mean_docs
         mean_spans = sum(span_counts) / len(span_counts)
         assert max(span_counts) < 3 * mean_spans  # giants spread, not clustered
+
+    @pytest.fixture(scope="class")
+    def input_df(self, spark, base_texts):
+        docs = build_local(base_texts, 60)
+        pdf = pd.DataFrame(
+            {"doc_id": [d["doc_id"] for d in docs], "spans": [d["spans"] for d in docs]}
+        )
+        return spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
+
+    @staticmethod
+    def _files_per_group(spark, input_df, root) -> dict:
+        run_extraction(spark, input_df, str(root), run_group="balance", num_partitions=8)
+        return {
+            g.name: len(list(g.glob("r=*/*.parquet")))
+            for g in (root / "spans").glob("g=*")
+        }
+
+    def test_small_batch_runs_in_one_task(self, spark, input_df, tmp_path):
+        """AQE coalesces the rebalance of a small batch into one partition:
+        the kernel runs in one Python task, which writes one file per group.
+        Each Python task pays the worker's fixed set-up CPU, so a small
+        batch must not fan out to num_partitions tasks."""
+        files = self._files_per_group(spark, input_df, tmp_path)
+        assert len(files) == 4
+        assert set(files.values()) == {1}
+
+    def test_large_input_still_fans_out(self, spark, input_df, tmp_path):
+        """The same rebalance keeps several tasks once the shuffle outgrows
+        AQE's partition sizes: lowered here so 60 docs count as large."""
+        keys = (
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        )
+        saved = {k: spark.conf.get(k, None) for k in keys}
+        try:
+            for k in keys:
+                spark.conf.set(k, "1KB")
+            files = self._files_per_group(spark, input_df, tmp_path)
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        assert max(files.values()) > 1
 
 
 class TestRankingPlans:

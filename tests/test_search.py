@@ -448,6 +448,27 @@ class TestRanking:
         assert top.doc_id == "d2" and top.rank == 1.0
 
 
+class TestRankModeValidation:
+    @pytest.fixture(scope="class")
+    def poisoned(self, spark):
+        # any job that reads content fails with a Spark error, not the
+        # ValueError under test
+        return spark.range(3).select(
+            F.col("id").cast("string").alias("doc_id"),
+            F.raise_error(F.lit("a Spark job ran")).cast("string").alias("content"),
+        )
+
+    @pytest.mark.parametrize("q", ["", "-foo", "spark join"])
+    @pytest.mark.parametrize("with_postings", [False, True])
+    def test_unknown_rank_mode_raises_before_any_job(self, poisoned, q, with_postings):
+        """Every query shape rejects an unknown rank_mode before any Spark
+        job, including the empty and negation-only queries, which rank
+        nothing."""
+        postings = build_postings(poisoned) if with_postings else None
+        with pytest.raises(ValueError, match="unknown rank_mode"):
+            search_documents(poisoned, q, postings=postings, rank_mode="tfidf")
+
+
 class TestSnippetFragments:
     def test_three_fragments_marked_and_joined(self, spark):
         from ocr_search_spark.search.analysis import with_snippet_fragments
