@@ -38,9 +38,9 @@ _EN_STOP_WORDS = ("the", "a", "of", "and", "to", "in", "is")
 
 def q_token_quality(spark, sf_dir):
     """Token counting + quality-scoring signals as integer counts."""
-    from ocr_search_spark.search.analysis import with_search_columns
+    from ocr_search_spark.search.analysis import tokens_expr
 
-    d = with_search_columns(_docs(spark, sf_dir), "text")
+    d = _docs(spark, sf_dir).withColumn("toks", tokens_expr("text"))
     en_stop = F.array(*[F.lit(w) for w in _EN_STOP_WORDS])
     return d.select(
         "doc_id",

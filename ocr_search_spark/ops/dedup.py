@@ -41,33 +41,14 @@ def _token_shingles(toks: Column, n: Column, k: int) -> Column:
     return F.when(n >= k, z).otherwise(F.array().cast("array<string>"))
 
 
-def _shingles_of_tokens(toks, k: int = 3):
-    """Distinct k-token shingles from a *materialized* tokens column.
-
-    PLAN-SHAPE INVARIANT: ``toks`` must be an attribute (a column produced
-    by an earlier projection), never an inline ``tokens_expr(...)`` tree —
-    interpreted higher-order functions re-evaluate outer expressions once
-    per array element, turning the shingle build O(n²·tokenize) (measured
-    62× slower at 5k docs). ``toks`` is referenced k+2 times here, which
-    also stops CollapseProject from inlining a producer projection.
-
-    element_at lookups are O(k) per shingle; the short-text case is guarded
-    (Spark's sequence(1, 0) would be a *descending* sequence).
-    """
-    n = F.size(toks)
-
-    def shingle_at(i):
-        return F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)])
-
-    return F.when(n >= k, F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n - k + 1), shingle_at)
-    )).otherwise(F.array().cast("array<string>"))
-
-
 def _with_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(id, sh) with tokens materialized in their own projection first."""
+    """(id, sh): the distinct k-token shingles, with tokens materialized in
+    their own projection first (see :func:`_token_shingles`)."""
     toked = df.select(F.col(id_col).alias("id"), tokens_expr(F.col(text_col)).alias("toks"))
-    return toked.select("id", _shingles_of_tokens(F.col("toks"), k).alias("sh"))
+    return toked.select(
+        "id",
+        F.array_distinct(_token_shingles(F.col("toks"), F.size("toks"), k)).alias("sh"),
+    )
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -912,7 +893,7 @@ def simhash_df(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> Dat
     the fingerprint.
 
     Staged projections keep every HOF lambda referencing attributes (see
-    ``_shingles_of_tokens`` plan-shape invariant): tokens → token hashes →
+    ``_token_shingles`` plan-shape note): tokens → token hashes →
     32 bit votes. Each stage's producer column is referenced ≥2 times so
     CollapseProject cannot inline it back into a lambda.
     """
@@ -1276,7 +1257,7 @@ def edit_distance_pairs(
         "__len",
         # strings shorter than q have NO q-grams: sequence(1, 0) would
         # yield the DESCENDING [1, 0] and emit bogus sub-q grams (the
-        # trigrams_of_lc guard, mirrored here; ADVICE r5). The DuckDB
+        # trigrams_expr guard, mirrored here; ADVICE r5). The DuckDB
         # oracle's range() emits none, so the guard keeps both engines
         # agreeing on sub-q inputs.
         F.explode(

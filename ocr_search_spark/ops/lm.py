@@ -6,9 +6,7 @@ perplexity of a language model trained on a trusted reference corpus,
 then splits each language into head / middle / tail perplexity buckets;
 the head bucket is what ships into training mixes. The reference repo
 has no analogue (it is a search service); this is a first-class
-training-pipeline addition in the spirit of the dedup/quality family,
-pairing with the zlib compression-ratio signal in ``ops/compress.py``
-(ccnet's other quality axis).
+training-pipeline addition in the spirit of the dedup/quality family.
 
 Integer-exact by construction, so the DuckDB oracle matches hash-exactly:
 

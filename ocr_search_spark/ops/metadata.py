@@ -111,80 +111,3 @@ def with_metadata(
         out_col, metadata_map_expr(id_col, text_col, src, lang)
     )
 
-
-# ---------------------------------------------------------------------------
-# S10 media-span tag contract (EXIF/IPTC namespace)
-# ---------------------------------------------------------------------------
-
-#: fixture vocabularies for the media tag contract — the OCR-stub pattern
-#: (kernels/ocr_stub.py): values derive deterministically from
-#: md5(media_ref) alone, standing in for the exiftool process boundary
-#: (reference app/services/metadata.py:8-37 shells out per file; its tag
-#: namespace — EXIF:*, IPTC:* group-prefixed keys — is the contract).
-EXIF_MAKES = ("Canon", "Nikon", "Sony", "Fujifilm", "Olympus")
-IPTC_KEYWORDS = ("report", "scan", "invoice", "contract", "archive", "photo")
-
-
-def _md5_slice_long(ref: Column, start: int) -> Column:
-    """8-hex-digit slice of md5(ref) as a long — engine-portable
-    (DuckDB: ('0x' || substring(md5(ref), start, 8))::BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.encode(ref, "utf-8")), start, 8), 16, 10
-    ).cast("long")
-
-
-def _pick(h: Column, vocab: tuple[str, ...]) -> Column:
-    out = F.lit(vocab[0])
-    for i, v in enumerate(vocab[1:], start=1):
-        out = F.when(F.pmod(h, F.lit(len(vocab))) == i, F.lit(v)).otherwise(out)
-    return out
-
-
-def exif_tags_expr(ref_col: Column | str) -> Column:
-    """The deterministic ``media_ref -> EXIF/IPTC tags`` map for media
-    spans — S10's media half, resolved as a fixture contract (VERDICT r4
-    next-round #4). Four independent md5 slices drive the fields so tags
-    don't correlate; every expression is a Catalyst builtin with an exact
-    DuckDB twin (oracle: the ``meta_tags`` query).
-
-    Tags: EXIF:Make, EXIF:Model, EXIF:ImageWidth, EXIF:ImageHeight,
-    EXIF:Orientation, EXIF:DateTimeOriginal (exiftool's ``YYYY:MM:DD
-    HH:MM:SS`` colon-date format), IPTC:Keywords.
-    """
-    ref = F.col(ref_col) if isinstance(ref_col, str) else ref_col
-    h1 = _md5_slice_long(ref, 1)
-    h2 = _md5_slice_long(ref, 9)
-    h3 = _md5_slice_long(ref, 17)
-    h4 = _md5_slice_long(ref, 25)
-    make = _pick(h1, EXIF_MAKES)
-    model = F.concat(
-        make, F.lit(" X"), (F.pmod(h2, F.lit(900)) + F.lit(100)).cast("string")
-    )
-    width = (F.lit(640) + F.pmod(h2, F.lit(8)) * F.lit(160)).cast("long")
-    height = (F.lit(480) + F.pmod(h3, F.lit(8)) * F.lit(120)).cast("long")
-    orientation = (F.pmod(h3, F.lit(8)) + F.lit(1)).cast("long")
-    dto = F.format_string(
-        "2023:%02d:%02d %02d:%02d:%02d",
-        F.pmod(h4, F.lit(12)) + F.lit(1),
-        F.pmod(F.floor(h4 / F.lit(12)), F.lit(28)) + F.lit(1),
-        F.pmod(F.floor(h4 / F.lit(336)), F.lit(24)),
-        F.pmod(F.floor(h4 / F.lit(8064)), F.lit(60)),
-        F.pmod(F.floor(h4 / F.lit(483840)), F.lit(60)),
-    )
-    keyword = _pick(h4, IPTC_KEYWORDS)
-    return F.create_map(
-        F.lit("EXIF:Make"), make,
-        F.lit("EXIF:Model"), model,
-        F.lit("EXIF:ImageWidth"), width.cast("string"),
-        F.lit("EXIF:ImageHeight"), height.cast("string"),
-        F.lit("EXIF:Orientation"), orientation.cast("string"),
-        F.lit("EXIF:DateTimeOriginal"), dto,
-        F.lit("IPTC:Keywords"), keyword,
-    )
-
-
-def with_media_tags(
-    df: DataFrame, ref_col: str = "media_ref", out_col: str = "tags"
-) -> DataFrame:
-    """Append the EXIF/IPTC tag map for each media row."""
-    return df.withColumn(out_col, exif_tags_expr(ref_col))

@@ -171,7 +171,7 @@ def winnow_fingerprints(
     Returns (id, fingerprints array<string>). Plan shape: three staged
     projections (tokens → positional shingles → hashes → window minima) so
     every interpreted HOF lambda reads attributes, never re-evaluates an
-    outer expression tree per element (see ops.dedup._shingles_of_tokens).
+    outer expression tree per element (see ops.dedup._token_shingles).
     Hashes are md5 hex strings (lexicographic minima — engine-portable,
     DuckDB-oracle-checkable).
     """

@@ -38,48 +38,17 @@ def trigrams_expr(col: Column | str) -> Column:
     """Distinct character 3-grams of the lowercased text."""
     c = F.col(col) if isinstance(col, str) else col
     lc = F.lower(c)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(lc) - 2, F.lit(0))),
-            lambda i: F.substring(lc, i, 3),
-        )
-    )
-
-
-def trigrams_of_lc(lc: Column | str) -> Column:
-    """Distinct 3-grams from a *pre-lowered, materialized* text column.
-
-    PLAN-SHAPE INVARIANT: ``lc`` must be an attribute produced by an earlier
-    projection (e.g. via :func:`with_search_columns`) — an inline
-    ``lower(text)`` here would be re-evaluated once per array element by the
-    interpreted transform (measured ~10× slower at 5k docs).
-    """
-    c = F.col(lc) if isinstance(lc, str) else lc
-    # guard len < 3: greatest(len-2, 0) would make sequence(1, 0) — a
-    # DESCENDING [1, 0] in Spark — and emit a bogus short gram the DuckDB
-    # twin (range(1, greatest(L-1, 1)) = []) does not
-    return F.when(F.length(c) < 3, F.array().cast("array<string>")).otherwise(
+    # guard len < 3: sequence(1, len - 2) would be sequence(1, 0) — a
+    # DESCENDING [1, 0] in Spark — and emit a bogus short gram that
+    # trigram_sim_udf (range(len - 2) = []) does not
+    return F.when(F.length(lc) < 3, F.array().cast("array<string>")).otherwise(
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), F.length(c) - 2),
-                lambda i: F.substring(c, i, 3),
+                F.sequence(F.lit(1), F.length(lc) - 2),
+                lambda i: F.substring(lc, i, 3),
             )
         )
     )
-
-
-def with_search_columns(df, text_col: str = "text", grams: bool = False):
-    """Materialize ``toks`` (and optionally ``lc`` + ``grams``) columns.
-
-    Separate projections keep tokenization/lowering evaluated once per row;
-    every downstream HOF lambda then reads plain attributes.
-    """
-    out = df.withColumn("toks", tokens_expr(text_col)).withColumn(
-        "lc", F.lower(F.col(text_col))
-    )
-    if grams:
-        out = out.withColumn("grams", trigrams_of_lc("lc"))
-    return out
 
 
 def _terms_lit(terms: list[str]) -> Column:
@@ -100,30 +69,13 @@ def rank_expr(tokens: Column, terms: list[str]) -> Column:
     )
 
 
-def trigram_sim_from_grams(grams: Column | str, query: str) -> Column:
-    """pg_trgm similarity from a *materialized* ``grams`` array column.
-
-    PLAN-SHAPE: use this (with :func:`with_search_columns`) whenever the
-    text is more than a few tokens — :func:`trigram_sim_expr` inlines the
-    gram construction, and interpreted HOF lambdas re-evaluate the inline
-    ``lower(text)`` once per array element (quadratic in text length).
-    """
-    g = F.col(grams) if isinstance(grams, str) else grams
-    q = query.lower()
-    q_grams = sorted({q[i : i + 3] for i in range(max(0, len(q) - 2))})
-    q_lit = F.array(*[F.lit(x) for x in q_grams]) if q_grams else F.array().cast("array<string>")
-    inter = F.size(F.array_intersect(g, q_lit))
-    union = F.size(F.array_union(g, q_lit))
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
 def trigram_sim_udf(query: str):
     """Arrow-batched pandas-UDF trigram similarity for DOCUMENT-LENGTH text.
 
-    The pure-column forms build the gram array with an interpreted
-    higher-order ``transform`` — fine for short strings, but ~15 µs per
-    element means a 1k-char document costs ~15 ms per scoring expression
-    (measured: an 11 s stall on a 312-doc result set). Python set
+    The pure-column form, :func:`trigram_sim_expr`, builds the gram array
+    with an interpreted higher-order ``transform`` — fine for short
+    strings, but ~15 µs per element means a 1k-char document costs ~15 ms
+    per scoring expression (measured: an 11 s stall on a 312-doc result set). Python set
     operations over an Arrow batch are ~100× faster at this shape, and a
     vectorized pandas UDF is exactly the sanctioned escape hatch. Returns
     identical values (integer intersection/union then one double divide).
@@ -151,9 +103,9 @@ def trigram_sim_udf(query: str):
 def trigram_sim_expr(col: Column | str, query: str) -> Column:
     """pg_trgm-style similarity: Jaccard of 3-gram sets vs ``query``.
 
-    Inline form — fine for short strings; for document-length text use
-    :func:`trigram_sim_from_grams` over ``with_search_columns`` output
-    (see its plan-shape note).
+    Inline form — fine for short strings, and the oracle of
+    :func:`trigram_sim_udf`, which scores document-length text on the
+    search path (see its note on the interpreted transform).
     """
     grams = trigrams_expr(col)
     q = query.lower()

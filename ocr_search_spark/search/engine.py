@@ -43,7 +43,6 @@ from .analysis import (
     snippet_expr,
     tokens_expr,
     trigram_sim_udf,
-    with_search_columns,
 )
 from .websearch import (
     parse_websearch,
@@ -382,7 +381,7 @@ def search_documents(
     # re-evaluate per array element; and score trigram similarity with the
     # Arrow-batched UDF: document-length content makes the interpreted
     # gram-array transform ~100× slower (see trigram_sim_udf)
-    base = with_search_columns(base, "content")
+    base = base.withColumn("toks", tokens_expr("content"))
     if rank_col is None:
         rank_col = rank_expr(F.col("toks"), terms)
     carry = [c for c in ("doc_id", "content", "filename", "path_origin") if c in base.columns]

@@ -23,7 +23,7 @@ column plans (no Python UDFs, no per-row work):
   self-join, with the ranking path kept in exact BIGINT half-bit arithmetic
   (the ops.dsir lattice) so the top-k set is engine-reproducible.
 
-Plan-shape note (see analysis.trigrams_of_lc): every higher-order function
+Plan-shape note: every higher-order function
 here operates on a token array materialized by a prior projection, never on
 an inline ``split(lower(text))`` — interpreted HOF lambdas re-evaluate the
 outer expression per element.

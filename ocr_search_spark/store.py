@@ -9,9 +9,11 @@ Spark shape:
 * ``ingest`` runs the resumable extraction (staged span attempts + audit,
   see ``pipeline/checkpoint.py``) and materializes two derived tables
   compute-once-on-write, exactly like the reference's trigger (alembic
-  0001_init.py:36-53): a flat per-document ``content`` table (span texts
-  joined — the ``documents.content`` analogue) and the inverted
-  ``postings`` table (the tsvector analogue);
+  0001_init.py:36-53): a flat per-document ``content`` table (the
+  ``documents.content`` analogue: one projection over the latest published
+  row of each document, joining its span array's texts in array order,
+  which is span order) and the inverted ``postings`` table (the tsvector
+  analogue);
 * ``search`` mirrors ``search_documents`` semantics over the content table,
   resolving the match from the postings table.
 
@@ -60,13 +62,7 @@ from pyspark.sql import functions as F
 
 from .ops.metadata import metadata_map_expr
 from .pipeline import run_extraction
-from .pipeline.checkpoint import (
-    committed_spans_latest,
-    output_path,
-    publish,
-    read_pointer,
-)
-from .pipeline.extract import ordered_text_agg
+from .pipeline.checkpoint import committed_spans_latest, publish, read_pointer
 from .search.engine import build_postings, search_documents
 from .tables import write_table
 
@@ -121,10 +117,6 @@ class DocumentStore:
         self._lock = threading.Lock()
 
     # ---- paths -----------------------------------------------------------
-    @property
-    def spans_path(self) -> str:
-        return output_path(self.root)
-
     def _table_path(self, name: str, pointer: dict) -> str:
         if pointer["snapshot"] is None:
             raise FileNotFoundError(f"{self.root} has no published snapshot yet")
@@ -139,47 +131,29 @@ class DocumentStore:
         return self._table_path("postings", read_pointer(self.root))
 
     # ---- lifecycle -------------------------------------------------------
-    def ingest(
-        self,
-        documents: DataFrame,
-        run_group: str = "ingest",
-        num_partitions: int | None = None,
-        num_groups: int = 4,
-    ) -> dict:
+    def ingest(self, documents: DataFrame, run_group: str = "ingest") -> dict:
         """Extract (resumably), write content + postings into a fresh
-        snapshot and publish it (see the module docstring).
-        ``num_partitions`` is the extraction's salt modulus, not its task
-        count (see :func:`run_extraction`)."""
-        stats = run_extraction(
-            self.spark,
-            documents,
-            self.root,
-            run_group=run_group,
-            num_partitions=num_partitions,
-            num_groups=num_groups,
-        )
+        snapshot and publish it (see the module docstring)."""
+        stats = run_extraction(self.spark, documents, self.root, run_group=run_group)
         # read the *published* view (live attempts only) across ALL
         # run_groups — a store ingested in several batches under different
         # run_groups keeps every batch searchable, with the latest
         # publication winning per document (a second ingest of a changed doc
-        # supersedes the first). Concatenate in span order (collect_list
-        # order is non-contractual), and attach the reference's
+        # supersedes the first). Its rows carry each document's spans in
+        # span order (the kernel emits span i with order i), so content is
+        # one projection: the span texts joined in array order. A null text
+        # stays an empty line (array_join skips nulls), and a document with
+        # zero spans keeps its row (the reference always keeps a documents
+        # row per file) with content "" and extension txt: F.get is NULL
+        # past the end where [0] raises under ANSI. Attach the reference's
         # documents-row companions: filename / path_origin (search.py:92-98
         # link composition) + the exiftool-analogue meta map (models.py:14)
-        # explode_outer, not the inner explode_spans flat view: a document
-        # whose extraction produced zero spans must still get a content
-        # row (the reference always keeps a documents row per file)
-        flat = committed_spans_latest(self.spark, self.root).select(
-            "doc_id", F.explode_outer("spans").alias("span")
-        ).select(
+        ext = F.coalesce(F.get("spans", 0)["kind"], F.lit("txt"))
+        content = committed_spans_latest(self.spark, self.root).select(
             "doc_id",
-            F.col("span.kind").alias("kind"),
-            F.coalesce(F.col("span.text"), F.lit("")).alias("text"),
-            F.col("span.order").alias("order"),
-        )
-        ext = F.coalesce(F.min_by("kind", "order"), F.lit("txt"))
-        content = flat.groupBy("doc_id").agg(
-            ordered_text_agg("text", "order").alias("content"),
+            F.array_join(
+                F.transform("spans", lambda s: F.coalesce(s["text"], F.lit(""))), "\n"
+            ).alias("content"),
             F.concat(F.col("doc_id"), F.lit("."), ext).alias("filename"),
             F.concat(F.lit("store\\"), F.col("doc_id"), F.lit("."), ext).alias(
                 "path_origin"

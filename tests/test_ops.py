@@ -1785,48 +1785,6 @@ class TestLineDedup:
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-class TestCompression:
-    def test_signals_match_scalar_twin(self, spark):
-        from ocr_search_spark.ops.compress import (
-            compression_signals,
-            scalar_zlib_len,
-        )
-
-        texts = [
-            ("d1", "word " * 200),            # pathologically repetitive
-            ("d2", "the quick brown fox jumps over the lazy dog. " * 3),
-            ("d3", ""),
-        ]
-        df = spark.createDataFrame(texts, "doc_id string, text string")
-        out = {r.doc_id: r for r in compression_signals(df, "text").collect()}
-        for doc_id, t in texts:
-            assert out[doc_id].n_bytes == len(t.encode("utf-8"))
-            assert out[doc_id].n_zlib == scalar_zlib_len(t)
-
-    def test_filter_bands(self, spark):
-        from ocr_search_spark.ops.compress import compression_filter
-
-        import random
-
-        rng = random.Random(7)
-        noise = "".join(chr(rng.randint(0x21, 0x10FF)) for _ in range(800))
-        df = spark.createDataFrame(
-            [
-                ("rep", "spam " * 400),   # ratio ~1% → below floor
-                ("ok", "a sensible sentence with normal words repeated a little. " * 6),
-                ("noise", noise),         # high-entropy → above cap
-            ],
-            "doc_id string, text string",
-        )
-        kept = {
-            r.doc_id
-            for r in compression_filter(
-                df, "text", min_ratio_pct=5, max_ratio_pct=60
-            ).collect()
-        }
-        assert kept == {"ok"}
-
-
 class TestCorpusMixing:
     def test_topk_per_group_ranks_and_ties(self, spark):
         from ocr_search_spark.ops.sampling import topk_per_group
@@ -3213,18 +3171,6 @@ class TestReviewRegressions:
         assert splits.count() == 2
         assert all(r.split in ("train", "val") for r in splits.collect())
 
-    def test_compression_filter_drops_null_and_empty_explicitly(self, spark):
-        from ocr_search_spark.ops.compress import compression_filter
-
-        df = spark.createDataFrame(
-            [("ok", "a sensible sentence with normal words here today. " * 6),
-             ("empty", ""), ("null", None)],
-            "doc_id string, text string",
-        )
-        kept = {r.doc_id for r in compression_filter(
-            df, "text", min_ratio_pct=0, max_ratio_pct=100).collect()}
-        assert kept == {"ok"}
-
     def test_mojibake_filter_keeps_null_text(self, spark):
         from ocr_search_spark.ops.scrub import mojibake_filter
 
@@ -3378,10 +3324,13 @@ class TestReviewRegressions3:
             "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
         )
         store = DocumentStore(spark, str(tmp_path / "s"))
-        store.ingest(df, run_group="zs", num_partitions=2, num_groups=1)
+        store.ingest(df, run_group="zs")
         content = {r.doc_id: r.content for r in spark.read.parquet(store.content_path).collect()}
         assert set(content) == {"full", "hollow"}  # no row loss
         assert content["hollow"] == ""
+        # no first span to name the extension: the default applies
+        hollow = spark.read.parquet(store.content_path).filter("doc_id = 'hollow'").first()
+        assert hollow.filename == "hollow.txt"
 
     def test_candidate_only_verification_same_pairs(self, spark):
         """verify_candidates_only=True (the production scope knob) must

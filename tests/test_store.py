@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from ocr_search_spark.corpus import SPANS_IN_SCHEMA, build_local
 from ocr_search_spark.kernels import extract_document_spans
@@ -18,7 +19,7 @@ def store(spark, base_texts, tmp_path_factory):
     )
     df = spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
     s = DocumentStore(spark, str(tmp_path_factory.mktemp("store")))
-    s.ingest(df, num_partitions=8, num_groups=2)
+    s.ingest(df)
     return s, docs
 
 
@@ -87,14 +88,12 @@ class TestLifecycle:
             schema=SPANS_IN_SCHEMA,
         )
         s = DocumentStore(spark, str(tmp_path_factory.mktemp("store2")))
-        s.ingest(mk(docs[:25]), run_group="batch1", num_partitions=4, num_groups=2)
+        s.ingest(mk(docs[:25]), run_group="batch1")
         # batch2 overlaps doc[20:25] but with truncated span lists
         overlap = [
             {"doc_id": d["doc_id"], "spans": d["spans"][:1]} for d in docs[20:25]
         ]
-        s.ingest(
-            mk(docs[25:] + overlap), run_group="batch2", num_partitions=4, num_groups=2
-        )
+        s.ingest(mk(docs[25:] + overlap), run_group="batch2")
         content = {
             r.doc_id: r.content for r in spark.read.parquet(s.content_path).collect()
         }
@@ -118,6 +117,73 @@ class TestLifecycle:
         for r in items:
             assert r.link == "http://files.local/store/" + r.filename
             assert r.snippet_is_html is True
+
+    def test_trigram_sim_udf_matches_expr(self, spark, store):
+        """The search path scores ``sim`` with ``trigram_sim_udf``; the
+        column form ``trigram_sim_expr`` is its independent oracle."""
+        from ocr_search_spark.search.analysis import trigram_sim_expr, trigram_sim_udf
+
+        s, docs = store
+        content = spark.read.parquet(s.content_path)
+        text = content.orderBy("doc_id").first().content
+        words = [w for w in text.split() if w.isalpha() and len(w) > 3]
+        for q in (words[0], " ".join(words[:3]), "zz", "no such words"):
+            rows = content.select(
+                "doc_id",
+                trigram_sim_udf(q)(F.col("content")).alias("udf"),
+                trigram_sim_expr("content", q).alias("expr"),
+            ).collect()
+            assert len(rows) == len(docs)
+            assert [r.doc_id for r in rows if r.udf != r.expr] == [], q
+            assert q == "zz" or any(r.udf > 0 for r in rows), q
+
+    def test_content_is_one_projection_of_the_span_array(
+        self, spark, base_texts, tmp_path, monkeypatch
+    ):
+        """content joins each document's span array in array order, so its
+        plan has no Generate (explode) and no ObjectHashAggregate
+        (collect_list regrouping)."""
+        import ocr_search_spark.store as store_mod
+
+        plans = {}
+        real = store_mod.write_table
+
+        def spy(df, path, **kw):
+            plans[path.rsplit("/", 1)[-1]] = df._jdf.queryExecution().executedPlan().toString()
+            return real(df, path, **kw)
+
+        monkeypatch.setattr(store_mod, "write_table", spy)
+        s = DocumentStore(spark, str(tmp_path / "plan"))
+        s.ingest(_spans_df(spark, build_local(base_texts, 12)))
+        plan = plans["content"]
+        assert "Generate" not in plan, plan
+        assert "ObjectHashAggregate" not in plan, plan
+        assert spark.read.parquet(s.content_path).count() == 12
+
+
+def test_store_import_loads_only_the_metadata_ops_module():
+    """Importing the store loads the ``ops`` package and ``ops.metadata``
+    only, never the off-path operator modules."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import json, sys, ocr_search_spark.store; print(json.dumps(sorted("
+        "m for m in sys.modules if m.startswith('ocr_search_spark.ops'))))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    assert json.loads(out.stdout.splitlines()[-1]) == [
+        "ocr_search_spark.ops",
+        "ocr_search_spark.ops.metadata",
+    ]
 
 
 def _spans_df(spark, docs):
@@ -161,7 +227,7 @@ class TestSnapshotPublish:
 
         first, second = batches
         s = DocumentStore(spark, str(tmp_path_factory.mktemp("crash")))
-        s.ingest(_spans_df(spark, first), run_group="b1", num_partitions=4, num_groups=2)
+        s.ingest(_spans_df(spark, first), run_group="b1")
         published = s.content_path
         term = _top_term(spark, s)
         before = s.search(term, limit=100)["total"]
@@ -171,7 +237,7 @@ class TestSnapshotPublish:
 
         monkeypatch.setattr(store_mod, "publish_snapshot", crash)
         with pytest.raises(RuntimeError, match="crash between"):
-            s.ingest(_spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2)
+            s.ingest(_spans_df(spark, second), run_group="b2")
         # the previous snapshot stays live and searchable
         assert s.content_path == published
         assert spark.read.parquet(s.content_path).count() == len(first)
@@ -180,7 +246,7 @@ class TestSnapshotPublish:
 
         # the next ingest publishes a complete snapshot and drops the orphan
         monkeypatch.undo()
-        s.ingest(_spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2)
+        s.ingest(_spans_df(spark, second), run_group="b2")
         assert s.content_path != published
         assert spark.read.parquet(s.content_path).count() == len(first) + len(second)
         snaps = os.listdir(os.path.join(s.root, "snapshots"))
@@ -199,7 +265,7 @@ class TestSnapshotPublish:
 
         first, second = batches
         s = DocumentStore(spark, str(tmp_path_factory.mktemp("spans-live")))
-        s.ingest(_spans_df(spark, first), run_group="b1", num_partitions=4, num_groups=2)
+        s.ingest(_spans_df(spark, first), run_group="b1")
         published = s.content_path
         term = _top_term(spark, s)
         before = s.search(term, limit=100)["total"]
@@ -209,7 +275,7 @@ class TestSnapshotPublish:
 
         monkeypatch.setattr(store_mod, "publish_snapshot", crash)
         with pytest.raises(RuntimeError, match="crash between"):
-            s.ingest(_spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2)
+            s.ingest(_spans_df(spark, second), run_group="b2")
         monkeypatch.undo()
         latest = checkpoint.committed_spans_latest(spark, s.root).select("doc_id")
         assert {r.doc_id for r in latest.collect()} == {
@@ -225,9 +291,7 @@ class TestSnapshotPublish:
         monkeypatch.setattr(
             checkpoint, "extract_documents", lambda df, n: calls.append(1) or real(df, n)
         )
-        stats = s.ingest(
-            _spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2
-        )
+        stats = s.ingest(_spans_df(spark, second), run_group="b2")
         assert stats["groups_skipped"] == stats["groups_total"]
         assert calls == []
         assert s.content_path != published
@@ -247,11 +311,11 @@ class TestSnapshotPublish:
         first, second = batches
         root = str(tmp_path_factory.mktemp("two"))
         a, b = DocumentStore(spark, root), DocumentStore(spark, root)
-        b.ingest(_spans_df(spark, first), run_group="b1", num_partitions=4, num_groups=2)
+        b.ingest(_spans_df(spark, first), run_group="b1")
         assert a.search("")["total"] == len(first)
         term = _top_term(spark, a)
         a.search(term)["items"].collect()  # A's snapshot is now resident
-        b.ingest(_spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2)
+        b.ingest(_spans_df(spark, second), run_group="b2")
         got = a.search(term, limit=100)
         want = search_documents(spark.read.parquet(b.content_path), term, limit=100)
         assert a.search("")["total"] == len(first) + len(second)
@@ -274,7 +338,7 @@ class TestSnapshotPublish:
         first, second = batches
         root = str(tmp_path_factory.mktemp("race"))
         writer = DocumentStore(spark, root)
-        writer.ingest(_spans_df(spark, first), run_group="b1", num_partitions=4, num_groups=2)
+        writer.ingest(_spans_df(spark, first), run_group="b1")
         term = _top_term(spark, writer)
         reader = DocumentStore(spark, root)
         seen, errors = [], []
@@ -294,9 +358,7 @@ class TestSnapshotPublish:
         try:
             for t in threads:
                 t.start()
-            writer.ingest(
-                _spans_df(spark, second), run_group="b2", num_partitions=4, num_groups=2
-            )
+            writer.ingest(_spans_df(spark, second), run_group="b2")
             n = len(seen)
             while len(seen) < n + 12 and not errors:
                 done.wait(0.05)  # searches that started after the publish
@@ -372,9 +434,7 @@ class TestIngestJobs:
             for phase, batch in (("bulk", docs[:48]), ("update", docs[36:])):
                 group = f"test-ingest-jobs-{phase}"
                 sc.setLocalProperty("spark.jobGroup.id", group)
-                s.ingest(
-                    _spans_df(spark, batch), run_group=phase, num_partitions=4, num_groups=2
-                )
+                s.ingest(_spans_df(spark, batch), run_group=phase)
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc._jsc.sc().listenerBus().waitUntilEmpty()
                 jobs[phase] = len(sc.statusTracker().getJobIdsForGroup(group))
