@@ -13,13 +13,16 @@ interleaved text + media documents:
 * search semantics — FTS term match, date-range / ILIKE predicates, rank +
   trigram similarity, snippet, combined ordering (app/search.py:10-99);
 * skew-salted partitioning, per-partition lineage/audit metrics, and
-  checkpointed resumability published by one atomic pointer (north_rule);
+  checkpointed resumability published by one atomic pointer
+  (``pipeline.checkpoint.publish``, the package's only publish protocol);
 * near-duplicate removal over stored content (``ops.dedup.near_dedup_cc``
   and the MinHash-LSH / Jaccard / SimHash operators it builds on) and the
   exiftool-analogue metadata map (``ops.metadata``);
 * off those paths, training-data-pipeline operators in the other ``ops``
-  submodules and ``streaming``: ANN similarity search over embeddings, text
-  analysis and tokenizers, sampling, hygiene, multimodal column plumbing.
+  submodules (ANN similarity search over embeddings, text analysis and
+  tokenizers, sampling, hygiene, multimodal column plumbing) and
+  ``streaming`` (windowed counts, sessions, streaming exact dedup and
+  interval joins; none of them writes to a store).
 
 The three paths are ``store.DocumentStore.ingest``, ``DocumentStore.search``
 and ``ops.dedup.near_dedup_cc``.

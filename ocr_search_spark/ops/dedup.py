@@ -252,36 +252,15 @@ def verified_near_dup_pairs(
     band_size: int = 2,
     shingle_k: int = 3,
     max_bucket_size: int | None = None,
-    verify_candidates_only: bool = False,
 ) -> DataFrame:
     """Verified near-duplicate pairs (a_id, b_id), a_id < b_id: MinHash
     signatures → LSH band candidates → exact Jaccard ≥ threshold on the
     candidates only. The shared front half of both keeper policies.
     ``max_bucket_size`` is the LSH mega-bucket skew guard (see
-    :func:`lsh_candidate_pairs`) — set it at production scale.
-
-    ``verify_candidates_only``: semi-join the corpus down to candidate
-    doc ids before shingling for verification. At PRODUCTION scale this
-    is the right shape — candidates are a tiny fraction of the corpus
-    and the default re-shingles the full corpus twice (once per join
-    side). At small scale the three extra exchanges (union + distinct +
-    semi-join) cost more than the shingling they avoid (measured at the
-    5k-doc bench: +40% wall), so the default stays corpus-wide; flip it
-    on together with ``max_bucket_size`` when the corpus is large."""
+    :func:`lsh_candidate_pairs`) — set it at production scale."""
     sig = minhash_signatures(df, id_col, text_col, n_hashes, shingle_k)
     cand = lsh_candidate_pairs(sig, n_hashes, band_size, max_bucket_size)
-
-    src = df
-    if verify_candidates_only:
-        cand_ids = (
-            cand.select(F.col("a_id").alias("id"))
-            .unionByName(cand.select(F.col("b_id").alias("id")))
-            .distinct()
-        )
-        src = df.join(
-            cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
-        )
-    sh = _with_shingles(src, id_col, text_col, shingle_k)
+    sh = _with_shingles(df, id_col, text_col, shingle_k)
     pairs = cand.join(
         sh.select(F.col("id").alias("a_id"), F.col("sh").alias("sh_a")), "a_id"
     ).join(sh.select(F.col("id").alias("b_id"), F.col("sh").alias("sh_b")), "b_id")

@@ -237,7 +237,6 @@ def compact_group_outputs(
     spark: SparkSession,
     out_dir: str,
     run_group: str,
-    target_partitions: int = 1,
 ) -> dict:
     """Small-files hygiene: rewrite each published group into a compacted
     attempt directory and republish it.
@@ -258,22 +257,17 @@ def compact_group_outputs(
     groups = [g for g, _, _ in live]
 
     # Stage: ONE job rewrites every live group. Multi-path read with
-    # basePath surfaces the g partition column; repartitioning on (g [,
-    # salt]) gives each group target_partitions output files; the same
-    # partitionBy(g, r) append used by run_extraction lands each group
-    # under spans/g=<g>/r=<compact_id>.
+    # basePath surfaces the g partition column; repartitioning on g gives
+    # each group one output file; the same partitionBy(g, r) append used by
+    # run_extraction lands each group under spans/g=<g>/r=<compact_id>.
     paths = [group_attempt_path(out_dir, g, r) for g, r, _ in live]
     src = (
         spark.read.schema(SPANS_OUT_SCHEMA + ", g int, r string")
         .option("basePath", output_path(out_dir))
         .parquet(*paths)
         .drop("r")
+        .repartition(len(live), "g")
     )
-    if target_partitions > 1:
-        salt = F.pmod(F.xxhash64("doc_id"), F.lit(target_partitions))
-        src = src.repartition(len(live) * target_partitions, "g", salt)
-    else:
-        src = src.repartition(len(live), "g")
     write_table(
         src.withColumn("r", F.lit(compact_id)),
         output_path(out_dir),

@@ -172,10 +172,12 @@ def _apply_common_filters(
 ) -> tuple[DataFrame, bool]:
     """Date-range + ILIKE predicates (Q2/Q3 — search.py:53-55), and whether
     they can drop any row."""
+    # parse before looking at the columns: a malformed bound raises even on
+    # a frame (the store's ``content``) that has no ``created_at`` to filter
+    lo = _parse_filter_ts(ocr_from or DEFAULT_FROM, "ocr_from")
+    hi = _parse_filter_ts(ocr_to or DEFAULT_TO, "ocr_to")
     narrowed = "created_at" in df.columns or bool(ocr_user and "email" in df.columns)
     if "created_at" in df.columns:
-        lo = _parse_filter_ts(ocr_from or DEFAULT_FROM, "ocr_from")
-        hi = _parse_filter_ts(ocr_to or DEFAULT_TO, "ocr_to")
         df = df.filter(
             F.col("created_at").between(
                 F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp")

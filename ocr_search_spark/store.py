@@ -28,7 +28,7 @@ Store layout and publish protocol::
 
 ``CURRENT`` is the only way anything becomes visible, and
 ``checkpoint.publish`` is its only writer: one atomic read-modify-write
-swap (temporary file, fsync, ``os.replace``). An ingest publishes twice:
+swap (temporary file, fsync, atomic rename). An ingest publishes twice:
 the extraction makes its span attempts live, then the derived tables,
 written into a fresh ``<id>`` that no reader knows, are published as the
 snapshot. A reader resolves ``CURRENT`` once and reads both tables of that

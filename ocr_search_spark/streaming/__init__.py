@@ -1,5 +1,5 @@
-"""Structured Streaming surfaces for the extraction engine."""
+"""Structured Streaming surfaces over event and document streams."""
 
-from .stream import stream_extract, windowed_event_counts
+from .stream import windowed_event_counts
 
-__all__ = ["stream_extract", "windowed_event_counts"]
+__all__ = ["windowed_event_counts"]

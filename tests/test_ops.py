@@ -3333,10 +3333,14 @@ class TestReviewRegressions3:
         assert hollow.filename == "hollow.txt"
 
     def test_candidate_only_verification_same_pairs(self, spark):
-        """verify_candidates_only=True (the production scope knob) must
-        produce exactly the same verified pairs as the corpus-wide
-        default."""
-        from ocr_search_spark.ops.dedup import verified_near_dup_pairs
+        """Verifying over the corpus semi-joined down to its LSH candidate
+        doc ids (the production-scale shape, done by the caller) must
+        produce exactly the same verified pairs as the whole corpus."""
+        from ocr_search_spark.ops.dedup import (
+            lsh_candidate_pairs,
+            minhash_signatures,
+            verified_near_dup_pairs,
+        )
 
         rows = [
             ("a", "alpha beta gamma delta epsilon zeta eta theta"),
@@ -3348,8 +3352,13 @@ class TestReviewRegressions3:
         kw = dict(threshold=0.5, n_hashes=8, band_size=2)
         full = {(r.a_id, r.b_id) for r in verified_near_dup_pairs(
             df, "doc_id", "text", **kw).collect()}
+        pairs = lsh_candidate_pairs(
+            minhash_signatures(df, "doc_id", "text", 8, 3), 8, 2)
+        ids = pairs.select(F.col("a_id").alias("doc_id")).unionByName(
+            pairs.select(F.col("b_id").alias("doc_id")))
+        src = df.join(ids.distinct(), "doc_id", "left_semi")
         cand = {(r.a_id, r.b_id) for r in verified_near_dup_pairs(
-            df, "doc_id", "text", verify_candidates_only=True, **kw).collect()}
+            src, "doc_id", "text", **kw).collect()}
         assert full == cand and ("a", "d") in full
 
 

@@ -194,7 +194,7 @@ class TestResume:
         run_extraction(spark, input_df, out, "rgK", num_partitions=8, num_groups=2)
         before = _collected(committed_spans(spark, out, "rgK"))
 
-        stats = compact_group_outputs(spark, out, "rgK", target_partitions=1)
+        stats = compact_group_outputs(spark, out, "rgK")
         assert stats["groups_compacted"] == 2
         after = _collected(committed_spans(spark, out, "rgK"))
         assert after == before == _golden(docs)
@@ -241,7 +241,7 @@ class TestResume:
         run_extraction(spark, input_df, out, "rgM", num_partitions=8, num_groups=200)
 
         sc.setJobGroup("compact200", "compaction job-count probe")
-        stats = compact_group_outputs(spark, out, "rgM", target_partitions=1)
+        stats = compact_group_outputs(spark, out, "rgM")
         sc.setJobGroup("latest200", "latest-view job-count probe")
         n_rows = committed_spans_latest(spark, out).count()
         sc.setJobGroup("probe-done", "")
@@ -405,3 +405,55 @@ class TestResume:
         }
         assert pdf["docs"].sum() == len(docs)
         assert pdf["spans"].sum() == sum(len(d["spans"]) for d in docs)
+
+
+class TestOnePublishProtocol:
+    """``checkpoint.publish`` is the package's only publish protocol: no
+    other code moves a staged file or directory into place."""
+
+    MOVES = {("os", "rename"), ("os", "replace"), ("shutil", "move")}
+
+    def _moves(self, path):
+        """(enclosing function, 'module.name') for every rename/replace/move
+        the file calls or imports, resolving ``import os as x`` aliases."""
+        import ast
+
+        tree = ast.parse(path.read_text(), str(path))
+        aliases = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    aliases[a.asname or a.name] = a.name
+        found = []
+
+        def visit(node, func):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                func = node.name
+            if isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    if (node.module, a.name) in self.MOVES:
+                        found.append((func, f"{node.module}.{a.name}"))
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and (aliases.get(node.value.id), node.attr) in self.MOVES
+            ):
+                found.append((func, f"{aliases[node.value.id]}.{node.attr}"))
+            for child in ast.iter_child_nodes(node):
+                visit(child, func)
+
+        visit(tree, None)
+        return found
+
+    def test_only_checkpoint_publish_moves_files(self):
+        from pathlib import Path
+
+        import ocr_search_spark
+
+        pkg = Path(ocr_search_spark.__file__).parent
+        found = {
+            (str(p.relative_to(pkg)), func, name)
+            for p in sorted(pkg.rglob("*.py"))
+            for func, name in self._moves(p)
+        }
+        assert found == {("pipeline/checkpoint.py", "publish", "os.replace")}

@@ -547,6 +547,12 @@ class TestSearchReviewRegressions:
     def test_unparseable_date_filter_raises(self, corpus):
         with pytest.raises(ValueError, match="ocr_from"):
             search_documents(corpus, "alpha", ocr_from="17/08/2026")
+        # the store's content table has no created_at: the bounds still parse
+        bare = corpus.drop("created_at")
+        with pytest.raises(ValueError, match="ocr_from"):
+            search_documents(bare, "alpha", ocr_from="17/08/2026")
+        with pytest.raises(ValueError, match="ocr_to"):
+            search_documents(bare, "alpha", ocr_to="2026-08-17T25:00")
 
 
 class TestTfidfRelated:

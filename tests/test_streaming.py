@@ -1,88 +1,14 @@
-"""Structured Streaming tests: streaming extraction parity with batch, and
-watermarked windowed aggregation."""
+"""Structured Streaming tests: watermarked windowed aggregation, sessions,
+streaming exact dedup and stream-stream interval joins, each against its
+batch twin."""
 
 from __future__ import annotations
 
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from ocr_search_spark.corpus import SPANS_IN_SCHEMA, build_local
-from ocr_search_spark.kernels import extract_document_spans
-from ocr_search_spark.streaming import stream_extract, windowed_event_counts
+from ocr_search_spark.streaming import windowed_event_counts
 
 from conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def docs(base_texts):
-    return build_local(base_texts, 200)
-
-
-class TestStreamExtract:
-    def test_streaming_equals_batch_golden(self, spark, docs, tmp_path):
-        src = str(tmp_path / "incoming")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def write_chunk(chunk):
-            pdf = pd.DataFrame(
-                {"doc_id": [d["doc_id"] for d in chunk], "spans": [d["spans"] for d in chunk]}
-            )
-            spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA).write.mode(
-                "append"
-            ).parquet(src)
-
-        # first wave of files, drain
-        write_chunk(docs[:120])
-        q = stream_extract(spark, src, out, ckpt, num_partitions=4)
-        q.awaitTermination(120)
-
-        # late-arriving second wave: only the new files are processed
-        write_chunk(docs[120:])
-        q = stream_extract(spark, src, out, ckpt, num_partitions=4)
-        q.awaitTermination(120)
-
-        got = {
-            r.doc_id: [(s.kind, s.text, s.media_ref, s.order) for s in r.spans]
-            for r in spark.read.parquet(out).collect()
-        }
-        want = {
-            d["doc_id"]: [
-                (s["kind"], s["text"], s["media_ref"], s["order"])
-                for s in extract_document_spans(d["spans"])
-            ]
-            for d in docs
-        }
-        assert got == want  # exactly-once across two incremental drains
-
-    def test_batch_replay_never_duplicates(self, spark, docs, tmp_path):
-        """foreachBatch is at-least-once: after a crash between the sink
-        write and the checkpoint commit, the SAME (batch_id, data) is
-        replayed on restart. The idempotent per-batch-id writer must absorb
-        the replay (overwrite, not append) so the output has no duplicate
-        spans — the streaming twin of the ledger's stage-then-publish."""
-        from ocr_search_spark.streaming.stream import write_batch_idempotent
-
-        out = str(tmp_path / "replay_out")
-        pdf = pd.DataFrame(
-            {
-                "doc_id": [d["doc_id"] for d in docs[:50]],
-                "spans": [d["spans"] for d in docs[:50]],
-            }
-        )
-        batch = spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
-
-        write_batch_idempotent(batch, 0, out, num_partitions=4)
-        n_first = spark.read.parquet(out).count()
-        # simulated post-crash replay of the same micro-batch
-        write_batch_idempotent(batch, 0, out, num_partitions=4)
-        assert spark.read.parquet(out).count() == n_first == 50
-        # a genuinely new batch appends under its own key
-        write_batch_idempotent(batch, 1, out, num_partitions=4)
-        assert spark.read.parquet(out).count() == 100
-        ids = [r.doc_id for r in spark.read.parquet(out).filter("b = 0").collect()]
-        assert sorted(ids) == sorted(pdf["doc_id"])
 
 
 class TestWindowedCounts:
@@ -464,92 +390,3 @@ class TestLateEventSessions:
             ).collect()
         }
         assert got == want  # one session [11:45, 12:00] with 2 events
-
-
-class TestIncrementalDedupStream:
-    BATCH0 = [
-        ("a1", "the quick brown fox jumps over the lazy dog"),
-        ("a2", "the quick brown fox jumps over the lazy dog"),  # in-batch dup
-        ("a3", "a completely different document about rivers"),
-    ]
-    BATCH1 = [
-        ("b1", "the quick brown fox jumps over the lazy dog"),  # dup of store
-        ("b2", "a genuinely fresh document about mountains"),
-    ]
-
-    def _mk(self, spark, rows):
-        return spark.createDataFrame(rows, "doc_id string, text string")
-
-    def test_sequential_batches_and_store_growth(self, spark, tmp_path):
-        from ocr_search_spark.streaming.incremental_dedup_stream import (
-            process_incremental_batch,
-        )
-
-        store = str(tmp_path / "store")
-        out = str(tmp_path / "out")
-        process_incremental_batch(
-            self._mk(spark, self.BATCH0), 0, store, out
-        )
-        s0 = {r.doc_id for r in spark.read.parquet(f"{out}/batch_id=0").collect()}
-        assert s0 == {"a1", "a3"}  # a2 loses in-batch to a1
-        process_incremental_batch(
-            self._mk(spark, self.BATCH1), 1, store, out
-        )
-        s1 = {r.doc_id for r in spark.read.parquet(f"{out}/batch_id=1").collect()}
-        assert s1 == {"b2"}  # b1 dies against the batch-0 store entry
-        sigs = spark.read.option("basePath", store).parquet(store)
-        assert {r.id for r in sigs.collect()} == {"a1", "a3", "b2"}
-
-    def test_replay_is_idempotent(self, spark, tmp_path):
-        from ocr_search_spark.streaming.incremental_dedup_stream import (
-            process_incremental_batch,
-        )
-
-        store = str(tmp_path / "store")
-        out = str(tmp_path / "out")
-        process_incremental_batch(self._mk(spark, self.BATCH0), 0, store, out)
-        process_incremental_batch(self._mk(spark, self.BATCH1), 1, store, out)
-        # replay batch 1 (at-least-once): the store already holds batch 1's
-        # own signatures — the exclude-own-partition read must keep b2
-        # alive instead of deduping the batch against itself
-        process_incremental_batch(self._mk(spark, self.BATCH1), 1, store, out)
-        s1 = {r.doc_id for r in spark.read.parquet(f"{out}/batch_id=1").collect()}
-        assert s1 == {"b2"}
-        sigs = spark.read.option("basePath", store).parquet(store)
-        assert {r.id for r in sigs.collect()} == {"a1", "a3", "b2"}
-
-    def test_streaming_end_to_end_matches_sequential(self, spark, tmp_path):
-        from ocr_search_spark.streaming.incremental_dedup_stream import (
-            incremental_dedup_stream,
-        )
-
-        src = str(tmp_path / "src")
-        # two source files -> two micro-batches (maxFilesPerTrigger=1)
-        self._mk(spark, self.BATCH0).coalesce(1).write.parquet(f"{src}/f0")
-        self._mk(spark, self.BATCH1).coalesce(1).write.parquet(f"{src}/f1")
-        stream = (
-            spark.readStream.schema("doc_id string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        store = str(tmp_path / "store")
-        out = str(tmp_path / "out")
-        q = incremental_dedup_stream(
-            stream,
-            store,
-            out,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            trigger_available_now=True,
-        )
-        q.awaitTermination(180)
-        survivors = {
-            r.doc_id
-            for r in spark.read.option("basePath", out).parquet(out).collect()
-        }
-        # same admit-set as the two sequential batch calls regardless of
-        # which file forms which micro-batch: the cross-file dup pair
-        # (a1/a2/b1 text) collapses to exactly one survivor
-        assert "b2" in survivors and "a3" in survivors
-        assert len(survivors & {"a1", "a2", "b1"}) == 1
-        sigs = spark.read.option("basePath", store).parquet(store)
-        assert {r.id for r in sigs.collect()} == survivors
