@@ -100,11 +100,14 @@ def group_attempt_path(out_dir: str, group_id: int, run_id: str) -> str:
 def read_pointer(root: str) -> dict:
     """The store's publication record, read as a plain file (no Spark job).
 
-    ``{"order": n, "snapshot": id | None, "spans": {run_group:
-    {"num_groups": k, "live": {"<group_id>": {"run_id": r, "order": o}}}}}``
-    where ``order`` counts publishes and each live attempt keeps the order
-    its rows were first published at (a compaction rewrite inherits it).
-    Before the first publish no snapshot and no attempt is live."""
+    ``{"order": n, "snapshot": id | None, "snapshot_stats": {"docs": N,
+    "sum_tf": S} | None, "spans": {run_group: {"num_groups": k, "live":
+    {"<group_id>": {"run_id": r, "order": o}}}}}`` where ``order`` counts
+    publishes and each live attempt keeps the order its rows were first
+    published at (a compaction rewrite inherits it). ``snapshot_stats``
+    holds the published snapshot's document count and Σ tf, observed while
+    its tables were written (see ``store.py``). Before the first publish no
+    snapshot and no attempt is live."""
     if os.path.isdir(os.path.join(root, "_ledger")):
         # spans used to be published by rows of a parquet ledger table;
         # resuming over one would re-extract everything next to the old
@@ -114,7 +117,7 @@ def read_pointer(root: str) -> dict:
             f"(a parquet publication ledger); this version publishes through "
             f"{root}/{POINTER} only. Re-extract into a fresh out_dir."
         )
-    pointer = {"order": 0, "snapshot": None, "spans": {}}
+    pointer = {"order": 0, "snapshot": None, "snapshot_stats": None, "spans": {}}
     try:
         with open(os.path.join(root, POINTER)) as f:
             pointer.update(json.load(f))

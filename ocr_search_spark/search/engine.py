@@ -59,8 +59,14 @@ DEFAULT_TO = "2100-01-01 00:00:00"
 DEFAULT_HTTPFS = "files.local"
 
 
+#: the columns :func:`build_postings` writes, in order; a reader that
+#: passes it to ``spark.read.schema`` skips parquet footer inference
+POSTINGS_SCHEMA = "term string, doc_id string, tf long, positions array<int>"
+
+
 def build_postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "content") -> DataFrame:
-    """Inverted postings table (term, doc_id, positions, tf).
+    """Inverted postings table (term, doc_id, tf, positions), laid out as
+    :data:`POSTINGS_SCHEMA`.
 
     Materialized compute-once-on-write, like the reference's tsvector
     trigger; written bucketed/partitioned by term prefix in a real
@@ -167,23 +173,48 @@ def _parse_filter_ts(value: str, name: str):
         ) from None
 
 
+def _check_args(docs: DataFrame, rank_mode, limit, offset, ocr_user, ocr_from, ocr_to) -> None:
+    """Driver-side argument checks, made before any Spark job: a filter the
+    frame has no column for must raise, never be dropped and return every
+    row (the store's ``content`` has neither ``email`` nor ``created_at``)."""
+    if rank_mode not in RANK_MODES:
+        raise ValueError(f"unknown rank_mode: {rank_mode!r}")
+    for name, value in (("limit", limit), ("offset", offset)):
+        if value < 0:
+            raise ValueError(f"{name}={value!r} must not be negative")
+    filters = (
+        ("ocr_user", ocr_user, "email"),
+        ("ocr_from", ocr_from, "created_at"),
+        ("ocr_to", ocr_to, "created_at"),
+    )
+    for name, value, col in filters:
+        if not value:
+            continue
+        if col == "created_at":
+            _parse_filter_ts(value, name)  # a malformed bound is its own error
+        if col not in docs.columns:
+            raise ValueError(
+                f"{name} filter cannot be applied: the documents frame has no "
+                f"{col!r} column (columns: {', '.join(docs.columns)})"
+            )
+
+
 def _apply_common_filters(
     df: DataFrame, ocr_user, ocr_from, ocr_to
 ) -> tuple[DataFrame, bool]:
     """Date-range + ILIKE predicates (Q2/Q3 — search.py:53-55), and whether
-    they can drop any row."""
-    # parse before looking at the columns: a malformed bound raises even on
-    # a frame (the store's ``content``) that has no ``created_at`` to filter
-    lo = _parse_filter_ts(ocr_from or DEFAULT_FROM, "ocr_from")
-    hi = _parse_filter_ts(ocr_to or DEFAULT_TO, "ocr_to")
-    narrowed = "created_at" in df.columns or bool(ocr_user and "email" in df.columns)
+    they can drop any row. :func:`_check_args` has already rejected a
+    filter the frame has no column for."""
+    narrowed = "created_at" in df.columns or bool(ocr_user)
     if "created_at" in df.columns:
+        lo = _parse_filter_ts(ocr_from or DEFAULT_FROM, "ocr_from")
+        hi = _parse_filter_ts(ocr_to or DEFAULT_TO, "ocr_to")
         df = df.filter(
             F.col("created_at").between(
                 F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp")
             )
         )
-    if ocr_user and "email" in df.columns:
+    if ocr_user:
         df = df.filter(F.col("email").ilike(f"%{ocr_user}%"))
     return df, narrowed
 
@@ -286,9 +317,13 @@ def search_documents(
     of docs, Σ tf of postings)`` when the caller already knows them (a
     store keeps them per snapshot); the empty query and BM25 then run no
     statistics job.
+
+    An unknown ``rank_mode``, a negative ``limit`` or ``offset``, and a
+    filter whose column ``docs`` lacks (``ocr_user`` needs ``email``,
+    ``ocr_from``/``ocr_to`` need ``created_at``) raise ``ValueError``
+    before any Spark job.
     """
-    if rank_mode not in RANK_MODES:
-        raise ValueError(f"unknown rank_mode: {rank_mode!r}")
+    _check_args(docs, rank_mode, limit, offset, ocr_user, ocr_from, ocr_to)
     q = (q or "").strip()
 
     if not (q or ocr_user or ocr_from or ocr_to):

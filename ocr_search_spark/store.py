@@ -39,10 +39,19 @@ rebuilds from them and publishes a complete snapshot. After the swap the
 previous snapshot is kept (a search that resolved it just before the swap
 can finish) and every older or unpublished snapshot is deleted.
 
-``search`` keeps the published snapshot resident: both tables cached, plus
-its document count and total token count (Σ tf), taken in one action when
-the snapshot is loaded, so BM25 and the empty query need no statistics job.
-It reloads only when ``CURRENT`` names another snapshot.
+An ingest counts the snapshot's documents (rows written to ``content``)
+and its total token count (Σ ``tf`` written to ``postings``) while it
+writes them: a ``DataFrame.observe`` on each write, so the counts ride in
+the write's own result stage and cost no job. The snapshot publish writes
+both into ``CURRENT`` in the same swap that names the snapshot.
+
+``search`` keeps the published snapshot resident. Opening it runs no Spark
+job: both tables are read with their known schemas (no footer inference)
+and marked cached, and (N docs, Σ tf) come from ``CURRENT``, so BM25 and
+the empty query need no statistics job. The first query fills the cache.
+It reloads only when ``CURRENT`` names another snapshot. A ``CURRENT``
+that names a snapshot without these counts was written by an older
+version; searching it raises until an ingest republishes the snapshot.
 
 One writer per store at a time; any number of readers. ``content_path`` and
 ``postings_path`` resolve to the published snapshot, so callers keep
@@ -57,24 +66,42 @@ import threading
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .ops.metadata import metadata_map_expr
 from .pipeline import run_extraction
-from .pipeline.checkpoint import committed_spans_latest, publish, read_pointer
-from .search.engine import build_postings, search_documents
+from .pipeline.checkpoint import (
+    IncompatibleCheckpointError,
+    committed_spans_latest,
+    publish,
+    read_pointer,
+)
+from .search.engine import POSTINGS_SCHEMA, build_postings, search_documents
 from .tables import write_table
+
+#: the columns ``DocumentStore.ingest`` writes to ``content``, in order
+CONTENT_SCHEMA = (
+    "doc_id string, content string, filename string, path_origin string, "
+    "meta map<string,string>"
+)
 
 
 def snapshot_dir(root: str, snapshot: str) -> str:
     return f"{root}/snapshots/{snapshot}"
 
 
-def publish_snapshot(root: str, snapshot: str) -> None:
-    """Atomically make ``snapshot`` the published one, then delete every
-    snapshot except it and the one it replaces."""
-    previous = publish(root, lambda p: p.update(snapshot=snapshot))
+def _table_path(root: str, pointer: dict, name: str) -> str:
+    if pointer["snapshot"] is None:
+        raise FileNotFoundError(f"{root} has no published snapshot yet")
+    return f"{snapshot_dir(root, pointer['snapshot'])}/{name}"
+
+
+def publish_snapshot(root: str, snapshot: str, stats: dict) -> None:
+    """Atomically make ``snapshot`` the published one, with its ``stats``
+    (``{"docs": N, "sum_tf": Σ tf}``), then delete every snapshot except it
+    and the one it replaces."""
+    previous = publish(root, lambda p: p.update(snapshot=snapshot, snapshot_stats=stats))
     keep = {snapshot, previous["snapshot"]}
     base = os.path.join(root, "snapshots")
     for name in os.listdir(base):
@@ -84,7 +111,10 @@ def publish_snapshot(root: str, snapshot: str) -> None:
 
 @dataclass
 class _Resident:
-    """One published snapshot's cached tables and (N docs, Σ tf)."""
+    """One published snapshot's cached tables and its (N docs, Σ tf) as
+    ``CURRENT`` records them. Loading it runs no Spark job: the tables are
+    read with their known schemas and only marked cached; the first query
+    that reads them fills the cache."""
 
     snapshot: str
     docs: DataFrame
@@ -92,17 +122,20 @@ class _Resident:
     stats: tuple[int, int]
 
     @classmethod
-    def load(cls, spark: SparkSession, snapshot: str, content: str, postings: str):
-        docs = spark.read.parquet(content).cache()
-        post = spark.read.parquet(postings).cache()
-        # one action fills both caches and counts documents and tokens
-        n, sum_tf = (
-            docs.select(F.lit(1).alias("n"), F.lit(0).cast("long").alias("tf"))
-            .unionByName(post.select(F.lit(0).alias("n"), F.col("tf")))
-            .agg(F.sum("n"), F.sum("tf"))
-            .first()
-        )
-        return cls(snapshot, docs, post, (n or 0, sum_tf or 0))
+    def load(cls, spark: SparkSession, root: str, pointer: dict):
+        content = _table_path(root, pointer, "content")
+        postings = _table_path(root, pointer, "postings")
+        stats = pointer["snapshot_stats"]
+        if stats is None:
+            raise IncompatibleCheckpointError(
+                f"{root}/CURRENT names snapshot {pointer['snapshot']} without its "
+                "document and token counts (it was published by an older "
+                "version). Run DocumentStore.ingest on this store, with any "
+                "batch, to republish the snapshot with them."
+            )
+        docs = spark.read.schema(CONTENT_SCHEMA).parquet(content).cache()
+        post = spark.read.schema(POSTINGS_SCHEMA).parquet(postings).cache()
+        return cls(pointer["snapshot"], docs, post, (stats["docs"], stats["sum_tf"]))
 
     def unpersist(self) -> None:
         self.docs.unpersist()
@@ -117,23 +150,20 @@ class DocumentStore:
         self._lock = threading.Lock()
 
     # ---- paths -----------------------------------------------------------
-    def _table_path(self, name: str, pointer: dict) -> str:
-        if pointer["snapshot"] is None:
-            raise FileNotFoundError(f"{self.root} has no published snapshot yet")
-        return f"{snapshot_dir(self.root, pointer['snapshot'])}/{name}"
-
     @property
     def content_path(self) -> str:
-        return self._table_path("content", read_pointer(self.root))
+        return _table_path(self.root, read_pointer(self.root), "content")
 
     @property
     def postings_path(self) -> str:
-        return self._table_path("postings", read_pointer(self.root))
+        return _table_path(self.root, read_pointer(self.root), "postings")
 
     # ---- lifecycle -------------------------------------------------------
     def ingest(self, documents: DataFrame, run_group: str = "ingest") -> dict:
         """Extract (resumably), write content + postings into a fresh
-        snapshot and publish it (see the module docstring)."""
+        snapshot and publish it (see the module docstring). Returns the
+        extraction's stats plus the snapshot id and what its writes
+        observed: ``content_rows``, ``postings_rows`` and ``sum_tf``."""
         stats = run_extraction(self.spark, documents, self.root, run_group=run_group)
         # read the *published* view (live attempts only) across ALL
         # run_groups — a store ingested in several batches under different
@@ -170,15 +200,34 @@ class DocumentStore:
         )
         snapshot = uuid.uuid4().hex
         base = snapshot_dir(self.root, snapshot)
-        write_table(content, f"{base}/content", mode="overwrite")
-        docs = self.spark.read.parquet(f"{base}/content")
+        # each write counts its own rows: an observation rides in the
+        # write's result stage, so it adds no job, and a retried result
+        # task's accumulator updates are applied once
+        wrote_content, wrote_postings = Observation(), Observation()
         write_table(
-            build_postings(docs, "doc_id", "content"),
+            content.observe(wrote_content, F.count(F.lit(1)).alias("rows")),
+            f"{base}/content",
+            mode="overwrite",
+        )
+        docs = self.spark.read.schema(CONTENT_SCHEMA).parquet(f"{base}/content")
+        write_table(
+            build_postings(docs, "doc_id", "content").observe(
+                wrote_postings,
+                F.count(F.lit(1)).alias("rows"),
+                F.coalesce(F.sum("tf"), F.lit(0)).alias("sum_tf"),
+            ),
             f"{base}/postings",
             mode="overwrite",
         )
-        publish_snapshot(self.root, snapshot)
-        stats["snapshot"] = snapshot
+        n_docs = wrote_content.get["rows"]
+        sum_tf = wrote_postings.get["sum_tf"]
+        publish_snapshot(self.root, snapshot, {"docs": n_docs, "sum_tf": sum_tf})
+        stats.update(
+            snapshot=snapshot,
+            content_rows=n_docs,
+            postings_rows=wrote_postings.get["rows"],
+            sum_tf=sum_tf,
+        )
         return stats
 
     def _resolve(self) -> _Resident:
@@ -187,15 +236,9 @@ class DocumentStore:
         pointer has changed since the last search."""
         with self._lock:
             pointer = read_pointer(self.root)
-            snapshot = pointer["snapshot"]
             old = self._resident
-            if old is None or old.snapshot != snapshot:
-                self._resident = _Resident.load(
-                    self.spark,
-                    snapshot,
-                    self._table_path("content", pointer),
-                    self._table_path("postings", pointer),
-                )
+            if old is None or old.snapshot != pointer["snapshot"]:
+                self._resident = _Resident.load(self.spark, self.root, pointer)
                 if old is not None:
                     old.unpersist()
             return self._resident

@@ -186,11 +186,18 @@ class TestPostingsMatcher:
     def test_equals_oracle(self, docs, postings, q, kw, scope):
         """``filterable`` docs carry created_at/email, so every search is
         scoped by a filter; ``plain`` docs are the whole corpus, with the
-        corpus statistics passed in as a store does."""
+        corpus statistics passed in as a store does. A plain frame cannot
+        apply a filter, so both paths reject one and the case is compared
+        without it."""
         stats = None
         if scope == "plain":
             docs = docs.select("doc_id", "content")
             stats = (docs.count(), postings.agg(F.sum("tf")).first()[0])
+            if any(k.startswith("ocr_") for k in kw):
+                for p in (None, postings):
+                    with pytest.raises(ValueError, match="filter cannot be applied"):
+                        search_documents(docs, q, postings=p, corpus_stats=stats, **kw)
+                kw = {k: v for k, v in kw.items() if not k.startswith("ocr_")}
         want = search_documents(docs, q, **kw)
         got = search_documents(docs, q, postings=postings, corpus_stats=stats, **kw)
         assert got["total"] == want["total"]
@@ -467,6 +474,32 @@ class TestRankModeValidation:
         postings = build_postings(poisoned) if with_postings else None
         with pytest.raises(ValueError, match="unknown rank_mode"):
             search_documents(poisoned, q, postings=postings, rank_mode="tfidf")
+
+    @pytest.mark.parametrize("q", ["", "spark join"])
+    @pytest.mark.parametrize(
+        "kw, match",
+        [
+            ({"limit": -1}, "limit"),
+            ({"offset": -3}, "offset"),
+            ({"ocr_user": "corp.ru"}, "ocr_user.*'email'"),
+            ({"ocr_from": "2024-01-01"}, "ocr_from.*'created_at'"),
+            ({"ocr_to": "2024-12-31"}, "ocr_to.*'created_at'"),
+        ],
+    )
+    def test_bad_argument_raises_before_any_job(self, spark, poisoned, q, kw, match):
+        """A negative limit or offset, and a filter the frame has no column
+        for, raise ValueError before any Spark job (a filter used to be
+        dropped, returning every document)."""
+        sc = spark.sparkContext
+        group = f"test-bad-argument-{'-'.join(kw)}-{bool(q)}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            with pytest.raises(ValueError, match=match):
+                search_documents(poisoned, q, postings=build_postings(poisoned), **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
 
 class TestSnippetFragments:

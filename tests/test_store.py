@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -232,7 +234,7 @@ class TestSnapshotPublish:
         term = _top_term(spark, s)
         before = s.search(term, limit=100)["total"]
 
-        def crash(root, snapshot):
+        def crash(root, snapshot, stats):
             raise RuntimeError("crash between snapshot write and publish")
 
         monkeypatch.setattr(store_mod, "publish_snapshot", crash)
@@ -270,7 +272,7 @@ class TestSnapshotPublish:
         term = _top_term(spark, s)
         before = s.search(term, limit=100)["total"]
 
-        def crash(root, snapshot):
+        def crash(root, snapshot, stats):
             raise RuntimeError("crash between span publish and snapshot publish")
 
         monkeypatch.setattr(store_mod, "publish_snapshot", crash)
@@ -440,8 +442,121 @@ class TestIngestJobs:
                 jobs[phase] = len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        # a publish through a parquet ledger table ran 13 and 15
-        assert 1 <= jobs["bulk"] <= 10, jobs
-        assert 1 <= jobs["update"] <= 10, jobs
+        # a publish through a parquet ledger table ran 13 and 15; reading
+        # content back with an inferred schema ran 10 and 10
+        assert 1 <= jobs["bulk"] <= 9, jobs
+        assert 1 <= jobs["update"] <= 9, jobs
         assert s.search("")["total"] == len(docs)
         assert glob.glob(f"{s.root}/**/_ledger*", recursive=True) == []
+
+
+@contextmanager
+def _jobs_in_group(spark, group):
+    """Runs the block in job group ``group``; on exit the yielded list holds
+    the number of Spark jobs the block ran."""
+    sc = spark.sparkContext
+    counted = []
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield counted
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        counted.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+class TestSnapshotStats:
+    """An ingest observes the snapshot's document count and Σ tf while it
+    writes the tables and publishes both in ``CURRENT``, so opening the
+    store runs no Spark job."""
+
+    @pytest.fixture(scope="class")
+    def updated(self, spark, base_texts, tmp_path_factory):
+        """A bulk batch, then an update batch that supersedes some of its
+        documents with shorter span lists and adds new ones."""
+        docs = build_local(base_texts, 50)
+        s = DocumentStore(spark, str(tmp_path_factory.mktemp("stats")))
+        bulk = s.ingest(_spans_df(spark, docs[:40]), run_group="bulk")
+        superseded = [{"doc_id": d["doc_id"], "spans": d["spans"][:1]} for d in docs[30:40]]
+        update = s.ingest(_spans_df(spark, superseded + docs[40:]), run_group="update")
+        return s, bulk, update
+
+    def test_open_runs_no_job(self, spark, updated):
+        s, _, _ = updated
+        fresh = DocumentStore(spark, s.root)
+        with _jobs_in_group(spark, "test-store-open") as opened:
+            fresh._resolve()
+        with _jobs_in_group(spark, "test-store-open-total") as counted:
+            total = fresh.search("")["total"]
+        assert (opened, counted) == ([0], [0])
+        assert total == 50
+
+    def test_stats_equal_recounted_tables(self, spark, updated):
+        """The pointer's (N, Σ tf) and the rows per table that ``ingest``
+        reports equal the written tables, recounted."""
+        from ocr_search_spark.pipeline.checkpoint import read_pointer
+
+        s, bulk, update = updated
+        content = spark.read.parquet(s.content_path)
+        postings = spark.read.parquet(s.postings_path)
+        n, sum_tf = content.count(), postings.agg(F.sum("tf")).first()[0]
+        assert read_pointer(s.root)["snapshot_stats"] == {"docs": n, "sum_tf": sum_tf}
+        assert (update["content_rows"], update["postings_rows"], update["sum_tf"]) == (
+            n,
+            postings.count(),
+            sum_tf,
+        )
+        assert (n, bulk["content_rows"]) == (50, 40)
+        assert 0 < bulk["postings_rows"] < update["postings_rows"]
+
+    def test_schema_constants_match_written_tables(self, spark, updated):
+        from pyspark.sql.types import _parse_datatype_string
+
+        from ocr_search_spark.search.engine import POSTINGS_SCHEMA
+        from ocr_search_spark.store import CONTENT_SCHEMA
+
+        s, _, _ = updated
+        for path, ddl in ((s.content_path, CONTENT_SCHEMA), (s.postings_path, POSTINGS_SCHEMA)):
+            inferred = spark.read.parquet(path).schema.simpleString()
+            assert inferred == _parse_datatype_string(ddl).simpleString(), path
+
+    def test_pointer_without_stats_raises_until_an_ingest(
+        self, spark, base_texts, tmp_path
+    ):
+        """A ``CURRENT`` published before the counts were recorded names a
+        snapshot without them: searching raises, and the next ingest (even
+        of an already-published batch) republishes the snapshot with them."""
+        from ocr_search_spark.pipeline.checkpoint import (
+            IncompatibleCheckpointError,
+            publish,
+        )
+
+        docs = build_local(base_texts, 12)
+        s = DocumentStore(spark, str(tmp_path / "old"))
+        s.ingest(_spans_df(spark, docs), run_group="b1")
+        publish(s.root, lambda p: p.pop("snapshot_stats"))
+        with pytest.raises(IncompatibleCheckpointError, match="DocumentStore.ingest"):
+            DocumentStore(spark, s.root).search("")
+        s.ingest(_spans_df(spark, docs), run_group="b1")
+        assert DocumentStore(spark, s.root).search("")["total"] == len(docs)
+
+
+class TestFilterColumns:
+    """The store's ``content`` has no ``email`` and no ``created_at``: a
+    filter on either raises before any job instead of being dropped."""
+
+    @pytest.mark.parametrize(
+        "kw, name",
+        [
+            ({"ocr_user": "nobody@nowhere"}, "ocr_user"),
+            ({"ocr_from": "2099-01-01"}, "ocr_from"),
+            ({"ocr_to": "2000-01-01"}, "ocr_to"),
+        ],
+    )
+    def test_store_rejects_filter_without_column(self, spark, store, kw, name):
+        s, _ = store
+        s.search("")  # the snapshot is resident
+        with _jobs_in_group(spark, f"test-filter-{name}") as jobs:
+            with pytest.raises(ValueError, match=name):
+                s.search("alpha", **kw)
+        assert jobs == [0]
