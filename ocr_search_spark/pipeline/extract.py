@@ -9,10 +9,11 @@ run.bat:31-33).
 Scale design (100 TB / 10^12-doc framing):
 
 * **Skew defense** — giant PDFs (the 1% long tail with up to 256 page spans)
-  are spread by salting on ``pmod(xxhash64(doc_id), P)`` before the shuffle;
-  the hash is uniform by construction so no key carries more than ~1/P of
-  documents, and P is decoupled from input file layout.
-* **One shuffle total** — the only exchange is a REBALANCE on the salt; the
+  are spread by a shuffle that hashes ``doc_id`` into P partitions; the
+  hash is uniform by construction so no partition carries more than ~1/P
+  of documents, and P is decoupled from input file layout. The salt
+  ``pmod(xxhash64(doc_id), P)`` labels each document's audit partition.
+* **One shuffle total** — the only exchange is a REBALANCE on doc_id; the
   extraction itself is a narrow ``mapInArrow`` and the output write is
   pipelined into the same stage. AQE sizes that stage from the shuffle
   bytes: a small batch runs in one task (each Python task pays a fixed
@@ -64,23 +65,22 @@ def add_partition_salt(df: DataFrame, num_partitions: int) -> DataFrame:
     """Deterministic salt column + rebalance shuffle (SURVEY.md §4 skew
     defense).
 
-    The shuffle hashes the salt into ``num_partitions`` initial partitions
-    and AQE then sizes the stage by shuffle bytes. It coalesces adjacent
+    ``part_id = pmod(xxhash64(doc_id), num_partitions)`` labels each
+    document's audit partition. The shuffle itself hashes ``doc_id`` into
+    ``num_partitions`` initial partitions: hashing the P salt values again
+    into P partitions would collide keys and leave some partitions empty.
+    AQE then sizes the stage by shuffle bytes. It coalesces adjacent
     partitions up to ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
     (1 MB by default) or, for a larger shuffle, to about the default
-    parallelism, so a 1000-doc batch runs in one task; and it splits a
-    partition above ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
-    so a key that drew several giants is spread over tasks. A salt key
-    stays within its partition unless split, which keeps the per-(g, r)
-    file count of the checkpointed ``partitionBy(g, r)`` write at one file
-    per task and group (a bare round-robin ``repartition(P)`` scatters
-    every key and multiplies it by num_groups). The salt's job is
-    deterministic group membership + giant-doc spreading; the physical
-    balance is AQE's."""
+    parallelism, so a batch of a few hundred documents runs in one task;
+    and it splits a partition above
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so a partition
+    that drew several giants is spread over tasks. Each
+    task writes one file of the batch's attempt directory."""
     return df.withColumn(
         "part_id",
         F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_partitions)).cast("int"),
-    ).hint("rebalance", num_partitions, "part_id")
+    ).hint("rebalance", num_partitions, "doc_id")
 
 
 def _extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:

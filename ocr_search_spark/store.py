@@ -19,7 +19,7 @@ Spark shape:
 
 Store layout and publish protocol::
 
-    <root>/spans/g=<g>/r=<run_id>          staged span attempts
+    <root>/spans/r=<run_id>                staged span attempts, one per batch
     <root>/_audit                          one lineage row per attempt partition
     <root>/snapshots/<id>/content          flat parquet, one row per doc
     <root>/snapshots/<id>/postings         flat parquet, (term, doc_id, ...)
@@ -29,7 +29,7 @@ Store layout and publish protocol::
 ``CURRENT`` is the only way anything becomes visible, and
 ``checkpoint.publish`` is its only writer: one atomic read-modify-write
 swap (temporary file, fsync, atomic rename). An ingest publishes twice:
-the extraction makes its span attempts live, then the derived tables,
+the extraction makes the batch's span attempt live, then the derived tables,
 written into a fresh ``<id>`` that no reader knows, are published as the
 snapshot. A reader resolves ``CURRENT`` once and reads both tables of that
 one snapshot, so it sees the old or the new store, never content from one

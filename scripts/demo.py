@@ -68,12 +68,12 @@ def main() -> None:
     cc = near_dedup_cc(content, "doc_id", "content", threshold=0.5)
     print(f"docs={content.count()} cluster-keeper survivors={cc.count()}")
 
-    print("== compaction: republish each group as one file, vacuum orphans")
+    print("== compaction: rewrite the batch's attempt as one file, vacuum the old")
     print(compact_group_outputs(spark, workdir, "demo"))
     print(f"vacuumed {len(vacuum_uncommitted(spark, workdir, min_age_s=0))} superseded dirs")
     print(f"committed rows: {committed_spans(spark, workdir, 'demo').count()}")
 
-    print("== re-ingest: checkpoint pointer skips committed groups")
+    print("== re-ingest: run_group 'demo' is published, so extraction is skipped")
     print(store.ingest(docs, run_group="demo"))
 
     spark.stop()

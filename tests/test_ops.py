@@ -3282,7 +3282,7 @@ class TestReviewRegressions3:
 
         from ocr_search_spark.pipeline.checkpoint import vacuum_uncommitted
 
-        root = tmp_path / "v" / "spans" / "g=0" / "r=young-run"
+        root = tmp_path / "v" / "spans" / "r=young-run"
         os.makedirs(root)
         (root / "part-0.parquet").write_bytes(b"")
         assert vacuum_uncommitted(spark, str(tmp_path / "v")) == []

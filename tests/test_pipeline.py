@@ -4,6 +4,8 @@ lineage, and checkpoint-resume behavior."""
 
 from __future__ import annotations
 
+import glob
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -20,13 +22,9 @@ from ocr_search_spark.pipeline import (
     extract_documents,
     run_extraction,
 )
-from ocr_search_spark.pipeline.checkpoint import (
-    SimulatedFailure,
-    committed_spans,
-    read_audit,
-)
+from ocr_search_spark.pipeline.checkpoint import committed_spans, read_audit
 
-from conftest import SF_DIR
+from conftest import SF_DIR, SMALL_AQE_PARTITIONS, spark_conf
 
 N_DOCS = 400
 
@@ -112,159 +110,157 @@ class TestLineage:
         assert total_failures == want
 
 
+def _crash_publish(root, change):
+    raise RuntimeError("killed between staging and publish")
+
+
 class TestResume:
-    def test_kill_and_resume_equals_single_run(self, spark, docs, input_df, tmp_path):
+    def test_kill_and_resume_equals_single_run(
+        self, spark, docs, input_df, tmp_path, monkeypatch
+    ):
+        from ocr_search_spark.pipeline import checkpoint as cp
+
         golden = _golden(docs)
 
         # uninterrupted run
         full_dir = str(tmp_path / "full")
-        run_extraction(spark, input_df, full_dir, "rgA", num_partitions=8, num_groups=4)
+        run_extraction(spark, input_df, full_dir, "rgA", num_partitions=8)
         full = _collected(committed_spans(spark, full_dir, "rgA"))
         assert full == golden
 
-        # killed after the second group, then resumed
+        # killed after staging, before its publish, then resumed
         part_dir = str(tmp_path / "resumed")
-        with pytest.raises(SimulatedFailure):
-            run_extraction(
-                spark, input_df, part_dir, "rgB",
-                num_partitions=8, num_groups=4, fail_after_group=1,
-            )
-        partial = committed_spans(spark, part_dir, "rgB").count()
-        assert 0 < partial < len(docs)
+        monkeypatch.setattr(cp, "publish", _crash_publish)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_extraction(spark, input_df, part_dir, "rgB", num_partitions=8)
+        monkeypatch.undo()
+        assert committed_spans(spark, part_dir, "rgB").count() == 0
 
-        stats = run_extraction(
-            spark, input_df, part_dir, "rgB", num_partitions=8, num_groups=4
-        )
-        assert stats["groups_skipped"] == 2  # committed groups not reprocessed
+        stats = run_extraction(spark, input_df, part_dir, "rgB", num_partitions=8)
+        assert not stats["skipped"]
         resumed = _collected(committed_spans(spark, part_dir, "rgB"))
-        assert resumed == golden  # no loss, no double-processing
+        assert resumed == full  # no loss, no double-processing
+        # once published, the run_group is never extracted again
+        again = run_extraction(spark, input_df, part_dir, "rgB", num_partitions=8)
+        assert again["skipped"] and again["run_id"] == stats["run_id"]
 
     def test_crash_between_stage_and_publish_never_double_writes(
-        self, spark, docs, input_df, tmp_path
+        self, spark, docs, input_df, tmp_path, monkeypatch
     ):
         """The spans write and the CURRENT publish are separate commits; a
         crash between them must not surface the orphan attempt (the round-1
         design re-appended the whole group on resume)."""
+        from ocr_search_spark.pipeline import checkpoint as cp
+
         golden = _golden(docs)
         out = str(tmp_path / "staged")
-        with pytest.raises(SimulatedFailure):
-            run_extraction(
-                spark, input_df, out, "rgS",
-                num_partitions=8, num_groups=4, fail_before_publish=2,
-            )
-        # groups 0-1 published, group 2 staged but orphaned
+        monkeypatch.setattr(cp, "publish", _crash_publish)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_extraction(spark, input_df, out, "rgS", num_partitions=8)
+        monkeypatch.undo()
+        # the batch is staged but orphaned: no view sees it
+        assert len(glob.glob(f"{out}/spans/r=*/*.parquet")) >= 1
+        assert committed_spans(spark, out).count() == 0
+        assert cp.committed_spans_latest(spark, out).count() == 0
+
+        run_extraction(spark, input_df, out, "rgS", num_partitions=8)
+        assert len(glob.glob(f"{out}/spans/r=*")) == 2  # orphan + live attempt
         seen = committed_spans(spark, out, "rgS")
-        assert seen.select("doc_id").distinct().count() == seen.count()
-
-        stats = run_extraction(spark, input_df, out, "rgS",
-                               num_partitions=8, num_groups=4)
-        assert stats["groups_skipped"] == 2
-        resumed = _collected(committed_spans(spark, out, "rgS"))
+        assert seen.select("doc_id").distinct().count() == seen.count() == len(docs)
+        resumed = _collected(seen)
         assert resumed == golden  # orphan attempt invisible, no duplicates
-
-    def test_resume_with_changed_num_groups_fails_fast(
-        self, spark, input_df, tmp_path
-    ):
-        """Group membership is a function of num_groups — resuming with a
-        different value would silently lose/duplicate docs, so it must
-        refuse (membership is never derived from cluster parallelism)."""
-        out = str(tmp_path / "ng")
-        with pytest.raises(SimulatedFailure):
-            run_extraction(spark, input_df, out, "rgN",
-                           num_partitions=8, num_groups=4, fail_after_group=0)
-        with pytest.raises(ValueError, match="num_groups"):
-            run_extraction(spark, input_df, out, "rgN",
-                           num_partitions=8, num_groups=8)
-        # different parallelism, same num_groups: resumes cleanly
-        stats = run_extraction(spark, input_df, out, "rgN",
-                               num_partitions=3, num_groups=4)
-        assert stats["groups_skipped"] == 1
 
     def test_compaction_preserves_rows_and_republishes(
         self, spark, docs, input_df, tmp_path
     ):
-        """compact_group_outputs rewrites each group into one file and
-        republishes it with one CURRENT swap; the committed view is
-        unchanged, old attempts become invisible history."""
-        import glob
-
-        from ocr_search_spark.pipeline.checkpoint import compact_group_outputs
-
-        out = str(tmp_path / "compact")
-        run_extraction(spark, input_df, out, "rgK", num_partitions=8, num_groups=2)
-        before = _collected(committed_spans(spark, out, "rgK"))
-
-        stats = compact_group_outputs(spark, out, "rgK")
-        assert stats["groups_compacted"] == 2
-        after = _collected(committed_spans(spark, out, "rgK"))
-        assert after == before == _golden(docs)
-        # each live attempt dir holds exactly one data file
-        live_dirs = glob.glob(f"{out}/spans/g=*/r={stats['run_id']}")
-        assert len(live_dirs) == 2
-        for d in live_dirs:
-            assert len(glob.glob(f"{d}/part-*")) == 1
-
-    def test_vacuum_removes_orphans_keeps_live(self, spark, docs, input_df, tmp_path):
-        import glob
-
+        """compact_group_outputs rewrites a run_group's attempt into one file
+        and republishes it, at the order it had, with one CURRENT swap; the
+        committed view is unchanged, the old attempt becomes invisible
+        history."""
         from ocr_search_spark.pipeline.checkpoint import (
             compact_group_outputs,
-            vacuum_uncommitted,
+            read_pointer,
         )
 
+        out = str(tmp_path / "compact")
+        with spark_conf(spark, SMALL_AQE_PARTITIONS):
+            first = run_extraction(spark, input_df, out, "rgK", num_partitions=8)
+        assert len(glob.glob(f"{out}/spans/r={first['run_id']}/part-*")) > 1
+        before = _collected(committed_spans(spark, out, "rgK"))
+        order = read_pointer(out)["spans"]["rgK"]["order"]
+
+        stats = compact_group_outputs(spark, out, "rgK")
+        after = _collected(committed_spans(spark, out, "rgK"))
+        assert after == before == _golden(docs)
+        assert read_pointer(out)["spans"]["rgK"] == {
+            "run_id": stats["run_id"], "order": order
+        }
+        assert len(glob.glob(f"{out}/spans/r={stats['run_id']}/part-*")) == 1
+
+    def test_vacuum_removes_orphans_keeps_live(
+        self, spark, docs, input_df, tmp_path, monkeypatch
+    ):
+        from ocr_search_spark.pipeline import checkpoint as cp
+
         out = str(tmp_path / "vac")
-        with pytest.raises(SimulatedFailure):
-            run_extraction(spark, input_df, out, "rgV",
-                           num_partitions=8, num_groups=2, fail_before_publish=1)
-        run_extraction(spark, input_df, out, "rgV", num_partitions=8, num_groups=2)
-        compact_group_outputs(spark, out, "rgV")  # supersedes originals
+        monkeypatch.setattr(cp, "publish", _crash_publish)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_extraction(spark, input_df, out, "rgV", num_partitions=8)
+        monkeypatch.undo()
+        run_extraction(spark, input_df, out, "rgV", num_partitions=8)
+        stats = cp.compact_group_outputs(spark, out, "rgV")  # supersedes the original
         golden = _golden(docs)
-        removed = vacuum_uncommitted(spark, out, min_age_s=0)
-        # removed: the orphan attempt + the superseded pre-compaction dirs
-        assert len(removed) == 3
-        assert len(glob.glob(f"{out}/spans/g=*/r=*")) == 2  # live attempts only
+        removed = cp.vacuum_uncommitted(spark, out, min_age_s=0)
+        # removed: the orphan attempt + the superseded pre-compaction dir
+        assert len(removed) == 2
+        assert glob.glob(f"{out}/spans/r=*") == [f"{out}/spans/r={stats['run_id']}"]
         assert _collected(committed_spans(spark, out, "rgV")) == golden
 
-    def test_maintenance_paths_bounded_jobs_at_200_groups(
+    def test_maintenance_paths_run_the_same_jobs_at_2_and_12_run_groups(
         self, spark, docs, input_df, tmp_path
     ):
-        """compact_group_outputs and committed_spans_latest must run a
-        GROUP-COUNT-INDEPENDENT number of Spark jobs (the round-3
-        formulations were O(groups): a per-group job + 1-row publication
-        append loop, and an O(attempts)-leg union plan)."""
+        """compact_group_outputs and committed_spans_latest run a number of
+        Spark jobs that does not grow with the live run_groups (the round-3
+        formulations were O(attempts): a per-attempt job + 1-row
+        publication append loop, and an O(attempts)-leg union plan)."""
         from ocr_search_spark.pipeline import committed_spans_latest
         from ocr_search_spark.pipeline.checkpoint import compact_group_outputs
 
         out = str(tmp_path / "many")
         sc = spark.sparkContext
-        sc.setJobGroup("extract200", "extraction job-count probe")
-        run_extraction(spark, input_df, out, "rgM", num_partitions=8, num_groups=200)
+        ids = [d["doc_id"] for d in docs]
 
-        sc.setJobGroup("compact200", "compaction job-count probe")
-        stats = compact_group_outputs(spark, out, "rgM")
-        sc.setJobGroup("latest200", "latest-view job-count probe")
-        n_rows = committed_spans_latest(spark, out).count()
-        sc.setJobGroup("probe-done", "")
-        assert stats["groups_compacted"] == 200
-        assert n_rows == N_DOCS
-        tracker = sc.statusTracker()
-        n_extract = len(tracker.getJobIdsForGroup("extract200"))
-        n_compact = len(tracker.getJobIdsForGroup("compact200"))
-        n_latest = len(tracker.getJobIdsForGroup("latest200"))
-        # small constants (parallel file listing +
-        # stage/publish or scan) — NOT proportional to the 200 groups
-        assert n_extract <= 8, f"extraction ran {n_extract} jobs for 200 groups"
-        assert n_compact <= 8, f"compaction ran {n_compact} jobs for 200 groups"
-        assert n_latest <= 8, f"latest view ran {n_latest} jobs for 200 groups"
-        # committed view unchanged by compaction
-        assert _collected(committed_spans(spark, out, "rgM")) == _golden(docs)
+        def extract_slices(lo, hi):
+            for k in range(lo, hi):
+                part = input_df.filter(F.col("doc_id").isin(ids[k::12]))
+                run_extraction(spark, part, out, f"rg{k}", num_partitions=8)
+
+        def jobs(tag):
+            sc.setJobGroup(f"compact{tag}", "compaction job-count probe")
+            compact_group_outputs(spark, out, "rg0")
+            sc.setJobGroup(f"latest{tag}", "latest-view job-count probe")
+            n_rows = committed_spans_latest(spark, out).count()
+            sc.setJobGroup("probe-done", "")
+            tracker = sc.statusTracker()
+            return n_rows, [
+                len(tracker.getJobIdsForGroup(f"{g}{tag}")) for g in ("compact", "latest")
+            ]
+
+        extract_slices(0, 2)
+        rows2, jobs2 = jobs(2)
+        extract_slices(2, 12)
+        rows12, jobs12 = jobs(12)
+        assert rows2 == len(ids[0::12]) + len(ids[1::12])
+        assert rows12 == N_DOCS
+        assert jobs12 == jobs2, f"jobs (compact, latest): {jobs2} at 2, {jobs12} at 12"
+        assert _collected(committed_spans(spark, out)) == _golden(docs)
 
     def test_single_pass_stages_all_pending_groups(
         self, spark, docs, input_df, tmp_path, monkeypatch
     ):
         """One source scan per run: extract_documents is invoked exactly once
-        however many commit groups are pending (the round-2 per-group filter
-        loop called it num_groups times — num_groups× read amplification)."""
+        per batch (the round-2 per-group filter loop called it once per
+        commit group — a read amplification of the group count)."""
         from ocr_search_spark.pipeline import checkpoint as cp
 
         calls = []
@@ -273,11 +269,11 @@ class TestResume:
             cp, "extract_documents", lambda df, n: calls.append(1) or real(df, n)
         )
         out = str(tmp_path / "onepass")
-        run_extraction(spark, input_df, out, "rg1", num_partitions=8, num_groups=4)
+        run_extraction(spark, input_df, out, "rg1", num_partitions=8)
         assert len(calls) == 1
         assert _collected(committed_spans(spark, out, "rg1")) == _golden(docs)
-        # a fully-committed resume never touches the source at all
-        run_extraction(spark, input_df, out, "rg1", num_partitions=8, num_groups=4)
+        # a committed run_group's resume never touches the source at all
+        run_extraction(spark, input_df, out, "rg1", num_partitions=8)
         assert len(calls) == 1
 
     def test_committed_spans_latest_resolves_cross_run_group_overlap(
@@ -286,14 +282,14 @@ class TestResume:
         from ocr_search_spark.pipeline import committed_spans_latest
 
         out = str(tmp_path / "latest")
-        run_extraction(spark, input_df, out, "rgOld", num_partitions=8, num_groups=2)
+        run_extraction(spark, input_df, out, "rgOld", num_partitions=8)
         # second run_group re-extracts 30 docs with truncated span lists
         redo = [{"doc_id": d["doc_id"], "spans": d["spans"][:1]} for d in docs[:30]]
         pdf = pd.DataFrame(
             {"doc_id": [d["doc_id"] for d in redo], "spans": [d["spans"] for d in redo]}
         )
         redo_df = spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
-        run_extraction(spark, redo_df, out, "rgNew", num_partitions=8, num_groups=2)
+        run_extraction(spark, redo_df, out, "rgNew", num_partitions=8)
 
         # plain concatenated view duplicates the overlap …
         assert committed_spans(spark, out).count() == len(docs) + 30
@@ -332,12 +328,12 @@ class TestResume:
         from ocr_search_spark.pipeline.checkpoint import compact_group_outputs
 
         out = str(tmp_path / "compact_order")
-        run_extraction(spark, input_df, out, "rgA", num_partitions=8, num_groups=2)
+        run_extraction(spark, input_df, out, "rgA", num_partitions=8)
         redo, redo_df = self._rewritten(spark, docs[:30])
-        run_extraction(spark, redo_df, out, "rgB", num_partitions=8, num_groups=2)
+        run_extraction(spark, redo_df, out, "rgB", num_partitions=8)
         before = _collected(committed_spans_latest(spark, out))
 
-        assert compact_group_outputs(spark, out, "rgA")["groups_compacted"] == 2
+        assert compact_group_outputs(spark, out, "rgA")["run_id"] is not None
         after = _collected(committed_spans_latest(spark, out))
         want_redo = _golden(redo)
         want = _golden(docs)
@@ -347,30 +343,6 @@ class TestResume:
             assert after[d["doc_id"]] == want_redo[d["doc_id"]] != want[d["doc_id"]]
         for d in docs[30:]:
             assert after[d["doc_id"]] == want[d["doc_id"]]
-
-    def test_compaction_keeps_per_group_order_across_interleaved_publishes(
-        self, spark, docs, input_df, tmp_path
-    ):
-        """run_group A publishes group 0, then B publishes, then A's resume
-        publishes group 1: one compact run_id of A then spans two orders, one
-        older and one newer than B. The latest view is unchanged by the
-        compaction, group by group."""
-        from ocr_search_spark.pipeline import committed_spans_latest
-        from ocr_search_spark.pipeline.checkpoint import compact_group_outputs
-
-        out = str(tmp_path / "compact_interleaved")
-        with pytest.raises(SimulatedFailure):
-            run_extraction(spark, input_df, out, "rgA", num_partitions=8,
-                           num_groups=2, fail_after_group=0)
-        _, redo_df = self._rewritten(spark, docs[:30])
-        run_extraction(spark, redo_df, out, "rgB", num_partitions=8, num_groups=2)
-        run_extraction(spark, input_df, out, "rgA", num_partitions=8, num_groups=2)
-        before = _collected(committed_spans_latest(spark, out))
-        winners = {before[d["doc_id"]] == _golden(docs[:30])[d["doc_id"]] for d in docs[:30]}
-        assert winners == {True, False}  # A wins one group's overlap, B the other's
-
-        compact_group_outputs(spark, out, "rgA")
-        assert _collected(committed_spans_latest(spark, out)) == before
 
     def test_old_format_ledger_fails_with_explicit_error(
         self, spark, input_df, tmp_path
@@ -394,9 +366,44 @@ class TestResume:
         with pytest.raises(IncompatibleCheckpointError):
             run_extraction(spark, input_df, out, "rgZ", num_partitions=4)
 
+    def test_per_group_current_fails_with_explicit_error(
+        self, spark, input_df, tmp_path
+    ):
+        """A CURRENT that publishes span attempts per commit group (the
+        layout before the batch became the commit unit) must fail fast with
+        guidance wherever it is read, not with a bare KeyError."""
+        import json
+        import os
+
+        from ocr_search_spark.pipeline.checkpoint import (
+            IncompatibleCheckpointError,
+            read_pointer,
+        )
+        from ocr_search_spark.store import DocumentStore
+
+        out = str(tmp_path / "pergroup")
+        os.makedirs(out)
+        with open(f"{out}/CURRENT", "w") as f:
+            json.dump(
+                {
+                    "order": 2,
+                    "snapshot": "s1",
+                    "snapshot_stats": {"docs": 1, "sum_tf": 1},
+                    "spans": {"rgP": {"num_groups": 1,
+                                      "live": {"0": {"run_id": "rgP-1", "order": 1}}}},
+                },
+                f,
+            )
+        with pytest.raises(IncompatibleCheckpointError, match="commit group"):
+            read_pointer(out)
+        with pytest.raises(IncompatibleCheckpointError, match="Re-extract"):
+            run_extraction(spark, input_df, out, "rgQ", num_partitions=4)
+        with pytest.raises(IncompatibleCheckpointError):
+            DocumentStore(spark, out).search("spark")
+
     def test_audit_rows(self, spark, input_df, docs, tmp_path):
         out = str(tmp_path / "audit_run")
-        run_extraction(spark, input_df, out, "rgC", num_partitions=8, num_groups=2)
+        run_extraction(spark, input_df, out, "rgC", num_partitions=8)
         audit = read_audit(spark, out)
         pdf = audit.toPandas()
         assert set(pdf.columns) == {

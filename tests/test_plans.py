@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ocr_search_spark.corpus import SPANS_IN_SCHEMA, build_local
 from ocr_search_spark.pipeline import extract_documents, run_extraction
-from conftest import SF_DIR
+from conftest import SF_DIR, SMALL_AQE_PARTITIONS, spark_conf
 
 
 def plan_of(df) -> str:
@@ -66,15 +66,18 @@ class TestBroadcast:
 
 
 class TestPartitionBalance:
-    def test_salt_spreads_docs_and_giants(self, spark, base_texts):
-        """Skew defense: no salt partition holds a disproportionate share
-        (the 1%-giant-PDF tail must not pile onto few partitions)."""
+    @pytest.fixture(scope="class")
+    def thousand_docs(self, spark, base_texts):
         docs = build_local(base_texts, 1000)
         pdf = pd.DataFrame(
             {"doc_id": [d["doc_id"] for d in docs], "spans": [d["spans"] for d in docs]}
         )
-        df = spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
-        out = extract_documents(df, 16)
+        return spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
+
+    def test_salt_spreads_docs_and_giants(self, spark, thousand_docs):
+        """Skew defense: no salt partition holds a disproportionate share
+        (the 1%-giant-PDF tail must not pile onto few partitions)."""
+        out = extract_documents(thousand_docs, 16)
         stats = (
             out.groupBy("part_id")
             .agg(F.count("*").alias("docs"), F.sum("n_spans").alias("spans"))
@@ -88,6 +91,22 @@ class TestPartitionBalance:
         mean_spans = sum(span_counts) / len(span_counts)
         assert max(span_counts) < 3 * mean_spans  # giants spread, not clustered
 
+    def test_shuffle_fills_every_task(self, spark, thousand_docs):
+        """The extraction shuffle spreads documents over all of its
+        partitions: it hashes doc_id, not the P salt values, which collide
+        when hashed again into P partitions and leave some tasks empty and
+        others with two or three salt keys' rows."""
+        with spark_conf(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+            rows = (
+                extract_documents(thousand_docs, 8)
+                .groupBy(F.spark_partition_id().alias("task"))
+                .count()
+                .collect()
+            )
+        counts = sorted(r["count"] for r in rows)
+        assert len(counts) == 8, counts
+        assert max(counts) / min(counts) < 2, counts
+
     @pytest.fixture(scope="class")
     def input_df(self, spark, base_texts):
         docs = build_local(base_texts, 60)
@@ -97,41 +116,23 @@ class TestPartitionBalance:
         return spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
 
     @staticmethod
-    def _files_per_group(spark, input_df, root) -> dict:
+    def _files_per_attempt(spark, input_df, root) -> list[int]:
         run_extraction(spark, input_df, str(root), run_group="balance", num_partitions=8)
-        return {
-            g.name: len(list(g.glob("r=*/*.parquet")))
-            for g in (root / "spans").glob("g=*")
-        }
+        return [len(list(r.glob("*.parquet"))) for r in (root / "spans").glob("r=*")]
 
     def test_small_batch_runs_in_one_task(self, spark, input_df, tmp_path):
         """AQE coalesces the rebalance of a small batch into one partition:
-        the kernel runs in one Python task, which writes one file per group.
-        Each Python task pays the worker's fixed set-up CPU, so a small
-        batch must not fan out to num_partitions tasks."""
-        files = self._files_per_group(spark, input_df, tmp_path)
-        assert len(files) == 4
-        assert set(files.values()) == {1}
+        the kernel runs in one Python task, which stages one file. Each
+        Python task pays the worker's fixed set-up CPU, so a small batch
+        must not fan out to num_partitions tasks."""
+        assert self._files_per_attempt(spark, input_df, tmp_path) == [1]
 
     def test_large_input_still_fans_out(self, spark, input_df, tmp_path):
         """The same rebalance keeps several tasks once the shuffle outgrows
         AQE's partition sizes: lowered here so 60 docs count as large."""
-        keys = (
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        )
-        saved = {k: spark.conf.get(k, None) for k in keys}
-        try:
-            for k in keys:
-                spark.conf.set(k, "1KB")
-            files = self._files_per_group(spark, input_df, tmp_path)
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-        assert max(files.values()) > 1
+        with spark_conf(spark, SMALL_AQE_PARTITIONS):
+            files = self._files_per_attempt(spark, input_df, tmp_path)
+        assert len(files) == 1 and files[0] > 1
 
 
 class TestRankingPlans:
