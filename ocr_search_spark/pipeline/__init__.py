@@ -10,7 +10,6 @@ from .extract import (
 from .checkpoint import (
     committed_spans,
     committed_spans_latest,
-    compact_group_outputs,
     run_extraction,
     read_audit,
     read_pointer,
@@ -21,7 +20,6 @@ __all__ = [
     "add_partition_salt",
     "committed_spans",
     "committed_spans_latest",
-    "compact_group_outputs",
     "extract_documents",
     "explode_spans",
     "ordered_text_agg",

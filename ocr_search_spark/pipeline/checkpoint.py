@@ -24,7 +24,13 @@ lineage:
   lineage: every attempt is logged, the pointer says which one is live;
 * a restarted run with a ``run_group`` that ``CURRENT`` already names
   returns at once without reading its source — a killed job never
-  reprocesses a committed batch.
+  reprocesses a committed batch;
+* a batch holds each ``doc_id`` at most once: one that repeats an id is
+  rejected before its publish, so the latest view never has to choose
+  between two rows of one batch.
+
+A run_group's ``CURRENT`` entry is written once, by its publish, and never
+changed; an attempt directory is never rewritten.
 
 Like an Iceberg append, a batch is one snapshot of the span table: a crash
 loses at most the batch in flight, while the batch itself still fans out
@@ -41,7 +47,7 @@ import time
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
@@ -91,8 +97,8 @@ def read_pointer(root: str) -> dict:
 
     ``{"order": n, "snapshot": id | None, "snapshot_stats": {"docs": N,
     "sum_tf": S} | None, "spans": {run_group: {"run_id": r, "order": o}}}``
-    where ``order`` counts publishes and each live attempt keeps the order
-    its rows were first published at (a compaction rewrite inherits it).
+    where ``order`` counts publishes and each live attempt holds the order
+    of the publish that made it live.
     ``snapshot_stats`` holds the published snapshot's document count and
     Σ tf, observed while its tables were written (see ``store.py``). Before
     the first publish no snapshot and no attempt is live."""
@@ -144,16 +150,6 @@ def publish(root: str, change: Callable[[dict], None]) -> dict:
     return old
 
 
-def _live_attempts(pointer: dict, run_group: str | None = None) -> list[tuple]:
-    """(run_id, order) of the live attempt of one run_group, or of all —
-    one per ingested batch, driver-small by construction."""
-    return [
-        (a["run_id"], a["order"])
-        for rg, a in pointer["spans"].items()
-        if run_group in (None, rg)
-    ]
-
-
 def read_audit(spark: SparkSession, out_dir: str) -> DataFrame | None:
     try:
         return spark.read.parquet(_audit_path(out_dir))
@@ -163,38 +159,29 @@ def read_audit(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return None
 
 
-def committed_spans(
-    spark: SparkSession, out_dir: str, run_group: str | None = None
-) -> DataFrame:
-    """The published output view: exactly the live attempt directories.
-
-    Orphan attempts from crashed runs (staged but never published) and
-    attempts a later publish superseded (e.g. by
-    :func:`compact_group_outputs`) are invisible here.
-
-    SCOPING: with ``run_group=None`` the view CONCATENATES every
-    run_group's published attempt — two run_groups that both extracted an
-    overlapping document each contribute their rows. Use
-    :func:`committed_spans_latest` when one row per document (latest
-    publication wins) is the contract, e.g. for rebuilding derived tables."""
-    live = _live_attempts(read_pointer(out_dir), run_group)
-    if not live:
+def committed_spans(spark: SparkSession, out_dir: str, run_group: str) -> DataFrame:
+    """The published rows of one run_group: exactly its live attempt
+    directory, one row per document of the batch. Orphan attempts from
+    crashed or rejected runs are invisible here; an unpublished run_group
+    reads as an empty frame. :func:`committed_spans_latest` is the view
+    across run_groups."""
+    live = read_pointer(out_dir)["spans"].get(run_group)
+    if live is None:
         return spark.createDataFrame([], SPANS_OUT_SCHEMA)
-    paths = [attempt_path(out_dir, r) for r, _ in live]
     # explicit schema: skips footer inference
-    return spark.read.schema(SPANS_OUT_SCHEMA).parquet(*paths)
+    return spark.read.schema(SPANS_OUT_SCHEMA).parquet(attempt_path(out_dir, live["run_id"]))
 
 
 def committed_spans_latest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Cross-run_group published view resolved to ONE row per document.
+    """The published view across every run_group, ONE row per document.
 
-    :func:`committed_spans` with ``run_group=None`` concatenates all
-    run_groups, so a document two run_groups both extracted appears twice.
-    Here the attempt published last wins per document — the view
-    derived-table rebuilds want (see ``DocumentStore.ingest``). Cost: one
-    extra shuffle (partial-aggregated ``max_by`` per doc_id) over the
-    published rows — a rebuild-time path, not a per-query path."""
-    live = _live_attempts(read_pointer(out_dir))
+    Where two run_groups both extracted a document, the attempt published
+    last wins; a batch holds each doc_id once, so the winner is unique.
+    This is the view derived-table rebuilds want (see
+    ``DocumentStore.ingest``). Cost: one extra shuffle (partial-aggregated
+    ``max_by`` per doc_id) over the published rows — a rebuild-time path,
+    not a per-query path."""
+    live = [(a["run_id"], a["order"]) for a in read_pointer(out_dir)["spans"].values()]
     if not live:
         return spark.createDataFrame([], SPANS_OUT_SCHEMA)
     # ONE scan node regardless of attempt count: read every live attempt
@@ -218,42 +205,13 @@ def committed_spans_latest(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def compact_group_outputs(
-    spark: SparkSession,
-    out_dir: str,
-    run_group: str,
-) -> dict:
-    """Small-files hygiene: rewrite a run_group's published attempt into
-    one file under a new attempt directory and republish it.
-
-    A large batch's extraction fans out over all executors, so its attempt
-    holds one file per task — the classic small-files problem at 10^12
-    rows. Compaction reuses the same stage-then-publish protocol as
-    extraction: readers never see a half-written rewrite, and a crash
-    mid-compaction leaves the previous publication live. The rewrite holds
-    the same rows, so it keeps the publication order the run_group had:
-    compacting an older run_group never makes its rows win over a newer
-    run_group's in :func:`committed_spans_latest`."""
-    live = read_pointer(out_dir)["spans"].get(run_group)
-    if live is None:
-        return {"run_group": run_group, "run_id": None}
-    _validate_run_group(run_group)
-    compact_id = f"{run_group}-compact-{uuid.uuid4().hex[:8]}"
-    src = spark.read.schema(SPANS_OUT_SCHEMA).parquet(attempt_path(out_dir, live["run_id"]))
-    write_table(src.coalesce(1), attempt_path(out_dir, compact_id))
-
-    # a crash before this swap leaves the previous publication live (the
-    # staged rewrite is an invisible orphan — same contract as extraction)
-    publish(out_dir, lambda p: p["spans"][run_group].update(run_id=compact_id))
-    return {"run_group": run_group, "run_id": compact_id}
-
-
 def vacuum_uncommitted(
     spark: SparkSession, out_dir: str, min_age_s: float = 3600.0
 ) -> list[str]:
-    """Delete staged attempt directories that no publish ever made live
-    (crash leftovers) or that a later publish superseded. Driver-side
-    filesystem walk; returns the removed paths.
+    """Delete staged attempt directories that no publish ever made live:
+    leftovers of a crash before the publish, or of a batch rejected for
+    repeating a doc_id. Driver-side filesystem walk; returns the removed
+    paths.
 
     ``min_age_s`` (default 1 h) protects attempts staged by a STILL-RUNNING
     extraction: staging completes before the pointer swap, so a
@@ -266,7 +224,7 @@ def vacuum_uncommitted(
     root = output_path(out_dir)
     if not os.path.isdir(root):
         return []
-    live = {r for r, _ in _live_attempts(read_pointer(out_dir))}
+    live = {a["run_id"] for a in read_pointer(out_dir)["spans"].values()}
     now = time.time()
     removed = []
     for rdir in sorted(os.listdir(root)):
@@ -301,7 +259,10 @@ def run_extraction(
     One job stages the batch under ``spans/r=<run_id>``; the audit rows are
     appended from the staged files; then one :func:`publish` swap makes the
     attempt live. A crash before the swap leaves it as an invisible orphan
-    for a resume to replace.
+    for a resume to replace. A batch that repeats a doc_id raises
+    ``ValueError`` before the swap: ``CURRENT`` is unchanged and the staged
+    attempt is an orphan, so the same run_group can be ingested again once
+    the batch holds each id once.
 
     ``num_partitions`` is the salt modulus of :func:`extract_documents`
     (one audit row per salt value; default 2× the default parallelism),
@@ -325,16 +286,30 @@ def run_extraction(
     wall_ms = int((time.monotonic() - t0) * 1000)
 
     # attempt-level lineage from the staged files themselves (verifies
-    # the write; no persist of the full extraction output needed)
+    # the write; no persist of the full extraction output needed). A
+    # doc_id has one part_id, so one exchange on part_id serves both the
+    # per-document count that finds repeated ids and the per-partition
+    # rows. The observation sits after both aggregations, so they stay
+    # one generated stage
+    repeated = Observation()
     audit = (
         spark.read.schema(SPANS_OUT_SCHEMA)
         .parquet(path)
+        .repartition("part_id")
+        .groupBy("part_id", "doc_id")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum("n_spans").alias("n_spans"),
+            F.sum("n_failures").alias("n_failures"),
+        )
         .groupBy("part_id")
         .agg(
-            F.count("*").alias("docs"),
+            F.sum("rows").alias("docs"),
             F.sum("n_spans").cast("long").alias("spans"),
             F.sum("n_failures").cast("long").alias("failures"),
+            F.count_if(F.col("rows") > 1).alias("repeated"),
         )
+        .observe(repeated, F.sum("repeated").alias("ids"))
         .select(
             F.lit(run_id).alias("run_id"),
             F.col("part_id").alias("partition_id"),
@@ -346,6 +321,12 @@ def run_extraction(
         )
     )
     write_table(audit.coalesce(1), _audit_path(out_dir), mode="append")
+    n_repeated = repeated.get["ids"]
+    if n_repeated:
+        raise ValueError(
+            f"run_group {run_group!r}: the batch repeats {n_repeated} doc_id(s); "
+            "a batch must hold each doc_id once. Nothing was published."
+        )
 
     def make_live(p: dict) -> None:
         p["spans"][run_group] = {"run_id": run_id, "order": p["order"]}

@@ -183,7 +183,7 @@ def ordered_text_agg(text_col: str = "text", order_col: str = "order", sep: str 
     it only looks stable when each doc's spans arrive in one partition
     row. Sorting the (order, text) structs first makes the concatenation
     deterministic under any physical row order (multi-append outputs,
-    compaction, speculative retries)."""
+    speculative retries)."""
     return F.array_join(
         F.transform(
             F.array_sort(
@@ -200,7 +200,7 @@ def ordered_text_agg(text_col: str = "text", order_col: str = "order", sep: str 
 def explode_spans(extracted: DataFrame) -> DataFrame:
     """Flat view (doc_id, kind, text, media_ref, order) of extracted spans.
 
-    A narrow generate — no shuffle; feeds the search layer's postings build.
+    A narrow generate — no shuffle.
     """
     return extracted.select(
         "doc_id", F.explode("spans").alias("span")

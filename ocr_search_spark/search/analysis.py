@@ -15,7 +15,8 @@ Reference semantics being replicated:
 * sim ≈ pg_trgm ``similarity(content, :q)`` (search.py:78): Jaccard over
   3-gram sets;
 * snippet ≈ ``ts_headline(... MaxFragments=3, MinWords=3 ...)``
-  (search.py:76): a window around the first term hit with ``<b>`` marks.
+  (search.py:76): one fragment, a window around the first term hit with
+  ``<b>`` marks (the reference's up to three fragments are not reproduced).
 """
 
 from __future__ import annotations
@@ -137,88 +138,3 @@ def snippet_expr(
         # like '(' would crash regexp_replace at runtime
         frag = F.regexp_replace(frag, f"(?i)({re.escape(term)})", "<b>$1</b>")
     return F.when(pos > 0, frag).otherwise(F.lit(""))
-
-
-def snippet_fragments_expr(
-    text_col: str,
-    lc_col: str,
-    term: str,
-    max_fragments: int = 3,
-    width: int = 30,
-) -> Column:
-    """``ts_headline``-style multi-fragment snippet: up to ``max_fragments``
-    fragments of ``width`` chars around consecutive hits, joined ``' ... '``,
-    each hit wrapped in ``<b>`` (MaxFragments=3 in search.py:76).
-
-    ``text_col``/``lc_col`` are COLUMN NAMES (``lc_col`` must hold the
-    pre-lowered text, materialized by a prior projection); the hit chain is
-    built from 3-arg ``locate`` so the identical expression shape runs on
-    external SQL engines for oracle checks. ``term`` must be a lowercase
-    word (no regex/quote metacharacters).
-    """
-    t = term.lower()
-    if not t.isalnum():
-        raise ValueError(f"term must be alphanumeric, got {term!r}")
-    L = len(t)
-    flen = 2 * width + L
-    frag_cols = []
-    for k in range(1, max_fragments + 1):
-        # case-insensitive mark preserving original case ($1), mirroring
-        # ts_headline and the sibling snippet_expr — hits are located on the
-        # lowered column, so a mixed-case hit must still get its <b> marks
-        frag_cols.append(
-            f"CASE WHEN __sp{k} > 0 THEN "
-            f"regexp_replace(substring({text_col}, greatest(__sp{k} - {width}, 1), {flen}),"
-            f" '(?i)({t})', '<b>$1</b>') END"
-        )
-    # positions must be materialized as columns first — the caller does:
-    #   df.select(..., *snippet_hit_positions(...)) then this join expr
-    return F.array_join(
-        F.filter(
-            F.array(*[F.expr(e) for e in frag_cols]),
-            lambda x: x.isNotNull(),
-        ),
-        " ... ",
-    )
-
-
-def snippet_hit_positions(
-    lc_col: str, term: str, max_fragments: int = 3
-) -> list[tuple[str, Column]]:
-    """The ``__sp1..__spN`` hit-position columns that
-    :func:`snippet_fragments_expr` consumes. Each references the previous,
-    so add them with chained ``withColumn`` (successive projections) —
-    aliases created in the same select are not visible to siblings."""
-    t = term.lower()
-    L = len(t)
-    cols: list[tuple[str, Column]] = [("__sp1", F.expr(f"locate('{t}', {lc_col})"))]
-    for k in range(1, max_fragments):
-        cols.append(
-            (
-                f"__sp{k + 1}",
-                F.expr(
-                    f"CASE WHEN __sp{k} > 0 THEN locate('{t}', {lc_col}, __sp{k} + {L}) "
-                    f"ELSE 0 END"
-                ),
-            )
-        )
-    return cols
-
-
-def with_snippet_fragments(
-    df,
-    text_col: str,
-    term: str,
-    out_col: str = "snippet",
-    max_fragments: int = 3,
-    width: int = 30,
-):
-    """Convenience: materialize lowered text + hit positions (chained
-    projections) and append the joined multi-fragment snippet column."""
-    d = df.withColumn("__lc", F.lower(F.col(text_col)))
-    for name, expr in snippet_hit_positions("__lc", term, max_fragments):
-        d = d.withColumn(name, expr)
-    return d.withColumn(
-        out_col,
-        snippet_fragments_expr(text_col, "__lc", term, max_fragments, width),
-    )

@@ -8,8 +8,8 @@ on the Spark engine — runnable as a plain script or via spark-submit:
 Flow: build the interleaved corpus → ``DocumentStore.ingest`` (resumable
 salted extraction, audit, pointer, content/postings tables) →
 ``DocumentStore.search`` (three rank modes, the websearch grammar) →
-``near_dedup_cc`` over the stored content → compaction and vacuum → a
-re-ingest that resumes from the pointer — printing a few rows of each.
+``near_dedup_cc`` over the stored content → vacuum → a re-ingest that
+resumes from the pointer — printing a few rows of each.
 """
 
 from __future__ import annotations
@@ -30,11 +30,7 @@ def main() -> None:
     from ocr_search_spark.corpus import corpus_df
     from ocr_search_spark.ops.dedup import near_dedup_cc
     from ocr_search_spark.pipeline import read_audit
-    from ocr_search_spark.pipeline.checkpoint import (
-        committed_spans,
-        compact_group_outputs,
-        vacuum_uncommitted,
-    )
+    from ocr_search_spark.pipeline.checkpoint import committed_spans, vacuum_uncommitted
     from ocr_search_spark.store import DocumentStore
 
     print(f"== ingest ({sf_dir} -> {workdir})")
@@ -68,9 +64,8 @@ def main() -> None:
     cc = near_dedup_cc(content, "doc_id", "content", threshold=0.5)
     print(f"docs={content.count()} cluster-keeper survivors={cc.count()}")
 
-    print("== compaction: rewrite the batch's attempt as one file, vacuum the old")
-    print(compact_group_outputs(spark, workdir, "demo"))
-    print(f"vacuumed {len(vacuum_uncommitted(spark, workdir, min_age_s=0))} superseded dirs")
+    print("== vacuum: remove staged attempts that were never published")
+    print(f"vacuumed {len(vacuum_uncommitted(spark, workdir, min_age_s=0))} orphan dirs")
     print(f"committed rows: {committed_spans(spark, workdir, 'demo').count()}")
 
     print("== re-ingest: run_group 'demo' is published, so extraction is skipped")

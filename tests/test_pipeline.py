@@ -24,7 +24,7 @@ from ocr_search_spark.pipeline import (
 )
 from ocr_search_spark.pipeline.checkpoint import committed_spans, read_audit
 
-from conftest import SF_DIR, SMALL_AQE_PARTITIONS, spark_conf
+from conftest import SF_DIR
 
 N_DOCS = 400
 
@@ -160,7 +160,7 @@ class TestResume:
         monkeypatch.undo()
         # the batch is staged but orphaned: no view sees it
         assert len(glob.glob(f"{out}/spans/r=*/*.parquet")) >= 1
-        assert committed_spans(spark, out).count() == 0
+        assert committed_spans(spark, out, "rgS").count() == 0
         assert cp.committed_spans_latest(spark, out).count() == 0
 
         run_extraction(spark, input_df, out, "rgS", num_partitions=8)
@@ -170,33 +170,6 @@ class TestResume:
         resumed = _collected(seen)
         assert resumed == golden  # orphan attempt invisible, no duplicates
 
-    def test_compaction_preserves_rows_and_republishes(
-        self, spark, docs, input_df, tmp_path
-    ):
-        """compact_group_outputs rewrites a run_group's attempt into one file
-        and republishes it, at the order it had, with one CURRENT swap; the
-        committed view is unchanged, the old attempt becomes invisible
-        history."""
-        from ocr_search_spark.pipeline.checkpoint import (
-            compact_group_outputs,
-            read_pointer,
-        )
-
-        out = str(tmp_path / "compact")
-        with spark_conf(spark, SMALL_AQE_PARTITIONS):
-            first = run_extraction(spark, input_df, out, "rgK", num_partitions=8)
-        assert len(glob.glob(f"{out}/spans/r={first['run_id']}/part-*")) > 1
-        before = _collected(committed_spans(spark, out, "rgK"))
-        order = read_pointer(out)["spans"]["rgK"]["order"]
-
-        stats = compact_group_outputs(spark, out, "rgK")
-        after = _collected(committed_spans(spark, out, "rgK"))
-        assert after == before == _golden(docs)
-        assert read_pointer(out)["spans"]["rgK"] == {
-            "run_id": stats["run_id"], "order": order
-        }
-        assert len(glob.glob(f"{out}/spans/r={stats['run_id']}/part-*")) == 1
-
     def test_vacuum_removes_orphans_keeps_live(
         self, spark, docs, input_df, tmp_path, monkeypatch
     ):
@@ -204,27 +177,25 @@ class TestResume:
 
         out = str(tmp_path / "vac")
         monkeypatch.setattr(cp, "publish", _crash_publish)
-        with pytest.raises(RuntimeError, match="killed"):
-            run_extraction(spark, input_df, out, "rgV", num_partitions=8)
+        for _ in range(2):  # two crashed attempts, each left as an orphan
+            with pytest.raises(RuntimeError, match="killed"):
+                run_extraction(spark, input_df, out, "rgV", num_partitions=8)
         monkeypatch.undo()
-        run_extraction(spark, input_df, out, "rgV", num_partitions=8)
-        stats = cp.compact_group_outputs(spark, out, "rgV")  # supersedes the original
+        stats = run_extraction(spark, input_df, out, "rgV", num_partitions=8)
         golden = _golden(docs)
         removed = cp.vacuum_uncommitted(spark, out, min_age_s=0)
-        # removed: the orphan attempt + the superseded pre-compaction dir
+        # removed: the two orphan attempts
         assert len(removed) == 2
         assert glob.glob(f"{out}/spans/r=*") == [f"{out}/spans/r={stats['run_id']}"]
         assert _collected(committed_spans(spark, out, "rgV")) == golden
 
-    def test_maintenance_paths_run_the_same_jobs_at_2_and_12_run_groups(
+    def test_latest_view_runs_the_same_jobs_at_2_and_12_run_groups(
         self, spark, docs, input_df, tmp_path
     ):
-        """compact_group_outputs and committed_spans_latest run a number of
-        Spark jobs that does not grow with the live run_groups (the round-3
-        formulations were O(attempts): a per-attempt job + 1-row
-        publication append loop, and an O(attempts)-leg union plan)."""
+        """committed_spans_latest runs a number of Spark jobs that does not
+        grow with the live run_groups (the round-3 formulation was an
+        O(attempts)-leg union plan)."""
         from ocr_search_spark.pipeline import committed_spans_latest
-        from ocr_search_spark.pipeline.checkpoint import compact_group_outputs
 
         out = str(tmp_path / "many")
         sc = spark.sparkContext
@@ -236,15 +207,10 @@ class TestResume:
                 run_extraction(spark, part, out, f"rg{k}", num_partitions=8)
 
         def jobs(tag):
-            sc.setJobGroup(f"compact{tag}", "compaction job-count probe")
-            compact_group_outputs(spark, out, "rg0")
             sc.setJobGroup(f"latest{tag}", "latest-view job-count probe")
             n_rows = committed_spans_latest(spark, out).count()
             sc.setJobGroup("probe-done", "")
-            tracker = sc.statusTracker()
-            return n_rows, [
-                len(tracker.getJobIdsForGroup(f"{g}{tag}")) for g in ("compact", "latest")
-            ]
+            return n_rows, len(sc.statusTracker().getJobIdsForGroup(f"latest{tag}"))
 
         extract_slices(0, 2)
         rows2, jobs2 = jobs(2)
@@ -252,8 +218,8 @@ class TestResume:
         rows12, jobs12 = jobs(12)
         assert rows2 == len(ids[0::12]) + len(ids[1::12])
         assert rows12 == N_DOCS
-        assert jobs12 == jobs2, f"jobs (compact, latest): {jobs2} at 2, {jobs12} at 12"
-        assert _collected(committed_spans(spark, out)) == _golden(docs)
+        assert jobs12 == jobs2, f"latest-view jobs: {jobs2} at 2, {jobs12} at 12"
+        assert _collected(committed_spans_latest(spark, out)) == _golden(docs)
 
     def test_single_pass_stages_all_pending_groups(
         self, spark, docs, input_df, tmp_path, monkeypatch
@@ -291,9 +257,7 @@ class TestResume:
         redo_df = spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
         run_extraction(spark, redo_df, out, "rgNew", num_partitions=8)
 
-        # plain concatenated view duplicates the overlap …
-        assert committed_spans(spark, out).count() == len(docs) + 30
-        # … the latest view resolves to one row per doc, newest publication
+        # the latest view resolves to one row per doc, newest publication
         latest = _collected(committed_spans_latest(spark, out))
         assert len(latest) == len(docs)
         want = _golden(docs)
@@ -302,47 +266,6 @@ class TestResume:
             assert latest[d["doc_id"]] == want_redo[d["doc_id"]]
         for d in docs[30:]:
             assert latest[d["doc_id"]] == want[d["doc_id"]]
-
-    def _rewritten(self, spark, docs):
-        """The same doc_ids as ``docs`` with one new text span each."""
-        redo = [
-            {
-                "doc_id": d["doc_id"],
-                "spans": [{"kind": "txt", "text": f"rewritten {d['doc_id']}",
-                           "media_ref": None, "offset": 0}],
-            }
-            for d in docs
-        ]
-        pdf = pd.DataFrame(
-            {"doc_id": [d["doc_id"] for d in redo], "spans": [d["spans"] for d in redo]}
-        )
-        return redo, spark.createDataFrame(pdf, schema=SPANS_IN_SCHEMA)
-
-    def test_compacting_older_run_group_keeps_newer_rows_latest(
-        self, spark, docs, input_df, tmp_path
-    ):
-        """Compaction republishes a run_group without changing which rows are
-        newest: after compacting the older run_group, the latest view still
-        returns the newer run_group's rows for the documents both extracted."""
-        from ocr_search_spark.pipeline import committed_spans_latest
-        from ocr_search_spark.pipeline.checkpoint import compact_group_outputs
-
-        out = str(tmp_path / "compact_order")
-        run_extraction(spark, input_df, out, "rgA", num_partitions=8)
-        redo, redo_df = self._rewritten(spark, docs[:30])
-        run_extraction(spark, redo_df, out, "rgB", num_partitions=8)
-        before = _collected(committed_spans_latest(spark, out))
-
-        assert compact_group_outputs(spark, out, "rgA")["run_id"] is not None
-        after = _collected(committed_spans_latest(spark, out))
-        want_redo = _golden(redo)
-        want = _golden(docs)
-        assert after == before
-        assert len(after) == len(docs)
-        for d in docs[:30]:
-            assert after[d["doc_id"]] == want_redo[d["doc_id"]] != want[d["doc_id"]]
-        for d in docs[30:]:
-            assert after[d["doc_id"]] == want[d["doc_id"]]
 
     def test_old_format_ledger_fails_with_explicit_error(
         self, spark, input_df, tmp_path

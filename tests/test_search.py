@@ -502,33 +502,6 @@ class TestRankModeValidation:
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
 
-class TestSnippetFragments:
-    def test_three_fragments_marked_and_joined(self, spark):
-        from ocr_search_spark.search.analysis import with_snippet_fragments
-
-        pad = "x" * 40
-        text = f"one spark {pad} two spark {pad} three spark {pad} four spark"
-        df = spark.createDataFrame([("d1", text), ("d2", "no hits here")],
-                                   "doc_id string, text string")
-        out = {r.doc_id: (r.snippet, r["__sp1"])
-               for r in with_snippet_fragments(df, "text", "spark").collect()}
-        snip, sp1 = out["d1"]
-        assert snip.count(" ... ") == 2  # exactly 3 fragments (MaxFragments=3)
-        assert snip.count("<b>spark</b>") >= 3  # every in-window hit is marked
-        assert "four" not in snip  # the 4th hit gets no fragment of its own
-        assert sp1 == text.find("spark") + 1
-        assert out["d2"][0] == "" and out["d2"][1] == 0
-
-    def test_overlapping_hits_each_get_fragment(self, spark):
-        from ocr_search_spark.search.analysis import with_snippet_fragments
-
-        df = spark.createDataFrame([("d", "spark spark")], "doc_id string, text string")
-        snip = with_snippet_fragments(df, "text", "spark").collect()[0].snippet
-        # two hits inside one 65-char window: both fragments emitted, every
-        # in-window occurrence marked
-        assert snip.count(" ... ") == 1 and "<b>spark</b> <b>spark</b>" in snip
-
-
 class TestSearchReviewRegressions:
     """Round-4 review: token-free queries, filter-only snippets, OR-branch
     ranking/snippets, bm25 corpus IDF, date validation."""

@@ -541,6 +541,30 @@ class TestSnapshotStats:
         assert DocumentStore(spark, s.root).search("")["total"] == len(docs)
 
 
+class TestRepeatedDocIds:
+    """A batch must hold each doc_id once: with one id twice, the latest
+    view's ``max_by`` over the publication order would tie between the two
+    rows and keep either. The batch is rejected before its publish."""
+
+    def test_batch_repeating_a_doc_id_is_rejected(self, spark, base_texts, tmp_path):
+        from ocr_search_spark.pipeline.checkpoint import read_pointer, vacuum_uncommitted
+
+        d1, d2 = build_local(base_texts, 2)
+        d1_again = {"doc_id": d1["doc_id"], "spans": d1["spans"][:1]}
+        s = DocumentStore(spark, str(tmp_path / "repeat"))
+        before = read_pointer(s.root)
+        with pytest.raises(ValueError, match=r"'rep'.*repeats 1 doc_id"):
+            s.ingest(_spans_df(spark, [d1, d2, d1_again]), run_group="rep")
+        assert read_pointer(s.root) == before
+        # the staged attempt is an orphan that vacuum removes
+        assert len(vacuum_uncommitted(spark, s.root, min_age_s=0)) == 1
+
+        stats = s.ingest(_spans_df(spark, [d1, d2]), run_group="rep")
+        assert not stats["skipped"] and stats["content_rows"] == 2
+        assert read_pointer(s.root)["spans"]["rep"]["run_id"] == stats["run_id"]
+        assert s.search("")["total"] == 2
+
+
 class TestFilterColumns:
     """The store's ``content`` has no ``email`` and no ``created_at``: a
     filter on either raises before any job instead of being dropped."""
