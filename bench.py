@@ -84,7 +84,7 @@ def main() -> None:
     n_docs = corpus.count()
 
     # e2e extraction (scan -> shuffle -> extract -> write)
-    from ocr_search_spark.pipeline import extract_documents
+    from ocr_search_spark.pipeline.extract import extract_documents
 
     # two warmup passes: one reaches codegen/Python-worker steady state, the
     # second settles Arrow buffer pools + page cache (measured: the first

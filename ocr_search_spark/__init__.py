@@ -1,12 +1,12 @@
 """ocr_search_spark — a PySpark-native document-extraction and search engine.
 
 A from-scratch reimplementation of the data-processing capabilities of
-``SergeantBDA/ocr-search`` (reference at /root/reference, cited per-module as
-file:line) as a batch DataFrame pipeline over an Iceberg-style table of
-interleaved text + media documents:
+``SergeantBDA/ocr-search`` (the reference, cited per-module as file:line)
+as a batch DataFrame pipeline over an Iceberg-style table of interleaved
+text + media documents:
 
 * per-format extraction dispatch (html / pdf / txt / docx / image / uns) in
-  vectorized pandas kernels driven by ``mapInPandas`` — no per-row Python UDFs
+  vectorized kernels driven by ``mapInArrow`` — no per-row Python UDFs
   at the Spark level (reference: app/services/bytes_xtractor.py:50-88);
 * the reference's text normalization chain, bug-for-bug
   (app/services/bytes_xtractor.py:23-39);
@@ -26,6 +26,7 @@ interleaved text + media documents:
 
 The three paths are ``store.DocumentStore.ingest``, ``DocumentStore.search``
 and ``ops.dedup.near_dedup_cc``.
-"""
 
-__version__ = "0.1.0"
+No package re-exports a name: import each from its defining submodule
+(``from ocr_search_spark.pipeline.checkpoint import run_extraction``).
+"""

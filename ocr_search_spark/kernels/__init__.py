@@ -1,41 +1,11 @@
 """Pure (non-Spark) extraction kernels.
 
 Every kernel here is a plain function over Python scalars or pandas Series,
-unit-testable without a SparkSession. The Spark pipeline wraps them in
-``mapInPandas`` (see ocr_search_spark.pipeline.extract); the scalar variants
-in ``reference_impl`` are the golden-truth oracle for span-sequence equality.
+unit-testable without a SparkSession. The Spark pipeline runs
+``dispatch.extract_texts`` inside ``mapInArrow`` (see
+ocr_search_spark.pipeline.extract); the scalar variants in
+``reference_impl`` are the golden-truth oracle for span-sequence equality.
+
+Import the submodule you need; this package re-exports nothing, so an
+extraction worker never loads the oracle.
 """
-
-from .normalize import preprocess_text_layer, normalize_series
-from .html_extract import html_to_text, html_main_text
-from .pdf_extract import extract_pdf_page_text
-from .ocr_stub import ocr_stub_text
-from .decode import decode_bytes
-from .dispatch import extract_texts, KNOWN_KINDS
-from .email_extract import eml_to_text
-from .msg_extract import msg_to_text
-from .lang import looks_like_russian, russian_score, russian_score_series
-from .reference_impl import extract_document_spans, extract_span_text
-from .rtf_extract import rtf_to_text
-from .xls_extract import xls_to_text
-
-__all__ = [
-    "preprocess_text_layer",
-    "normalize_series",
-    "html_to_text",
-    "html_main_text",
-    "extract_pdf_page_text",
-    "ocr_stub_text",
-    "decode_bytes",
-    "extract_texts",
-    "KNOWN_KINDS",
-    "extract_document_spans",
-    "extract_span_text",
-    "looks_like_russian",
-    "russian_score",
-    "russian_score_series",
-    "rtf_to_text",
-    "xls_to_text",
-    "eml_to_text",
-    "msg_to_text",
-]

@@ -81,7 +81,7 @@ def extract_texts(
     mask = kind == "pdf"
     if mask.any():
         # document-level loop inside the Arrow batch (allowed; the Spark-level
-        # operator is one vectorized mapInPandas call)
+        # operator is one vectorized mapInArrow call)
         out[mask] = text[mask].map(extract_pdf_page_text)
 
     mask = kind == "html"

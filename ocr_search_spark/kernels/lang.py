@@ -8,14 +8,10 @@ digits + a little punctuation) compared against a 0.40 threshold.
 
 from __future__ import annotations
 
-import pandas as pd
-
 RUSSIAN_CHARS = set(
     r".:,-+=()!0123456789абвгдеёжзийклмнопрстуфхцчшщъыьэюя"
     r"АБВГДЕЁЖЗИЙКЛМНОПРСТУФХЦЧШЩЪЫЬЭЮЯ"
 )
-
-_RUSSIAN_CLASS = "[" + "".join(sorted(RUSSIAN_CHARS)).replace("-", r"\-") + "]"
 
 
 def russian_score(text: str) -> float:
@@ -30,11 +26,3 @@ def looks_like_russian(text: str, threshold: float = 0.40) -> bool:
     if not text:
         return False
     return russian_score(text) >= threshold
-
-
-def russian_score_series(s: pd.Series) -> pd.Series:
-    """Vectorized :func:`russian_score` over a pandas Series."""
-    s = s.fillna("")
-    n = s.str.len()
-    ru = s.str.count(_RUSSIAN_CLASS)
-    return (ru / n.clip(lower=1)).where(n > 0, 0.0)

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -149,57 +148,3 @@ def normalize_series(s: pd.Series) -> pd.Series:
     """
     out = normalize_arrow(pa.Array.from_pandas(s.fillna("").astype(object)))
     return pd.Series(out.to_pandas().astype(object).values, index=s.index)
-
-
-def normalize_series_pandas(s: pd.Series) -> pd.Series:
-    """Reference pandas ``.str``-chain formulation (kept for parity tests
-    and as documentation of the masked-pass technique).
-
-    Same transformation as :func:`preprocess_text_layer`, expressed as a
-    pandas ``.str`` chain so a whole Arrow batch is processed at once.
-    """
-    s = s.fillna("").astype(object).astype("string")
-
-    # Each pass is applied only to rows containing its trigger characters —
-    # pandas .str.replace is a per-element Python re.sub, so skipping the
-    # (common) trigger-free rows cuts most of the regex cost. Masks are
-    # exact: a rule can only change a string containing its trigger, so the
-    # result is identical to the unmasked chain (the hypothesis parity test
-    # vs the scalar path enforces this).
-    def masked(series, mask, fn):
-        if mask.any():
-            series = series.copy()
-            series[mask] = fn(series[mask])
-        return series
-
-    has_cr = s.str.contains("\r", regex=False)
-    s = masked(
-        s,
-        has_cr,
-        lambda x: x.str.replace("\r\n", "\n", regex=False).str.replace(
-            "\r", "\n", regex=False
-        ),
-    )
-    has_nl = s.str.contains("\n", regex=False)
-    s = masked(s, has_nl, lambda x: x.str.replace(_HYPHEN_RE, r"\1\2", regex=True))
-    has_nl = s.str.contains("\n", regex=False)  # hyphen rule consumes newlines
-    s = masked(s, has_nl, lambda x: x.str.replace(_SINGLE_NL_RE, " ", regex=True))
-    s = masked(
-        s,
-        s.str.contains("[\t\u00a0]|  ", regex=True),
-        lambda x: x.str.replace(_WS_RE, " ", regex=True),
-    )
-    s = masked(
-        s,
-        s.str.contains("\n\n\n", regex=False),
-        lambda x: x.str.replace(_MULTI_NL_RE, "\n", regex=True),
-    )
-    has_ctrl = s.str.contains(_CTRL_RE, regex=True)
-    s = masked(
-        s,
-        has_ctrl,
-        lambda x: x.str.replace(_CTRL_RE, "", regex=True).str.replace(
-            "\x00", "", regex=False
-        ),
-    )
-    return s.str.strip().astype(object)

@@ -24,9 +24,3 @@ def extract_pdf_page_text(raw: str) -> str:
     if not raw:
         return ""
     return "\n\n".join(block for block in raw.split("\n\n") if block)
-
-
-def page_has_text(raw: str, min_chars: int = 16) -> bool:
-    """``_page_has_text`` analogue (pdf_fast.py:49-60): a page is a real
-    text page iff it has at least ``min_chars`` non-whitespace characters."""
-    return len("".join(raw.split())) >= min_chars if raw else False

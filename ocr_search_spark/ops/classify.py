@@ -191,86 +191,6 @@ def linear_scores(
     )
 
 
-def nb_select(
-    df: DataFrame,
-    label_col: str,
-    pos_value: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 1 << 18,
-    bigrams: bool = True,
-    k: int = 100,
-) -> DataFrame:
-    """Train-then-serve Naive Bayes data selection in ONE corpus
-    tokenize pass: the hashed per-document feature stream materializes
-    once (localCheckpoint) and feeds BOTH the :func:`nb_train` fit
-    (bucket counts via a broadcast doc→label join — identical integers
-    to the label-keyed explode) and the :func:`linear_scores` serve
-    join, instead of exploding + md5-hashing the corpus twice. Output
-    is the :func:`linear_scores` contract ranked top-``k``:
-    (id, logit_fp, rnk), logit_fp desc / id asc — bit-identical to the
-    two-pass composition (exact integer lattice end-to-end)."""
-    from pyspark.sql import Window
-
-    from .dsir import _hb
-
-    feats = hashed_features(
-        df, id_col, text_col, n_buckets, bigrams
-    ).localCheckpoint()
-    labels = df.select(
-        F.col(id_col).alias("id"), F.col(label_col).alias("__lab")
-    )
-    per_bucket = (
-        feats.join(F.broadcast(labels), "id")
-        .groupBy("bucket")
-        .agg(
-            F.sum(
-                F.when(F.col("__lab") == pos_value, F.col("cnt")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("cp"),
-            F.sum(
-                F.when(F.col("__lab") != pos_value, F.col("cnt")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("cn"),
-        )
-    )
-    totals = per_bucket.agg(
-        F.coalesce(F.sum("cp"), F.lit(0)).alias("tp"),
-        F.coalesce(F.sum("cn"), F.lit(0)).alias("tn"),
-    )
-    b = F.lit(int(n_buckets))
-    weights = per_bucket.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        (
-            F.lit(NB_HB_FP)
-            * (
-                (_hb(F.col("cp") + 1) - _hb(F.col("tp") + b))
-                - (_hb(F.col("cn") + 1) - _hb(F.col("tn") + b))
-            )
-        ).alias("weight_fp"),
-    )
-    scored = (
-        feats.join(F.broadcast(weights), "bucket", "left")
-        .groupBy("id")
-        .agg(
-            F.coalesce(
-                F.sum(F.col("cnt") * F.coalesce(F.col("weight_fp"), F.lit(0))),
-                F.lit(0),
-            ).alias("logit_fp")
-        )
-    )
-    all_ids = df.select(F.col(id_col).alias("id"))
-    full = all_ids.join(scored, "id", "left").select(
-        "id", F.coalesce(F.col("logit_fp"), F.lit(0)).alias("logit_fp")
-    )
-    order = [F.col("logit_fp").desc(), F.col("id").asc()]
-    top = full.orderBy(*order).limit(int(k))
-    # row-bound: `top` is the already-truncated top-n slice (<= n rows)
-    return top.withColumn("rnk", F.row_number().over(Window.orderBy(*order)))
-
-
 def sigmoid_score(logit_fp: Column | str) -> Column:
     """Float sigmoid of a fixed-point logit — presentation only (never a
     decision column: libm ``exp`` differs in the last ulp across
@@ -485,10 +405,10 @@ def perceptron_select(
 ) -> DataFrame:
     """Train :func:`perceptron_train` and return the ``k``
     highest-scoring documents under the averaged model — (id, score,
-    rnk), score desc / id asc, the nb_select contract: data selection
-    by rank, not by a sign threshold the averaged scale would have to
-    be calibrated for. Serve held-out corpora by passing the trained
-    table to :func:`perceptron_scores` directly.
+    rnk), score desc / id asc: data selection by rank, not by a sign
+    threshold the averaged scale would have to be calibrated for. Serve
+    held-out corpora by passing the trained table to
+    :func:`perceptron_scores` directly.
 
     Scoring reuses the trainer's materialized feature stream (same
     (id, bucket, cnt) rows plus the bias bucket −1 the trainer saw),

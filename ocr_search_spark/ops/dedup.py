@@ -81,9 +81,7 @@ def corpus_diff(
 
     One full-outer hash join on the id — md5 is computed map-side before
     the shuffle, so the join carries (id, 32-byte digest), never text.
-    At 100 TB both sides shuffle once on the same key; store snapshots
-    bucketed by id (``tables.write_bucketed_table``) and the join is
-    exchange-free.
+    At 100 TB both sides shuffle once on the same key.
     """
     o = old.select(
         F.col(id_col).alias("id"),

@@ -573,37 +573,6 @@ def cosine_near_dedup(
     return df.join(losers, F.col(id_col) == F.col("__loser"), "left_anti")
 
 
-def cosine_near_dedup_cc(
-    df: DataFrame,
-    dim: int,
-    threshold: float = 0.95,
-    n_bands: int = 16,
-    band_size: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: str = "ann-lsh",
-    max_iters: int = 20,
-) -> DataFrame:
-    """Embedding near-dedup with a CONNECTED-COMPONENTS keeper — the
-    embedding twin of ``ops.dedup.near_dedup_cc``: the same banded-LSH +
-    exact-cosine verified pairs, then min-label propagation so every
-    connected cluster keeps exactly its min-id canonical vector. Chains
-    matter more in embedding space (semantic drift a≈b≈c with cos(a,c)
-    below threshold), so cluster semantics are the safer default when
-    downstream needs one-per-cluster."""
-    from .dedup import connected_components_labels
-
-    pairs = cosine_neardup_pairs_lsh(
-        df, dim, threshold, n_bands, band_size, id_col, vec_col, seed
-    ).select("a_id", "b_id").persist()
-    labels = connected_components_labels(pairs, max_iters=max_iters)
-    pairs.unpersist()
-    losers = labels.filter(F.col("label") < F.col("id")).select(
-        F.col("id").alias("__loser")
-    )
-    return df.join(losers, F.col(id_col) == F.col("__loser"), "left_anti")
-
-
 def hyperplane_lsh_buckets(
     df: DataFrame,
     dim: int,
@@ -1416,7 +1385,7 @@ def semdedup(
     carries the most marginal information), ties broken by min id.
     Returns the surviving rows of ``df``.
 
-    Differs from :func:`cosine_near_dedup_cc` in both candidate rule
+    Differs from :func:`cosine_near_dedup` in both candidate rule
     (k-means cells instead of hyperplane LSH bands — candidates cannot
     cross cluster boundaries, which is the recall/cost trade SemDeDup
     makes) and keeper rule (centroid-distance argmin instead of min id).

@@ -1,29 +1,8 @@
-"""Spark-side extraction pipeline: salting, vectorized dispatch, lineage."""
+"""Spark-side extraction pipeline: salting, vectorized dispatch and lineage
+(``extract``), and the resumable, atomically published extraction run and
+its readers (``checkpoint``).
 
-from .extract import (
-    SPANS_OUT_SCHEMA,
-    add_partition_salt,
-    extract_documents,
-    explode_spans,
-    ordered_text_agg,
-)
-from .checkpoint import (
-    committed_spans,
-    committed_spans_latest,
-    run_extraction,
-    read_audit,
-    read_pointer,
-)
-
-__all__ = [
-    "SPANS_OUT_SCHEMA",
-    "add_partition_salt",
-    "committed_spans",
-    "committed_spans_latest",
-    "extract_documents",
-    "explode_spans",
-    "ordered_text_agg",
-    "run_extraction",
-    "read_audit",
-    "read_pointer",
-]
+Import the submodule you need; this package re-exports nothing, so an
+extraction worker that unpickles the kernel from ``extract`` never loads
+``checkpoint``.
+"""

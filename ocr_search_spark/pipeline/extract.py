@@ -137,15 +137,10 @@ def _extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     if len(failed_np):
         np.add.at(n_failures, parent, failed_np)
 
-    part_id = (
-        cols["part_id"].cast(pa.int32())
-        if "part_id" in cols
-        else pa.array(np.zeros(len(lens), dtype="int32"))
-    )
     return pa.RecordBatch.from_arrays(
         [
             cols["doc_id"],
-            part_id,
+            cols["part_id"],
             pa.array(lens.astype("int32")),
             pa.array(n_failures.astype("int32")),
             out_spans,

@@ -2,28 +2,9 @@
 
 Spark-first rebuild of the reference's Postgres search path
 (app/search.py:10-99 + the tsvector trigger alembic/versions/0001_init.py:
-31-53 and GIN indexes app/models.py:22-34).
+31-53 and GIN indexes app/models.py:22-34). ``engine`` builds the postings
+and answers queries; ``analysis`` holds the column expressions,
+``websearch`` the query grammar and ``ranking`` the scorers.
+
+Import the submodule you need; this package re-exports nothing.
 """
-
-from .analysis import (
-    TOKEN_PATTERN,
-    fts_match,
-    rank_expr,
-    snippet_expr,
-    tokens_expr,
-    trigram_sim_expr,
-    trigrams_expr,
-)
-from .engine import build_postings, search_documents
-
-__all__ = [
-    "TOKEN_PATTERN",
-    "tokens_expr",
-    "trigrams_expr",
-    "fts_match",
-    "rank_expr",
-    "trigram_sim_expr",
-    "snippet_expr",
-    "search_documents",
-    "build_postings",
-]

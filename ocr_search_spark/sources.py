@@ -292,36 +292,3 @@ def scan_warc_folder(
         spark, path, allowed_ext=("warc", "gz"), recursive=recursive
     )
     return warc_records(scanned)
-
-
-def write_jsonl_shards(
-    df: DataFrame,
-    out_dir: str,
-    shard_cols: tuple[str, ...] = ("shard_group", "shard_idx"),
-    order_col: str | None = None,
-    compression: str | None = "gzip",
-    count_rows: bool = False,
-) -> int:
-    """Training-data export sink: one JSONL file tree partitioned by the
-    shard key — the layout LM data loaders consume
-    (``out/shard_group=G/shard_idx=N/part-*.json.gz``).
-
-    ``repartition(shard_cols)`` routes every shard's rows to one task, so
-    each shard directory holds exactly one file (no small-file spray);
-    ``order_col`` sorts rows within the partition so file content is
-    deterministic — byte-stable exports rerun to the same artifact.
-    Spark's json writer IS JSON-Lines (one object per line). Returns the
-    number of rows written when ``count_rows=True`` (NOTE: that is a
-    second full computation of ``df`` — at production scale leave it
-    False, default, and the function returns -1; row accounting belongs
-    in the audit table, not a recount).
-    """
-    n = df.count() if count_rows else -1
-    out = df.repartition(*[F.col(c) for c in shard_cols])
-    if order_col is not None:
-        out = out.sortWithinPartitions(*shard_cols, order_col)
-    writer = out.write.mode("overwrite").partitionBy(*shard_cols)
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(out_dir)
-    return int(n)

@@ -70,12 +70,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .ops.metadata import metadata_map_expr
-from .pipeline import run_extraction
 from .pipeline.checkpoint import (
     IncompatibleCheckpointError,
     committed_spans_latest,
     publish,
     read_pointer,
+    run_extraction,
 )
 from .search.engine import POSTINGS_SCHEMA, build_postings, search_documents
 from .tables import write_table

@@ -1,5 +1,7 @@
-"""Structured Streaming surfaces over event and document streams."""
+"""Structured Streaming surfaces over event and document streams: windowed
+counts (``stream``), sessions (``sessionize``), streaming exact dedup
+(``dedup_stream``) and interval joins (``join_stream``). None of them writes
+to a store.
 
-from .stream import windowed_event_counts
-
-__all__ = ["windowed_event_counts"]
+Import the submodule you need; this package re-exports nothing.
+"""

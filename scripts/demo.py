@@ -29,8 +29,11 @@ def main() -> None:
 
     from ocr_search_spark.corpus import corpus_df
     from ocr_search_spark.ops.dedup import near_dedup_cc
-    from ocr_search_spark.pipeline import read_audit
-    from ocr_search_spark.pipeline.checkpoint import committed_spans, vacuum_uncommitted
+    from ocr_search_spark.pipeline.checkpoint import (
+        committed_spans,
+        read_audit,
+        vacuum_uncommitted,
+    )
     from ocr_search_spark.store import DocumentStore
 
     print(f"== ingest ({sf_dir} -> {workdir})")

@@ -13,20 +13,14 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ocr_search_spark.kernels import (
-    decode_bytes,
-    extract_document_spans,
-    extract_pdf_page_text,
-    extract_span_text,
-    extract_texts,
-    html_main_text,
-    html_to_text,
-    looks_like_russian,
-    normalize_series,
-    ocr_stub_text,
-    preprocess_text_layer,
-    russian_score,
-)
+from ocr_search_spark.kernels.decode import decode_bytes
+from ocr_search_spark.kernels.dispatch import extract_texts
+from ocr_search_spark.kernels.html_extract import html_main_text, html_to_text
+from ocr_search_spark.kernels.lang import looks_like_russian, russian_score
+from ocr_search_spark.kernels.normalize import normalize_series, preprocess_text_layer
+from ocr_search_spark.kernels.ocr_stub import ocr_stub_text
+from ocr_search_spark.kernels.pdf_extract import extract_pdf_page_text
+from ocr_search_spark.kernels.reference_impl import extract_document_spans, extract_span_text
 
 
 class TestNormalize:
@@ -64,13 +58,9 @@ class TestNormalize:
     )
     @settings(max_examples=200, deadline=None)
     def test_vectorized_matches_scalar(self, texts):
-        from ocr_search_spark.kernels.normalize import normalize_series_pandas
-
         want = [preprocess_text_layer(t) for t in texts]
         # Arrow/RE2 formulation (the production path)
         assert list(normalize_series(pd.Series(texts, dtype=object))) == want
-        # pandas masked-pass formulation
-        assert list(normalize_series_pandas(pd.Series(texts, dtype=object))) == want
 
     def test_sentinel_bytes_take_exact_path(self):
         # input containing the \x02/\x03 sentinel bytes must not be corrupted

@@ -5336,7 +5336,7 @@ class TestCaptionPairs:
             extract_document_spans,
         )
         from ocr_search_spark.ops.multimodal import caption_pairs
-        from ocr_search_spark.pipeline import explode_spans, extract_documents
+        from ocr_search_spark.pipeline.extract import explode_spans, extract_documents
 
         flat = explode_spans(
             extract_documents(corpus_df(spark, "/root/testdata/sf0.001", n_docs=80))

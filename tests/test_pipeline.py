@@ -16,13 +16,9 @@ from ocr_search_spark.corpus import (
     build_local,
     corpus_df,
 )
-from ocr_search_spark.kernels import extract_document_spans
-from ocr_search_spark.pipeline import (
-    explode_spans,
-    extract_documents,
-    run_extraction,
-)
-from ocr_search_spark.pipeline.checkpoint import committed_spans, read_audit
+from ocr_search_spark.kernels.reference_impl import extract_document_spans
+from ocr_search_spark.pipeline.checkpoint import committed_spans, read_audit, run_extraction
+from ocr_search_spark.pipeline.extract import explode_spans, extract_documents
 
 from conftest import SF_DIR
 
@@ -195,7 +191,7 @@ class TestResume:
         """committed_spans_latest runs a number of Spark jobs that does not
         grow with the live run_groups (the round-3 formulation was an
         O(attempts)-leg union plan)."""
-        from ocr_search_spark.pipeline import committed_spans_latest
+        from ocr_search_spark.pipeline.checkpoint import committed_spans_latest
 
         out = str(tmp_path / "many")
         sc = spark.sparkContext
@@ -245,7 +241,7 @@ class TestResume:
     def test_committed_spans_latest_resolves_cross_run_group_overlap(
         self, spark, docs, input_df, tmp_path
     ):
-        from ocr_search_spark.pipeline import committed_spans_latest
+        from ocr_search_spark.pipeline.checkpoint import committed_spans_latest
 
         out = str(tmp_path / "latest")
         run_extraction(spark, input_df, out, "rgOld", num_partitions=8)

@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_search_spark.corpus import SPANS_IN_SCHEMA, build_local
-from ocr_search_spark.pipeline import extract_documents, run_extraction
+from ocr_search_spark.pipeline.checkpoint import run_extraction
+from ocr_search_spark.pipeline.extract import extract_documents
 from conftest import SF_DIR, SMALL_AQE_PARTITIONS, spark_conf
 
 
@@ -258,74 +259,6 @@ class TestNearDedupPlan:
         plan = plan_of(near_dedup_cc(docs, "doc_id", "text", threshold=0.3))
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-
-
-class TestBucketedJoin:
-    def test_bucketed_join_has_no_exchange(self, spark):
-        """Two tables bucketed on the same key with the same bucket count
-        must join with NO Exchange on either side — the co-located-join
-        contract write_bucketed_table exists for (at 10^12 rows this
-        deletes the doc_id shuffle from postings→documents joins)."""
-        from ocr_search_spark.tables import (
-            read_bucketed_table,
-            write_bucketed_table,
-        )
-
-        docs = spark.range(1000).select(
-            F.col("id").alias("doc_id"),
-            F.md5(F.col("id").cast("string")).alias("text"),
-        )
-        meta = spark.range(1000).select(
-            F.col("id").alias("doc_id"),
-            (F.col("id") % 7).alias("score"),
-        )
-        try:
-            write_bucketed_table(docs, "b_docs", "doc_id", 4, sort_col="doc_id")
-            write_bucketed_table(meta, "b_meta", "doc_id", 4, sort_col="doc_id")
-            # disable broadcast so the join must pick a shuffle strategy —
-            # bucketing then has to satisfy the distribution requirement
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = read_bucketed_table(spark, "b_docs").join(
-                read_bucketed_table(spark, "b_meta"), "doc_id"
-            )
-            plan = plan_of(joined)
-            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-            assert "Exchange" not in plan
-            assert joined.count() == 1000
-            # a plain parquet re-read of the same files loses the bucket
-            # metadata and must re-shuffle — the negative control
-            loc = spark.sql("DESCRIBE EXTENDED b_docs").collect()
-            path = next(r.data_type for r in loc if r.col_name == "Location")
-            replain = spark.read.parquet(path.replace("file:", ""))
-            plan2 = plan_of(replain.join(read_bucketed_table(spark, "b_meta"), "doc_id"))
-            assert "Exchange" in plan2
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-            spark.sql("DROP TABLE IF EXISTS b_docs")
-            spark.sql("DROP TABLE IF EXISTS b_meta")
-
-    def test_bucketed_groupby_has_no_exchange(self, spark):
-        """Aggregation on the bucket key also reuses the bucket layout
-        (no Exchange before the HashAggregate)."""
-        from ocr_search_spark.tables import (
-            read_bucketed_table,
-            write_bucketed_table,
-        )
-
-        docs = spark.range(1000).select(
-            F.col("id").alias("doc_id"),
-            (F.col("id") % 3).alias("v"),
-        )
-        try:
-            write_bucketed_table(docs, "b_agg", "doc_id", 4)
-            plan = plan_of(
-                read_bucketed_table(spark, "b_agg").groupBy("doc_id").agg(
-                    F.sum("v").alias("s")
-                )
-            )
-            assert "Exchange" not in plan
-        finally:
-            spark.sql("DROP TABLE IF EXISTS b_agg")
 
 
 class TestPartitionPruning:

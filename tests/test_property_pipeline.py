@@ -12,7 +12,7 @@ import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ocr_search_spark.kernels import extract_document_spans
+from ocr_search_spark.kernels.reference_impl import extract_document_spans
 from ocr_search_spark.pipeline.extract import _extract_arrow_batch
 
 _IN_SPAN = pa.struct(

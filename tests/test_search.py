@@ -5,14 +5,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_search_spark.search import (
-    build_postings,
+from ocr_search_spark.search.analysis import (
     fts_match,
-    search_documents,
     snippet_expr,
     tokens_expr,
     trigram_sim_expr,
 )
+from ocr_search_spark.search.engine import build_postings, search_documents
 
 
 @pytest.fixture(scope="module")
@@ -443,7 +442,7 @@ class TestRanking:
     def test_search_rank_modes(self, spark, docs):
         """rank_mode plugs the new scorers into the search flow; the match
         set is identical across modes, only the rank term changes."""
-        from ocr_search_spark.search import search_documents
+        from ocr_search_spark.search.engine import search_documents
 
         for mode in ("simple", "cd", "bm25"):
             res = search_documents(docs, "spark join", rank_mode=mode)

@@ -5,9 +5,8 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from ocr_search_spark.pipeline import explode_spans, extract_documents
+from ocr_search_spark.pipeline.extract import explode_spans, extract_documents
 from ocr_search_spark.sources import (
     folder_to_documents,
     scan_folder_df,
@@ -158,63 +157,3 @@ class TestTextSink:
         assert n == len(files)
         assert "a.txt.txt" in files
         assert open(os.path.join(out, "a.txt.txt")).read() == "hello world"
-
-
-class TestJsonlShardSink:
-    def test_roundtrip_and_layout(self, spark, tmp_path):
-        import glob
-
-        from ocr_search_spark.ops.sampling import pack_shards
-        from ocr_search_spark.sources import write_jsonl_shards
-
-        rows = [(f"d{i:03d}", f"text {i}", 300) for i in range(60)]
-        df = spark.createDataFrame(rows, "doc_id string, text string, n int")
-        shards = pack_shards(df, "doc_id", "n", target_tokens=1500, n_groups=4)
-        full = shards.join(df.select("doc_id", "text"), "doc_id")
-        out = str(tmp_path / "export")
-        n = write_jsonl_shards(full, out, order_col="doc_id", count_rows=True)
-        assert n == 60
-        # default skips the second full computation and returns -1
-        assert write_jsonl_shards(full, str(tmp_path / "e2")) == -1
-        back = spark.read.json(out)
-        assert back.count() == 60
-        assert {r.doc_id for r in back.collect()} == {r[0] for r in rows}
-        # one data file per shard directory (no small-file spray)
-        for d in glob.glob(f"{out}/shard_group=*/shard_idx=*"):
-            files = [f for f in glob.glob(d + "/*") if "/part-" in f]
-            assert len(files) == 1, d
-        # shard dirs carry exactly their rows
-        some = glob.glob(f"{out}/shard_group=*/shard_idx=*")[0]
-        sg = int(some.split("shard_group=")[1].split("/")[0])
-        si = int(some.split("shard_idx=")[1])
-        want = {
-            r.doc_id
-            for r in full.filter(
-                (F.col("shard_group") == sg) & (F.col("shard_idx") == si)
-            ).collect()
-        }
-        got = {r.doc_id for r in spark.read.json(some).collect()}
-        assert got == want
-
-    def test_deterministic_bytes(self, spark, tmp_path):
-        import glob
-        import gzip as _gz
-
-        from ocr_search_spark.sources import write_jsonl_shards
-
-        rows = [(i % 3, 0, f"d{i}", f"t{i}") for i in range(30)]
-        df = spark.createDataFrame(
-            rows, "shard_group int, shard_idx int, doc_id string, text string"
-        )
-
-        def export(p):
-            write_jsonl_shards(df.orderBy(F.rand(42)), p, order_col="doc_id")
-            blobs = {}
-            for f in sorted(glob.glob(f"{p}/**/part-*", recursive=True)):
-                key = f.split(str(p))[1].rsplit("/", 1)[0]
-                blobs[key] = _gz.open(f, "rb").read()
-            return blobs
-
-        a = export(str(tmp_path / "a"))
-        b = export(str(tmp_path / "b"))
-        assert a == b and len(a) == 3

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_search_spark.corpus import SPANS_IN_SCHEMA, build_local
-from ocr_search_spark.kernels import extract_document_spans
+from ocr_search_spark.kernels.reference_impl import extract_document_spans
 from ocr_search_spark.store import DocumentStore
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ocr_search_spark.streaming import windowed_event_counts
+from ocr_search_spark.streaming.stream import windowed_event_counts
 
 from conftest import SF_DIR
 
